@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   * download, field introspection) at an [[api.ApiServer]] on sf0.1,
   * with a 10 Hz `/ping` prober running throughout as the starvation
   * signal, and prints ONE JSON line with per-class p50/p99, ping p99,
-  * and error counts. Recorded in BENCH_sf1.md.
+  * and error counts. The `zonal_aoi` class sends distinct one-tile
+  * AOIs and checks each 200 against that AOI's serial answer, fetched
+  * before the load: a mismatch counts as an error and in `wrong`.
+  * Recorded in BENCH_sf1.md.
   *
   *   runMain graft.ApiLoad [concurrency] [rounds]
   */
@@ -44,17 +47,32 @@ object ApiLoad {
         URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def geostore(gj: String): String = {
+      val created = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/geostore"))
+        .POST(HttpRequest.BodyPublishers.ofString(gj)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      "\"gfw_geostore_id\":\"([0-9a-f-]+)\"".r
+        .findFirstMatchIn(created.body()).get.group(1)
+    }
 
     // a stored geostore for the zonal class (inside the synthetic grid)
-    val gj = """{"type":"Polygon","coordinates":[[[0.3513,40.6821],[3.1242,40.9753],[3.7081,43.2517],[0.8472,42.8391],[0.3513,40.6821]]]}"""
-    val created = client.send(HttpRequest.newBuilder(
-      URI.create(s"http://127.0.0.1:$port/geostore"))
-      .POST(HttpRequest.BodyPublishers.ofString(gj)).build(),
-      HttpResponse.BodyHandlers.ofString())
-    val gid = "\"gfw_geostore_id\":\"([0-9a-f-]+)\"".r
-      .findFirstMatchIn(created.body()).get.group(1)
+    val gid = geostore("""{"type":"Polygon","coordinates":[[[0.3513,40.6821],[3.1242,40.9753],[3.7081,43.2517],[0.8472,42.8391],[0.3513,40.6821]]]}""")
+    // one AOI inside each tile of the synthetic grid, each a different
+    // size so no two answers agree, with its serial answer
+    val g = raster.SyntheticEnv.grid
+    val aois: IndexedSeq[(String, Option[String])] =
+      (for (ty <- 0 until g.tilesY; tx <- 0 until g.tilesX) yield (tx, ty))
+        .zipWithIndex.map { case ((tx, ty), i) =>
+          val x0 = g.originLon + tx * g.tileDeg + 0.1
+          val y0 = g.originLat - (ty + 1) * g.tileDeg + 0.1
+          val (x1, y1) = (x0 + 0.3 + 0.03 * i, y0 + 0.4)
+          val path = "/analysis/zonal?group_by=landcover&geostore_id=" + geostore(
+            s"""{"type":"Polygon","coordinates":[[[$x0,$y0],[$x1,$y0],[$x1,$y1],[$x0,$y1],[$x0,$y0]]]}""")
+          path -> Some(get(path).body())
+        }
 
-    val classes: Seq[(String, String)] = Seq(
+    val fixed: Seq[(String, String)] = Seq(
       "count" -> s"/dataset/lineitem/v1/query/json?sql=${enc("SELECT count(*) AS n FROM data")}",
       "agg" -> s"/dataset/lineitem/v1/query/json?sql=${enc(
         "SELECT l_returnflag, sum(l_quantity) AS q FROM data GROUP BY l_returnflag")}",
@@ -63,11 +81,15 @@ object ApiLoad {
       "zonal" -> s"/analysis/zonal?geostore_id=$gid&group_by=landcover&tcd_threshold=30",
       "download" -> s"/dataset/region/v1/download/csv?sql=${enc("SELECT * FROM data")}",
       "fields" -> "/dataset/lineitem/v1/fields")
+    // class → its request paths, each with the answer it must give
+    val classes: Seq[(String, IndexedSeq[(String, Option[String])])] =
+      fixed.map { case (c, p) => c -> IndexedSeq(p -> None) } :+ ("zonal_aoi" -> aois)
     // warm each class once (codegen/JIT) so the load numbers measure
     // concurrency, not first-touch compilation
-    classes.foreach { case (_, path) => get(path) }
+    classes.foreach { case (_, paths) => get(paths.head._1) }
 
-    val lat = new ConcurrentLinkedQueue[(String, Double, Int)]()
+    // (class, ms, status, answer differs from the serial one)
+    val lat = new ConcurrentLinkedQueue[(String, Double, Int, Boolean)]()
     val pingLat = new ConcurrentLinkedQueue[Double]()
     @volatile var stop = false
     val pinger = new Thread(() => {
@@ -91,13 +113,16 @@ object ApiLoad {
     for (r <- 0 until rounds) {
       val latch = new CountDownLatch(n)
       for (i <- 0 until n) {
-        val (cls, path) = classes((r * n + i) % classes.size)
+        val k = r * n + i
+        val (cls, paths) = classes(k % classes.size)
+        val (path, serial) = paths(k / classes.size % paths.size)
         pool.submit(new Runnable {
           def run(): Unit = {
             val t0 = System.nanoTime()
-            val code = try get(path).statusCode()
-            catch { case _: Throwable => -1 }
-            lat.add((cls, (System.nanoTime() - t0) / 1e6, code))
+            val (code, body) = try { val res = get(path); (res.statusCode(), res.body()) }
+            catch { case _: Throwable => (-1, null) }
+            lat.add((cls, (System.nanoTime() - t0) / 1e6, code,
+              code == 200 && serial.exists(_ != body)))
             latch.countDown()
           }
         })
@@ -113,14 +138,15 @@ object ApiLoad {
       else xs.sorted.apply(math.min(xs.size - 1, (xs.size * p).toInt))
     import scala.jdk.CollectionConverters._
     val all = lat.asScala.toSeq
-    val errors = all.count(_._3 != 200)
+    val wrong = all.count(_._4)
+    val errors = all.count(_._3 != 200) + wrong
     val byCls = all.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, xs) =>
       val ms = xs.map(_._2)
       s""""$c":{"n":${xs.size},"p50_ms":${pct(ms, 0.5).round},"p99_ms":${pct(ms, 0.99).round},"max_ms":${ms.max.round}}"""
     }.mkString(",")
     val pings = pingLat.asScala.toSeq.filter(_ != Double.MaxValue)
     val pingErr = pingLat.asScala.count(_ == Double.MaxValue)
-    println(s"""{"metric":"api_load","concurrency":$n,"rounds":$rounds,"requests":${all.size},"errors":$errors,"wall_sec":${f"$wallSec%.1f"},"classes":{$byCls},"ping":{"n":${pings.size},"p50_ms":${pct(pings, 0.5).round},"p99_ms":${pct(pings, 0.99).round},"errors":$pingErr},"sf":"$sfDir"}""")
+    println(s"""{"metric":"api_load","concurrency":$n,"rounds":$rounds,"requests":${all.size},"errors":$errors,"wrong":$wrong,"wall_sec":${f"$wallSec%.1f"},"classes":{$byCls},"ping":{"n":${pings.size},"p50_ms":${pct(pings, 0.5).round},"p99_ms":${pct(pings, 0.99).round},"errors":$pingErr},"sf":"$sfDir"}""")
     server.stop()
     spark.stop()
   }

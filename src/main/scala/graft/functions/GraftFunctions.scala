@@ -44,11 +44,22 @@ object GraftFunctions {
       BloomMightContain(es(0), es(1)))) ++
     graft.geo.GeoFunctions.builders
 
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in") }
-    excludeGenerateFilterInference(spark)
+  /** Sessions already installed (weak: a stopped session is dropped). */
+  private val installed =
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
+
+  /** Registers [[builders]] and the rule exclusion on the first call
+    * for a session; later calls are no-ops, so a served request never
+    * rewrites the registry or conf that concurrent requests read. */
+  def install(spark: SparkSession): Unit = installed.synchronized {
+    if (!installed.contains(spark)) {
+      val reg = spark.sessionState.functionRegistry
+      builders.foreach { case (name, b) =>
+        reg.createOrReplaceTempFunction(name, b, "built-in") }
+      excludeGenerateFilterInference(spark)
+      installed.add(spark)
+    }
   }
 
   /** `InferFiltersFromGenerate` adds `size(e) > 0 AND isnotnull(e)`

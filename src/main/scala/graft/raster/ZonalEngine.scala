@@ -235,7 +235,6 @@ object ZonalEngine {
 
     val bb = Geom.fromGeoJson(req.aoiGeoJson).bbox
     val ids = TileLake.tileIdsForBbox(g, bb._1, bb._2, bb._3, bb._4)
-    TileLake.scanPruned(spark, dir, ids).createOrReplaceTempView("zonal_scan")
 
     val aoiMask =
       s"tile_mask('${req.aoiGeoJson.replace("'", "''")}', tx, ty, " +
@@ -245,17 +244,20 @@ object ZonalEngine {
       case Some(t) => s"arr_and($aoiMask, arr_ge(px_tcd, $t))"
       case None => aoiMask
     }
-    val decode = SyntheticEnv.landcoverDecodeSql("p.k")
-
-    spark.sql(
-      s"""WITH arrs AS (SELECT px_landcover AS keys,
-         |  grid_arr('microha', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile}) AS vals,
-         |  $maskE AS mask
-         | FROM zonal_scan),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS landcover, $decode AS landcover_name,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k ORDER BY p.k""".stripMargin)
+    // built on the pruned scan itself, never through a named view:
+    // concurrent requests share one session catalog
+    import org.apache.spark.sql.functions.{col, expr}
+    TileLake.scanPruned(spark, dir, ids)
+      .selectExpr("px_landcover AS keys",
+        s"grid_arr('microha', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile}) AS vals",
+        s"$maskE AS mask")
+      .selectExpr("explode(tile_zonal(keys, vals, mask)) AS p")
+      .groupBy(col("p.k").as("landcover"))
+      .agg(expr("CAST(sum(p.s) AS DOUBLE) / 1000000.0").as("area_ha"),
+        expr("sum(p.c)").as("pixel_count"))
+      .selectExpr("landcover",
+        s"${SyntheticEnv.landcoverDecodeSql("landcover")} AS landcover_name",
+        "area_ha", "pixel_count")
+      .orderBy("landcover")
   }
 }

@@ -2044,4 +2044,65 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fetched.body().contains(gj))
     assert(get("/geostore/00000000-0000-0000-0000-000000000000").statusCode() == 404)
   }
+
+  test("concurrent /analysis/zonal over distinct one-tile AOIs: every body " +
+    "equals that AOI's serial body byte for byte") {
+    // one AOI inside each diagonal tile of the synthetic 4x4 one-degree
+    // grid (lon [0,4), lat [40,44)), so each answer is different
+    val gids = (0 until 4).map { t =>
+      val (x0, y0) = (t + 0.15 + 0.05 * t, 43 - t + 0.2)
+      val (x1, y1) = (x0 + 0.5, y0 + 0.6)
+      val gj = s"""{"type":"Polygon","coordinates":[[[$x0,$y0],[$x1,$y0],[$x1,$y1],[$x0,$y1],[$x0,$y0]]]}"""
+      "\"gfw_geostore_id\":\"([0-9a-f-]+)\"".r
+        .findFirstMatchIn(post("/geostore", gj).body()).get.group(1)
+    }
+    def zonal(gid: String) = get(s"/analysis/zonal?geostore_id=$gid&group_by=landcover")
+    val serial = gids.map { g =>
+      val r = zonal(g)
+      assert(r.statusCode() == 200, r.body().take(300))
+      r.body()
+    }
+    assert(serial.distinct.size == gids.size, "AOIs must give distinct answers")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(gids.size)
+    try {
+      val wrong = (0 until 6).flatMap { round =>
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val futs = gids.indices.map { i =>
+          pool.submit(new java.util.concurrent.Callable[(Int, String)] {
+            def call(): (Int, String) = {
+              start.await()
+              val r = zonal(gids(i))
+              (r.statusCode(), r.body())
+            }
+          })
+        }
+        start.countDown()
+        futs.zipWithIndex.collect {
+          case (f, i) if f.get(60, java.util.concurrent.TimeUnit.SECONDS) != (200, serial(i)) =>
+            s"round $round AOI $i"
+        }
+      }
+      assert(wrong.isEmpty, s"answers differ from the serial body: $wrong")
+    } finally pool.shutdown()
+  }
+
+  test("request latency carries no Nagle/delayed-ACK stall: sequential " +
+    "GET /ping and 422 POSTs on one client each take well under 40 ms") {
+    // the 422 (no sql) is answered before any Spark work, so both
+    // medians time the HTTP round trip alone; with Nagle on the
+    // response body waits for the client's delayed ACK (~40 ms)
+    def median(call: () => HttpResponse[String], code: Int): Double = {
+      val ms = (0 until 30).map { _ =>
+        val t0 = System.nanoTime()
+        val r = call()
+        assert(r.statusCode() == code, r.body().take(200))
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      ms(ms.size / 2)
+    }
+    val ping = median(() => get("/ping"), 200)
+    val post422 = median(() => post("/dataset/nation/v1/query/json", "{}"), 422)
+    assert(ping < 15.0, s"GET /ping median $ping ms")
+    assert(post422 < 15.0, s"POST 422 median $post422 ms")
+  }
 }
