@@ -4,8 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 
-import org.apache.spark.sql.SparkSession
-
 /** Concurrent-load smoke for the API layer (round-15 verdict ask #7):
   * the bench is serial, but the reference serves concurrent HTTP
   * (pool 5–10, workers/core — `app/settings/globals.py:59-60`,
@@ -13,10 +11,12 @@ import org.apache.spark.sql.SparkSession
   * requests (interactive count/agg, zonal analysis, streaming CSV
   * download, field introspection) at an [[api.ApiServer]] on sf0.1,
   * with a 10 Hz `/ping` prober running throughout as the starvation
-  * signal, and prints ONE JSON line with per-class p50/p99, ping p99,
-  * and error counts. The `zonal_aoi` class sends distinct one-tile
-  * AOIs and checks each 200 against that AOI's serial answer, fetched
-  * before the load: a mismatch counts as an error and in `wrong`.
+  * signal, and prints ONE JSON line with per-class and ping sample
+  * counts, p50/p99 (`null` unless ten samples lie beyond the
+  * percentile), max, and error counts. The `zonal_aoi` class sends
+  * distinct one-tile AOIs and checks each 200 against that AOI's
+  * serial answer, fetched before the load: a mismatch counts as an
+  * error and in `wrong`.
   * Recorded in BENCH_sf1.md.
   *
   *   runMain graft.ApiLoad [concurrency] [rounds]
@@ -25,20 +25,13 @@ object ApiLoad {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 16
     val rounds = if (args.length > 1) args(1).toInt else 6
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR across the server's per-slot scheduler pools: concurrent
-      // requests share the cluster instead of queueing whole-job FIFO
-      // (ApiServer sets spark.scheduler.pool = graft-api-slot-N per
-      // in-flight query; inert under the default FIFO mode)
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Bench.envSfDir(sys.env)
+    // FAIR across the server's per-slot scheduler pools: concurrent
+    // requests share the cluster instead of queueing whole-job FIFO
+    // (ApiServer sets spark.scheduler.pool = graft-api-slot-N per
+    // in-flight query; inert under the default FIFO mode)
+    val spark = LocalTuning.session(Bench.envCpus(sys.env).toInt,
+      "spark.scheduler.mode" -> "FAIR")
     val server = new api.ApiServer(spark, sfDir)
     val port = server.start()
     val client = HttpClient.newHttpClient()
@@ -133,20 +126,22 @@ object ApiLoad {
     stop = true
     pool.shutdown()
 
-    def pct(xs: Seq[Double], p: Double): Double =
-      if (xs.isEmpty) 0.0
-      else xs.sorted.apply(math.min(xs.size - 1, (xs.size * p).toInt))
+    // a percentile only when at least ten samples lie beyond it (a p99
+    // of 30 samples is the run's maximum); null otherwise
+    def pct(xs: Seq[Double], p: Double): String =
+      if (xs.size * (1 - p) < 10 - 1e-9) "null"
+      else xs.sorted.apply(math.min(xs.size - 1, (xs.size * p).toInt)).round.toString
     import scala.jdk.CollectionConverters._
     val all = lat.asScala.toSeq
     val wrong = all.count(_._4)
     val errors = all.count(_._3 != 200) + wrong
     val byCls = all.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, xs) =>
       val ms = xs.map(_._2)
-      s""""$c":{"n":${xs.size},"p50_ms":${pct(ms, 0.5).round},"p99_ms":${pct(ms, 0.99).round},"max_ms":${ms.max.round}}"""
+      s""""$c":{"n":${xs.size},"p50_ms":${pct(ms, 0.5)},"p99_ms":${pct(ms, 0.99)},"max_ms":${ms.max.round}}"""
     }.mkString(",")
     val pings = pingLat.asScala.toSeq.filter(_ != Double.MaxValue)
     val pingErr = pingLat.asScala.count(_ == Double.MaxValue)
-    println(s"""{"metric":"api_load","concurrency":$n,"rounds":$rounds,"requests":${all.size},"errors":$errors,"wrong":$wrong,"wall_sec":${f"$wallSec%.1f"},"classes":{$byCls},"ping":{"n":${pings.size},"p50_ms":${pct(pings, 0.5).round},"p99_ms":${pct(pings, 0.99).round},"errors":$pingErr},"sf":"$sfDir"}""")
+    println(s"""{"metric":"api_load","concurrency":$n,"rounds":$rounds,"requests":${all.size},"errors":$errors,"wrong":$wrong,"wall_sec":${f"$wallSec%.1f"},"classes":{$byCls},"ping":{"n":${pings.size},"p50_ms":${pct(pings, 0.5)},"p99_ms":${pct(pings, 0.99)},"max_ms":${pings.maxOption.fold(0L)(_.round)},"errors":$pingErr},"sf":"$sfDir"}""")
     server.stop()
     spark.stop()
   }

@@ -200,16 +200,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val steal = new ContentionSampler
     val sfDir = envSfDir(sys.env)
-    val cpus = envCpus(sys.env)
-    val spark = LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the events NTZ→TIMESTAMP load cast is value-preserving only
-      // under a UTC session — pin it rather than inherit the host TZ
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalTuning.session(envCpus(sys.env).toInt)
     // warm up the session (codegen/JIT, table registration) so the
     // first measured query isn't charged for JVM startup
     Tables.register(spark, sfDir)

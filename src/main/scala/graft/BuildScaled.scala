@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Builds a replicated N× corpus INCLUDING the relational tables (the
   * sf1 gate input — round-14 verdict ask #6): `runMain
   * graft.BuildScaled <sfDir> <outDir> [reps]`. The output dir is a
@@ -17,14 +15,7 @@ object BuildScaled {
     val sfDir = args(0)
     val outDir = args(1)
     val reps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalTuning.session(Bench.envCpus(sys.env).toInt)
     ScaleProbe.buildScaled(spark, sfDir, outDir, reps, relational = true)
     for (t <- Tables.all) {
       val n = spark.read.parquet(s"$outDir/$t.parquet").count()

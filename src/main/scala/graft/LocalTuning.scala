@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults shared by every driver-contract main (Bench,
-  * Verify, Smoke, the dev tools) — the r16 optimization round's
+/** The one way to build an engine session ([[LocalTuning.session]])
+  * and the defaults it carries — the r16 optimization round's
   * host-level shuffle fixes, found via executor thread dumps
   * (optimization guide §7.3) on the bench box:
   *
@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   *    local-only trick — the serialized writer is the modern default
   *    path whenever the serializer supports relocation; the bypass
   *    writer's per-reducer file fan-out is precisely what hurts as
-  *    cores-per-box grow. Overridable via SPARK_GRAFT_BYPASS_MERGE.
+  *    cores-per-box grow.
   *
   *  - `spark.local.dir` on tmpfs when available (`/dev/shm`): the
   *    sandbox's `/` is a slow virtual disk (a cold 584 KB read
@@ -77,8 +77,7 @@ object LocalTuning {
       } else None
     }
     Seq(
-      "spark.shuffle.sort.bypassMergeThreshold" ->
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"),
+      "spark.shuffle.sort.bypassMergeThreshold" -> "1",
       // The generated-class cache holds 100 entries by default — a
       // 216-query surface evicts the whole cold pass before the warm
       // pass re-runs it, so every query pays Janino compilation twice
@@ -87,8 +86,7 @@ object LocalTuning {
       // 4096 entries ≈ tens of MB of class metadata — cheap on any
       // driver; a production service with a repeating query mix wants
       // the same.
-      "spark.sql.codegen.cache.maxEntries" ->
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")) ++
+      "spark.sql.codegen.cache.maxEntries" -> "4096") ++
       localDir.map("spark.local.dir" -> _)
   }
 
@@ -97,4 +95,22 @@ object LocalTuning {
     * set, and these are applied first by the callers). */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     sessionDefaults.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** An engine session on `local[cpus]`: one shuffle partition per
+    * core, [[sessionDefaults]], a UTC session time zone (the events
+    * NTZ→TIMESTAMP load cast is value-preserving only under UTC), no
+    * UI, then `conf` (last wins). The native functions are installed
+    * before it is returned. */
+  def session(cpus: Int, conf: (String, String)*): SparkSession = {
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ conf
+    val spark = settings.foldLeft(apply(SparkSession.builder()).master(s"local[$cpus]")) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.install(spark)
+    spark
+  }
 }

@@ -149,24 +149,17 @@ object ScaleProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1)
       else s"${sys.props("java.io.tmpdir")}/graft_sf10x_v3"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // NB: driver heap cannot be set here — local-mode `runMain` runs
     // inside the already-forked JVM, so a spark.driver.memory config
-    // would silently no-op; build.sbt's fork options size the heap
-    val spark = LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NB round 10: the probe used to raise autoBroadcastJoinThreshold
-      // to 1 GB so e4's verify join would broadcast its vector side
-      // (the default-threshold SMJ spilled ~200 GB at 100×). The
-      // verify join now carries an explicit BROADCAST hint at the
-      // source (SimQueries.e4Ctes — threshold-independent), so the
-      // probe runs the DEFAULT config the driver uses: the robustness
-      // is in the plan, not the probe.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // would silently no-op; build.sbt's fork options size the heap.
+    // NB round 10: the probe used to raise autoBroadcastJoinThreshold
+    // to 1 GB so e4's verify join would broadcast its vector side
+    // (the default-threshold SMJ spilled ~200 GB at 100×). The
+    // verify join now carries an explicit BROADCAST hint at the
+    // source (SimQueries.e4Ctes — threshold-independent), so the
+    // probe runs the DEFAULT session config: the robustness
+    // is in the plan, not the probe.
+    val spark = LocalTuning.session(Bench.envCpus(sys.env).toInt)
     buildScaled(spark, sfDir, outDir)
 
     def warmTimed(name: String, dir: String): (Double, Long) = {
@@ -549,7 +542,6 @@ object ScaleProbe {
     import java.nio.file.{Files, Paths}
     require(reps <= 128, s"decorrelation transform covers ≤128 replicas, got $reps")
     Files.createDirectories(Paths.get(outDir))
-    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
     docs.createOrReplaceTempView("sp_docs")

@@ -1,11 +1,7 @@
 package graft
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = LocalTuning(org.apache.spark.sql.SparkSession.builder())
-      .master("local[4]").config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalTuning.session(Bench.envCpus(sys.env).toInt)
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(6)

@@ -22,9 +22,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("a1_agg_groupby")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs the native functions before it runs: the contract accepts
+    * sessions the engine did not build (`install` is a no-op after its
+    * first call per session). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.queries).toMap
+    modules.flatMap(_.queries).toMap.map { case (name, fn) =>
+      name -> { (spark: SparkSession, sfDir: String) =>
+        graft.functions.GraftFunctions.install(spark)
+        fn(spark, sfDir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -67,10 +67,9 @@ object Tables {
     * reference it fail at resolution while the other tables serve. */
   def loadErrors: Map[String, Throwable] = loadFailures
 
-  /** Register every lake table as a temp view for the SQL surface,
-    * plus the engine's native function surface. Idempotent per
-    * (session, lake dir): repeated queries skip the catalog round
-    * trips (parquet footer reads) entirely.
+  /** Register every lake table as a temp view for the SQL surface.
+    * Idempotent per (session, lake dir): repeated queries skip the
+    * catalog round trips (parquet footer reads) entirely.
     *
     * Failure-isolated per table: one unreadable parquet (corrupt file,
     * schema drift the loader can't bridge) must not poison the other
@@ -96,17 +95,13 @@ object Tables {
   private def spreadIfNarrow(spark: SparkSession, name: String,
                              df: DataFrame): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    // SPARK_GRAFT_SPREAD=off disables the spread (A/B measurement
-    // hook; default auto = the scale-guarded behavior)
-    if (sys.env.getOrElse("SPARK_GRAFT_SPREAD", "auto") != "off" &&
-        spreadTables.contains(name) &&
+    if (spreadTables.contains(name) &&
         df.rdd.getNumPartitions < par) df.repartition(par)
     else df
   }
 
   def register(spark: SparkSession, sfDir: String): Unit = synchronized {
     if (!registeredFor.contains((spark, sfDir))) {
-      graft.functions.GraftFunctions.install(spark)
       var failures = Map.empty[String, Throwable]
       all.foreach { n =>
         try spreadIfNarrow(spark, n, load(spark, sfDir, n))

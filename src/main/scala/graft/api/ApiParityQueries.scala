@@ -34,8 +34,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * server boot + HTTP sweep immediately and returns a 5-row local
   * frame — so Bench charges the sink/API cost into its totals
   * (deliberately: the sink IS the operator here), and a plan dump of
-  * this query would show only a LocalRelation (it is therefore not in
-  * PLANS.md's list). */
+  * this query shows only a LocalRelation (it is therefore not in the
+  * `graft.Dev plan` list in PLANS.md). */
 object ApiParityQueries extends QueryModule {
 
   private def md5hex(b: Array[Byte]): String =

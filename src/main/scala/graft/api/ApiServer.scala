@@ -102,10 +102,10 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                       sqlRequestTimeoutSec: Int =
                         sys.env.getOrElse("GRAFT_SQL_REQUEST_TIMEOUT_SEC", "58").toInt) {
 
-  Tables.register(spark, sfDir)
   // the native functions and the optimizer-rule exclusion go in once,
   // here: requests only read the shared registry and conf
   graft.functions.GraftFunctions.install(spark)
+  Tables.register(spark, sfDir)
 
   /** Directories a PUT body's `source_uri` (or a batch query's `uri`)
     * may point into — the reference only loads from its own buckets;

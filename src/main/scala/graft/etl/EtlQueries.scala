@@ -125,7 +125,6 @@ object EtlQueries extends QueryModule {
     * round trip lossless against the source lattice. */
   private def shpIngest(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.install(spark)
     val dir = java.nio.file.Paths.get(tmpDir("s5", sfDir))
     java.nio.file.Files.createDirectories(dir)
     val rows = spark.sql(
@@ -152,7 +151,6 @@ object EtlQueries extends QueryModule {
     * SQLite b-tree + GPKG blob round trip lossless. */
   private def gpkgIngest(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.install(spark)
     val dir = java.nio.file.Paths.get(tmpDir("s7", sfDir))
     java.nio.file.Files.createDirectories(dir)
     val rows = spark.sql(
@@ -184,7 +182,6 @@ object EtlQueries extends QueryModule {
     * haversine radius from the zoom table). */
   private def vectorFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.install(spark)
     val dir = tmpDir("s6src", sfDir)
     spark.sql(
       """SELECT c_custkey,

@@ -612,7 +612,6 @@ object VersionCreation {
 
     var df: DataFrame = null
     try {
-      graft.functions.GraftFunctions.install(spark)
       // four vector drivers (reference ogr2ogr formats): GeoPackage
       // containers, ESRI Shapefiles, whole-file GeoJSON
       // FeatureCollections (`.geojson`), or the default
@@ -847,7 +846,6 @@ object VersionCreation {
     var ok = true
     var added: Long = -1
     try {
-      graft.functions.GraftFunctions.install(spark)
       val existing = spark.read.parquet(targetDir)
       val isGpkg = newUris.forall(_.endsWith(".gpkg"))
       val withGeom =

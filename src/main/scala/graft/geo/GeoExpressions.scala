@@ -1,6 +1,5 @@
 package graft.geo
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -10,7 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The PostGIS-equivalent function family (SURVEY §2.6) as Catalyst
   * expressions over WKB `BinaryType` columns. Registered by
-  * [[GeoFunctions.install]] so they resolve inside the SQL dialect —
+  * [[graft.functions.GraftFunctions.install]] (which includes
+  * [[GeoFunctions.builders]]) so they resolve inside the SQL dialect —
   * which is what makes the scrutinizer's injected
   * `st_intersects(geom, st_setsrid(st_geomfromgeojson('…'),4326))`
   * filter (P4) executable.
@@ -454,13 +454,14 @@ object GeoExpressions {
   }
 }
 
-/** Session registration for the geometry function family. */
+/** Registry builders for the geometry function family. */
 object GeoFunctions {
   import GeoExpressions._
 
-  /** Name → expression builder, consumed both by the per-session
+  /** Name → expression builder, part of
+    * [[graft.functions.GraftFunctions.builders]]: the per-session
     * registry install and the `SparkSessionExtensions` injection
-    * (`graft.GraftExtensions`). */
+    * (`graft.GraftExtensions`) both consume it from there. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "st_geomfromgeojson" -> (es => StGeomFromGeoJson(es.head)),
     "st_asgeojson" -> (es => StAsGeoJson(es.head)),
@@ -491,10 +492,4 @@ object GeoFunctions {
     "st_collectionextract" -> (es => StCollectionExtract(es(0), es(1))),
     "st_makeenvelope" -> (es => StMakeEnvelope(es)),
     "uuid5" -> (es => Uuid5(es(0), es(1))))
-
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in") }
-  }
 }

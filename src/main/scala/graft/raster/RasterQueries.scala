@@ -600,7 +600,6 @@ object RasterQueries extends QueryModule {
   private[graft] def probeZonal(spark: SparkSession, dir: String,
                                 pg: Grid,
                                 poly: Seq[(Double, Double)]): DataFrame = {
-    graft.functions.GraftFunctions.install(spark)
     val gj = geoJson(poly)
     val (bxmin, bymin, bxmax, bymax) = bbox(poly)
     val ids = TileLake.tileIdsForBbox(pg, bxmin, bymin, bxmax, bymax)
@@ -631,7 +630,6 @@ object RasterQueries extends QueryModule {
   private[graft] def probeBatchZonal(spark: SparkSession, dir: String,
                                      pg: Grid,
                                      aois: Seq[Seq[(Double, Double)]]): DataFrame = {
-    graft.functions.GraftFunctions.install(spark)
     val pairs = aois.zipWithIndex.flatMap { case (poly, id) =>
       val (x0, y0, x1, y1) = bbox(poly)
       TileLake.tileIdsForBbox(pg, x0, y0, x1, y1)
@@ -869,7 +867,6 @@ object RasterQueries extends QueryModule {
     val fg = r13Grid
     val px = fg.pxPerTile
     val lake = ensureR13Lake(spark, sfDir)
-    graft.functions.GraftFunctions.install(spark)
     spark.read.parquet(lake).createOrReplaceTempView("r13_lake")
     spark.sql(
       s"""WITH arrs AS (SELECT

@@ -59,7 +59,6 @@ object TileLake {
     val px = g.pxPerTile * g.pxPerTile
     val sGx = s"(tx * ${g.pxPerTile} + i % ${g.pxPerTile})"
     val sGy = s"(ty * ${g.pxPerTile} + i DIV ${g.pxPerTile})"
-    graft.functions.GraftFunctions.install(spark)
     // Tile METADATA (id, tx, ty) is driver-side — it is the partition
     // directory listing, tiny even on planet-scale grids (~10⁴ tiles);
     // pixel arrays are computed distributed, per tile row. Ids come

@@ -68,7 +68,6 @@ object ZonalEngine {
              overrides: Map[String, String] = Map.empty): DataFrame = {
     val geom = requireAreal(aoiGeoJson)
     val (env, cq) = compileFor(catalog, dataset, userSql, overrides)
-    graft.functions.GraftFunctions.install(spark)
     TileLake.ensureLake(spark, env.lakeDir)
     val bb = geom.bbox
     val ids = TileLake.tileIdsForBbox(env.grid, bb._1, bb._2, bb._3, bb._4)
@@ -100,7 +99,6 @@ object ZonalEngine {
     if (cq.orderBy.nonEmpty || cq.limit.nonEmpty)
       throw RasterSqlException(
         "ORDER BY / LIMIT are not available on a streaming listing")
-    graft.functions.GraftFunctions.install(spark)
     TileLake.ensureLake(spark, env.lakeDir)
     val bb = geom.bbox
     val ids = TileLake.tileIdsForBbox(env.grid, bb._1, bb._2, bb._3, bb._4)
@@ -127,7 +125,6 @@ object ZonalEngine {
     geoms.foreach { case (_, gj) => requireAreal(gj) }
     val (env, cq) = compileFor(catalog, dataset, userSql, overrides)
     val g = env.grid
-    graft.functions.GraftFunctions.install(spark)
     TileLake.ensureLake(spark, env.lakeDir)
     val bbs = geoms.map { case (fid, gj) => (fid, gj, Geom.fromGeoJson(gj).bbox) }
     val ids = bbs.flatMap { case (_, _, bb) =>
@@ -173,7 +170,6 @@ object ZonalEngine {
           "Geometry must be a Polygon or MultiPolygon for raster analysis")
       }
     }
-    graft.functions.GraftFunctions.install(spark)
     val env = DataEnvironment.cached(catalog, TileLake.defaultDir)
     val g = env.grid
     TileLake.ensureLake(spark, env.lakeDir)
@@ -229,7 +225,6 @@ object ZonalEngine {
 
     import SyntheticEnv._
     val g = grid
-    graft.functions.GraftFunctions.install(spark)
     val dir = TileLake.defaultDir
     TileLake.ensureWritten(spark, dir)
 

@@ -455,7 +455,6 @@ object SimQueries extends QueryModule {
     val key = s"$sfDir#$maxIter#$k#${Tables.sourceTag(s"$sfDir/embeddings.parquet")}"
     kmMemo.computeIfAbsent(key, { _ =>
       Tables.register(spark, sfDir)
-      graft.functions.GraftFunctions.install(spark)
       val raw = spark.sql(s"$sparkVecs SELECT vec_id, v, nrm FROM n").rdd
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       val nChunks = (raw.map(_._1).max() / KmChunk + 1).toInt
@@ -473,10 +472,8 @@ object SimQueries extends QueryModule {
           .filter(_._1 < k).map(t => (t._1, t._2)).collect().sortBy(_._1).toSeq
         var iter = 0
         var fixed = false
-        val dbg = sys.env.contains("GRAFT_KM_DEBUG")
         while (iter < maxIter && !fixed) {
           iter += 1
-          val itT0 = if (dbg) System.nanoTime() else 0L
           val cArr = cents.toArray
           val cNrm = cArr.map { case (_, a) => math.sqrt(dotScala(a, a)) }
           // corpus-sized k: per-iteration two-level routing (rebuild
@@ -540,8 +537,6 @@ object SimQueries extends QueryModule {
             next.zip(cents).forall { case ((c1, a1), (c2, a2)) =>
               c1 == c2 && java.util.Arrays.equals(a1, a2) }
           cents = next
-          if (dbg) System.err.println(
-            f"[km] iter $iter%2d ${(System.nanoTime() - itT0) / 1e6}%.0f ms")
         }
         KmResult(cents, iter, fixed)
       } finally {

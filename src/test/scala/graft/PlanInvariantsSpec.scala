@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * a refactor that silently loses one (a filter that stops reaching
   * the scan, a broadcast that becomes a shuffle join, partition
   * pruning that stops firing, an expression that re-evaluates) fails
-  * loudly instead of only showing up in the bench. PLANS.md carries
-  * the full dumps; these assert just the load-bearing fragments. */
+  * loudly instead of only showing up in the bench. `graft.Dev plan`
+  * prints the full plans (PLANS.md has the command); these assert
+  * just the load-bearing fragments. */
 class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = LocalTuning.session(2)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,0 +1,71 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One way to build a session (`LocalTuning.session`) and one
+  * registration boundary: the native functions are installed only by
+  * `LocalTuning.session`, the `SparkEntry.queries` wrapper and the
+  * `ApiServer` constructor. The source scans keep new code from
+  * growing its own builder or call site; the foreign-session test pins
+  * the driver contract, which accepts sessions the engine did not
+  * build. */
+class SessionBoundarySpec extends AnyFunSuite {
+
+  private val mainSrc = Paths.get("src/main/scala/graft")
+
+  /** (path under `src/main/scala/graft`, line number) of every code
+    * line (comments skipped) matching `pattern`. */
+  private def occurrences(pattern: String): Seq[(String, Int)] = {
+    assert(Files.isDirectory(mainSrc), s"run from the project root: $mainSrc missing")
+    val re = pattern.r
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(mainSrc).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    files.flatMap { (f: Path) =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if !line.trim.matches("""(//|\*|/\*).*""") &&
+          re.findFirstIn(line).nonEmpty => (mainSrc.relativize(f).toString, i + 1)
+      }
+    }
+  }
+
+  test("SparkSession.builder appears in src/main only in LocalTuning") {
+    val outside = occurrences("""SparkSession\.builder\b""")
+      .filterNot(_._1 == "LocalTuning.scala")
+    assert(outside.isEmpty, s"build sessions through LocalTuning.session: $outside")
+  }
+
+  test("GraftFunctions.install is called in src/main only at the three boundaries") {
+    val boundaries = Seq("LocalTuning.scala", "SparkEntry.scala", "api/ApiServer.scala")
+    val calls = occurrences("""GraftFunctions\.install\(""")
+    assert(calls.map(_._1).sorted == boundaries.sorted,
+      s"one call per boundary ($boundaries), found: $calls")
+  }
+
+  test("SparkEntry.queries installs the native functions on a session the " +
+    "engine did not build") {
+    // a bare builder, no LocalTuning, no install; newSession gives a
+    // registry of its own even if another suite left a session running
+    val base = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    val spark = base.newSession()
+    try {
+      val reg = spark.sessionState.functionRegistry
+      assert(!reg.functionExists(FunctionIdentifier("tile_zonal")),
+        "the foreign session must start without the native functions")
+      // the sf0.001 lake beside the bench's default one
+      val tinySf = new java.io.File(
+        new java.io.File(Bench.envSfDir(Map.empty)).getParentFile, "sf0.001").getPath
+      val df = SparkEntry.queries("r7_batch_zonal")(spark, tinySf)
+      assert(df.queryExecution.analyzed.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.raster.TileZonal]))), "the plan must call tile_zonal")
+      assert(df.collect().nonEmpty)
+    } finally base.stop()
+  }
+}

@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * schema change failed 81/98 queries through the eager register). */
 class TablesSpec extends AnyFunSuite {
 
-  private def sparkSession(): SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private def sparkSession(): SparkSession = LocalTuning.session(2)
 
   test("a corrupt table registers the other nine and fails only itself") {
     val spark = sparkSession()

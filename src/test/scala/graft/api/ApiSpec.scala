@@ -3,18 +3,12 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   private var server: ApiServer = _
   private var port: Int = _
@@ -2104,5 +2098,43 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val post422 = median(() => post("/dataset/nation/v1/query/json", "{}"), 422)
     assert(ping < 15.0, s"GET /ping median $ping ms")
     assert(post422 < 15.0, s"POST 422 median $post422 ms")
+  }
+
+  test("serving writes no session state: conf and function registry are " +
+    "unchanged by a tabular query, a zonal analysis and a raster SQL query") {
+    // a server on a session of its own, so the snapshots see only its
+    // requests; per-version temp views are catalog state, out of scope
+    val s = spark.newSession()
+    val tinySf = new java.io.File(
+      new java.io.File(graft.Bench.envSfDir(Map.empty)).getParentFile, "sf0.001").getPath
+    val srv = new ApiServer(s, tinySf)
+    val p = srv.start()
+    def send(b: HttpRequest.Builder) = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+    def at(path: String) = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path"))
+    try {
+      val gj = """{"type":"Polygon","coordinates":[[[0.3513,40.6821],[3.1242,40.9753],[3.7081,43.2517],[0.8472,42.8391],[0.3513,40.6821]]]}"""
+      val id = "\"gfw_geostore_id\":\"([0-9a-f-]+)\"".r
+        .findFirstMatchIn(send(at("/geostore").POST(HttpRequest.BodyPublishers.ofString(gj)))
+          .body()).get.group(1)
+      val reg = s.sessionState.functionRegistry
+      // ExpressionInfo compares by reference: a re-registered function shows
+      def snapshot() = (s.conf.getAll, reg.listFunction().map(f => f -> reg.lookupFunction(f)).toMap)
+      val (conf0, fns0) = snapshot()
+      val enc = (q: String) => java.net.URLEncoder.encode(q, "UTF-8")
+      Seq(
+        "/dataset/nation/v1/query/json?sql=" + enc("SELECT count(*) AS cnt FROM data"),
+        s"/analysis/zonal?geostore_id=$id&group_by=landcover&tcd_threshold=30",
+        s"/dataset/landcover_raster/v1/query/json?geostore_id=$id&sql=" +
+          enc("SELECT sum(area__ha) AS area__ha FROM data")
+      ).foreach { path =>
+        val r = send(at(path).GET())
+        assert(r.statusCode() == 200, s"$path: ${r.body().take(300)}")
+      }
+      val (conf1, fns1) = snapshot()
+      val confDiff = (conf0.toSet diff conf1.toSet) ++ (conf1.toSet diff conf0.toSet)
+      assert(confDiff.isEmpty, s"conf written: $confDiff")
+      val fnDiff = (fns0.keySet ++ fns1.keySet).filter(f => fns0.get(f) != fns1.get(f))
+      assert(fnDiff.isEmpty, s"function registry written: $fnDiff")
+    } finally srv.stop()
   }
 }

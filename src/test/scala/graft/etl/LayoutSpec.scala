@@ -1,16 +1,11 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -18,7 +13,6 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partitionBy + cluster sort + gist bbox columns") {
     import spark.implicits._
-    graft.functions.GraftFunctions.install(spark)
     val df = Seq.tabulate(100) { i =>
       (i.toLong, s"p${i % 3}", (i * 37 % 100).toDouble)
     }.toDF("id", "part", "v")

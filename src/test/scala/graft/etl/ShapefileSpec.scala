@@ -3,7 +3,6 @@ package graft.etl
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * round-trip query (points only) does not reach. */
 class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BloomGateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(4)
 
-  override def beforeAll(): Unit = GraftFunctions.install(spark)
   override def afterAll(): Unit = spark.stop()
 
   test("no false negatives: every inserted hash probes true") {

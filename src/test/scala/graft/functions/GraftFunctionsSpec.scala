@@ -1,20 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `install` writes the session's function registry and optimizer
-  * conf once; the raster paths call it on every request, so later
-  * calls must leave that shared state alone. */
+  * conf once; `SparkEntry.queries` calls it before every query, so
+  * later calls must leave that shared state alone. */
 class GraftFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

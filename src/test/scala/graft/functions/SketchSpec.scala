@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * formulation while Spark runs the fused loop. */
 class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
-  override def beforeAll(): Unit = GraftFunctions.install(spark)
   override def afterAll(): Unit = spark.stop()
 
   private val docs = Seq(

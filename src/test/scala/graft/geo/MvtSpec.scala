@@ -201,9 +201,7 @@ class MvtSpec extends AnyFunSuite {
     // whose call sites broke the build): a loop-shaped LineString must
     // keep its explicit closing vertex (MVT LineTo), while a polygon
     // ring drops the duplicated close (ClosePath implies it)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = graft.LocalTuning.session(2)
     try {
       import spark.implicits._
       val loopCs = Array(
@@ -233,9 +231,7 @@ class MvtSpec extends AnyFunSuite {
   }
 
   test("degenerate exterior ring drops the polygon, never promotes a hole") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = graft.LocalTuning.session(2)
     try {
       import spark.implicits._
       // exterior collapses to one quantized vertex at z0 (~0.09° per
@@ -259,9 +255,7 @@ class MvtSpec extends AnyFunSuite {
   }
 
   test("lines clip to tiles: bbox-only tiles stay empty, exits split parts") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = graft.LocalTuning.session(2)
     try {
       import spark.implicits._
       import graft.raster.TileCache.{xOfLon, yOfLat}
@@ -340,9 +334,7 @@ class MvtSpec extends AnyFunSuite {
   }
 
   test("quantized zero-area slivers drop; antimeridian bbox fans out to edges only") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = graft.LocalTuning.session(2)
     try {
       import spark.implicits._
       // a sliver whose vertices quantize to collinear points at z0:
@@ -369,9 +361,7 @@ class MvtSpec extends AnyFunSuite {
   }
 
   test("vector tile cache build: features land on the right tiles and clip") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = graft.LocalTuning.session(2)
     try {
       import spark.implicits._
       // one square polygon spanning the (z1, x1, y0) tile boundary at

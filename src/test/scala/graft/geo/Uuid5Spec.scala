@@ -1,6 +1,5 @@
 package graft.geo
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * CPython's uuid module. */
 class Uuid5Spec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 
   test("uuid5 matches CPython fixtures") {
-    graft.functions.GraftFunctions.install(spark)
     def u(ns: String, name: String): String =
       spark.sql(s"SELECT uuid5('$ns', '$name') AS u").collect()(0).getString(0)
     assert(u("oid", "tree_cover_loss_by_driver_abc_30_v2024") ==

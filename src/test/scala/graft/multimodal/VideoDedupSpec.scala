@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * threshold cut is non-vacuous on the fixture. */
 class VideoDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(4)
 
   private val sf = "/root/testdata/sf0.001"
 

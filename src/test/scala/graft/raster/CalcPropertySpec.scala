@@ -1,6 +1,5 @@
 package graft.raster
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.BeforeAndAfterAll
@@ -20,11 +19,7 @@ class CalcPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.passed, s"$name: ${r.status}")
   }
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * it replaced in the cogify job: same bytes, bounded driver memory. */
 class CogSpec extends AnyFunSuite {
 
-  private def sparkSession() = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+  private def sparkSession() = graft.LocalTuning.session(4)
 
   // 3×2 tiles of 20 px ⇒ 60×40 image; block 16 ⇒ 4×3 base blocks,
   // overviews 30×20 (2×2 blocks) then 15×10 (one block) — edge blocks,

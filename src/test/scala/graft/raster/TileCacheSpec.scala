@@ -5,11 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TileCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

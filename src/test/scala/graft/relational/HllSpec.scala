@@ -1,7 +1,6 @@
 package graft.relational
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,11 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 78% error at n=500 — lattice structure starves max(ρ)). */
 class HllSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft.relational
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a brute-force different-algorithm replay). */
 class TemporalJoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft.simsearch
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * centroids exactly. */
 class HierAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -48,7 +42,6 @@ class HierAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.branches.forall(_.nonEmpty), "no empty branch may survive")
 
     Tables.register(spark, sf)
-    graft.functions.GraftFunctions.install(spark)
     val vecs = spark.sql(
       """SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM embeddings""")
       .as[(Long, Array[Double])].collect()

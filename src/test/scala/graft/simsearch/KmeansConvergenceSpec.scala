@@ -1,6 +1,5 @@
 package graft.simsearch
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * unroll (Lloyd is idempotent at the fixed point). */
 class KmeansConvergenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,7 +1,6 @@
 package graft.simsearch
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * failure-isolated per table, so an embeddings-only dir serves. */
 class PcaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

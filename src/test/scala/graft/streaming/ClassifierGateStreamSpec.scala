@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * static and micro-batched frames. */
 class ClassifierGateStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkEntry
 import graft.multimodal.MediaLake
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and micro-batched frames. */
 class ClipFilterStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   private val sf = "/root/testdata/sf0.001"
 

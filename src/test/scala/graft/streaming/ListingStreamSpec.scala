@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.{Files, Path, StandardCopyOption}
 
 import graft.raster.{SyntheticRasters, TileLake, ZonalEngine}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * all waves equals the batch listing over the same tiles. */
 class ListingStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents instead of ingesting them. */
 class PiiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

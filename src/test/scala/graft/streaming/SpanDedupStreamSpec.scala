@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,15 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * documented one-sided contract). */
 class SpanDedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
-  override def beforeAll(): Unit =
-    graft.functions.GraftFunctions.install(spark)
   override def afterAll(): Unit = spark.stop()
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,11 +15,7 @@ class StreamingGatesOracleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(4)
 
   override def afterAll(): Unit = spark.stop()
 

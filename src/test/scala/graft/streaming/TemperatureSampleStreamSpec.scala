@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,15 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * end-to-end here on the real sf0.001 documents). */
 class TemperatureSampleStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
-  override def beforeAll(): Unit =
-    graft.functions.GraftFunctions.install(spark)
   override def afterAll(): Unit = spark.stop()
 
   private val sf = "/root/testdata/sf0.001"

@@ -1,7 +1,6 @@
 package graft.textops
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * parity bug could silently preserve on both sides). */
 class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
+  private lazy val spark = graft.LocalTuning.session(2)
 
   private val sf = "/root/testdata/sf0.001"
 
