@@ -2,8 +2,10 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -14,7 +16,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * {{{
   *   runMain graft.Dev plan <q1,q2,…> [mode]   # plan per query (default mode: formatted)
   *   runMain graft.Dev time <q> [reps]         # build + count per rep, cold first
-  *   runMain graft.Dev profile <q> [reps]      # warm rep's stage table and rule times
+  *   runMain graft.Dev profile <q> [reps]      # codegen compiles per rep; warm rep's stage table and rule times
   *   runMain graft.Dev sql "<sql>"             # ad-hoc SQL over the lake tables
   * }}}
   *
@@ -61,10 +63,16 @@ object Dev {
                                  cpuMs: Long, tasks: Int, shRead: Long,
                                  shWrite: Long, inBytes: Long)
 
-  /** Runs the query `reps` times and prints, for the last (warm) rep,
-    * the top optimizer rule times and every completed stage with its
-    * wall time, summed executor run/CPU time, task count and shuffle
-    * and input bytes. */
+  /** Janino compiles so far in this JVM and their total ms. */
+  private def compiles(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+
+  /** Runs the query `reps` times and prints each rep's build, count
+    * and codegen compile count and ms (a warm rep that still compiles
+    * has a constant in its generated source), then, for the last
+    * (warm) rep, the top optimizer rule times and every completed
+    * stage with its wall time, summed executor run/CPU time, task
+    * count and shuffle and input bytes. */
   private def profile(spark: SparkSession, sfDir: String, name: String, reps: Int): Unit = {
     val stages = mutable.ArrayBuffer.empty[Stage]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -85,12 +93,14 @@ object Dev {
         stages.synchronized(stages.clear())
         RuleExecutor.resetMetrics()
       }
+      val (c0, cms0) = compiles()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val t1 = System.nanoTime()
       val n = df.count()
       val t2 = System.nanoTime()
-      println(f"[prof] $name rep$r rows=$n build ${(t1 - t0) / 1e9}%.2f s count ${(t2 - t1) / 1e9}%.2f s total ${(t2 - t0) / 1e9}%.2f s")
+      val (c1, cms1) = compiles()
+      println(f"[prof] $name rep$r rows=$n build ${(t1 - t0) / 1e9}%.2f s count ${(t2 - t1) / 1e9}%.2f s total ${(t2 - t0) / 1e9}%.2f s codegen ${c1 - c0} compiles ${cms1 - cms0}%.1f ms")
     }
     println("[rules] top rule times (warm rep):")
     RuleExecutor.dumpTimeSpent().split('\n').drop(2).take(18)

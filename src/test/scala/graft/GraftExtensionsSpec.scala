@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The declarative deployment path: a session configured with
   * `spark.sql.extensions=graft.GraftExtensions` has the whole native
-  * function family available with no imperative install call. */
+  * function family available with no imperative install call, and
+  * the filter-constant binding rule. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("spark.sql.extensions registers the function surface") {
@@ -37,6 +38,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .collect()(0).getString(0).startsWith("""{"type":"MultiPolygon""""))
       assert(spark.sql(s"SELECT st_area(st_collectionextract(st_point(1.0, 2.0), 3)) AS a")
         .collect()(0).getDouble(0) == 0.0)
+    } finally spark.stop()
+  }
+
+  test("spark.sql.extensions=graft.GraftExtensions binds filter constants") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    try {
+      val df = spark.range(10).filter("id = 3")
+      assert(df.collect().length == 1)
+      val bound = df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f.condition
+      }.flatMap(_.collect { case b: graft.functions.BoundLiteral => b })
+      assert(bound.nonEmpty, df.queryExecution.executedPlan.toString)
     } finally spark.stop()
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{ExplainMode, FilterExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,9 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * loudly instead of only showing up in the bench. `graft.Dev plan`
   * prints the full plans (PLANS.md has the command); these assert
   * just the load-bearing fragments. */
-class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
-  private lazy val spark = LocalTuning.session(2)
+  // no silent fallback to interpreted execution: a generated class that
+  // does not compile fails the test that runs it
+  private lazy val spark = LocalTuning.session(2, "spark.sql.codegen.fallback" -> "false")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -376,5 +382,40 @@ class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("SerializeFromObject"),
       s"decode kernel ran inside m17:\n${p.take(800)}")
     assert(p.contains("partial_count"), "bucket aggregate lost its partial phase")
+  }
+
+  test("API-shaped queries that differ only in constants compile on the first run only") {
+    assert(spark.conf.get("spark.sql.codegen.fallback") == "false")
+    Tables.register(spark, sf)
+    val lookup = (k: Int) =>
+      s"SELECT c_custkey, c_name, c_acctbal FROM customer WHERE c_custkey = $k"
+    val agg = (k: Int) =>
+      s"SELECT l_returnflag, count(*) AS n, max(l_extendedprice) AS mx FROM lineitem " +
+        s"WHERE l_quantity >= ${10 + k}.0 AND l_discount <= 0.0$k " +
+        "GROUP BY l_returnflag ORDER BY l_returnflag"
+    for (shape <- Seq(lookup, agg)) {
+      assert(spark.sql(shape(1)).collect().nonEmpty, shape(1))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (2 to 5).foreach(k => assert(spark.sql(shape(k)).collect().nonEmpty, shape(k)))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"$compiled classes compiled for new constants of ${shape(1)}")
+    }
+  }
+
+  test("filter constants bind in FilterExec only: the scan still pushes the " +
+    "literal and the formatted plan prints it as before") {
+    Tables.register(spark, sf)
+    val df = spark.sql("SELECT c_custkey, c_name FROM customer WHERE c_custkey = 7")
+    assert(df.collect().length == 1)
+    val plan = df.queryExecution.executedPlan
+    val p = plan.toString
+    assert(p.contains("EqualTo(c_custkey,7)"), s"the scan lost its pushed literal:\n$p")
+    val bound = collect(plan) { case f: FilterExec => f.condition }
+      .flatMap(_.collect { case b: graft.functions.BoundLiteral => b })
+    assert(bound == Seq(graft.functions.BoundLiteral(7L, org.apache.spark.sql.types.LongType)),
+      s"FilterExec does not hold the bound constant:\n$p")
+    val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert("Condition : .*\\(c_custkey#\\d+L = 7\\)".r.findFirstIn(formatted).isDefined &&
+      !formatted.toLowerCase.contains("boundliteral"), formatted)
   }
 }

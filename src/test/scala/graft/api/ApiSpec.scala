@@ -2080,6 +2080,67 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally pool.shutdown()
   }
 
+  test("concurrent same-shape tabular queries and raster-SQL POSTs over " +
+    "distinct AOIs: every body equals its serial body byte for byte") {
+    // the tabular requests differ only in numeric WHERE constants, so
+    // each shape runs one shared compiled class with per-request
+    // parameters; the raster POSTs each name one diagonal tile of the
+    // synthetic 4x4 one-degree grid (lon [0,4), lat [40,44))
+    val enc = (q: String) => java.net.URLEncoder.encode(q, "UTF-8")
+    val aggs = (0 until 4).map { i =>
+      "/dataset/lineitem/v1/query/json?sql=" + enc(
+        "SELECT l_returnflag, count(*) AS n, max(l_extendedprice) AS mx FROM data " +
+          s"WHERE l_quantity >= ${5 + 10 * i}.0 AND l_discount <= 0.0${i + 3} " +
+          "GROUP BY l_returnflag ORDER BY l_returnflag")
+    }
+    val lookups = Seq(3, 17, 42, 99).map { k =>
+      "/dataset/customer/v1/query/json?sql=" +
+        enc(s"SELECT c_custkey, c_name, c_acctbal FROM data WHERE c_custkey = $k")
+    }
+    val rasterSql = "SELECT landcover_raster__class AS cls, count(*) AS n " +
+      "FROM data GROUP BY landcover_raster__class ORDER BY cls"
+    val aois = (0 until 4).map { t =>
+      val (x0, y0) = (t + 0.15 + 0.05 * t, 43 - t + 0.2)
+      val (x1, y1) = (x0 + 0.5, y0 + 0.6)
+      s"""{"sql":"$rasterSql","geometry":{"type":"Polygon","coordinates":[[[$x0,$y0],[$x1,$y0],[$x1,$y1],[$x0,$y1],[$x0,$y0]]]}}"""
+    }
+    val calls: Seq[() => HttpResponse[String]] =
+      aggs.map(p => () => get(p)) ++ lookups.map(p => () => get(p)) ++
+        aois.map(b => () => post("/dataset/landcover_raster/v1/query/json", b))
+    val serial = calls.map { c =>
+      val r = c()
+      assert(r.statusCode() == 200, r.body().take(300))
+      r.body()
+    }
+    Seq(0, 4, 8).foreach { k =>
+      assert(serial.slice(k, k + 4).distinct.size == 4, s"requests $k-${k + 3} must give distinct answers")
+    }
+    val threads = 4
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val wrong = (0 until 6).flatMap { round =>
+        val start = new java.util.concurrent.CountDownLatch(1)
+        // thread i runs one aggregate, one lookup and one raster POST,
+        // a different trio each round
+        val futs = (0 until threads).map { i =>
+          val mine = Seq(0, 4, 8).map(_ + (i + round) % 4)
+          pool.submit(new java.util.concurrent.Callable[Seq[Int]] {
+            def call(): Seq[Int] = {
+              start.await()
+              mine.filter { j =>
+                val r = calls(j)()
+                (r.statusCode(), r.body()) != ((200, serial(j)))
+              }
+            }
+          })
+        }
+        start.countDown()
+        futs.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).map(j => s"round $round request $j")
+      }
+      assert(wrong.isEmpty, s"answers differ from the serial body: $wrong")
+    } finally pool.shutdown()
+  }
+
   test("request latency carries no Nagle/delayed-ACK stall: sequential " +
     "GET /ping and 422 POSTs on one client each take well under 40 ms") {
     // the 422 (no sql) is answered before any Spark work, so both
