@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Preflight gate for commits touching src/: compile, smoke the driver
-# entry, then run the full sf0.01 oracle compare. Run from /root/repo:
+# Preflight gate for commits touching src/: compile, run the session
+# boundary scans, smoke the driver entry, then run the full sf0.01
+# oracle compare. Run from /root/repo:
 #   scripts/preflight.sh
 # Exits non-zero on the first red step. See .claude/skills/verify/SKILL.md
 # for the full verification recipe (this script is its commit-gate subset).
@@ -9,6 +10,12 @@ cd "$(dirname "$0")/.."
 
 echo "[preflight] sbt compile"
 sbt -batch compile
+
+echo "[preflight] session boundary scans"
+# source scans (one session builder, one function registration
+# boundary, no scratch temp views, no stray conf writes) plus the
+# foreign-session entry check
+sbt -batch 'testOnly graft.SessionBoundarySpec'
 
 echo "[preflight] graft.Smoke (entry rows on sf0.001)"
 # `|| true` keeps set -e from killing the script when Smoke crashes

@@ -16,29 +16,27 @@ import org.apache.spark.sql.DataFrame
   */
 object CkptUtil {
 
-  /** The live checkpoint behind each named temp view registered via
-    * [[freshView]], so replacing the view (every consuming query
-    * invocation re-materializes — re-use across invocations would be
-    * result caching, which the bench methodology forbids) releases
-    * the PREVIOUS invocation's blocks instead of leaking them for the
-    * session's lifetime (r16 advice: e21's assignment view was
-    * re-checkpointed by every consumer of the e21/e27/e28/e29 chain
-    * and the orphaned corpus-sized blocks accumulated across the
-    * 216-query run). */
-  private val lastViewCkpt = new java.util.concurrent.ConcurrentHashMap[
+  /** The live checkpoint of each [[fresh]] key, so the next call under
+    * that key (every consuming query invocation re-materializes —
+    * re-use across invocations would be result caching, which the
+    * bench methodology forbids) releases the PREVIOUS invocation's
+    * blocks instead of leaking them for the session's lifetime (r16
+    * advice: e21's assignment was re-checkpointed by every consumer
+    * of the e21/e27/e28/e29 chain and the orphaned corpus-sized
+    * blocks accumulated across the 216-query run). */
+  private val lastCkpt = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), DataFrame]()
 
   /** Eagerly checkpoint `df` (plan + statistics truncation, see
-    * [[GraphOps.fresh]]) and register it as temp view `name`,
-    * unpersisting the checkpoint a previous call registered under the
-    * same name. The caller must not execute plans captured from the
-    * previous registration afterwards (same contract as
+    * [[GraphOps.fresh]]), unpersisting the checkpoint a previous call
+    * made under the same `key`. The caller must not execute plans
+    * captured from the previous call afterwards (same contract as
     * [[unpersist]]). */
-  def freshView(spark: org.apache.spark.sql.SparkSession, name: String,
-                df: DataFrame): Unit = {
+  def fresh(spark: org.apache.spark.sql.SparkSession, key: String,
+            df: DataFrame): DataFrame = {
     val ck = GraphOps.fresh(spark, df)
-    ck.createOrReplaceTempView(name)
-    Option(lastViewCkpt.put((spark, name), ck)).foreach(unpersist)
+    Option(lastCkpt.put((spark, key), ck)).foreach(unpersist)
+    ck
   }
 
   def unpersist(df: DataFrame): Unit =

@@ -501,11 +501,8 @@ object ScaleProbe {
     val header = "this document is provided under the standard terms " +
       "and conditions of use"
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
-    docs.createOrReplaceTempView("bp_docs")
-    spark.sql(
-      s"""SELECT doc_id, concat('$header', ' ', text) AS text, lang, source,
-         |  CAST(length(concat('$header', ' ', text)) AS BIGINT) AS n_chars
-         |FROM bp_docs""".stripMargin)
+    docs.selectExpr("doc_id", s"concat('$header', ' ', text) AS text", "lang", "source",
+        s"CAST(length(concat('$header', ' ', text)) AS BIGINT) AS n_chars")
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     for (t <- Tables.all if t != "documents") {
@@ -544,26 +541,26 @@ object ScaleProbe {
     Files.createDirectories(Paths.get(outDir))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
-    docs.createOrReplaceTempView("sp_docs")
-    spark.sql(
+    Sql.bound(spark,
       s"""SELECT doc_id + r * $nDocs AS doc_id,
          |  array_join(transform(split(text, ' '), w -> concat(w, '_', r)), ' ') AS text,
          |  lang, source,
          |  CAST(length(array_join(transform(split(text, ' '), w -> concat(w, '_', r)), ' ')) AS BIGINT) AS n_chars
-         |FROM sp_docs LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin)
+         |FROM sp_docs LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin,
+      "sp_docs" -> docs)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val nVecs = vecs.count()
-    vecs.createOrReplaceTempView("sp_vecs")
-    spark.sql(
+    Sql.bound(spark,
       s"""SELECT vec_id + r * $nVecs AS vec_id, label,
          |  transform(
          |    CASE WHEN r % 64 = 0 THEN embedding
          |         ELSE concat(slice(embedding, r % 64 + 1, 64 - r % 64),
          |                     slice(embedding, 1, r % 64)) END,
          |    x -> IF(r >= 64, -x, x)) AS embedding
-         |FROM sp_vecs LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin)
+         |FROM sp_vecs LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin,
+      "sp_vecs" -> vecs)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     // events replicate with per-replica user/event id offsets: per-key
@@ -574,11 +571,11 @@ object ScaleProbe {
     val ev = Tables.load(spark, sfDir, "events")
     val nEv = ev.count()
     val nUsers = ev.selectExpr("max(user_id)").head.getLong(0) + 1
-    ev.createOrReplaceTempView("sp_events")
-    spark.sql(
+    Sql.bound(spark,
       s"""SELECT event_id + r * $nEv AS event_id, ts,
          |  user_id + r * $nUsers AS user_id, event_type, value, props
-         |FROM sp_events LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin)
+         |FROM sp_events LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin,
+      "sp_events" -> ev)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
     // relational replication (the sf1 GATE shape — round-14 verdict
@@ -602,10 +599,9 @@ object ScaleProbe {
       val mS = bound("supplier", "s_suppkey")
       val mP = bound("part", "p_partkey")
       def rep(t: String, sel: String): Unit = {
-        spark.read.parquet(s"$sfDir/$t.parquet")
-          .createOrReplaceTempView(s"sp_$t")
-        spark.sql(s"""SELECT $sel FROM sp_$t
-          |LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin)
+        Sql.bound(spark, s"""SELECT $sel FROM src
+          |LATERAL VIEW explode(sequence(0, ${reps - 1})) t AS r""".stripMargin,
+          "src" -> spark.read.parquet(s"$sfDir/$t.parquet"))
           .repartition(32)
           .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       }

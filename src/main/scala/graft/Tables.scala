@@ -54,10 +54,9 @@ object Tables {
       }
     } else spark.read.parquet(path(sfDir, name))
 
-  // every cleanly registered (session, dir) pair — a SET, not a single
-  // slot: alternating between two lake dirs in one session (the
-  // ScaleProbe 1×/10× pattern) must not re-read ten parquet footers on
-  // every switch
+  // the lake dir each session's views are bound to, after a clean
+  // registration: one dir per session, since the views of a second
+  // dir replace the first's (alternating dirs re-registers each time)
   private val registeredFor =
     scala.collection.mutable.Set.empty[(SparkSession, String)]
   @volatile private var loadFailures: Map[String, Throwable] = Map.empty
@@ -67,14 +66,6 @@ object Tables {
     * reference it fail at resolution while the other tables serve. */
   def loadErrors: Map[String, Throwable] = loadFailures
 
-  /** Register every lake table as a temp view for the SQL surface.
-    * Idempotent per (session, lake dir): repeated queries skip the
-    * catalog round trips (parquet footer reads) entirely.
-    *
-    * Failure-isolated per table: one unreadable parquet (corrupt file,
-    * schema drift the loader can't bridge) must not poison the other
-    * nine views — its error is recorded in [[loadErrors]] and surfaces
-    * only when a query actually references the broken table. */
   /** Tables whose consumers do heavy PER-ROW compute before the first
     * exchange (shingling/minhash over `documents`, vector casts + dot
     * products over `embeddings`). The driver testdata ships them as
@@ -100,6 +91,14 @@ object Tables {
     else df
   }
 
+  /** Register every lake table as a temp view for the SQL surface.
+    * Idempotent per (session, lake dir): repeated queries skip the
+    * catalog round trips (parquet footer reads) entirely.
+    *
+    * Failure-isolated per table: one unreadable parquet (corrupt file,
+    * schema drift the loader can't bridge) must not poison the other
+    * nine views — its error is recorded in [[loadErrors]] and surfaces
+    * only when a query actually references the broken table. */
   def register(spark: SparkSession, sfDir: String): Unit = synchronized {
     if (!registeredFor.contains((spark, sfDir))) {
       var failures = Map.empty[String, Throwable]

@@ -18,8 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ArrayKernels {
 
-  private[functions] def longs(a: ArrayData): Array[Long] = a.toLongArray()
-
   /** PixelFn reading kernel input band `idx`. */
   final case class KBand(idx: Int) extends graft.raster.PixelFn {
     def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long =

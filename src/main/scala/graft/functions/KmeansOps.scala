@@ -1,3 +1,10 @@
+// Fused k-means kernels for the Lloyd driver loop (SimQueries):
+// Spark's higher-order functions evaluate lambdas interpreted, and the
+// per-iteration assignment (`aggregate(transform(array(centroids),…))`)
+// plus centroid fold (`aggregate(arr, zeros, zip_with(+))`) dominated
+// the build at ~20× the cost of a primitive loop. These expressions do
+// the identical arithmetic in the identical order — same IEEE-754
+// per-op rounding, bit-equal centroids — in one tight pass.
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -6,16 +13,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-
-/** Fused k-means kernels for the Lloyd driver loop (SimQueries):
-  * Spark's higher-order functions evaluate lambdas interpreted, and the
-  * per-iteration assignment (`aggregate(transform(array(centroids),…))`)
-  * plus centroid fold (`aggregate(arr, zeros, zip_with(+))`) dominated
-  * the build at ~20× the cost of a primitive loop. These expressions do
-  * the identical arithmetic in the identical order — same IEEE-754
-  * per-op rounding, bit-equal centroids — in one tight pass.
-  */
-object KmeansOps
 
 /** `km_argmax(v, nrm, cents)` → bigint: index of the max-cosine
   * centroid with the deterministic tie-break (strict `>` keeps the

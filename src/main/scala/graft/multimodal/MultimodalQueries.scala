@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Sql, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -191,14 +191,12 @@ object MultimodalQueries extends QueryModule {
     * pixels), with the aspect ratio as exact integer permille so
     * both engines compare identically. Thresholds (min side 20,
     * aspect ≤ 1.8) split this fixture's 16–32-px lake non-vacuously
-    * on BOTH rules. Built on the m3 kernel via a temp view (the
+    * on BOTH rules. Built on the m3 kernel bound into its SQL (the
     * m16-over-m4 pattern — one header read, two operators). Scale
     * shape: a narrow header-read map plus per-row integer compares,
     * no shuffle. */
   private def mediaFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = s"m20_dims_${Integer.toHexString(sfDir.hashCode)}"
-    resizePlan(spark, sfDir).createOrReplaceTempView(view)
-    spark.sql(
+    Sql.bound(spark,
       s"""SELECT doc_id, src_w, src_h,
          |  CAST(least(src_w, src_h) AS INT) AS min_side,
          |  (CAST(greatest(src_w, src_h) AS BIGINT) * 1000)
@@ -207,7 +205,8 @@ object MultimodalQueries extends QueryModule {
          |        AND (CAST(greatest(src_w, src_h) AS BIGINT) * 1000)
          |              DIV least(src_w, src_h) <= 1800
          |       THEN 1 ELSE 0 END AS kept
-         |FROM $view""".stripMargin)
+         |FROM dims""".stripMargin,
+      "dims" -> resizePlan(spark, sfDir))
   }
 
   private val audioSchema = StructType(Seq(
@@ -435,14 +434,12 @@ object MultimodalQueries extends QueryModule {
     * Oracle: the shared m4 window CTEs ([[m4WindowOracleCtes]] —
     * feature definitions cannot drift) + the same integer VAD SQL. */
   private def audioVad(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = s"m16_win_${Integer.toHexString(sfDir.hashCode)}"
-    audioEnergy(spark, sfDir).createOrReplaceTempView(view)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH tot AS (SELECT doc_id, CAST(sum(energy) AS BIGINT) AS e_tot,
          |    CAST(sum(n_samples) AS BIGINT) AS n_tot
-         |  FROM $view GROUP BY doc_id),
+         |  FROM win GROUP BY doc_id),
          |v AS (SELECT w.doc_id, window_idx, energy, peak
-         |  FROM $view w JOIN tot ON tot.doc_id = w.doc_id
+         |  FROM win w JOIN tot ON tot.doc_id = w.doc_id
          |  WHERE energy * n_tot > e_tot * n_samples),
          |g AS (SELECT doc_id, window_idx, energy, peak,
          |    window_idx - row_number() OVER (PARTITION BY doc_id
@@ -452,7 +449,8 @@ object MultimodalQueries extends QueryModule {
          |  CAST(count(*) AS INT) AS n_windows,
          |  CAST(sum(energy) AS BIGINT) AS seg_energy,
          |  CAST(max(peak) AS INT) AS seg_peak
-         |FROM g GROUP BY doc_id, grp""".stripMargin)
+         |FROM g GROUP BY doc_id, grp""".stripMargin,
+      "win" -> audioEnergy(spark, sfDir))
   }
 
   /** THE audio fingerprint, shared with the streaming gate
@@ -492,17 +490,15 @@ object MultimodalQueries extends QueryModule {
     * the profile from the text formula ([[MediaLake.pcmSamples]])
     * in closed form. */
   private def audioFingerprintPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = s"m10_afp_${Integer.toHexString(sfDir.hashCode)}"
-    spark.read.parquet(MediaLake.ensureAfps(spark, sfDir))
-      .createOrReplaceTempView(view)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH b AS (SELECT doc_id, afp, k, (afp >> (8 * k)) & 255 AS bv
-         |  FROM $view LATERAL VIEW explode(sequence(0, 3)) t AS k),
+         |  FROM afps LATERAL VIEW explode(sequence(0, 3)) t AS k),
          |cand AS (SELECT DISTINCT a.doc_id AS i, a.afp AS ha,
          |    b2.doc_id AS j, b2.afp AS hb
          |  FROM b a JOIN b b2 ON a.k = b2.k AND a.bv = b2.bv AND a.doc_id < b2.doc_id)
          |SELECT i AS doc_id_a, j AS doc_id_b, bit_count(ha ^ hb) AS hamming
-         |FROM cand WHERE bit_count(ha ^ hb) <= 3""".stripMargin)
+         |FROM cand WHERE bit_count(ha ^ hb) <= 3""".stripMargin,
+      "afps" -> spark.read.parquet(MediaLake.ensureAfps(spark, sfDir)))
   }
 
   private val cutSchema = StructType(Seq(
@@ -584,17 +580,11 @@ object MultimodalQueries extends QueryModule {
     * hash — well-distributed keys, bounded group sizes. Oracle
     * replays the writer's closed-form frame formula (the m2 layout)
     * and brute-forces the pair scan. */
-  /** Builds the two checkpointed m15 intermediates and returns their
-    * view names: the per-frame hash table (`doc_id, frame_idx, fh_lo,
-    * fh_hi`; constant frames excluded) and the verified hash-pair
-    * table (`la, ha, lb, hb, hamming`, ordered). SHARED by m15 (pair
-    * enumeration) and m21 (cluster labeling) so the hash and
-    * candidate definitions cannot drift between the two answers. */
   /** Just the per-frame hash table (decode + aHash + localCheckpoint),
     * WITHOUT the hamming candidate join — m22's set-overlap pairing
     * needs only exact hash equality, so it must not pay for m15's
     * multi-index probe materialization. */
-  private def frameHashView(spark: SparkSession, sfDir: String): String = {
+  private[multimodal] def frameHashes(spark: SparkSession, sfDir: String): DataFrame = {
     val media = spark.read.parquet(MediaLake.ensureVideo(spark, sfDir))
     val hashes = media.flatMap { row =>
       val v = Avi.decode(row.getAs[Array[Byte]]("media"))
@@ -616,27 +606,29 @@ object MultimodalQueries extends QueryModule {
         else Some(Row(row.getAs[Long]("doc_id"), k, lo, hi))
       }
     }(Encoders.row(frameHashSchema))
-    val view = s"m15_fhash_${Integer.toHexString(sfDir.hashCode)}"
     // the hash table is consumed from multiple places (dh, both sides
     // of the frame mapping, m22's set pairing) — materialize the
     // decode once (the d4/d7 localCheckpoint pattern) instead of
     // re-decoding the video lake per consumer
-    hashes.localCheckpoint().createOrReplaceTempView(view)
-    view
+    hashes.localCheckpoint()
   }
 
-  private def frameHashViews(spark: SparkSession, sfDir: String): (String, String) = {
-    val view = frameHashView(spark, sfDir)
-    val tag = Integer.toHexString(sfDir.hashCode)
+  /** Builds the two checkpointed m15 intermediates: the per-frame
+    * hash table (`doc_id, frame_idx, fh_lo, fh_hi`; constant frames
+    * excluded) and the verified hash-pair table (`la, ha, lb, hb,
+    * hamming`, ordered). SHARED by m15 (pair enumeration) and m21
+    * (cluster labeling) so the hash and candidate definitions cannot
+    * drift between the two answers. */
+  private def framePairs(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val fh = frameHashes(spark, sfDir)
     // the candidate join is the expensive stage (≈2M half-key probes
     // at sf0.1 for a ~119k-hash-pair answer) — materialize its
     // ORDERED output once and derive the symmetric closure from the
     // checkpoint; a plain UNION ALL of two hp readings would REPLAY
     // the join per branch (no subtree sharing — measured 2×), and a
     // symmetric join condition doubles the probe expansion instead
-    val hpView = s"m15_hp_$tag"
-    spark.sql(
-      s"""WITH dh AS (SELECT /*+ REPARTITION(${spark.sparkContext.defaultParallelism}) */ DISTINCT fh_lo, fh_hi FROM $view),
+    val hp = Sql.bound(spark,
+      s"""WITH dh AS (SELECT /*+ REPARTITION(${spark.sparkContext.defaultParallelism}) */ DISTINCT fh_lo, fh_hi FROM fh),
          |-- the REPARTITION(s, k) hints pre-partition BOTH join inputs
          |-- on the join key at the configured shuffle parallelism: the
          |-- distinct-hash table is tiny (49k rows ≈ 1 MB), so without
@@ -673,9 +665,9 @@ object MultimodalQueries extends QueryModule {
          |    ON a.s = b.s AND a.k = b.k
          |    AND (a.fh_lo < b.fh_lo
          |      OR (a.fh_lo = b.fh_lo AND a.fh_hi < b.fh_hi))
-         |  WHERE bit_count(a.fh_lo ^ b.fh_lo) + bit_count(a.fh_hi ^ b.fh_hi) <= 3""".stripMargin)
-      .localCheckpoint().createOrReplaceTempView(hpView)
-    (view, hpView)
+         |  WHERE bit_count(a.fh_lo ^ b.fh_lo) + bit_count(a.fh_hi ^ b.fh_hi) <= 3""".stripMargin,
+      "fh" -> fh).localCheckpoint()
+    (fh, hp)
   }
 
   /** M22: VIDEO-level near-dup pairs — the container-level curation
@@ -692,9 +684,8 @@ object MultimodalQueries extends QueryModule {
     * oracle replays the frame formula closed-form and mirrors the df
     * cap on the text side. */
   private def videoDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = frameHashView(spark, sfDir)
-    spark.sql(
-      s"""WITH vs0 AS (SELECT DISTINCT doc_id, fh_lo, fh_hi FROM $view),
+    Sql.bound(spark,
+      s"""WITH vs0 AS (SELECT DISTINCT doc_id, fh_lo, fh_hi FROM fh),
          |df AS (SELECT fh_lo, fh_hi, count(*) AS d FROM vs0 GROUP BY fh_lo, fh_hi),
          |vs AS (SELECT vs0.doc_id, vs0.fh_lo, vs0.fh_hi FROM vs0
          |  JOIN df ON df.fh_lo = vs0.fh_lo AND df.fh_hi = vs0.fh_hi
@@ -708,21 +699,23 @@ object MultimodalQueries extends QueryModule {
          |  sa.n AS n_a, sb.n AS n_b,
          |  CAST(pr.shared AS DOUBLE) / (sa.n + sb.n - pr.shared) AS jaccard
          |FROM pr JOIN sz sa ON sa.doc_id = pr.i JOIN sz sb ON sb.doc_id = pr.j
-         |WHERE CAST(pr.shared AS DOUBLE) / (sa.n + sb.n - pr.shared) >= 0.2""".stripMargin)
+         |WHERE CAST(pr.shared AS DOUBLE) / (sa.n + sb.n - pr.shared) >= 0.2""".stripMargin,
+      "fh" -> frameHashes(spark, sfDir))
   }
 
   private def frameDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val (view, hpView) = frameHashViews(spark, sfDir)
-    spark.sql(
-      s"""WITH hs2 AS (SELECT la, ha, lb, hb, hamming FROM $hpView
-         |  UNION ALL SELECT lb, hb, la, ha, hamming FROM $hpView
+    val (fh, hp) = framePairs(spark, sfDir)
+    Sql.bound(spark,
+      s"""WITH hs2 AS (SELECT la, ha, lb, hb, hamming FROM hp
+         |  UNION ALL SELECT lb, hb, la, ha, hamming FROM hp
          |  UNION ALL SELECT fh_lo, fh_hi, fh_lo, fh_hi, 0
-         |    FROM (SELECT DISTINCT fh_lo, fh_hi FROM $view))
+         |    FROM (SELECT DISTINCT fh_lo, fh_hi FROM fh))
          |SELECT x.doc_id AS doc_id_a, x.frame_idx AS frame_a,
          |  y.doc_id AS doc_id_b, y.frame_idx AS frame_b, hs2.hamming
-         |FROM $view x JOIN hs2 ON x.fh_lo = hs2.la AND x.fh_hi = hs2.ha
-         |JOIN $view y ON y.fh_lo = hs2.lb AND y.fh_hi = hs2.hb
-         |WHERE x.doc_id < y.doc_id""".stripMargin)
+         |FROM fh x JOIN hs2 ON x.fh_lo = hs2.la AND x.fh_hi = hs2.ha
+         |JOIN fh y ON y.fh_lo = hs2.lb AND y.fh_hi = hs2.hb
+         |WHERE x.doc_id < y.doc_id""".stripMargin,
+      "fh" -> fh, "hp" -> hp)
   }
 
   /** M21: frame duplicate CLUSTERS — the production answer shape to
@@ -740,27 +733,22 @@ object MultimodalQueries extends QueryModule {
     * frames share a hash node by construction), labeled by the
     * shared min-label kernel ([[graft.GraphOps.ccMinLabel]] — d7's
     * pointer-jumping machinery, node id = the packed 64-bit hash).
-    * Scale shape: the hash/pair machinery is m15's ([[frameHashViews]]
+    * Scale shape: the hash/pair machinery is m15's ([[framePairs]]
     * — one shared build); CC runs over DISTINCT HASHES (≪ frames),
     * and the frame mapping is one equality join on the hash.
     * Oracle: the m15 hash replay + brute-force hash pairs + a
     * recursive-CTE transitive closure — d7's different-algorithm-
     * same-fixed-point check, applied to frames. */
   private def frameClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    val (view, hpView) = frameHashViews(spark, sfDir)
-    val edges = spark.sql(
-      s"""SELECT shiftleft(la, 32) | ha AS a, shiftleft(lb, 32) | hb AS b FROM $hpView
-         |UNION ALL
-         |SELECT shiftleft(lb, 32) | hb AS a, shiftleft(la, 32) | ha AS b FROM $hpView""".stripMargin)
-    val nodes = spark.sql(
-      s"SELECT DISTINCT shiftleft(fh_lo, 32) | fh_hi AS id FROM $view")
+    val (fh, hp) = framePairs(spark, sfDir)
+    val edges = hp.selectExpr("shiftleft(la, 32) | ha AS a", "shiftleft(lb, 32) | hb AS b")
+      .unionAll(hp.selectExpr("shiftleft(lb, 32) | hb AS a", "shiftleft(la, 32) | ha AS b"))
+    val nodes = fh.selectExpr("shiftleft(fh_lo, 32) | fh_hi AS id").distinct()
     // checkpoint the labels: the cluster-size rewrite below references
     // the frame↔label join TWICE (rows + per-cluster counts), and an
     // unpinned label plan would re-run the whole CC build per reference
     val labels = graft.GraphOps.fresh(spark,
       graft.GraphOps.ccMinLabelAuto(spark, edges, nodes))
-    val lv = s"m21_lbl_${Integer.toHexString(sfDir.hashCode)}"
-    labels.createOrReplaceTempView(lv)
     // cluster_size via groupBy + join, NOT `count(*) OVER (PARTITION BY
     // cluster_id)`: a window funnels every row of a cluster into ONE
     // task — the mega-cluster scenario is exactly the one this operator
@@ -768,13 +756,14 @@ object MultimodalQueries extends QueryModule {
     // splits join skew but never window skew. The groupBy aggregates
     // with combinable partials (map-side combine), and the join back
     // is AQE-skew-splittable — same answer, no single-task cluster.
-    spark.sql(
-      s"""WITH f AS (SELECT v.doc_id, v.frame_idx, l.lbl AS cluster_id
-         |  FROM $view v JOIN $lv l ON l.id = shiftleft(v.fh_lo, 32) | v.fh_hi),
-         |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |  FROM f GROUP BY cluster_id)
-         |SELECT f.doc_id, f.frame_idx, f.cluster_id, cs.cluster_size
-         |FROM f JOIN cs ON cs.cluster_id = f.cluster_id""".stripMargin)
+    Sql.bound(spark,
+      """WITH f AS (SELECT v.doc_id, v.frame_idx, l.lbl AS cluster_id
+        |  FROM fh v JOIN labels l ON l.id = shiftleft(v.fh_lo, 32) | v.fh_hi),
+        |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
+        |  FROM f GROUP BY cluster_id)
+        |SELECT f.doc_id, f.frame_idx, f.cluster_id, cs.cluster_size
+        |FROM f JOIN cs ON cs.cluster_id = f.cluster_id""".stripMargin,
+      "fh" -> fh, "labels" -> labels)
   }
 
   /** M5: perceptual-hash media dedup — the cross-modal twin of the
@@ -791,20 +780,15 @@ object MultimodalQueries extends QueryModule {
     // ([[MediaLake.ensurePhashes]] — the tower/e11 pattern): the band
     // self-join FileScans parquet on both sides; no decode, no
     // checkpoint, at any corpus size one bounded band shuffle.
-    // Per-DIR view name: distinct lake dirs cannot race each other,
-    // and repeat invocations replace the view instead of leaking a
-    // UUID-named catalog entry per call.
-    val view = s"m5_phash_${Integer.toHexString(sfDir.hashCode)}"
-    spark.read.parquet(MediaLake.ensurePhashes(spark, sfDir))
-      .createOrReplaceTempView(view)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH b AS (SELECT doc_id, phash, k, (phash >> (8 * k)) & 255 AS bv
-         |  FROM $view LATERAL VIEW explode(sequence(0, 3)) t AS k),
+         |  FROM phashes LATERAL VIEW explode(sequence(0, 3)) t AS k),
          |cand AS (SELECT DISTINCT a.doc_id AS i, a.phash AS ha,
          |    b2.doc_id AS j, b2.phash AS hb
          |  FROM b a JOIN b b2 ON a.k = b2.k AND a.bv = b2.bv AND a.doc_id < b2.doc_id)
          |SELECT i AS doc_id_a, j AS doc_id_b, bit_count(ha ^ hb) AS hamming
-         |FROM cand WHERE bit_count(ha ^ hb) <= 3""".stripMargin)
+         |FROM cand WHERE bit_count(ha ^ hb) <= 3""".stripMargin,
+      "phashes" -> spark.read.parquet(MediaLake.ensurePhashes(spark, sfDir)))
   }
 
   /** M6: multi-signal near-dup candidates — the curation move big
@@ -859,26 +843,21 @@ object MultimodalQueries extends QueryModule {
     * the 8-block mean-pixel embedding read back from the PERSISTED
     * ingest sidecar ([[MediaLake.ensureTower]] — the e11 pattern).
     * Serving queries FileScan the tower; the corpus-wide decode ran
-    * once at ingest, not per query. Registered as a per-dir temp
-    * view; returns the view name. */
-  private def imgEmbView(spark: SparkSession, sfDir: String): String = {
-    val tower = MediaLake.ensureTower(spark, sfDir)
-    val view = s"m7_img_${Integer.toHexString(sfDir.hashCode)}"
-    spark.read.parquet(tower).createOrReplaceTempView(view)
-    view
-  }
+    * once at ingest, not per query. */
+  private def imgTower(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(MediaLake.ensureTower(spark, sfDir))
 
   private def clipAlign(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val view = imgEmbView(spark, sfDir)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH t AS (SELECT vec_id,
          |    CAST(slice(embedding, 1, 8) AS ARRAY<DOUBLE>) AS txt FROM embeddings),
          |j AS (SELECT i.doc_id,
          |    vec_dot(i.img, t.txt)
          |      / (sqrt(vec_dot(i.img, i.img)) * sqrt(vec_dot(t.txt, t.txt))) AS cosine
-         |  FROM $view i JOIN t ON i.doc_id = t.vec_id)
-         |SELECT doc_id, cosine, CAST(cosine >= 0 AS INT) AS aligned FROM j""".stripMargin)
+         |  FROM tower i JOIN t ON i.doc_id = t.vec_id)
+         |SELECT doc_id, cosine, CAST(cosine >= 0 AS INT) AS aligned FROM j""".stripMargin,
+      "tower" -> imgTower(spark, sfDir))
   }
 
   /** m17's keep threshold — the LAION move (Schuhmann et al. 2021
@@ -917,14 +896,13 @@ object MultimodalQueries extends QueryModule {
     * contract), then ONE combinable groupBy over ≤ 40 buckets. */
   private def clipFilter(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val view = imgEmbView(spark, sfDir)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH t AS (SELECT vec_id,
          |    CAST(slice(embedding, 1, 8) AS ARRAY<DOUBLE>) AS txt FROM embeddings),
          |j AS (SELECT i.doc_id,
          |    vec_dot(i.img, t.txt)
          |      / (sqrt(vec_dot(i.img, i.img)) * sqrt(vec_dot(t.txt, t.txt))) AS cosine
-         |  FROM $view i JOIN t ON i.doc_id = t.vec_id),
+         |  FROM tower i JOIN t ON i.doc_id = t.vec_id),
          |b AS (SELECT doc_id, cosine,
          |    CAST(floor(cosine * 20.0) AS INT) AS bucket,
          |    CASE WHEN cosine >= $ClipKeepCosine THEN 1 ELSE 0 END AS kept
@@ -933,7 +911,8 @@ object MultimodalQueries extends QueryModule {
          |  CAST(sum(kept) AS BIGINT) AS n_kept,
          |  min(doc_id) AS min_doc_id,
          |  CAST(sum(CAST(round(cosine * 1000000.0) AS BIGINT)) AS BIGINT) AS cos_u_sum
-         |FROM b GROUP BY bucket""".stripMargin)
+         |FROM b GROUP BY bucket""".stripMargin,
+      "tower" -> imgTower(spark, sfDir))
   }
 
   /** M19: training-clip assembly over the REAL video lake — the
@@ -951,15 +930,14 @@ object MultimodalQueries extends QueryModule {
     * Oracle: the m2 frame replay as a subquery + the same grouping,
     * so the clip definition cannot drift from the frame definition. */
   private def clipSample(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = s"m19_fr_${Integer.toHexString(sfDir.hashCode)}"
-    frameSample(spark, sfDir).createOrReplaceTempView(view)
-    spark.sql(
+    Sql.bound(spark,
       s"""SELECT doc_id, CAST(frame_idx DIV 16 AS INT) AS clip_idx,
          |  CAST(count(*) AS INT) AS n_frames,
          |  CAST(sum(frame_sum) AS BIGINT) AS clip_sum,
          |  min(ts_ms) AS ts_start, max(ts_ms) AS ts_end
-         |FROM $view GROUP BY doc_id, frame_idx DIV 16
-         |HAVING count(*) = 4""".stripMargin)
+         |FROM frames GROUP BY doc_id, frame_idx DIV 16
+         |HAVING count(*) = 4""".stripMargin,
+      "frames" -> frameSample(spark, sfDir))
   }
 
   private val metaSchema = StructType(Seq(
@@ -1000,19 +978,19 @@ object MultimodalQueries extends QueryModule {
     * decoded lake), per-query top-k in a 5-partition window. */
   private def clipRetrieve(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val view = imgEmbView(spark, sfDir)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH q AS (SELECT vec_id AS qid,
          |    CAST(slice(embedding, 1, 8) AS ARRAY<DOUBLE>) AS txt
          |  FROM embeddings WHERE vec_id < 5),
          |s AS (SELECT q.qid, i.doc_id,
          |    vec_dot(q.txt, i.img)
          |      / (sqrt(vec_dot(q.txt, q.txt)) * sqrt(vec_dot(i.img, i.img))) AS cosine
-         |  FROM q CROSS JOIN $view i)
+         |  FROM q CROSS JOIN tower i)
          |SELECT qid AS query_id, doc_id AS image_id, cosine, rnk
          |FROM (SELECT qid, doc_id, cosine,
          |        CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, doc_id) AS INT) AS rnk FROM s) t
-         |WHERE rnk <= 5""".stripMargin)
+         |WHERE rnk <= 5""".stripMargin,
+      "tower" -> imgTower(spark, sfDir))
   }
 
   /** M12: multimodal batch assembly — the VLM training-batch planning
@@ -1032,7 +1010,7 @@ object MultimodalQueries extends QueryModule {
     val patchSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("patches", IntegerType)))
-    lake.mapPartitions { it =>
+    val patches = lake.mapPartitions { it =>
       it.map { row =>
         val media = row.getAs[Array[Byte]]("media")
         val (w, h) =
@@ -1041,14 +1019,14 @@ object MultimodalQueries extends QueryModule {
         Row(row.getLong(0), ((w + 13) / 14) * ((h + 13) / 14))
       }
     }(Encoders.row(patchSchema))
-      .createOrReplaceTempView(s"m12_patch_${Integer.toHexString(sfDir.hashCode)}")
-    val budgeted = spark.sql(
+    val budgeted = Sql.bound(spark,
       s"""SELECT d.doc_id, CAST(size(split(d.text, ' ')) AS INT) AS n_text,
          |  p.patches,
          |  CAST(size(split(d.text, ' ')) + p.patches AS INT) AS n_tokens
          |FROM documents d
-         |JOIN m12_patch_${Integer.toHexString(sfDir.hashCode)} p
-         |  ON p.doc_id = d.doc_id""".stripMargin)
+         |JOIN patch p
+         |  ON p.doc_id = d.doc_id""".stripMargin,
+      "patch" -> patches)
     graft.textops.TextQueries.packByPrefix(spark, budgeted, M12Budget)
   }
 
@@ -1087,12 +1065,9 @@ object MultimodalQueries extends QueryModule {
     * equality holds exactly BECAUSE the lake honors its contract. */
   private def pairAudit(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val view = s"m13_lake_${Integer.toHexString(sfDir.hashCode)}"
-    spark.read.parquet(MediaLake.ensure(spark, sfDir))
-      .select(col("doc_id")).createOrReplaceTempView(view)
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH d AS (SELECT d.doc_id, m.doc_id IS NOT NULL AS has_media
-         |  FROM documents d LEFT JOIN $view m ON m.doc_id = d.doc_id),
+         |  FROM documents d LEFT JOIN media m ON m.doc_id = d.doc_id),
          |j AS (SELECT COALESCE(d.doc_id, e.vec_id) AS id,
          |    d.doc_id IS NOT NULL AS has_doc,
          |    COALESCE(d.has_media, false) AS has_media,
@@ -1107,7 +1082,8 @@ object MultimodalQueries extends QueryModule {
          |  FROM j)
          |SELECT class, CAST(count(*) AS BIGINT) AS n,
          |  CAST(min(id) AS BIGINT) AS example_id
-         |FROM c GROUP BY class""".stripMargin)
+         |FROM c GROUP BY class""".stripMargin,
+      "media" -> spark.read.parquet(MediaLake.ensure(spark, sfDir)).select(col("doc_id")))
   }
 
   private[graft] val m13Oracle: String =
@@ -1211,7 +1187,7 @@ object MultimodalQueries extends QueryModule {
 
   /** The image-tower oracle CTE, shared by the m7 and m9 oracles so
     * the two replays cannot drift (the Scala side already shares
-    * [[imgEmbView]]): 8-block mean over the replayed gray stream.
+    * [[imgTower]]): 8-block mean over the replayed gray stream.
     * Expects [[grayOracleCtes]]'s `g` in scope; emits `b(doc_id,
     * img)`. */
   private val imgTowerOracleCte: String =

@@ -1,6 +1,6 @@
 package graft.raster
 
-import graft.{QueryModule, SqlQ, Tables}
+import graft.{QueryModule, Sql, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The OTF zonal-statistics engine (SURVEY §2.4 A2–A5, §3.2): tile
@@ -585,8 +585,7 @@ object RasterQueries extends QueryModule {
   private def tileLakeZonal(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
     TileLake.ensureWritten(spark, TileLake.defaultDir)
-    // one zonal pipeline ([[probeZonal]]) serves both r9 and the scale
-    // probe — the dictionary decode is a post-aggregation projection
+    // the dictionary decode is a post-aggregation projection
     probeZonal(spark, TileLake.defaultDir, g, aoi)
       .selectExpr("landcover", s"${decode("landcover")} AS landcover_name",
         "area_ha", "pixel_count")
@@ -599,23 +598,8 @@ object RasterQueries extends QueryModule {
     * against the 10× lake (data read grows 10× ⇒ linear). */
   private[graft] def probeZonal(spark: SparkSession, dir: String,
                                 pg: Grid,
-                                poly: Seq[(Double, Double)]): DataFrame = {
-    val gj = geoJson(poly)
-    val (bxmin, bymin, bxmax, bymax) = bbox(poly)
-    val ids = TileLake.tileIdsForBbox(pg, bxmin, bymin, bxmax, bymax)
-    TileLake.scanPruned(spark, dir, ids)
-      .createOrReplaceTempView("probe_lake_scan")
-    spark.sql(
-      s"""WITH arrs AS (SELECT px_landcover AS keys,
-         |  grid_arr('microha', ty, ${pg.originLat}, ${pg.tileDeg}, ${pg.pxPerTile}) AS vals,
-         |  tile_mask('$gj', tx, ty, ${pg.originLon}, ${pg.originLat}, ${pg.tilesX}, ${pg.tilesY}, ${pg.tileDeg}, ${pg.pxPerTile}) AS mask
-         | FROM probe_lake_scan),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS landcover,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin)
-  }
+                                poly: Seq[(Double, Double)]): DataFrame =
+    ZonalEngine.zonal(spark, dir, pg, "px_landcover", "landcover", geoJson(poly))
 
   /** Batch many-AOI zonal — the reference's ≤100-parallel-lambda
     * surface (`queries.py:333-343` fans one lambda per geometry) as
@@ -636,11 +620,7 @@ object RasterQueries extends QueryModule {
         .map(tid => (id, tid, geoJson(poly)))
     }
     import spark.implicits._
-    pairs.toDF("aoi_id", "a_tile_id", "gj")
-      .createOrReplaceTempView("probe_batch_aoi")
-    TileLake.scanPruned(spark, dir, pairs.map(_._2).distinct)
-      .createOrReplaceTempView("probe_batch_scan")
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH jt AS (SELECT /*+ BROADCAST(a) */ s.px_landcover, s.tx, s.ty,
          |    a.aoi_id, a.gj
          |  FROM probe_batch_scan s JOIN probe_batch_aoi a ON a.a_tile_id = s.tile_id),
@@ -652,7 +632,9 @@ object RasterQueries extends QueryModule {
          |SELECT aoi_id, p.k AS landcover,
          |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
          |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY aoi_id, p.k""".stripMargin)
+         |FROM parts GROUP BY aoi_id, p.k""".stripMargin,
+      "probe_batch_aoi" -> pairs.toDF("aoi_id", "a_tile_id", "gj"),
+      "probe_batch_scan" -> TileLake.scanPruned(spark, dir, pairs.map(_._2).distinct))
   }
 
   // J5 on the raster path: the SAME query under a version override —
@@ -680,22 +662,8 @@ object RasterQueries extends QueryModule {
   private def derivedZonal(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
     TileLake.ensureDerivedWritten(spark, TileLake.defaultDir, TileLake.derivedDir)
-    val dg = TileLake.derivedGrid
-    val (bxmin, bymin, bxmax, bymax) = bbox(aoi)
-    val ids = TileLake.tileIdsForBbox(dg, bxmin, bymin, bxmax, bymax)
-    TileLake.scanPruned(spark, TileLake.derivedDir, ids)
-      .createOrReplaceTempView("derived_scan")
-    spark.sql(
-      s"""WITH arrs AS (SELECT px_biomass_t AS keys,
-         |  grid_arr('microha', ty, ${dg.originLat}, ${dg.tileDeg}, ${dg.pxPerTile}) AS vals,
-         |  tile_mask('$aoiGeoJson', tx, ty, ${dg.originLon}, ${dg.originLat},
-         |    ${dg.tilesX}, ${dg.tilesY}, ${dg.tileDeg}, ${dg.pxPerTile}) AS mask
-         | FROM derived_scan),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS biomass_t,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin)
+    ZonalEngine.zonal(spark, TileLake.derivedDir, TileLake.derivedGrid,
+      "px_biomass_t", "biomass_t", aoiGeoJson)
   }
 
   private def derivedZonalOracle: String = {
@@ -723,22 +691,8 @@ object RasterQueries extends QueryModule {
   private def derivedModeZonal(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
     TileLake.ensureDerivedWritten(spark, TileLake.defaultDir, TileLake.derivedDir)
-    val dg = TileLake.derivedGrid
-    val (bxmin, bymin, bxmax, bymax) = bbox(aoi)
-    val ids = TileLake.tileIdsForBbox(dg, bxmin, bymin, bxmax, bymax)
-    TileLake.scanPruned(spark, TileLake.derivedDir, ids)
-      .createOrReplaceTempView("derived_mode_scan")
-    spark.sql(
-      s"""WITH arrs AS (SELECT px_lc_mode AS keys,
-         |  grid_arr('microha', ty, ${dg.originLat}, ${dg.tileDeg}, ${dg.pxPerTile}) AS vals,
-         |  tile_mask('$aoiGeoJson', tx, ty, ${dg.originLon}, ${dg.originLat},
-         |    ${dg.tilesX}, ${dg.tilesY}, ${dg.tileDeg}, ${dg.pxPerTile}) AS mask
-         | FROM derived_mode_scan),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS landcover_mode,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin)
+    ZonalEngine.zonal(spark, TileLake.derivedDir, TileLake.derivedGrid,
+      "px_lc_mode", "landcover_mode", aoiGeoJson)
   }
 
   private def derivedModeZonalOracle: String = {
@@ -801,11 +755,9 @@ object RasterQueries extends QueryModule {
         tmp)
       require(ok, s"raster ingest failed: $log")
     }: Unit
-    spark.read.parquet(lake).createOrReplaceTempView("r12_lake")
-    spark.sql(
-      """SELECT v AS cls, count(*) AS n
-        |FROM (SELECT explode(px_class) AS v FROM r12_lake)
-        |GROUP BY v""".stripMargin)
+    import org.apache.spark.sql.functions.{col, count, explode}
+    spark.read.parquet(lake).select(explode(col("px_class")).as("cls"))
+      .groupBy("cls").agg(count("*").as("n"))
   }
 
   private val geotiffIngestOracle: String =
@@ -867,8 +819,7 @@ object RasterQueries extends QueryModule {
     val fg = r13Grid
     val px = fg.pxPerTile
     val lake = ensureR13Lake(spark, sfDir)
-    spark.read.parquet(lake).createOrReplaceTempView("r13_lake")
-    spark.sql(
+    Sql.bound(spark,
       s"""WITH arrs AS (SELECT
          |    grid_arr('latband', ty, ${fg.originLat}, ${fg.tileDeg}, $px) AS keys,
          |    arr_calc('A * B', arr_fixed(px_density, 4),
@@ -879,7 +830,8 @@ object RasterQueries extends QueryModule {
          |SELECT p.k AS lat_band,
          |  CAST(sum(p.s) AS DOUBLE) / 4000000.0 AS density_ha,
          |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin)
+         |FROM parts GROUP BY p.k""".stripMargin,
+      "r13_lake" -> spark.read.parquet(lake))
   }
 
   private def floatZonalOracle: String = {
@@ -1173,11 +1125,9 @@ object RasterQueries extends QueryModule {
         tmp)
       require(ok, s"EPSG:$epsg raster ingest failed: $log")
     }: Unit
-    spark.read.parquet(lake).createOrReplaceTempView(s"${tag}_lake")
-    spark.sql(
-      s"""SELECT v, count(*) AS n
-         |FROM (SELECT explode(px_cls) AS v FROM ${tag}_lake)
-         |GROUP BY v""".stripMargin)
+    import org.apache.spark.sql.functions.{col, count, explode}
+    spark.read.parquet(lake).select(explode(col("px_cls")).as("v"))
+      .groupBy("v").agg(count("*").as("n"))
   }
 
   private def utmIngest(spark: SparkSession, sfDir: String): DataFrame =
@@ -1459,8 +1409,7 @@ object RasterQueries extends QueryModule {
         // the legacy r-queries scan the persisted tile lake (same
         // band values the formulas used to synthesize per query)
         TileLake.ensureWritten(spark, TileLake.defaultDir)
-        spark.read.parquet(TileLake.defaultDir).createOrReplaceTempView("lake")
-        spark.sql(q.sparkSql)
+        Sql.bound(spark, q.sparkSql, "lake" -> spark.read.parquet(TileLake.defaultDir))
       })
     }.toMap +
       ("r9_tile_lake_zonal" -> ((s: SparkSession, d: String) => tileLakeZonal(s, d))) ++

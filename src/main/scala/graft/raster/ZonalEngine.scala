@@ -22,12 +22,6 @@ object ZonalEngine {
   /** 400-equivalent validation errors (reference error strings). */
   final case class ZonalException(detail: String) extends RuntimeException(detail)
 
-  /** The user-SQL raster path (`_query_raster`, `queries.py:548-575`):
-    * validate the AOI, resolve the data environment from the catalog
-    * (latest-unless-overridden), FROM-rewrite the user's SQL to the
-    * dataset's default layer (the reference's exact
-    * `re.sub("from \w+", ...)` splice), compile through [[RasterSql]],
-    * and run one fused pass over the AOI-pruned lake. */
   /** FROM-rewrite + compile against the catalog data environment
     * (shared by the single-AOI and batch paths). */
   private def compileFor(catalog: graft.catalog.Catalog, dataset: String,
@@ -63,6 +57,12 @@ object ZonalEngine {
     g
   }
 
+  /** The user-SQL raster path (`_query_raster`, `queries.py:548-575`):
+    * validate the AOI, resolve the data environment from the catalog
+    * (latest-unless-overridden), FROM-rewrite the user's SQL to the
+    * dataset's default layer (the reference's exact
+    * `re.sub("from \w+", ...)` splice), compile through [[RasterSql]],
+    * and run one fused pass over the AOI-pruned lake. */
   def runSql(spark: SparkSession, catalog: graft.catalog.Catalog,
              dataset: String, userSql: String, aoiGeoJson: String,
              overrides: Map[String, String] = Map.empty): DataFrame = {
@@ -223,36 +223,40 @@ object ZonalEngine {
     if (unknown.nonEmpty)
       throw ZonalException(s"Unknown raster layers: ${unknown.mkString(", ")}")
 
-    import SyntheticEnv._
-    val g = grid
-    val dir = TileLake.defaultDir
-    TileLake.ensureWritten(spark, dir)
-
-    val bb = Geom.fromGeoJson(req.aoiGeoJson).bbox
-    val ids = TileLake.tileIdsForBbox(g, bb._1, bb._2, bb._3, bb._4)
-
-    val aoiMask =
-      s"tile_mask('${req.aoiGeoJson.replace("'", "''")}', tx, ty, " +
-        s"${g.originLon}, ${g.originLat}, ${g.tilesX}, ${g.tilesY}, " +
-        s"${g.tileDeg}, ${g.pxPerTile})"
-    val maskE = req.tcdThreshold match {
-      case Some(t) => s"arr_and($aoiMask, arr_ge(px_tcd, $t))"
-      case None => aoiMask
-    }
-    // built on the pruned scan itself, never through a named view:
-    // concurrent requests share one session catalog
-    import org.apache.spark.sql.functions.{col, expr}
-    TileLake.scanPruned(spark, dir, ids)
-      .selectExpr("px_landcover AS keys",
-        s"grid_arr('microha', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile}) AS vals",
-        s"$maskE AS mask")
-      .selectExpr("explode(tile_zonal(keys, vals, mask)) AS p")
-      .groupBy(col("p.k").as("landcover"))
-      .agg(expr("CAST(sum(p.s) AS DOUBLE) / 1000000.0").as("area_ha"),
-        expr("sum(p.c)").as("pixel_count"))
+    TileLake.ensureWritten(spark, TileLake.defaultDir)
+    zonal(spark, TileLake.defaultDir, SyntheticEnv.grid, "px_landcover", "landcover",
+      req.aoiGeoJson, req.tcdThreshold.map(t => s"arr_ge(px_tcd, $t)"))
       .selectExpr("landcover",
         s"${SyntheticEnv.landcoverDecodeSql("landcover")} AS landcover_name",
         "area_ha", "pixel_count")
       .orderBy("landcover")
+  }
+
+  /** The one zonal pipeline (`/analysis/zonal`, r9, r11, r21 and the
+    * scale probe): the tile-id-pruned scan of the lake at `dir` on grid
+    * `g` → `keyCol` as keys, geodesic micro-hectares as values, the
+    * AOI's scanline mask (AND `extraMask`, an `arr_*` mask over the
+    * scan's band columns) → one fused `tile_zonal` per tile → one group
+    * by key. Columns: `keyAs`, `area_ha`, `pixel_count`. Built on the
+    * pruned scan itself, never through a named view: concurrent
+    * requests share one session catalog. */
+  def zonal(spark: SparkSession, dir: String, g: Grid, keyCol: String, keyAs: String,
+            aoiGeoJson: String, extraMask: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    val bb = Geom.fromGeoJson(aoiGeoJson).bbox
+    val ids = TileLake.tileIdsForBbox(g, bb._1, bb._2, bb._3, bb._4)
+    val aoiMask =
+      s"tile_mask('${aoiGeoJson.replace("'", "''")}', tx, ty, " +
+        s"${g.originLon}, ${g.originLat}, ${g.tilesX}, ${g.tilesY}, " +
+        s"${g.tileDeg}, ${g.pxPerTile})"
+    val maskE = extraMask.fold(aoiMask)(m => s"arr_and($aoiMask, $m)")
+    TileLake.scanPruned(spark, dir, ids)
+      .selectExpr(s"$keyCol AS keys",
+        s"grid_arr('microha', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile}) AS vals",
+        s"$maskE AS mask")
+      .selectExpr("explode(tile_zonal(keys, vals, mask)) AS p")
+      .groupBy(col("p.k").as(keyAs))
+      .agg(expr("CAST(sum(p.s) AS DOUBLE) / 1000000.0").as("area_ha"),
+        expr("sum(p.c)").as("pixel_count"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.simsearch
 
-import graft.{QueryModule, ScaleCheck, SqlQ, Tables}
+import graft.{CkptUtil, QueryModule, ScaleCheck, Sql, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -258,10 +258,8 @@ object SimQueries extends QueryModule {
     * the signature is the derived artifact, the corpus is the lake). */
   private[graft] def e4Banded(spark: SparkSession, sfDir: String,
                               bandBits: Int): DataFrame = {
-    val side = ensureSigs(spark, sfDir, bandBits)
-    val view = s"e4_sigs_${Integer.toHexString(side.hashCode)}"
-    spark.read.parquet(side).createOrReplaceTempView(view)
-    spark.sql(e4SparkSql(bandBits, Some(view)))
+    Sql.bound(spark, e4SparkSql(bandBits, Some("e4_sigs")),
+      "e4_sigs" -> spark.read.parquet(ensureSigs(spark, sfDir, bandBits)))
   }
 
   /** Auto-sized band width: the smallest width keeping expected
@@ -1330,38 +1328,35 @@ object SimQueries extends QueryModule {
     km
   }
 
-  /** `$sparkVecs, asg(vec_id, v, nrm, c)` — the e21 chain's assignment
-    * prefix, shared by [[e21GraphCtes]] and the `e21_cells` sidecar
-    * dump so the contract anchors to the exact served assignment. */
-  private def e21AsgPrefix(spark: SparkSession, sfDir: String): String = {
+  /** `(vec_id, v, nrm, c)` — the e21 chain's assignment, shared by
+    * [[e21Asg]] and the `e21_cells` sidecar dump so the contract
+    * anchors to the exact served assignment. */
+  private def e21Assignment(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
     val k = e21AutoK(spark.table("embeddings").count())
     val km = e21Kmeans(spark, sfDir)
     // Corpus-sized k: the per-query assignment routes hierarchically
-    // too (same Router as the build loop) through a checkpointed temp
-    // view — inlining 10k 64-dim centroid literals into the SQL text
-    // would cost MBs of parse per call on top of the O(n·k·d) argmax.
+    // too (same Router as the build loop) as a DataFrame — inlining
+    // 10k 64-dim centroid literals into the SQL text would cost MBs of
+    // parse per call on top of the O(n·k·d) argmax.
     // At k <= HierK (every oracle fixture) the inline exhaustive
     // argmax below keeps the DuckDB replay bit-exact.
-    val asgCte =
-      if (k <= HierK)
-        s"asg AS (SELECT vec_id, v, nrm, ${argmaxAssign(km.centroids)} AS c FROM n)"
-      else {
-        val cArr = km.centroids.toArray
-        val cNrm = cArr.map { case (_, a) => math.sqrt(dotScala(a, a)) }
-        val bc = spark.sparkContext.broadcast((cArr, cNrm, buildRouter(cArr)))
-        import spark.implicits._
-        val asg = spark.sql(s"$sparkVecs SELECT vec_id, v, nrm FROM n")
-          .as[(Long, Array[Double], Double)]
-          .mapPartitions { it =>
-            val (cs, cn, r) = bc.value
-            it.map { case (id, v, nrm) => (id, v, nrm, cs(r.assign(v, nrm, cs, cn))._1) }
-          }.toDF("vec_id", "v", "nrm", "c")
-        val view = s"e21_asg_${Integer.toHexString(sfDir.hashCode)}"
-        asg.localCheckpoint().createOrReplaceTempView(view)
-        s"asg AS (SELECT vec_id, v, nrm, c FROM $view)"
-      }
-    s"$sparkVecs,\n$asgCte"
+    if (k <= HierK)
+      spark.sql(s"""$sparkVecs,
+        |asg AS (SELECT vec_id, v, nrm, ${argmaxAssign(km.centroids)} AS c FROM n)
+        |SELECT vec_id, v, nrm, c FROM asg""".stripMargin)
+    else {
+      val cArr = km.centroids.toArray
+      val cNrm = cArr.map { case (_, a) => math.sqrt(dotScala(a, a)) }
+      val bc = spark.sparkContext.broadcast((cArr, cNrm, buildRouter(cArr)))
+      import spark.implicits._
+      spark.sql(s"$sparkVecs SELECT vec_id, v, nrm FROM n")
+        .as[(Long, Array[Double], Double)]
+        .mapPartitions { it =>
+          val (cs, cn, r) = bc.value
+          it.map { case (id, v, nrm) => (id, v, nrm, cs(r.assign(v, nrm, cs, cn))._1) }
+        }.toDF("vec_id", "v", "nrm", "c")
+    }
   }
 
   /** The nn→r→e→m graph tail over an `asg(vec_id, v, nrm, c)` CTE —
@@ -1388,47 +1383,29 @@ object SimQueries extends QueryModule {
        |      greatest(src, dst)) = 2 THEN 1 ELSE 0 END AS mutual
        |  FROM e)""".stripMargin
 
-  private def e21GraphCtes(spark: SparkSession, sfDir: String): String =
-    s"""${e21AsgPrefix(spark, sfDir)},
-       |nn AS (SELECT a.vec_id AS src, a.c AS cell, b.vec_id AS dst,
-       |    vec_dot(a.v, b.v) / (a.nrm * b.nrm) AS sim
-       |  FROM asg a JOIN asg b ON b.c = a.c AND b.vec_id != a.vec_id),
-       |r AS (SELECT src, cell, dst, sim,
-       |    CAST(row_number() OVER (PARTITION BY src
-       |      ORDER BY sim DESC, dst) AS INT) AS rnk FROM nn),
-       |e AS (SELECT src, cell, dst, sim, rnk FROM r WHERE rnk <= $KnnGraphK),
-       |m AS (SELECT src, cell, dst, sim, rnk,
-       |    CASE WHEN count(*) OVER (PARTITION BY least(src, dst),
-       |      greatest(src, dst)) = 2 THEN 1 ELSE 0 END AS mutual
-       |  FROM e)""".stripMargin
-
-  /** The e21 assignment pinned as a checkpointed per-dir view (r16,
+  /** The e21 assignment pinned as a checkpoint (r16,
     * guide §7.3): at fixture k ≤ HierK the asg CTE inlines k×d double
     * literals (~50 KB of SQL at sf0.1), and Catalyst re-parsed and
     * re-analyzed that text once per consuming query (e21, e27, and
     * e28/e29 before their own pin). One materialization job replaces
     * it; values are bitwise the inline CTE's. */
-  private def e21AsgView(spark: SparkSession, sfDir: String): String = {
-    val view = s"e21_asgv_${Integer.toHexString(sfDir.hashCode)}"
-    // freshView (r17): each invocation re-materializes (never cached
-    // across invocations — that would be result re-use the bench
-    // forbids) and RELEASES the previous invocation's blocks, which
-    // otherwise leak once per consuming query (e21/e27/e28/e29 ×
-    // cold/warm/rerun passes)
-    graft.CkptUtil.freshView(spark, view, spark.sql(
-      s"${e21AsgPrefix(spark, sfDir)} SELECT vec_id, v, nrm, c FROM asg"))
-    view
-  }
+  private def e21Asg(spark: SparkSession, sfDir: String): DataFrame =
+    // CkptUtil.fresh (r17): each invocation re-materializes (never
+    // cached across invocations — that would be result re-use the
+    // bench forbids) and RELEASES the previous invocation's blocks,
+    // which otherwise leak once per consuming query (e21/e27/e28/e29
+    // × cold/warm/rerun passes)
+    CkptUtil.fresh(spark, "e21_asg", e21Assignment(spark, sfDir))
 
   private def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(
-      s"""WITH asg AS (SELECT vec_id, v, nrm, c FROM ${e21AsgView(spark, sfDir)}),
-         |$e21GraphTail
+    Sql.bound(spark,
+      s"""WITH $e21GraphTail
          |SELECT src AS vec_id, cell, CAST(count(*) AS INT) AS out_degree,
          |  CAST(sum(mutual) AS INT) AS n_mutual,
          |  min(CASE WHEN rnk = 1 THEN dst END) AS nn_id,
          |  CAST(sum(CAST(round(sim * 1000000.0) AS BIGINT)) AS BIGINT) AS sim_u_sum
-         |FROM m GROUP BY src, cell""".stripMargin)
+         |FROM m GROUP BY src, cell""".stripMargin,
+      "asg" -> e21Asg(spark, sfDir))
 
   /** E27: PageRank over the mutual-kNN graph — graph-centrality data
     * curation (a document embedded in a dense semantic neighborhood
@@ -1450,10 +1427,10 @@ object SimQueries extends QueryModule {
     * edge side. */
   private def e27Query(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val em0 = spark.sql(
-      s"""WITH asg AS (SELECT vec_id, v, nrm, c FROM ${e21AsgView(spark, sfDir)}),
-         |$e21GraphTail
-         |SELECT src, dst FROM m WHERE mutual = 1""".stripMargin)
+    val em0 = Sql.bound(spark,
+      s"""WITH $e21GraphTail
+         |SELECT src, dst FROM m WHERE mutual = 1""".stripMargin,
+      "asg" -> e21Asg(spark, sfDir))
     pagerankKernel(spark, graft.GraphOps.fresh(spark, em0),
       graft.GraphOps.fresh(spark,
         spark.table("embeddings").select(col("vec_id"))))
@@ -1566,40 +1543,33 @@ object SimQueries extends QueryModule {
     * build + unrolled hops) in DuckDB. */
   /** Spark side of the beam search: the graph edges are pinned ONCE
     * (localCheckpoint) and each hop runs as its own materialized step
-    * against per-dir temp views. The pure-CTE formulation the oracle
+    * against bound checkpoints. The pure-CTE formulation the oracle
     * replays would INLINE: every hop's UNION references the previous
     * beam twice, so Catalyst copies the whole graph-build pipeline
     * ~2^hops times into one plan (measured 4.8 s vs ~1 s pinned at
     * sf0.1) — the e27/GraphOps iterate-materialization lesson applied
-    * to a fixed-depth loop. Returns the `fr` frontier (qid, nid, sim,
-    * rr) shared by e28's top-5 tail and e29's recall join. */
-  private def e28Frontier(spark: SparkSession, sfDir: String): DataFrame = {
+    * to a fixed-depth loop. Returns the frontier `fr(qid, nid, sim,
+    * rr)` shared by e28's top-5 tail and e29's recall join, with the
+    * query side `q(qid, qv, qn)` and vector side `n(vec_id, v, nrm)`
+    * e29's exact top-5 reads. */
+  private def e28Frontier(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     Tables.register(spark, sfDir)
-    val tag = Integer.toHexString(sfDir.hashCode)
-    val aView = s"e28_asg_$tag"
-    val vView = s"e28_n_$tag"
-    val qView = s"e28_q_$tag"
-    val eView = s"e28_e_$tag"
     // Pin the ASSIGNMENT once (r16, guide §7.3 "very large plans"):
     // the inlined-centroid argmax text (k×d double literals) was
     // re-parsed/analyzed for BOTH the edge build and the entry set —
     // and per e28Frontier call (so twice again inside e29) — while
     // the hop loop additionally re-computed the sparkVecs casts+norms
-    // per hop through the un-materialized vView. One checkpointed
-    // assignment view feeds the vector side, the query side, the
+    // per hop through the un-materialized vector side. One checkpointed
+    // assignment feeds the vector side, the query side, the
     // edge build and the entry set; values are bitwise those of the
     // inline CTE (same expression over the same rows).
-    spark.sql(s"SELECT vec_id, v, nrm, c FROM ${e21AsgView(spark, sfDir)}")
-      .createOrReplaceTempView(aView)
-    spark.sql(s"SELECT vec_id, v, nrm FROM $aView")
-      .createOrReplaceTempView(vView)
-    spark.sql(
-      s"SELECT vec_id AS qid, v AS qv, nrm AS qn FROM $vView WHERE vec_id < 5")
-      .createOrReplaceTempView(qView)
-    graft.CkptUtil.freshView(spark, eView, spark.sql(
-      s"""WITH asg AS (SELECT vec_id, v, nrm, c FROM $aView),
-         |$e21GraphTail
-         |SELECT src, dst FROM e""".stripMargin))
+    val asg = e21Asg(spark, sfDir)
+    val n = asg.select("vec_id", "v", "nrm")
+    val q = n.where("vec_id < 5").selectExpr("vec_id AS qid", "v AS qv", "nrm AS qn")
+    val edges = CkptUtil.fresh(spark, "e28_e", Sql.bound(spark,
+      s"""WITH $e21GraphTail
+         |SELECT src, dst FROM e""".stripMargin, "asg" -> asg))
     // Hops UNROLLED into one statement with LINEAR plan growth (r17,
     // verdict ask #3): the r16 unroll referenced each hop's
     // predecessor TWICE (UNION branch + edge-expansion branch), so
@@ -1617,19 +1587,19 @@ object SimQueries extends QueryModule {
     // dedup). Plan: 2 027 → 304 lines, 136 → 26 Exchanges; same
     // recurrence the DuckDB oracle unrolls, hop for hop.
     val sb = new StringBuilder(
-      s"""WITH ent AS (SELECT min(vec_id) AS eid FROM $aView GROUP BY c),
-         |c0 AS (SELECT q.qid, ent.eid AS nid FROM $qView q CROSS JOIN ent)""".stripMargin)
+      s"""WITH ent AS (SELECT min(vec_id) AS eid FROM asg GROUP BY c),
+         |c0 AS (SELECT q.qid, ent.eid AS nid FROM qs q CROSS JOIN ent)""".stripMargin)
     for (i <- 1 to BeamHops) {
       val p = i - 1
       sb ++= s""",
          |x$i AS (SELECT DISTINCT qid, n AS nid FROM (
          |  SELECT c.qid, explode(array(c.nid, e.dst)) AS n
-         |  FROM c$p c LEFT JOIN $eView e ON e.src = c.nid) u
+         |  FROM c$p c LEFT JOIN edges e ON e.src = c.nid) u
          |  WHERE n IS NOT NULL),
          |s$i AS (SELECT x.qid, x.nid,
          |    vec_dot(q.qv, n2.v) / (q.qn * n2.nrm) AS sim
-         |  FROM x$i x JOIN $qView q ON q.qid = x.qid
-         |    JOIN $vView n2 ON n2.vec_id = x.nid),
+         |  FROM x$i x JOIN qs q ON q.qid = x.qid
+         |    JOIN vecs n2 ON n2.vec_id = x.nid),
          |c$i AS (SELECT qid, nid FROM (SELECT qid, nid,
          |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rr
          |  FROM s$i) t WHERE rr <= $BeamWidth)"""
@@ -1639,14 +1609,15 @@ object SimQueries extends QueryModule {
          |  row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rr
          |FROM (SELECT c.qid, c.nid,
          |    vec_dot(q.qv, n2.v) / (q.qn * n2.nrm) AS sim
-         |  FROM c$BeamHops c JOIN $qView q ON q.qid = c.qid
-         |    JOIN $vView n2 ON n2.vec_id = c.nid
+         |  FROM c$BeamHops c JOIN qs q ON q.qid = c.qid
+         |    JOIN vecs n2 ON n2.vec_id = c.nid
          |  WHERE c.nid != c.qid) fs"""
-    spark.sql(sb.result().stripMargin)
+    (Sql.bound(spark, sb.result().stripMargin,
+      "asg" -> asg, "qs" -> q, "vecs" -> n, "edges" -> edges), q, n)
   }
 
   private def e28Query(spark: SparkSession, sfDir: String): DataFrame =
-    e28Frontier(spark, sfDir)
+    e28Frontier(spark, sfDir)._1
       .where("rr <= 5")
       .selectExpr("qid AS query_id", "nid AS neighbor_id", "sim",
         "CAST(rr AS INT) AS rnk")
@@ -1655,25 +1626,24 @@ object SimQueries extends QueryModule {
     * convention: every approximate structure ships with its measured
     * answer quality, not an asserted one). */
   private def e29Query(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = Integer.toHexString(sfDir.hashCode)
-    val frView = s"e28_fr_$tag"
-    graft.CkptUtil.freshView(spark, frView, e28Frontier(spark, sfDir))
-    spark.sql(
-      s"""WITH got AS (SELECT qid, nid FROM $frView WHERE rr <= 5),
-         |-- BROADCAST(q): both sides are checkpointed RDD scans whose
-         |-- stats no longer mark the 5-row query side broadcastable, so
-         |-- the unhinted plan degraded to a 32×32-task CartesianProduct
-         |-- (r16 measured: 1024 tasks re-reading the corpus checkpoint)
-         |ex0 AS (SELECT /*+ BROADCAST(q) */ q.qid, n2.vec_id AS nid,
-         |    vec_dot(q.qv, n2.v) / (q.qn * n2.nrm) AS sim
-         |  FROM e28_q_$tag q CROSS JOIN e28_n_$tag n2 WHERE n2.vec_id != q.qid),
-         |ex AS (SELECT qid, nid FROM (SELECT qid, nid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rr
-         |  FROM ex0) t WHERE rr <= 5)
-         |SELECT ex.qid AS query_id, count(got.nid) AS hits,
-         |  CAST(count(got.nid) AS DOUBLE) / 5 AS recall_at_5
-         |FROM ex LEFT JOIN got ON got.qid = ex.qid AND got.nid = ex.nid
-         |GROUP BY ex.qid""".stripMargin)
+    val (fr, q, n) = e28Frontier(spark, sfDir)
+    Sql.bound(spark,
+      """WITH got AS (SELECT qid, nid FROM fr WHERE rr <= 5),
+        |-- BROADCAST(q): both sides are checkpointed RDD scans whose
+        |-- stats no longer mark the 5-row query side broadcastable, so
+        |-- the unhinted plan degraded to a 32×32-task CartesianProduct
+        |-- (r16 measured: 1024 tasks re-reading the corpus checkpoint)
+        |ex0 AS (SELECT /*+ BROADCAST(q) */ q.qid, n2.vec_id AS nid,
+        |    vec_dot(q.qv, n2.v) / (q.qn * n2.nrm) AS sim
+        |  FROM qs q CROSS JOIN vecs n2 WHERE n2.vec_id != q.qid),
+        |ex AS (SELECT qid, nid FROM (SELECT qid, nid,
+        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rr
+        |  FROM ex0) t WHERE rr <= 5)
+        |SELECT ex.qid AS query_id, count(got.nid) AS hits,
+        |  CAST(count(got.nid) AS DOUBLE) / 5 AS recall_at_5
+        |FROM ex LEFT JOIN got ON got.qid = ex.qid AND got.nid = ex.nid
+        |GROUP BY ex.qid""".stripMargin,
+      "fr" -> CkptUtil.fresh(spark, "e28_fr", fr), "qs" -> q, "vecs" -> n)
   }
 
   /** DuckDB replay of [[e28Ctes]] (shared by the e28/e29 oracles and,
@@ -1746,7 +1716,7 @@ object SimQueries extends QueryModule {
     * identical expansion), so [[e21AutoK]] yields 80 > HierK at the
     * sf0.01 oracle fixture, then assigns EVERY expanded vector
     * through the REAL router kernel — [[buildRouter]] +
-    * [[Router.assign]], the exact executor code e21GraphCtes ships
+    * [[Router.assign]], the exact executor code e21Assignment ships
     * above HierK — and the DuckDB oracle replays the same two-level
     * routing end to end: the router's own 10-iteration Lloyd over
     * the fine centroids (c-ordered element folds, the kmeansCtes
@@ -1851,7 +1821,7 @@ object SimQueries extends QueryModule {
     * with no hint why). The unrolled Lloyd CTEs are k-agnostic
     * beyond the seed predicate: assignment cross-joins whatever cn
     * holds, and the chunked fold groups by c. */
-  /** The shared e21 oracle chain (DuckDB twin of [[e21GraphCtes]]). */
+  /** The shared e21 oracle chain (DuckDB twin of [[e21Assignment]] + [[e21GraphTail]]). */
   private def e21OracleCtes: String =
     s"""$duckVecs,
        |${kmeansCtes(KmMaxIter + 1,
@@ -2176,18 +2146,11 @@ object SimQueries extends QueryModule {
     val (codesDir, bookDir) = ensurePqArtifacts(spark, sfDir)
     Tables.register(spark, sfDir)
     val km = convergedKmeans(spark, sfDir)
-    // per-DIR view names: distinct corpus dirs cannot race each other,
-    // and repeat invocations for the same dir REPLACE the view instead
-    // of leaking a fresh UUID-named catalog entry per call (Bench runs
-    // every query twice, ScaleProbe dozens of times)
-    val tag = Integer.toHexString(codesDir.hashCode)
-    spark.read.parquet(codesDir).createOrReplaceTempView(s"e11_codes_$tag")
-    spark.read.parquet(bookDir).createOrReplaceTempView(s"e11_book_$tag")
-    spark.sql(
+    Sql.bound(spark,
       s"""$sparkVecs,
          |${centroidCte(km.centroids)},
-         |seed AS (SELECT cid, cv FROM e11_book_$tag),
-         |codes AS (SELECT vec_id, c, code0, code1, code2, code3 FROM e11_codes_$tag),
+         |seed AS (SELECT cid, cv FROM e11_book),
+         |codes AS (SELECT vec_id, c, code0, code1, code2, code3 FROM e11_codes),
          |q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < $nQ),
          |pc AS (SELECT qid, cn.c AS cell,
          |        row_number() OVER (PARTITION BY qid
@@ -2220,7 +2183,8 @@ object SimQueries extends QueryModule {
          |SELECT qid AS query_id, nid AS neighbor_id, adist AS adc_dist, rnk
          |FROM (SELECT qid, nid, adist,
          |        CAST(row_number() OVER (PARTITION BY qid ORDER BY adist, nid) AS INT) AS rnk FROM adc) t
-         |WHERE rnk <= 5""".stripMargin)
+         |WHERE rnk <= 5""".stripMargin,
+      "e11_book" -> spark.read.parquet(bookDir), "e11_codes" -> spark.read.parquet(codesDir))
   }
 
   /** e11 oracle: the identical pipeline with the k-means fixed point
@@ -2469,8 +2433,7 @@ object SimQueries extends QueryModule {
     import org.apache.spark.sql.functions._
     Tables.register(spark, sfDir)
     val km = convergedKmeans(spark, sfDir)
-    val s0View = s"e14_sub0_${Integer.toHexString(sfDir.hashCode)}"
-    graft.CkptUtil.freshView(spark, s0View, spark.sql(
+    val sub0 = CkptUtil.fresh(spark, "e14_sub0", spark.sql(
       s"""$sparkVecs,
          |${centroidCte(km.centroids)},
          |asg AS (SELECT vec_id, v, ${argmaxAssign(km.centroids)} AS c FROM n),
@@ -2483,17 +2446,17 @@ object SimQueries extends QueryModule {
     // the trained codebook is checkpointed once (32 rows) so the ADC
     // tail's four dtT joins reference a tiny scan instead of four
     // copies of the TrainIter chain (r17 — see e14Body.cbFrom)
-    val cbView = s"e14_cb_${Integer.toHexString(sfDir.hashCode)}"
-    graft.CkptUtil.freshView(spark, cbView, spark.sql(
+    val cb = CkptUtil.fresh(spark, "e14_cb", Sql.bound(spark,
       s"""WITH ${e14Body(sparkD = true, cnName = "cn", nQ = nQ,
-             sub0From = Some(s0View), trainOnly = true)}""".stripMargin))
+             sub0From = Some("e14_sub0"), trainOnly = true)}""".stripMargin,
+      "e14_sub0" -> sub0))
     val adcSql =
       s"""$sparkVecs,
          |${centroidCte(km.centroids)},
          |${e14Body(sparkD = true, cnName = "cn", nQ = nQ,
-             sub0From = Some(s0View), cbFrom = Some(cbView))}""".stripMargin
+             sub0From = Some("e14_sub0"), cbFrom = Some("e14_cb"))}""".stripMargin
     val exact = spark.sql(exactTop5Sql(nQ)).as("e")
-    val adc = spark.sql(adcSql).as("i")
+    val adc = Sql.bound(spark, adcSql, "e14_sub0" -> sub0, "e14_cb" -> cb).as("i")
     exact.join(adc,
         col("e.query_id") === col("i.query_id") &&
           col("e.neighbor_id") === col("i.neighbor_id"), "left")
@@ -2620,7 +2583,6 @@ object SimQueries extends QueryModule {
     if (v(p).signum < 0) v = v.map(-_)
     val dotSV = (0 until dim).map(i => s(i) * v(i)).sum
     val vLit = v.mkString("array(", "L,", "L)")
-    qdf.createOrReplaceTempView("e30_q")
     // n·dot − S·v in DECIMAL(38,0) (the t33 convention), matching the
     // oracle's HUGEINT: the per-row fold itself is Long-safe
     // (|dot| ≲ 2^36 at dim 64), but n·dot wraps Long near n ≈ 2^27
@@ -2628,7 +2590,7 @@ object SimQueries extends QueryModule {
     // point — so both the product and the constant go through
     // decimal, and only the n-divided projection (back ≲ 2^36)
     // returns to BIGINT
-    spark.sql(
+    Sql.bound(spark,
       s"""SELECT vec_id, CAST(rnk AS INT) AS rnk, proj_q FROM (
          |  SELECT vec_id, proj_q,
          |    row_number() OVER (ORDER BY abs(proj_q) DESC, vec_id) AS rnk
@@ -2641,7 +2603,8 @@ object SimQueries extends QueryModule {
          |                      0L, (acc, x) -> acc + x)
          |          - CAST('${dotSV}' AS DECIMAL(38,0)) AS pn
          |      FROM e30_q) raw) ctr) rk
-         |WHERE rnk <= 20""".stripMargin)
+         |WHERE rnk <= 20""".stripMargin,
+      "e30_q" -> qdf)
   }
 
   /** Full HUGEINT replay of e30: quantize → scatter (double lateral)
@@ -2907,7 +2870,7 @@ object SimQueries extends QueryModule {
 
   override def auxDumps: Map[String, (SparkSession, String) => DataFrame] = Map(
     "e21_cells" -> ((s: SparkSession, d: String) =>
-      s.sql(s"${e21AsgPrefix(s, d)} SELECT vec_id, c AS cell FROM asg")),
+      e21Assignment(s, d).selectExpr("vec_id", "c AS cell")),
     "e21_centroids" -> ((s: SparkSession, d: String) => {
       val km = e21Kmeans(s, d)
       import s.implicits._

@@ -39,12 +39,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQueries extends QueryModule {
 
-  /** Runs `gate` over a streaming read of `srcPath` (schema taken
-    * from a batch read of the same files), drains it with
-    * AvailableNow into a uniquely-named memory sink, and returns the
-    * sink table. The name is per-call so bench reps / concurrent
-    * sessions never collide; the tiny sink views accumulate only for
-    * the session's lifetime. */
   /** The file streaming source requires a DIRECTORY; the driver
     * testdata tables are single parquet files, so a file path is
     * staged behind a content-tagged symlink dir (idempotent; the tag
@@ -96,44 +90,37 @@ object StreamingQueries extends QueryModule {
     * oracle hashes are partitioning-independent by construction. */
   private val DrainPartitions = "8"
 
-  /** Serializes the drain's session-global shuffle-partition override
-    * (round-15 advice): the save/restore in [[drained]] is not
-    * re-entrant — two interleaved drains (or a concurrent batch query
-    * on the shared session) could capture prev=8 and leak the drain
-    * sizing into batch plans. One drain at a time costs nothing here:
-    * the bench and Verify run gates sequentially by construction. */
-  private val drainLock = new Object
-
+  /** Runs `gate` over a streaming read of `srcPath` (schema taken
+    * from a batch read of the same files), drains it with
+    * AvailableNow into a memory sink, and returns the sink table.
+    * The drain runs on a clone of `spark`: it carries the session's
+    * conf and native functions, takes [[DrainPartitions]] (the
+    * checkpoint pins shuffle partitions at the first batch) without
+    * touching the shared session's conf, and holds the sink's name
+    * in its own catalog, so the sink and its rows go when the caller
+    * drops the result, which reads them on `spark`. */
   private def drained(spark: SparkSession, srcPath0: String,
                       label: String)
                      (gate: DataFrame => DataFrame): DataFrame = {
     val srcPath = asDir(srcPath0)
     val schema = schemaCache.computeIfAbsent(srcPath,
       p => spark.read.parquet(p).schema)
-    val stream = spark.readStream.schema(schema).parquet(srcPath)
-    val sink = "sg_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    // the partition override must cover q.start() (the checkpoint
-    // pins shuffle partitions at first batch); restored after the
-    // drain so batch queries keep the session sizing
-    val q = drainLock.synchronized {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", DrainPartitions)
-      try {
-        val started = gate(stream).writeStream
-          .format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-        started
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    val drain = org.apache.spark.sql.graft.SessionBridge.cloneSession(spark)
+    drain.conf.set("spark.sql.shuffle.partitions", DrainPartitions)
+    val q = gate(drain.readStream.schema(schema).parquet(srcPath)).writeStream
+      .format("memory").queryName("drained")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     val addMs = q.recentProgress.iterator.map { p =>
       Option(p.durationMs.get("addBatch")).map(_.longValue).getOrElse(0L)
     }.sum
     opSeconds.put(label, addMs / 1e3)
-    spark.table(sink)
+    // the sink's rows, planned on `spark`: generated code is cached per
+    // session class loader, so a plan run on the fresh clone would
+    // recompile its classes on every drain
+    graft.Sql.bound(spark, "SELECT * FROM drained", "drained" -> drain.table("drained"))
   }
 
   /** Pin a gate's STATIC side once per drain (r16): Structured

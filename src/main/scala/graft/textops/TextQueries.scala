@@ -1,6 +1,6 @@
 package graft.textops
 
-import graft.{QueryModule, SqlQ, Tables}
+import graft.{QueryModule, Sql, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Training-data pipeline operators over the `documents` table:
@@ -1902,48 +1902,44 @@ object TextQueries extends QueryModule {
     * top-k, doc lengths, query-term postings) read one corpus pass. */
   private def t33Query(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val view = "t33_tok_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val tok = spark.sql(
       """SELECT doc_id, word, CAST(count(*) AS BIGINT) AS k
         |FROM documents
         |LATERAL VIEW explode(filter(split(text, ' '), x -> x != '')) t AS word
         |GROUP BY doc_id, word""".stripMargin).localCheckpoint()
-    tok.createOrReplaceTempView(view)
-    try {
-      val res = spark.sql(
-        s"""WITH wf AS (SELECT word, CAST(sum(k) AS BIGINT) AS f FROM $view
-           |  GROUP BY word ORDER BY f DESC, word LIMIT 7),
-           |q AS (SELECT concat('q', CAST((rn + 2) DIV 3 AS STRING)) AS query_id,
-           |    word AS term
-           |  FROM (SELECT word, row_number() OVER (ORDER BY f DESC, word) AS rn
-           |        FROM wf) x),
-           |dl AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS dl FROM $view GROUP BY doc_id),
-           |nl AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS l FROM dl),
-           |tf AS (SELECT /*+ BROADCAST(q) */ q.query_id, q.term, v.doc_id,
-           |    CAST(sum(v.k) AS BIGINT) AS tf
-           |  FROM $view v JOIN q ON q.term = v.word GROUP BY q.query_id, q.term, v.doc_id),
-           |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-           |  FROM tf GROUP BY term),
-           |sc AS (SELECT tf.query_id, tf.doc_id,
-           |    CAST(sum(
-           |      (CAST((2*nl.n - 2*df.df + 1) * 1000000 DIV (2*df.df + 1) AS DECIMAL(38,0))
-           |         * (CAST(tf.tf AS DECIMAL(38,0)) * 2200000 * nl.l))
-           |      DIV (CAST(tf.tf AS DECIMAL(38,0)) * 1000000 * nl.l
-           |           + CAST(300000 AS DECIMAL(38,0)) * nl.l
-           |           + CAST(900000 AS DECIMAL(38,0)) * dl.dl * nl.n)
-           |    ) AS BIGINT) AS score_micro
-           |  FROM tf JOIN df ON df.term = tf.term JOIN dl ON dl.doc_id = tf.doc_id
-           |  CROSS JOIN nl
-           |  GROUP BY tf.query_id, tf.doc_id)
-           |SELECT query_id, CAST(rnk AS INT) AS rnk, doc_id, score_micro FROM (
-           |  SELECT query_id, doc_id, score_micro,
-           |    row_number() OVER (PARTITION BY query_id
-           |      ORDER BY score_micro DESC, doc_id) AS rnk
-           |  FROM sc) ranked WHERE rnk <= 5""".stripMargin).localCheckpoint()
-      graft.CkptUtil.unpersist(tok)
-      res
-    } finally spark.catalog.dropTempView(view)
+    val res = Sql.bound(spark,
+      """WITH wf AS (SELECT word, CAST(sum(k) AS BIGINT) AS f FROM tok
+        |  GROUP BY word ORDER BY f DESC, word LIMIT 7),
+        |q AS (SELECT concat('q', CAST((rn + 2) DIV 3 AS STRING)) AS query_id,
+        |    word AS term
+        |  FROM (SELECT word, row_number() OVER (ORDER BY f DESC, word) AS rn
+        |        FROM wf) x),
+        |dl AS (SELECT doc_id, CAST(sum(k) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
+        |nl AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS l FROM dl),
+        |tf AS (SELECT /*+ BROADCAST(q) */ q.query_id, q.term, v.doc_id,
+        |    CAST(sum(v.k) AS BIGINT) AS tf
+        |  FROM tok v JOIN q ON q.term = v.word GROUP BY q.query_id, q.term, v.doc_id),
+        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+        |  FROM tf GROUP BY term),
+        |sc AS (SELECT tf.query_id, tf.doc_id,
+        |    CAST(sum(
+        |      (CAST((2*nl.n - 2*df.df + 1) * 1000000 DIV (2*df.df + 1) AS DECIMAL(38,0))
+        |         * (CAST(tf.tf AS DECIMAL(38,0)) * 2200000 * nl.l))
+        |      DIV (CAST(tf.tf AS DECIMAL(38,0)) * 1000000 * nl.l
+        |           + CAST(300000 AS DECIMAL(38,0)) * nl.l
+        |           + CAST(900000 AS DECIMAL(38,0)) * dl.dl * nl.n)
+        |    ) AS BIGINT) AS score_micro
+        |  FROM tf JOIN df ON df.term = tf.term JOIN dl ON dl.doc_id = tf.doc_id
+        |  CROSS JOIN nl
+        |  GROUP BY tf.query_id, tf.doc_id)
+        |SELECT query_id, CAST(rnk AS INT) AS rnk, doc_id, score_micro FROM (
+        |  SELECT query_id, doc_id, score_micro,
+        |    row_number() OVER (PARTITION BY query_id
+        |      ORDER BY score_micro DESC, doc_id) AS rnk
+        |  FROM sc) ranked WHERE rnk <= 5""".stripMargin,
+      "tok" -> tok).localCheckpoint()
+    graft.CkptUtil.unpersist(tok)
+    res
   }
 
   /** D7: duplicate-cluster resolution — the dedup end-game: the
@@ -2094,23 +2090,17 @@ object TextQueries extends QueryModule {
       .localCheckpoint()
   }
 
-  /** Runs `tail` against a view over the checkpointed token counts
-    * (postingPairs' per-call-view convention), eagerly checkpoints
-    * the RESULT, and frees the token blocks — the result is doc-count
+  /** Runs `tail` with `tok` bound to the checkpointed token counts,
+    * eagerly checkpoints the RESULT, and frees the token blocks — the result is doc-count
     * sized while the token table is corpus-sized, and leaking the
     * latter across a bench run causes eviction/writeback stalls in
     * unrelated queries ([[graft.CkptUtil]]). */
-  private def overTokCounts(spark: SparkSession, sfDir: String)
-                           (tail: String => String): DataFrame = {
-    val view = "tok_counts_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+  private def overTokCounts(spark: SparkSession, sfDir: String,
+                           tail: String): DataFrame = {
     val tok = tokCounts(spark, sfDir)
-    tok.createOrReplaceTempView(view)
-    try {
-      val res = spark.sql(tail(view)).localCheckpoint()
-      graft.CkptUtil.unpersist(tok)
-      res
-    } finally spark.catalog.dropTempView(view)
+    val res = Sql.bound(spark, tail, "tok" -> tok).localCheckpoint()
+    graft.CkptUtil.unpersist(tok)
+    res
   }
 
   /** T13: language-model quality scoring, the CCNet move (Wenzek et
@@ -2132,19 +2122,18 @@ object TextQueries extends QueryModule {
     * hash-join on word beyond); the only other shuffle is the
     * per-doc aggregation. */
   private def t13Query(spark: SparkSession, sfDir: String): DataFrame =
-    overTokCounts(spark, sfDir) { v =>
-      s"""WITH cnt AS (SELECT word, CAST(sum(k) AS BIGINT) AS c
-         |  FROM $v GROUP BY word),
-         |tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cnt),
-         |per AS (SELECT v.doc_id, v.k,
-         |    CAST(round(-ln(CAST(cnt.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) * 1000000.0) AS BIGINT) AS nll_u
-         |  FROM $v v JOIN cnt ON cnt.word = v.word CROSS JOIN tot),
-         |agg AS (SELECT doc_id, CAST(sum(nll_u * k) AS BIGINT) AS sum_u,
-         |    CAST(sum(k) AS BIGINT) AS n_tokens
-         |  FROM per GROUP BY doc_id)
-         |SELECT doc_id, n_tokens,
-         |  CAST(sum_u AS DOUBLE) / (n_tokens * 1000000.0) AS avg_nll FROM agg""".stripMargin
-    }
+    overTokCounts(spark, sfDir,
+      """WITH cnt AS (SELECT word, CAST(sum(k) AS BIGINT) AS c
+        |  FROM tok GROUP BY word),
+        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cnt),
+        |per AS (SELECT v.doc_id, v.k,
+        |    CAST(round(-ln(CAST(cnt.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) * 1000000.0) AS BIGINT) AS nll_u
+        |  FROM tok v JOIN cnt ON cnt.word = v.word CROSS JOIN tot),
+        |agg AS (SELECT doc_id, CAST(sum(nll_u * k) AS BIGINT) AS sum_u,
+        |    CAST(sum(k) AS BIGINT) AS n_tokens
+        |  FROM per GROUP BY doc_id)
+        |SELECT doc_id, n_tokens,
+        |  CAST(sum_u AS DOUBLE) / (n_tokens * 1000000.0) AS avg_nll FROM agg""".stripMargin)
 
   private val t13Oracle: String =
     """WITH w AS (SELECT doc_id,
@@ -2188,40 +2177,36 @@ object TextQueries extends QueryModule {
     * |distinct avg_u| rows; the final accounting is one combinable
     * groupBy. */
   private def t27Query(spark: SparkSession, sfDir: String): DataFrame = {
-    val score = overTokCounts(spark, sfDir) { v =>
-      s"""WITH cnt AS (SELECT lang, word, CAST(sum(k) AS BIGINT) AS c
-         |  FROM $v GROUP BY lang, word),
-         |tot AS (SELECT lang, CAST(sum(c) AS BIGINT) AS t FROM cnt GROUP BY lang),
-         |per AS (SELECT /*+ BROADCAST(tot) */ v.doc_id, v.lang, v.k,
-         |    CAST(round(-ln(CAST(cnt.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) * 1000000.0) AS BIGINT) AS nll_u
-         |  FROM $v v JOIN cnt ON cnt.lang = v.lang AND cnt.word = v.word
-         |         JOIN tot ON tot.lang = v.lang),
-         |agg AS (SELECT doc_id, lang, CAST(sum(nll_u * k) AS BIGINT) AS sum_u,
-         |    CAST(sum(k) AS BIGINT) AS n_tokens
-         |  FROM per GROUP BY doc_id, lang)
-         |SELECT doc_id, lang, n_tokens, sum_u DIV n_tokens AS avg_u FROM agg""".stripMargin
-    }
-    val sv = "t27_score_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    score.createOrReplaceTempView(sv)
-    try spark.sql(
-      s"""WITH hist AS (SELECT lang, avg_u, count(*) AS c FROM $sv GROUP BY lang, avg_u),
-         |n AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_docs FROM hist GROUP BY lang),
-         |cum AS (SELECT lang, avg_u,
-         |    sum(c) OVER (PARTITION BY lang ORDER BY avg_u) AS cm FROM hist),
-         |q AS (SELECT cum.lang,
-         |    min(CASE WHEN cm * 3 >= n.n_docs THEN avg_u END) AS p33,
-         |    min(CASE WHEN cm * 3 >= 2 * n.n_docs THEN avg_u END) AS p66
-         |  FROM cum JOIN n ON n.lang = cum.lang GROUP BY cum.lang),
-         |b AS (SELECT /*+ BROADCAST(q) */ a2.doc_id, a2.lang, a2.n_tokens, a2.avg_u,
-         |    CASE WHEN avg_u <= p33 THEN 'head'
-         |         WHEN avg_u <= p66 THEN 'middle' ELSE 'tail' END AS bucket
-         |  FROM $sv a2 JOIN q ON q.lang = a2.lang)
-         |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         |  min(avg_u) AS min_avg_u, max(avg_u) AS max_avg_u
-         |FROM b GROUP BY lang, bucket""".stripMargin)
-    finally spark.catalog.dropTempView(sv)
+    val score = overTokCounts(spark, sfDir,
+      """WITH cnt AS (SELECT lang, word, CAST(sum(k) AS BIGINT) AS c
+        |  FROM tok GROUP BY lang, word),
+        |tot AS (SELECT lang, CAST(sum(c) AS BIGINT) AS t FROM cnt GROUP BY lang),
+        |per AS (SELECT /*+ BROADCAST(tot) */ v.doc_id, v.lang, v.k,
+        |    CAST(round(-ln(CAST(cnt.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) * 1000000.0) AS BIGINT) AS nll_u
+        |  FROM tok v JOIN cnt ON cnt.lang = v.lang AND cnt.word = v.word
+        |         JOIN tot ON tot.lang = v.lang),
+        |agg AS (SELECT doc_id, lang, CAST(sum(nll_u * k) AS BIGINT) AS sum_u,
+        |    CAST(sum(k) AS BIGINT) AS n_tokens
+        |  FROM per GROUP BY doc_id, lang)
+        |SELECT doc_id, lang, n_tokens, sum_u DIV n_tokens AS avg_u FROM agg""".stripMargin)
+    Sql.bound(spark,
+      """WITH hist AS (SELECT lang, avg_u, count(*) AS c FROM score GROUP BY lang, avg_u),
+        |n AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_docs FROM hist GROUP BY lang),
+        |cum AS (SELECT lang, avg_u,
+        |    sum(c) OVER (PARTITION BY lang ORDER BY avg_u) AS cm FROM hist),
+        |q AS (SELECT cum.lang,
+        |    min(CASE WHEN cm * 3 >= n.n_docs THEN avg_u END) AS p33,
+        |    min(CASE WHEN cm * 3 >= 2 * n.n_docs THEN avg_u END) AS p66
+        |  FROM cum JOIN n ON n.lang = cum.lang GROUP BY cum.lang),
+        |b AS (SELECT /*+ BROADCAST(q) */ a2.doc_id, a2.lang, a2.n_tokens, a2.avg_u,
+        |    CASE WHEN avg_u <= p33 THEN 'head'
+        |         WHEN avg_u <= p66 THEN 'middle' ELSE 'tail' END AS bucket
+        |  FROM score a2 JOIN q ON q.lang = a2.lang)
+        |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+        |  min(avg_u) AS min_avg_u, max(avg_u) AS max_avg_u
+        |FROM b GROUP BY lang, bucket""".stripMargin,
+      "score" -> score)
   }
 
   private val t27Oracle: String =
@@ -2315,27 +2300,20 @@ object TextQueries extends QueryModule {
   }
 
   /** Shared tail of d4/d8 over the checkpointed buckets: pair shared
-    * counts + per-doc posting counts, then `select` normalizes. The
-    * view name is per-call so concurrent sessions/sfDirs never clobber
-    * each other; the plan resolves at `sql()` time, so the view can be
-    * dropped immediately after. */
+    * counts + per-doc posting counts, then `select` normalizes. */
   private def postingPairs(spark: SparkSession, sfDir: String,
-                           select: String): DataFrame = {
-    val view = "ngram_postings_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    groupedPostings(spark, sfDir).createOrReplaceTempView(view)
-    try spark.sql(
+                           select: String): DataFrame =
+    Sql.bound(spark,
       s"""WITH cnt AS (SELECT doc_id, count(*) AS n
-         |  FROM (SELECT explode(ds) AS doc_id FROM $view) GROUP BY doc_id),
+         |  FROM (SELECT explode(ds) AS doc_id FROM postings) GROUP BY doc_id),
          |pr AS (SELECT i, j, count(*) AS shared FROM (
-         |    SELECT x.i, y.j FROM $view
+         |    SELECT x.i, y.j FROM postings
          |    LATERAL VIEW posexplode(ds) x AS pi, i
          |    LATERAL VIEW posexplode(ds) y AS pj, j
          |    WHERE x.pi < y.pj)
          |  GROUP BY i, j)
-         |$select""".stripMargin)
-    finally spark.catalog.dropTempView(view)
-  }
+         |$select""".stripMargin,
+      "postings" -> groupedPostings(spark, sfDir))
 
   // ---- t8: sequence packing by DISTRIBUTED prefix sum ------------
   //
@@ -2651,7 +2629,6 @@ object TextQueries extends QueryModule {
     * pipeline. The token text never shuffles at all. */
   private def d12Query(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val tag = Integer.toHexString(sfDir.hashCode)
     val gSql =
       """SELECT doc_id, s, h FROM
         |  (SELECT doc_id, shingle_hashes(text, 10) AS hs FROM documents
@@ -2660,30 +2637,29 @@ object TextQueries extends QueryModule {
     // duplicated hashes, materialized once (h-only shuffle; the
     // downstream count/bloom/semi-join reuse the checkpoint instead
     // of re-aggregating)
-    val dupView = s"d12_dup_$tag"
-    spark.sql(s"SELECT h FROM ($gSql) g GROUP BY h HAVING count(*) > 1")
-      .localCheckpoint().createOrReplaceTempView(dupView)
-    val nDup = spark.table(dupView).count()
+    val dup = spark.sql(s"SELECT h FROM ($gSql) g GROUP BY h HAVING count(*) > 1")
+      .localCheckpoint()
+    val nDup = dup.count()
     // no duplicated gram anywhere: nothing is covered — skip the
     // bloom (bloom_agg over zero rows yields NULL)
     val prefilter =
       if (nDup == 0) "FALSE"
       else {
-        val blob = spark.sql(
-          s"""SELECT bloom_agg(h, ${nDup}L, CAST(0.01 AS DOUBLE)) AS b
-             |FROM $dupView""".stripMargin).head().getAs[Array[Byte]](0)
+        val blob = dup.selectExpr(s"bloom_agg(h, ${nDup}L, CAST(0.01 AS DOUBLE)) AS b")
+          .head().getAs[Array[Byte]](0)
         val b64 = java.util.Base64.getEncoder.encodeToString(blob)
         s"bloom_might_contain(unbase64('$b64'), h)"
       }
-    val joined = spark.sql(
+    val joined = Sql.bound(spark,
       s"""WITH cand AS (SELECT doc_id, s, h FROM ($gSql) g WHERE $prefilter),
          |ds AS (SELECT cand.doc_id, cand.s
-         |  FROM cand LEFT SEMI JOIN $dupView dup ON dup.h = cand.h),
+         |  FROM cand LEFT SEMI JOIN d12_dup dup ON dup.h = cand.h),
          |dp AS (SELECT doc_id, sort_array(collect_list(s)) AS dups
          |  FROM ds GROUP BY doc_id),
          |w AS (SELECT doc_id, split(text, ' ') AS w FROM documents)
          |SELECT w.doc_id, w.w, coalesce(dp.dups, array()) AS dups
-         |FROM w LEFT JOIN dp ON dp.doc_id = w.doc_id""".stripMargin)
+         |FROM w LEFT JOIN dp ON dp.doc_id = w.doc_id""".stripMargin,
+      "d12_dup" -> dup)
     // coverage + rebuild: a two-pointer sweep over (sorted dup
     // starts, token positions) — O(tokens + dup starts) per doc. A
     // declarative `filter(…, pos -> NOT exists(dups, …))` form is
@@ -2827,15 +2803,14 @@ object TextQueries extends QueryModule {
         |GROUP BY word""".stripMargin).localCheckpoint()
     val out = Seq.newBuilder[(Int, String, String, Long, Long)]
     for (k <- 1 to bpeRounds) {
-      vocab.createOrReplaceTempView("bpe_vocab")
-      val top = spark.sql(
+      val top = Sql.bound(spark,
         """SELECT element_at(t, j) AS a, element_at(t, j + 1) AS b,
           |  CAST(sum(f) AS BIGINT) AS cnt
-          |FROM (SELECT f, split(s, ' ') AS t FROM bpe_vocab
+          |FROM (SELECT f, split(s, ' ') AS t FROM vocab
           |      WHERE instr(s, ' ') > 0)
           |LATERAL VIEW explode(sequence(1, size(t) - 1)) tx AS j
           |GROUP BY a, b
-          |ORDER BY cnt DESC, a, b LIMIT 1""".stripMargin).collect()
+          |ORDER BY cnt DESC, a, b LIMIT 1""".stripMargin, "vocab" -> vocab).collect()
       require(top.nonEmpty, s"BPE round $k: no adjacent pairs left")
       val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
       vocab = vocab.selectExpr("word", "f", "split(s, ' ') AS t")
@@ -2871,9 +2846,7 @@ object TextQueries extends QueryModule {
     * document words. */
   private def t21Query(spark: SparkSession, sfDir: String): DataFrame = {
     val (vocab, _) = bpeTrain(spark, sfDir)
-    vocab.selectExpr("word", "CAST(size(split(s, ' ')) AS BIGINT) AS n_bpe")
-      .createOrReplaceTempView("bpe_tokens")
-    spark.sql(
+    Sql.bound(spark,
       """SELECT /*+ BROADCAST(tk) */ dw.doc_id,
         |  CAST(count(*) AS BIGINT) AS n_words,
         |  CAST(sum(length(dw.word)) AS BIGINT) AS n_chars,
@@ -2881,7 +2854,8 @@ object TextQueries extends QueryModule {
         |FROM (SELECT doc_id, explode(filter(split(text, ' '), x -> x != '')) AS word
         |      FROM documents) dw
         |JOIN bpe_tokens tk ON tk.word = dw.word
-        |GROUP BY dw.doc_id""".stripMargin)
+        |GROUP BY dw.doc_id""".stripMargin,
+      "bpe_tokens" -> vocab.selectExpr("word", "CAST(size(split(s, ' ')) AS BIGINT) AS n_bpe"))
   }
 
   /** The statically-unrolled DuckDB training chain (pair counts →

@@ -9,10 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One way to build a session (`LocalTuning.session`) and one
   * registration boundary: the native functions are installed only by
   * `LocalTuning.session`, the `SparkEntry.queries` wrapper and the
-  * `ApiServer` constructor. The source scans keep new code from
-  * growing its own builder or call site; the foreign-session test pins
-  * the driver contract, which accepts sessions the engine did not
-  * build. */
+  * `ApiServer` constructor. Query builders leave the shared session as
+  * they found it: no temp view outside the lake and version
+  * registration, no conf write outside three known places. The source
+  * scans keep new code from growing its own builder, call site, scratch
+  * view or conf write, and name the file and line of each hit; the
+  * foreign-session test pins the driver contract, which accepts
+  * sessions the engine did not build. */
 class SessionBoundarySpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala/graft")
@@ -44,6 +47,25 @@ class SessionBoundarySpec extends AnyFunSuite {
     val calls = occurrences("""GraftFunctions\.install\(""")
     assert(calls.map(_._1).sorted == boundaries.sorted,
       s"one call per boundary ($boundaries), found: $calls")
+  }
+
+  test("temp views are registered in src/main only by Tables and VersionCreation") {
+    val outside = occurrences("""\.(createOrReplaceTempView|createTempView)\(""")
+      .filterNot { case (f, _) => f == "Tables.scala" || f == "etl/VersionCreation.scala" }
+    assert(outside.isEmpty,
+      s"bind a query's intermediates with graft.Sql.bound, not the catalog: $outside")
+  }
+
+  test("session conf is written in src/main only by Tables.load, " +
+    "GraftFunctions.install and the stream drain's own cloned session") {
+    val hits = occurrences("""\.conf\.set\(""")
+    val expected = Seq("Tables.scala", "functions/GraftFunctions.scala",
+      "streaming/StreamingQueries.scala")
+    assert(hits.map(_._1).sorted == expected.sorted,
+      s"one write per place ($expected), found: $hits")
+    val drainWrites = occurrences("""\bdrain\.conf\.set\(""")
+    assert(drainWrites.map(_._1) == Seq("streaming/StreamingQueries.scala"),
+      s"the stream drain writes conf on its cloned session only: $hits")
   }
 
   test("SparkEntry.queries installs the native functions on a session the " +

@@ -22,12 +22,11 @@ class VideoDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = SparkEntry.queries("m22_video_dedup")(spark, sf).collect()
     assert(rows.nonEmpty, "no video pairs at the fixture — vacuous")
     // brute-force ground truth from m15's frame pairs is the wrong
-    // granularity; recount from the per-frame hashes the engine's own
-    // m15 query exposes indirectly — rebuild hash sets via the m2
-    // sampler replay is the oracle's job, so here we recount from the
-    // registered frame-hash view the m22 run just (re)created
-    val sets = spark.sql(
-      s"SELECT DISTINCT doc_id, fh_lo, fh_hi FROM m15_fhash_${Integer.toHexString(sf.hashCode)}")
+    // granularity; recount from the per-frame hash table m22 derives
+    // from — rebuild hash sets via the m2 sampler replay is the
+    // oracle's job, so here we recount from the engine's own table
+    val sets = MultimodalQueries.frameHashes(spark, sf)
+      .selectExpr("doc_id", "fh_lo", "fh_hi").distinct()
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     for (r <- rows) {

@@ -156,4 +156,47 @@ class RasterSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val byValue = run("SELECT count(*) AS c FROM data WHERE landcover_raster__class = 0")
     assert(byName == byValue && byName.head.head.asInstanceOf[Long] > 0)
   }
+
+  // every pixel center of the 4×4-tile test grid lies inside, so each
+  // count below is a count over the whole grid of a RasterModel formula
+  private val wholeGrid = """{"type":"Polygon","coordinates":[[[0.001,40.001],""" +
+    """[3.999,40.001],[3.999,43.999],[0.001,43.999],[0.001,40.001]]]}"""
+  private def landcoverPx(gx: Int, gy: Int): Int = (gx * 31 + gy * 17) % 7
+  private def tcdPx(gx: Int, gy: Int): Int = (gx + gy * 3) % 101
+  private def closedForm(p: (Int, Int) => Boolean): Long =
+    (for (gx <- 0 until g.pxX; gy <- 0 until g.pxY if p(gx, gy)) yield 1L).sum
+  private def countWhere(where: String): Long =
+    ZonalEngine.runSql(spark, SyntheticRasters.catalog, "landcover_raster",
+      s"SELECT count(*) AS c FROM data WHERE $where", wholeGrid).head().getLong(0)
+
+  test("pixel predicate > counts the closed-form pixels") {
+    assert(countWhere("landcover_raster__class > 4") ==
+      closedForm((x, y) => landcoverPx(x, y) > 4))
+  }
+
+  test("pixel predicate < counts the closed-form pixels") {
+    assert(countWhere("umd_tree_cover_density_2000__threshold < 30") ==
+      closedForm((x, y) => tcdPx(x, y) < 30))
+  }
+
+  test("pixel predicate <= counts the closed-form pixels") {
+    assert(countWhere("landcover_raster__class <= 2") ==
+      closedForm((x, y) => landcoverPx(x, y) <= 2))
+  }
+
+  test("pixel predicate OR across two layers counts the closed-form pixels") {
+    assert(countWhere("landcover_raster__class = 1 OR " +
+      "umd_tree_cover_density_2000__threshold >= 90") ==
+      closedForm((x, y) => landcoverPx(x, y) == 1 || tcdPx(x, y) >= 90))
+  }
+
+  test("pixel calc unary minus sums to the closed form") {
+    TileLake.ensureWritten(spark, TileLake.defaultDir)
+    val r = TileLake.scan(spark, TileLake.defaultDir)
+      .selectExpr("explode(arr_calc('-A * 2 + 5', px_landcover)) AS v")
+      .selectExpr("sum(v)", "count_if(v > 0)").head()
+    val px = for (gx <- 0 until g.pxX; gy <- 0 until g.pxY) yield landcoverPx(gx, gy)
+    assert(r.getLong(0) == px.map(5L - 2 * _).sum)
+    assert(r.getLong(1) == px.count(_ <= 2).toLong)
+  }
 }
