@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Preflight gate for commits touching src/: compile, run the session
 # boundary scans, smoke the driver entry, then run the full sf0.01
-# oracle compare. Run from /root/repo:
+# oracle compare. Run from the repository root:
 #   scripts/preflight.sh
 # Exits non-zero on the first red step. See .claude/skills/verify/SKILL.md
 # for the full verification recipe (this script is its commit-gate subset).
