@@ -2,43 +2,46 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Storage hygiene for eager `localCheckpoint` pipelines.
+/** The one way to materialize a query intermediate ([[fresh]]) and
+  * the one way to free it ([[unpersist]]).
   *
-  * A localCheckpoint'ed DataFrame holds its blocks in the block
-  * manager until the SESSION ends — queries that materialize a large
+  * A checkpointed DataFrame holds its blocks in the block manager
+  * until they are freed — queries that materialize a large
   * intermediate (the t13/t27 tokenize output: ~700 MB at the 100×
   * probe) and derive a small result from it would otherwise leak the
   * large blocks across a 174-query bench run, and the writeback /
   * eviction churn surfaces as multi-second stalls in UNRELATED
-  * queries. Call this once every consumer of the checkpoint has
-  * itself been materialized (checkpointed or collected); the freed
-  * DataFrame must not be executed again.
+  * queries.
+  *
+  * Ownership: a query frees an intermediate it has materialized past
+  * (every consumer itself checkpointed, collected or drained into a
+  * sink); otherwise the blocks go when the query's result is dropped
+  * and the ContextCleaner collects the RDD. A checkpoint is never
+  * shared across calls, so one call's release cannot reach another
+  * call's live blocks.
   */
 object CkptUtil {
 
-  /** The live checkpoint of each [[fresh]] key, so the next call under
-    * that key (every consuming query invocation re-materializes —
-    * re-use across invocations would be result caching, which the
-    * bench methodology forbids) releases the PREVIOUS invocation's
-    * blocks instead of leaking them for the session's lifetime (r16
-    * advice: e21's assignment was re-checkpointed by every consumer
-    * of the e21/e27/e28/e29 chain and the orphaned corpus-sized
-    * blocks accumulated across the 216-query run). */
-  private val lastCkpt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
+  /** Eager localCheckpoint of `df`, returned as a plain scan of the
+    * checkpointed RDD (see [[org.apache.spark.sql.graft.SessionBridge.rddScan]]).
+    * `localCheckpoint` cuts the logical plan but INHERITS the
+    * pre-checkpoint plan's Catalyst statistics into the resulting
+    * LogicalRDD, and a fixed-point loop COMPOUNDS them: every round's
+    * join-size estimate is a product over its children, so the
+    * inherited sizeInBytes grows double-exponentially in round count —
+    * around round 10 the BigInt has millions of digits and the DRIVER
+    * spends minutes per plan inside BigInteger.multiplyToomCook3
+    * (measured: m21's hash graph pinned the main thread there; d7's
+    * 2–4-round doc graphs never ran long enough to fall off the
+    * cliff). The returned frame carries no statistics of its own, so
+    * it reads `spark.sql.defaultSizeInBytes`: the same constant on
+    * every round, which nothing can compound. [[unpersist]] on the
+    * returned frame frees its blocks. */
+  def fresh(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.SessionBridge.rddScan(df.localCheckpoint())
 
-  /** Eagerly checkpoint `df` (plan + statistics truncation, see
-    * [[GraphOps.fresh]]), unpersisting the checkpoint a previous call
-    * made under the same `key`. The caller must not execute plans
-    * captured from the previous call afterwards (same contract as
-    * [[unpersist]]). */
-  def fresh(spark: org.apache.spark.sql.SparkSession, key: String,
-            df: DataFrame): DataFrame = {
-    val ck = GraphOps.fresh(spark, df)
-    Option(lastCkpt.put((spark, key), ck)).foreach(unpersist)
-    ck
-  }
-
+  /** Frees the blocks of every checkpointed RDD `df` scans. The freed
+    * DataFrame must not be executed again. */
   def unpersist(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

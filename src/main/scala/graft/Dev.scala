@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * {{{
   *   runMain graft.Dev plan <q1,q2,…> [mode]   # plan per query (default mode: formatted)
   *   runMain graft.Dev time <q> [reps]         # build + count per rep, cold first
-  *   runMain graft.Dev profile <q> [reps]      # codegen compiles per rep; warm rep's stage table and rule times
+  *   runMain graft.Dev profile <q> [reps]      # codegen compiles and cached RDDs per rep; warm rep's stage table and rule times
   *   runMain graft.Dev sql "<sql>"             # ad-hoc SQL over the lake tables
   * }}}
   *
@@ -69,7 +69,9 @@ object Dev {
 
   /** Runs the query `reps` times and prints each rep's build, count
     * and codegen compile count and ms (a warm rep that still compiles
-    * has a constant in its generated source), then, for the last
+    * has a constant in its generated source) and the RDDs then cached
+    * in the block manager, with their MiB (a count that grows across
+    * reps is a checkpoint nothing frees), then, for the last
     * (warm) rep, the top optimizer rule times and every completed
     * stage with its wall time, summed executor run/CPU time, task
     * count and shuffle and input bytes. */
@@ -100,7 +102,9 @@ object Dev {
       val n = df.count()
       val t2 = System.nanoTime()
       val (c1, cms1) = compiles()
-      println(f"[prof] $name rep$r rows=$n build ${(t1 - t0) / 1e9}%.2f s count ${(t2 - t1) / 1e9}%.2f s total ${(t2 - t0) / 1e9}%.2f s codegen ${c1 - c0} compiles ${cms1 - cms0}%.1f ms")
+      val cached = spark.sparkContext.getRDDStorageInfo
+      val cachedMib = cached.map(i => i.memSize + i.diskSize).sum / 1048576.0
+      println(f"[prof] $name rep$r rows=$n build ${(t1 - t0) / 1e9}%.2f s count ${(t2 - t1) / 1e9}%.2f s total ${(t2 - t0) / 1e9}%.2f s codegen ${c1 - c0} compiles ${cms1 - cms0}%.1f ms cached ${cached.length} rdds $cachedMib%.1f MiB")
     }
     println("[rules] top rule times (warm rep):")
     RuleExecutor.dumpTimeSpent().split('\n').drop(2).take(18)

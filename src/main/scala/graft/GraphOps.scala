@@ -26,35 +26,13 @@ import scala.jdk.CollectionConverters._
   * the driver), and the pointer-jump pass (`lbl := lbl(lbl)`)
   * doubles label reach per round, so chain-shaped components
   * converge in O(log diameter) rounds instead of O(diameter).
-  * Iterates are eagerly `localCheckpoint`ed: `persist` alone keeps
-  * the full logical plan, and a loop referencing its own output
-  * twice doubles the plan tree per round — Catalyst analysis time
-  * explodes long before the data does (measured in round 4; what
-  * GraphX does for Pregel loops).
+  * Iterates are eagerly checkpointed ([[CkptUtil.fresh]]): `persist`
+  * alone keeps the full logical plan, and a loop referencing its own
+  * output twice doubles the plan tree per round — Catalyst analysis
+  * time explodes long before the data does (measured in round 4;
+  * what GraphX does for Pregel loops).
   */
 object GraphOps {
-
-  /** Eager localCheckpoint + STATISTICS truncation. `localCheckpoint`
-    * cuts the logical plan but INHERITS the pre-checkpoint plan's
-    * Catalyst statistics into the resulting LogicalRDD, and a
-    * fixed-point loop COMPOUNDS them: every round's join-size
-    * estimate is a product over its children, so the inherited
-    * sizeInBytes grows double-exponentially in round count — around
-    * round 10 the BigInt has millions of digits and the DRIVER spends
-    * minutes per plan inside BigInteger.multiplyToomCook3 (measured:
-    * m21's hash graph pinned the main thread there; d7's 2–4-round
-    * doc graphs never ran long enough to fall off the cliff).
-    * Rebasing the Dataset on the checkpointed RDD resets statistics
-    * to the RDD's own materialized size. The Row round-trip is
-    * label-table-sized (two integral columns), paid once per round.
-    * Public: the graph callers (d7, m21, e27) reuse it to pin their
-    * own expensive upstreams (the LSH pair pipeline) before the graph
-    * kernel references them more than once. */
-  def fresh(spark: org.apache.spark.sql.SparkSession,
-            df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    spark.createDataFrame(ck.rdd, ck.schema)
-  }
 
   /** Min-label connected components, size-gated: the label is
     * ALGORITHM-INDEPENDENT (min node id per component), so the engine
@@ -82,11 +60,11 @@ object GraphOps {
     // iteration and the distributed loop all re-read the edge table,
     // and the upstream is typically the expensive part (d7's LSH
     // pair pipeline) — without this pin the gate alone recomputes it
-    val edges = fresh(spark, edges0.selectExpr(
+    val edges = CkptUtil.fresh(edges0.selectExpr(
       "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"))
     if (edges.limit((driverMaxEdges + 1).toInt).count() <= driverMaxEdges)
       ccDriver(spark, edges, nodes)
-    else ccMinLabel(spark, edges, nodes)
+    else ccMinLabel(edges, nodes)
   }
 
   private def ccDriver(spark: org.apache.spark.sql.SparkSession,
@@ -133,11 +111,10 @@ object GraphOps {
     * @return columns `id` BIGINT, `lbl` BIGINT (min id in the
     *         component) — same types as the driver path
     */
-  def ccMinLabel(spark: org.apache.spark.sql.SparkSession,
-                 edges0: DataFrame, nodes: DataFrame): DataFrame = {
-    val edges = ckptIfNeeded(spark, edges0.selectExpr(
+  def ccMinLabel(edges0: DataFrame, nodes: DataFrame): DataFrame = {
+    val edges = ckptIfNeeded(edges0.selectExpr(
       "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"))
-    var labels = fresh(spark, nodes.selectExpr(
+    var labels = CkptUtil.fresh(nodes.selectExpr(
       "CAST(id AS BIGINT) AS id", "CAST(id AS BIGINT) AS lbl"))
     var changed = 1L
     var rounds = 0
@@ -152,7 +129,7 @@ object GraphOps {
       // node of the same component with a <= id, so composing the
       // pointer doubles the reach
       val parents = stepped.selectExpr("id AS p_id", "lbl AS p_lbl")
-      val next = fresh(spark,
+      val next = CkptUtil.fresh(
         stepped.join(parents, col("lbl") === col("p_id"), "left")
           .selectExpr("id", "coalesce(p_lbl, lbl) AS lbl"))
       changed = next.as("n").join(labels.as("o"), "id")
@@ -166,13 +143,12 @@ object GraphOps {
   /** Checkpoint unless the plan is already a checkpointed scan (the
     * ccMinLabelAuto hand-off): re-materializing a LogicalRDD buys
     * nothing and copies the edge table once more. */
-  private def ckptIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                           df: DataFrame): DataFrame =
+  private def ckptIfNeeded(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
       case _: org.apache.spark.sql.execution.LogicalRDD => df
       case _: org.apache.spark.sql.catalyst.plans.logical.Project
         if isRddScan(df) => df
-      case _ => fresh(spark, df)
+      case _ => CkptUtil.fresh(df)
     }
 
   private def isRddScan(df: DataFrame): Boolean =

@@ -339,7 +339,7 @@ object ScaleProbe {
     val heapCc = usedHeap()
     val prSec = {
       val t0 = System.nanoTime()
-      val em = GraphOps.fresh(spark, sparsePairs
+      val em = CkptUtil.fresh(sparsePairs
         .selectExpr("a AS src", "b AS dst")
         .unionByName(sparsePairs.selectExpr("b AS src", "a AS dst")))
       val n = graft.simsearch.SimQueries.pagerankKernel(spark, em,

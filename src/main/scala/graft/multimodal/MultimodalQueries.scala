@@ -747,7 +747,7 @@ object MultimodalQueries extends QueryModule {
     // checkpoint the labels: the cluster-size rewrite below references
     // the frame↔label join TWICE (rows + per-cluster counts), and an
     // unpinned label plan would re-run the whole CC build per reference
-    val labels = graft.GraphOps.fresh(spark,
+    val labels = graft.CkptUtil.fresh(
       graft.GraphOps.ccMinLabelAuto(spark, edges, nodes))
     // cluster_size via groupBy + join, NOT `count(*) OVER (PARTITION BY
     // cluster_id)`: a window funnels every row of a cluster into ONE

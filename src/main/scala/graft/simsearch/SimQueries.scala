@@ -1390,12 +1390,12 @@ object SimQueries extends QueryModule {
     * e28/e29 before their own pin). One materialization job replaces
     * it; values are bitwise the inline CTE's. */
   private def e21Asg(spark: SparkSession, sfDir: String): DataFrame =
-    // CkptUtil.fresh (r17): each invocation re-materializes (never
-    // cached across invocations — that would be result re-use the
-    // bench forbids) and RELEASES the previous invocation's blocks,
-    // which otherwise leak once per consuming query (e21/e27/e28/e29
-    // × cold/warm/rerun passes)
-    CkptUtil.fresh(spark, "e21_asg", e21Assignment(spark, sfDir))
+    // each invocation re-materializes (never cached across invocations
+    // — that would be result re-use the bench forbids); the consuming
+    // query's result still reads these blocks, so they go when that
+    // result is dropped, and a concurrent consumer (e27 next to e29)
+    // holds its own
+    CkptUtil.fresh(e21Assignment(spark, sfDir))
 
   private def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
     Sql.bound(spark,
@@ -1431,9 +1431,8 @@ object SimQueries extends QueryModule {
       s"""WITH $e21GraphTail
          |SELECT src, dst FROM m WHERE mutual = 1""".stripMargin,
       "asg" -> e21Asg(spark, sfDir))
-    pagerankKernel(spark, graft.GraphOps.fresh(spark, em0),
-      graft.GraphOps.fresh(spark,
-        spark.table("embeddings").select(col("vec_id"))))
+    pagerankKernel(spark, CkptUtil.fresh(em0),
+      CkptUtil.fresh(spark.table("embeddings").select(col("vec_id"))))
   }
 
   /** e27's PageRank kernel over an arbitrary directed edge table
@@ -1447,7 +1446,6 @@ object SimQueries extends QueryModule {
                                     em: DataFrame,
                                     nodes: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    def fresh(df: DataFrame): DataFrame = graft.GraphOps.fresh(spark, df)
     // Size gate, the ccMinLabelAuto pattern: the fixpoint is pure
     // integer arithmetic (sum order irrelevant), so below the edge
     // threshold the driver loop computes the IDENTICAL result without
@@ -1488,7 +1486,7 @@ object SimQueries extends QueryModule {
           "CAST(coalesce(ep_rank, 150000) AS BIGINT) AS rank_micro")
     }
     val deg = em.groupBy("src").count().withColumnRenamed("count", "deg")
-    val edges = fresh(em.join(deg, "src"))
+    val edges = CkptUtil.fresh(em.join(deg, "src"))
     var ranks = nodes.withColumn("rank", lit(1000000L))
     for (_ <- 1 to 10) {
       val contrib = edges.join(ranks, edges("src") === ranks("vec_id"))
@@ -1496,7 +1494,7 @@ object SimQueries extends QueryModule {
         .groupBy("dst").sum("c").withColumnRenamed("sum(c)", "s")
       // `div`, not `/`: Column `/` is DOUBLE division — the whole
       // point is exact BIGINT floor arithmetic on both engines
-      ranks = fresh(nodes.join(contrib, nodes("vec_id") === contrib("dst"), "left")
+      ranks = CkptUtil.fresh(nodes.join(contrib, nodes("vec_id") === contrib("dst"), "left")
         .selectExpr("vec_id",
           "CAST(150000 + (850 * coalesce(s, 0)) div 1000 AS BIGINT) AS rank"))
     }
@@ -1567,7 +1565,7 @@ object SimQueries extends QueryModule {
     val asg = e21Asg(spark, sfDir)
     val n = asg.select("vec_id", "v", "nrm")
     val q = n.where("vec_id < 5").selectExpr("vec_id AS qid", "v AS qv", "nrm AS qn")
-    val edges = CkptUtil.fresh(spark, "e28_e", Sql.bound(spark,
+    val edges = CkptUtil.fresh(Sql.bound(spark,
       s"""WITH $e21GraphTail
          |SELECT src, dst FROM e""".stripMargin, "asg" -> asg))
     // Hops UNROLLED into one statement with LINEAR plan growth (r17,
@@ -1643,7 +1641,7 @@ object SimQueries extends QueryModule {
         |  CAST(count(got.nid) AS DOUBLE) / 5 AS recall_at_5
         |FROM ex LEFT JOIN got ON got.qid = ex.qid AND got.nid = ex.nid
         |GROUP BY ex.qid""".stripMargin,
-      "fr" -> CkptUtil.fresh(spark, "e28_fr", fr), "qs" -> q, "vecs" -> n)
+      "fr" -> CkptUtil.fresh(fr), "qs" -> q, "vecs" -> n)
   }
 
   /** DuckDB replay of [[e28Ctes]] (shared by the e28/e29 oracles and,
@@ -2433,7 +2431,7 @@ object SimQueries extends QueryModule {
     import org.apache.spark.sql.functions._
     Tables.register(spark, sfDir)
     val km = convergedKmeans(spark, sfDir)
-    val sub0 = CkptUtil.fresh(spark, "e14_sub0", spark.sql(
+    val sub0 = CkptUtil.fresh(spark.sql(
       s"""$sparkVecs,
          |${centroidCte(km.centroids)},
          |asg AS (SELECT vec_id, v, ${argmaxAssign(km.centroids)} AS c FROM n),
@@ -2446,7 +2444,7 @@ object SimQueries extends QueryModule {
     // the trained codebook is checkpointed once (32 rows) so the ADC
     // tail's four dtT joins reference a tiny scan instead of four
     // copies of the TrainIter chain (r17 — see e14Body.cbFrom)
-    val cb = CkptUtil.fresh(spark, "e14_cb", Sql.bound(spark,
+    val cb = CkptUtil.fresh(Sql.bound(spark,
       s"""WITH ${e14Body(sparkD = true, cnName = "cn", nQ = nQ,
              sub0From = Some("e14_sub0"), trainOnly = true)}""".stripMargin,
       "e14_sub0" -> sub0))

@@ -39,26 +39,27 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQueries extends QueryModule {
 
+  /** The memo path of a staged stream source: `layout` names the
+    * stage's shape and version, and the sanitized source path and its
+    * [[Tables.sourceTag]] make regenerated testdata get a fresh stage
+    * (the `MediaLake` lake-path scheme). Every stage is built through
+    * [[graft.Sidecar.ensure]] and holds a `_SUCCESS` marker, which
+    * the file source skips like every `_`-prefixed name. */
+  private def stagePath(layout: String, src: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_${layout}_" +
+      s"${src.replaceAll("[^a-zA-Z0-9]", "_")}_${Tables.sourceTag(src)}"
+
   /** The file streaming source requires a DIRECTORY; the driver
     * testdata tables are single parquet files, so a file path is
-    * staged behind a content-tagged symlink dir (idempotent; the tag
-    * carries mtime+length so regenerated testdata gets a fresh
-    * stage). */
+    * staged behind a symlink dir. */
   private def asDir(srcPath: String): String = {
     val f = new java.io.File(srcPath)
     if (f.isDirectory) srcPath
-    else {
-      val tag = Integer.toHexString(
-        (f.getAbsolutePath + "#" + f.lastModified + "#" + f.length).hashCode)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sg_src_$tag")
-      val link = new java.io.File(dir, f.getName)
-      if (!link.exists()) {
-        dir.mkdirs()
-        try java.nio.file.Files.createSymbolicLink(
-          link.toPath, f.toPath.toAbsolutePath)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
-      dir.getPath
+    else graft.Sidecar.ensure(stagePath("sg_src_v2", srcPath)) { tmp =>
+      new java.io.File(tmp).mkdirs()
+      java.nio.file.Files.createSymbolicLink(
+        new java.io.File(tmp, f.getName).toPath, f.toPath.toAbsolutePath)
+      new java.io.File(tmp, "_SUCCESS").createNewFile(): Unit
     }
   }
 
@@ -123,17 +124,6 @@ object StreamingQueries extends QueryModule {
     graft.Sql.bound(spark, "SELECT * FROM drained", "drained" -> drain.table("drained"))
   }
 
-  /** Pin a gate's STATIC side once per drain (r16): Structured
-    * Streaming re-executes the static side of a stream-static join on
-    * EVERY micro-batch — including the no-data batches AvailableNow
-    * runs to finalize watermarks — so an expensive static plan (the
-    * sg3 corpus minhash index, the sg4 span index) was computed 2-3×
-    * per gate. localCheckpoint materializes it once; the per-batch
-    * plan then scans the pinned blocks. (Production twin: the gates'
-    * scaladoc already prescribes a PERSISTED, pre-partitioned index.) */
-  private def pinned(spark: SparkSession, df: DataFrame): DataFrame =
-    graft.GraphOps.fresh(spark, df)
-
   /** Spread a micro-batch across the session's cores before a gate's
     * heavy stateless work (r16, guide §2.5): the staged stream
     * sources are single/few parquet files, so the per-batch map work
@@ -166,12 +156,18 @@ object StreamingQueries extends QueryModule {
 
   private def dedupStream(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val index = pinned(spark, DedupStream.corpusIndex(
+    // The gate's STATIC side is checkpointed once per drain (r16):
+    // Structured Streaming re-executes the static side of a
+    // stream-static join on EVERY micro-batch — including the no-data
+    // batches AvailableNow runs to finalize watermarks — so an
+    // expensive static plan (this corpus minhash index, the sg4 span
+    // index) was computed 2-3× per gate; the per-batch plan now scans
+    // the checkpoint. (Production twin: the gates' scaladoc already
+    // prescribes a PERSISTED, pre-partitioned index.) The drained
+    // result reads only the memory sink, so the blocks are freed once
+    // the drain ends, here and in sg4, sg5 and sg8.
+    val index = graft.CkptUtil.fresh(DedupStream.corpusIndex(
       spark.table("documents").select("doc_id", "text")))
-    // the pinned blocks are released once the drain has materialized
-    // into the memory sink (r16 advice: orphaned static-side
-    // checkpoints otherwise accumulate across the bench's repeated
-    // drains)
     try drained(spark, s"$sfDir/documents.parquet", "sg3_stream_dedup") { docs =>
       // deterministic event time from the id — the fixture parquet
       // carries no timestamp; the gate's watermark state is exercised,
@@ -202,34 +198,7 @@ object StreamingQueries extends QueryModule {
     * it never appears in the output and the oracle needs no carve-out. */
   private def sentinelStage(spark: SparkSession, srcPath: String): String = {
     val f = new java.io.File(srcPath)
-    // The version suffix bumps the stage tag when the STAGE LAYOUT
-    // changes (v2: sentinel content; v3: per-part-file links for
-    // directory sources) — the staged dir is keyed on the SOURCE
-    // fingerprint only, so old /tmp stages would otherwise keep
-    // serving the old layout forever
-    val tag = Integer.toHexString(
-      (f.getAbsolutePath + "#" + f.lastModified + "#" + f.length + "#v3").hashCode)
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sg4_src_$tag")
-    val sent = new java.io.File(dir, "zz_sentinel.parquet")
-    if (!sent.exists()) {
-      dir.mkdirs()
-      // A Spark-written table is a DIRECTORY of part files (the sf1
-      // gate corpora have this shape), and the streaming file source
-      // does not recurse into a symlinked subdirectory — a dir-shaped
-      // source staged as one link would silently stream ONLY the
-      // sentinel, draining the gate empty (caught by the round-15
-      // sf1 gate: sg4 0 rows vs oracle 14740). Link each part file.
-      val parts: Seq[java.io.File] =
-        if (f.isDirectory)
-          f.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-        else Seq(f)
-      parts.zipWithIndex.foreach { case (pf, i) =>
-        val link = new java.io.File(dir, f"a_documents_$i%05d.parquet")
-        try java.nio.file.Files.createSymbolicLink(
-          link.toPath, pf.toPath.toAbsolutePath)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sent").toFile
+    graft.Sidecar.ensure(stagePath("sg4_src_v4", srcPath)) { tmp =>
       // sentinel text derives from its own doc_id: the sentinel's one
       // span must SURVIVE the corpus anti-join to reach the watermark
       // node, and a corpus document whose trailing ragged span
@@ -241,16 +210,28 @@ object StreamingQueries extends QueryModule {
         .selectExpr("9999999999L AS doc_id",
           "'sentinel_9999999999' AS text", "lang",
           "source", "CAST(19 AS BIGINT) AS n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, sent.toPath)
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      // A Spark-written table is a DIRECTORY of part files (the sf1
+      // gate corpora have this shape), and the streaming file source
+      // does not recurse into a symlinked subdirectory — a dir-shaped
+      // source staged as one link would silently stream ONLY the
+      // sentinel, draining the gate empty (caught by the round-15
+      // sf1 gate: sg4 0 rows vs oracle 14740). Link each part file.
+      val parts: Seq[java.io.File] =
+        if (f.isDirectory)
+          f.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+        else Seq(f)
+      parts.zipWithIndex.foreach { case (pf, i) =>
+        java.nio.file.Files.createSymbolicLink(
+          new java.io.File(tmp, f"a_documents_$i%05d.parquet").toPath,
+          pf.toPath.toAbsolutePath)
+      }
     }
-    dir.getPath
   }
 
   private def spanStream(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val index = pinned(spark, SpanDedupStream.spanIndex(
+    val index = graft.CkptUtil.fresh(SpanDedupStream.spanIndex(
       spark.table("documents").where(CorpusPred).select("doc_id", "text")))
     try drained(spark, sentinelStage(spark, s"$sfDir/documents.parquet"),
         "sg4_stream_span") { docs =>
@@ -277,27 +258,14 @@ object StreamingQueries extends QueryModule {
     * reaches the sink and the oracle needs no carve-out. Events read
     * through [[Tables.load]] (ts vintage normalization), staged once
     * per testdata generation (content-tagged dir). */
-  private def alertStage(spark: SparkSession, sfDir: String): String = {
-    val f = new java.io.File(s"$sfDir/events.parquet")
-    val tag = Integer.toHexString(
-      (f.getAbsolutePath + "#" + f.lastModified + "#" + f.length + "#alerts_v1").hashCode)
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sg67_src_$tag")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_alerts").toFile
+  private def alertStage(spark: SparkSession, sfDir: String): String =
+    graft.Sidecar.ensure(stagePath("sg67_src_v2", s"$sfDir/events.parquet")) { tmp =>
       Tables.load(spark, sfDir, "events")
         .selectExpr("user_id AS cell", "ts")
         .unionByName(spark.sql(
           "SELECT 9999999999L AS cell, timestamp_seconds(32503680000L) AS ts"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      try java.nio.file.Files.move(tmp.toPath, dir.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => deleteStaging(tmp)
-        case _: java.nio.file.DirectoryNotEmptyException => deleteStaging(tmp)
-      }
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    dir.getPath
-  }
 
   private def sessionStream(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
@@ -321,38 +289,18 @@ object StreamingQueries extends QueryModule {
     * carries no exact text dups across the 70/30 split, so without
     * the injection the gate's DROP path would never carry a row (the
     * vacuous-gate trap); the oracle replays the same injection. */
-  /** Recursive delete of a lost-race staging dir (move losers below
-    * would otherwise leak a full parquet copy per losing driver). */
-  private def deleteStaging(dir: java.io.File): Unit = {
-    Option(dir.listFiles()).foreach(_.foreach(deleteStaging))
-    dir.delete(): Unit
-  }
-
-  private def bloomStage(spark: SparkSession, sfDir: String): String = {
-    val f = new java.io.File(s"$sfDir/documents.parquet")
-    val tag = Integer.toHexString(
-      (f.getAbsolutePath + "#" + f.lastModified + "#" + f.length + "#sg8_v1").hashCode)
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_sg8_src_$tag")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sg8").toFile
+  private def bloomStage(spark: SparkSession, sfDir: String): String =
+    graft.Sidecar.ensure(stagePath("sg8_src_v2", s"$sfDir/documents.parquet")) { tmp =>
       val docs = Tables.load(spark, sfDir, "documents")
       docs.where(StreamPred).selectExpr("doc_id", "text")
         .unionByName(docs.where(s"$CorpusPred AND doc_id % 35 = 0")
           .selectExpr("doc_id + 1000000 AS doc_id", "text"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      try java.nio.file.Files.move(tmp.toPath, dir.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => deleteStaging(tmp)
-        case _: java.nio.file.DirectoryNotEmptyException => deleteStaging(tmp)
-      }
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    dir.getPath
-  }
 
   private def bloomStream(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
-    val corpus = pinned(spark, spark.table("documents").where(CorpusPred)
+    val corpus = graft.CkptUtil.fresh(spark.table("documents").where(CorpusPred)
       .select("doc_id", "text"))
     val blob = BloomGateStream.corpusBloom(corpus)
     try drained(spark, bloomStage(spark, sfDir), "sg8_stream_bloom") { docs =>
@@ -438,7 +386,7 @@ object StreamingQueries extends QueryModule {
   private def urlStream(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.register(spark, sfDir)
     val urlExpr = graft.textops.TextQueries.UrlFixture.sparkMulti
-    val corpus = pinned(spark, spark.table("documents").where(CorpusPred)
+    val corpus = graft.CkptUtil.fresh(spark.table("documents").where(CorpusPred)
       .selectExpr("doc_id", s"$urlExpr AS url"))
     val blob = UrlDedupStream.corpusBloom(corpus)
     try drained(spark, s"$sfDir/documents.parquet", "sg5_stream_url") { docs =>

@@ -1979,11 +1979,11 @@ object TextQueries extends QueryModule {
     // The verified-pair pipeline is checkpointed ONCE up front: edges,
     // nodes and the kernel's gate/iteration all re-read it, and the
     // LSH → exact-Jaccard upstream is the expensive part.
-    val p = graft.GraphOps.fresh(spark, pairs)
+    val p = graft.CkptUtil.fresh(pairs)
     val edges = p.selectExpr("i AS a", "j AS b")
       .union(p.selectExpr("j AS a", "i AS b"))
     val nodes = edges.selectExpr("a AS id").distinct()
-    val lbl = graft.GraphOps.fresh(spark,
+    val lbl = graft.CkptUtil.fresh(
       graft.GraphOps.ccMinLabelAuto(spark, edges, nodes)
         .selectExpr("id AS doc_id", "lbl AS cluster_id"))
     // cluster_size via groupBy + join, not a window over cluster_id: a

@@ -5,6 +5,8 @@ import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into Spark's package-private session surface
   * (`classic.Dataset.ofRows`, `classic.SparkSession.cloneSession`),
@@ -39,4 +41,17 @@ object SessionBridge {
     * views, sharing its SparkContext; changes to either stay private. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `ck`, a `localCheckpoint`ed frame, as a plain scan of its
+    * checkpointed RDD: new attributes from its schema, unknown
+    * partitioning, no ordering, and no statistics or constraints
+    * carried over from the plan it was cut from. That is the plan a
+    * Row round-trip through `createDataFrame` gives, without the
+    * round-trip, and unpersisting the RDD it scans frees the
+    * checkpoint's blocks. */
+  def rddScan(ck: DataFrame): DataFrame = {
+    val rdd = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    val session = ck.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session, LogicalRDD(DataTypeUtils.toAttributes(ck.schema), rdd)(session))
+  }
 }

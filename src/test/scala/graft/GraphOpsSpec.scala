@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,5 +55,30 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = dst.as[(Long, Long)].collect().toSet
     assert(a == b)
     assert(a.contains((4L, 0L)) && a.contains((12L, 10L)) && a.contains((99L, 99L)))
+  }
+
+  test("CkptUtil.fresh matches the Row round-trip and unpersist frees its blocks") {
+    val src = spark.range(0L, 7000L).selectExpr("id % 7 AS g", "id").groupBy("g").count()
+    val ck = src.localCheckpoint()
+    val ref = spark.createDataFrame(ck.rdd, ck.schema)
+    val f = CkptUtil.fresh(src)
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    def stats(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(stats(f) == session.sessionState.conf.defaultSizeInBytes)
+    assert(stats(f) == stats(ref))
+    def selfJoin(df: DataFrame) = df.as("a").join(df.as("b"), "g")
+      .selectExpr("g", "a.count + b.count AS c")
+    def plan(df: DataFrame) = selfJoin(df).queryExecution.executedPlan.toString
+      .replaceAll("#\\d+", "#n").replaceAll("plan_id=\\d+", "plan_id=n")
+    assert(plan(f) == plan(ref))
+    def rows(df: DataFrame) = selfJoin(df).collect().map(_.toString).sorted.toSeq
+    assert(rows(f) == rows(ref))
+    val rdd = f.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.get
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    assert(cached.contains(rdd))
+    CkptUtil.unpersist(f)
+    assert(!cached.contains(rdd))
   }
 }

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Query builders leave the shared session as they found it: their
   * intermediates are bound into their own SQL ([[Sql.bound]]), never
-  * named in the catalog, and the stream drain sizes its shuffles on a
-  * cloned session, never on the shared conf. So one request's scratch
-  * state cannot reach another request running at the same time. */
+  * named in the catalog, the stream drain sizes its shuffles on a
+  * cloned session, never on the shared conf, and each call owns the
+  * checkpoints it makes. So one request's scratch state cannot reach
+  * another request running at the same time. */
 class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = LocalTuning.session(4)
@@ -94,16 +95,25 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.conf.getAll == conf)
   }
 
-  test("a CkptUtil.fresh call on another thread leaves this thread's checkpoint readable") {
-    Tables.register(spark, sf)
-    val ids = spark.table("embeddings").select("vec_id")
-    // this thread's checkpoint, then the same key checkpointed again on
-    // another thread (two consumers of one intermediate at once, e27
-    // next to e29): the first plan must still read its blocks after
-    val mine = CkptUtil.fresh(spark, "hygiene_ids", ids)
-    val n = mine.count()
-    val (other, _) = together(CkptUtil.fresh(spark, "hygiene_ids", ids).count(), ())
-    assert(other == n)
-    assert(mine.count() == n)
+  test("e29 next to e27: serial rows, and still readable after e27 ends") {
+    // both build on one e21 assignment shape, each call on its own
+    // checkpoint: e29's result reads its checkpoint at execution, so
+    // a release of another call's blocks would show here
+    val (e27, e29) = ("e27_pagerank", "e29_graph_recall")
+    val serial = Seq(e27, e29).map(n => n -> run(n)).toMap
+    val ((held, first), other) = together({
+      val df = SparkEntry.queries(e29)(spark, sf)
+      (df, rows(df))
+    }, run(e27))
+    assert(first == serial(e29), s"$e29 next to $e27")
+    assert(other == serial(e27), s"$e27 next to $e29")
+    assert(rows(held) == serial(e29), s"$e29 read again after $e27 ended")
+  }
+
+  test("sg8 frees the corpus checkpoint it drained past") {
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cached
+    assert(run("sg8_stream_bloom").nonEmpty)
+    assert(cached -- before == Set.empty, "RDDs still cached after the call")
   }
 }
