@@ -13,8 +13,8 @@ sbt -batch compile
 
 echo "[preflight] session boundary scans"
 # source scans (one session builder, one function registration
-# boundary, no scratch temp views, no stray conf writes) plus the
-# foreign-session entry check
+# boundary, no scratch temp views, no stray conf writes, one API error
+# renderer) plus the foreign-session entry check
 sbt -batch 'testOnly graft.SessionBoundarySpec'
 
 echo "[preflight] graft.Smoke (entry rows on sf0.001)"

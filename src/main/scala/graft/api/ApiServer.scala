@@ -11,24 +11,6 @@ import graft.sqlgate.{Scrutinizer, SqlGateException}
 import graft.{Tables, catalog => cat}
 import org.apache.spark.sql.SparkSession
 
-/** The HTTP face of the engine (SURVEY §3.1, §7.1 #5): dataset-version
-  * query endpoints with JSEND envelopes, the deprecated-path 308
-  * redirect, field introspection, and the content-addressed geostore.
-  * Zero dependencies — JDK HttpServer; the engine behind it is the
-  * same `Scrutinizer` → Catalyst path the tests drive.
-  *
-  * Routes (reference: `app/routes/datasets/queries.py`,
-  * `app/routes/datasets/versions.py:377-403`, `app/crud/geostore.py`):
-  *   - GET /dataset/{d}/{v}/query            → 308 to /query/json
-  *   - GET /dataset/{d}/{v}/query/json?sql=… → JSEND rows
-  *   - GET /dataset/{d}/{v}/query/csv?sql=…  → CSV (QUOTE_NONNUMERIC)
-  *   - GET /dataset/{d}/{v}/fields           → field metadata
-  *   - POST /geostore  (GeoJSON body)        → {gfw_geostore_id, …}
-  *   - GET /geostore/{id}                    → stored GeoJSON
-  * Errors: SQL-gate rejections → 400 JSEND failed (reference error
-  * strings); unknown dataset/version → 404; 2-hour Cache-Control on
-  * query responses (`queries.py:155-158`).
-  */
 /** In-memory API-key registry (reference `app/crud/api_keys` +
   * `authentication/api_keys.py`): a key is valid when it exists, is
   * unexpired, and — if it carries domain restrictions — the request's
@@ -86,12 +68,26 @@ object FeatureLookup {
   def bufferMeters(zoom: Int): Option[Double] = precision.get(zoom).map(_ * 50)
 }
 
-/** Interactive query exceeded `sqlRequestTimeoutSec`; its Spark job
-  * group has been cancelled. `raster` selects which of the reference's
-  * two timeout envelopes applies (see `withDeadline`). */
-private[api] final class QueryTimeoutException(val raster: Boolean)
-  extends RuntimeException("query deadline exceeded")
-
+/** The HTTP face of the engine (SURVEY §3.1, §7.1 #5): dataset-version
+  * query endpoints with JSEND envelopes, the deprecated-path 308
+  * redirect, field introspection, and the content-addressed geostore.
+  * Zero dependencies — JDK HttpServer; the engine behind it is the
+  * same `Scrutinizer` → Catalyst path the tests drive.
+  *
+  * Routes (reference: `app/routes/datasets/queries.py`,
+  * `app/routes/datasets/versions.py:377-403`, `app/crud/geostore.py`):
+  *   - GET /dataset/{d}/{v}/query            → 308 to /query/json
+  *   - GET /dataset/{d}/{v}/query/json?sql=… → JSEND rows
+  *   - GET /dataset/{d}/{v}/query/csv?sql=…  → CSV (QUOTE_NONNUMERIC)
+  *   - GET /dataset/{d}/{v}/fields           → field metadata
+  *   - POST /geostore  (GeoJSON body)        → {gfw_geostore_id, …}
+  *   - GET /geostore/{id}                    → stored GeoJSON
+  * Errors: a handler refuses a request by throwing a `Reject`, and
+  * `handle` renders it and every other failure as one JSEND error
+  * envelope (SQL-gate rejections → 400 with the reference's error
+  * strings; unknown dataset/version → 404). 2-hour Cache-Control on
+  * query responses (`queries.py:155-158`).
+  */
 final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                       nonDownloadable: Set[String] = Set.empty,
                       apiKeys: Option[ApiKeys] = None,
@@ -101,6 +97,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                       allowedSourceRoots: Seq[String] = Nil,
                       sqlRequestTimeoutSec: Int =
                         sys.env.getOrElse("GRAFT_SQL_REQUEST_TIMEOUT_SEC", "58").toInt) {
+  import ApiServer.Reject
 
   // the native functions and the optimizer-rule exclusion go in once,
   // here: requests only read the shared registry and conf
@@ -286,6 +283,13 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * the Spark job actually died (`statusTracker.getJobIdsForGroup`). */
   @volatile private[api] var lastCancelledGroup: Option[String] = None
 
+  /** The reference's two timeout envelopes: the raster analysis
+    * timeout → 500 (`queries.py:596-599`), the tabular command timeout
+    * → the global 524 handler (`main.py:53-64`). */
+  private def timeout(raster: Boolean): Reject =
+    if (raster) Reject(500, "Query took too long to process.")
+    else Reject(524, "A timeout occurred while processing the request. Request canceled.")
+
   private def withDeadline[T](tag: String, raster: Boolean)(body: => T): T = {
     val sc = spark.sparkContext
     val groupId = s"graft-api-$tag-${java.util.UUID.randomUUID()}"
@@ -296,7 +300,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     val slot: Integer =
       querySlots.poll(sqlRequestTimeoutSec.toLong,
         java.util.concurrent.TimeUnit.SECONDS)
-    if (slot == null) throw new QueryTimeoutException(raster)
+    if (slot == null) throw timeout(raster)
     // release-once ownership: normally the query task's finally frees
     // the slot when the Spark work actually ENDS (a cancelled query
     // still holds its slot until its stages die — a zombie must count
@@ -330,7 +334,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         sc.cancelJobGroup(groupId)
         if (fut.cancel(true) && !taskEntered.get()) releaseOnce()
         lastCancelledGroup = Some(groupId)
-        throw new QueryTimeoutException(raster)
+        throw timeout(raster)
       case e: java.util.concurrent.ExecutionException =>
         throw e.getCause
     }
@@ -382,30 +386,25 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   /** The reference's two-layer gate on query/download routes: a valid
     * API key (`get_api_key` → 403 "No valid API Key found.") and, for
     * protected datasets, an admin bearer token
-    * (`is_authorized_for_query` → 401). Returns the rejection, if
-    * any; key auth only applies when the server was built with a key
-    * registry. */
-  private def authGate(ex: HttpExchange, dataset: String): Option[(Int, String)] = {
-    val keyFail = apiKeys.flatMap { reg =>
+    * (`is_authorized_for_query` → 401). Key auth only applies when
+    * the server was built with a key registry. */
+  private def authGate(ex: HttpExchange, dataset: String): Unit = {
+    apiKeys.foreach { reg =>
       val hdr = Option(ex.getRequestHeaders.getFirst("x-api-key"))
       val key = hdr.orElse(queryParams(ex).get("x-api-key"))
       val origin = Option(ex.getRequestHeaders.getFirst("Origin"))
       val referrer = Option(ex.getRequestHeaders.getFirst("Referer"))
-      if (key.exists(k => reg.isValid(k, origin, referrer))) None
-      else Some((403, Sinks.jsendError("No valid API Key found.")))
+      if (!key.exists(k => reg.isValid(k, origin, referrer)))
+        throw Reject(403, "No valid API Key found.")
     }
-    keyFail.orElse {
-      if (protectedDatasets.contains(dataset)) {
-        val token = Option(ex.getRequestHeaders.getFirst("Authorization"))
-          .filter(_.startsWith("Bearer ")).map(_.stripPrefix("Bearer "))
-        token match {
-          case Some(t) if adminTokens.contains(t) => None
-          case _ => Some((401, Sinks.jsendError(
-            "Unauthorized query on a restricted dataset or version")))
-        }
-      } else None
-    }
+    if (protectedDatasets.contains(dataset) && !hasAdminToken(ex))
+      throw Reject(401, "Unauthorized query on a restricted dataset or version")
   }
+
+  private def hasAdminToken(ex: HttpExchange): Boolean =
+    Option(ex.getRequestHeaders.getFirst("Authorization"))
+      .filter(_.startsWith("Bearer ")).map(_.stripPrefix("Bearer "))
+      .exists(adminTokens.contains)
 
   private val versionsRoot = s"${sys.props("java.io.tmpdir")}/graft_versions/"
 
@@ -439,14 +438,8 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * here that is an admin bearer token. A server constructed without
     * admin tokens has no write identity at all, so writes are refused
     * rather than open. */
-  private def writeGate(ex: HttpExchange): Option[(Int, String)] = {
-    val token = Option(ex.getRequestHeaders.getFirst("Authorization"))
-      .filter(_.startsWith("Bearer ")).map(_.stripPrefix("Bearer "))
-    token match {
-      case Some(t) if adminTokens.contains(t) => None
-      case _ => Some((401, Sinks.jsendError("Unauthorized")))
-    }
-  }
+  private def writeGate(ex: HttpExchange): Unit =
+    if (!hasAdminToken(ex)) throw Reject(401, "Unauthorized")
 
   private def handle(ex: HttpExchange): Unit =
     try {
@@ -456,10 +449,8 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
           val q = Option(ex.getRequestURI.getRawQuery).map("?" + _).getOrElse("")
           ex.getResponseHeaders.add("Location", s"/dataset/$d/$v/query/json$q")
           respond(ex, 308, "application/json", "")
-        case ("GET", QueryJson(d, v)) => query(ex, d, v, json = true)
-        case ("GET", QueryCsv(d, v)) => query(ex, d, v, json = false)
-        case ("POST", QueryJson(d, v)) => queryPost(ex, d, v, json = true)
-        case ("POST", QueryCsv(d, v)) => queryPost(ex, d, v, json = false)
+        case ("GET" | "POST", QueryJson(d, v)) => query(ex, d, v, json = true)
+        case ("GET" | "POST", QueryCsv(d, v)) => query(ex, d, v, json = false)
         case ("GET", Download(d, v, fmt)) => download(ex, d, v, fmt)
         case ("GET", DownloadFile(d, v, fmt)) => downloadFile(ex, d, v, fmt)
         case ("GET", DownloadTiff(d, v)) => downloadGeotiff(ex, d, v)
@@ -517,28 +508,20 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         case ("POST", "/analysis/zonal/batch") => zonalBatch(ex)
         case ("POST", QueryBatch(d, v)) => queryBatch(ex, d, v)
         case ("GET", JobDownload(id)) =>
-          jobRegistry.result(id) match {
-            case Some(payload) =>
-              ex.getResponseHeaders.add("Content-Disposition",
-                s"""attachment; filename="$id.json"""")
-              respond(ex, 200, "application/json", payload)
-            case None => respond(ex, 404, "application/json",
-              Sinks.jsendError(s"No results for job $id"))
-          }
+          val payload = jobRegistry.result(id).getOrElse(
+            throw Reject(404, s"No results for job $id"))
+          ex.getResponseHeaders.add("Content-Disposition",
+            s"""attachment; filename="$id.json"""")
+          respond(ex, 200, "application/json", payload)
         case ("GET", JobGet(id)) =>
-          jobRegistry.get(id) match {
-            case None => respond(ex, 404, "application/json",
-              Sinks.jsendError(s"Job $id not found"))
-            case Some(j) =>
-              val payload = j.payload.getOrElse("null")
-              val msg = j.message.map(m => s""","message":${graft.geo.Json.write(m)}""").getOrElse("")
-              val link =
-                if (j.status.name == "success")
-                  s""","download_link":"/job/${j.id}/download""""
-                else ""
-              respond(ex, 200, "application/json",
-                s"""{"data":{"job_id":"${j.id}","status":"${j.status.name}","results":$payload$msg$link},"status":"success"}""")
-          }
+          val j = jobRegistry.get(id).getOrElse(throw Reject(404, s"Job $id not found"))
+          val payload = j.payload.getOrElse("null")
+          val msg = j.message.map(m => s""","message":${graft.geo.Json.write(m)}""").getOrElse("")
+          val link =
+            if (j.status.name == "success") s""","download_link":"/job/${j.id}/download""""
+            else ""
+          respond(ex, 200, "application/json",
+            s"""{"data":{"job_id":"${j.id}","status":"${j.status.name}","results":$payload$msg$link},"status":"success"}""")
         case ("POST", "/geostore") => geostoreCreate(ex)
         case ("GET", "/geostore/admin/list") => adminList(ex)
         case ("GET", AdminBoundary2(c, r, s)) =>
@@ -549,50 +532,37 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
           serveTile(ex, d, v, impl, z, x, y, ext)
         case ("GET", TileRootJson(d, v, impl)) => serveTileRoot(ex, d, v, impl)
         case ("GET", GeostoreGet(id)) =>
-          geostore.get(id) match {
-            case Some(gj) => respond(ex, 200, "application/json",
-              s"""{"data":{"gfw_geostore_id":"$id","geojson":$gj},"status":"success"}""")
-            case None => respond(ex, 404, "application/json",
-              Sinks.jsendError(s"Geostore $id not found"))
-          }
-        case _ =>
-          respond(ex, 404, "application/json", Sinks.jsendError("Not found"))
+          val gj = geostore.getOrElse(id, throw Reject(404, s"Geostore $id not found"))
+          respond(ex, 200, "application/json",
+            s"""{"data":{"gfw_geostore_id":"$id","geojson":$gj},"status":"success"}""")
+        case _ => throw Reject(404, "Not found")
       }
     } catch {
-      case e: QueryTimeoutException =>
-        // raster analysis timeout → 500 (`queries.py:596-599`); tabular
-        // command timeout → the global 524 handler (`main.py:53-64`);
-        // both are ≥500 so status "error" (`errors.py:43-46`)
-        if (e.raster)
-          respond(ex, 500, "application/json",
-            Sinks.jsendError("Query took too long to process.", "error"))
-        else
-          respond(ex, 524, "application/json", Sinks.jsendError(
-            "A timeout occurred while processing the request. Request canceled.",
-            "error"))
-      case e: SqlGateException =>
-        respond(ex, e.statusCode, "application/json", Sinks.jsendError(e.detail))
-      case e: graft.raster.ZonalEngine.ZonalException =>
-        respond(ex, 400, "application/json", Sinks.jsendError(e.detail))
-      case e: graft.raster.RasterSqlException =>
-        // raster-analysis validation failure → 422 (queries.py:617-621)
-        respond(ex, 422, "application/json", Sinks.jsendError(e.detail))
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getErrorClass != null &&
-            (e.getErrorClass.startsWith("UNRESOLVED_COLUMN") ||
-              e.getErrorClass.startsWith("UNRESOLVED_ROUTINE")) =>
-        // a user-SQL reference that doesn't resolve is the client's
-        // error — the reference surfaces PG's message as 400
-        // (`queries.py` Bad request passthrough)
-        respond(ex, 400, "application/json",
-          Sinks.jsendError("Bad request. " + e.getSimpleMessage))
       case e: Throwable =>
-        // ≥500 carries status "error" in the reference's JSEND mapping
-        // (`errors.py:43-46`)
-        respond(ex, 500, "application/json",
-          Sinks.jsendError(
-            Option(e.getMessage).getOrElse("Internal server error"), "error"))
+        // the one error renderer: JSEND status "failed" below 500 and
+        // "error" from 500 up (`errors.py:43-46`)
+        val r = rejection(e)
+        respond(ex, r.code, "application/json",
+          Sinks.jsendError(r.message, if (r.code < 500) "failed" else "error"))
     } finally ex.close()
+
+  /** The status and message a failed request answers with. */
+  private def rejection(e: Throwable): Reject = e match {
+    case r: Reject => r
+    case e: SqlGateException => Reject(e.statusCode, e.detail)
+    case e: graft.raster.ZonalEngine.ZonalException => Reject(400, e.detail)
+    // raster-analysis validation failure → 422 (queries.py:617-621)
+    case e: graft.raster.RasterSqlException => Reject(422, e.detail)
+    case e: org.apache.spark.sql.AnalysisException
+        if e.getErrorClass != null &&
+          (e.getErrorClass.startsWith("UNRESOLVED_COLUMN") ||
+            e.getErrorClass.startsWith("UNRESOLVED_ROUTINE")) =>
+      // a user-SQL reference that doesn't resolve is the client's
+      // error — the reference surfaces PG's message as 400
+      // (`queries.py` Bad request passthrough)
+      Reject(400, "Bad request. " + e.getSimpleMessage)
+    case e => Reject(500, Option(e.getMessage).getOrElse("Internal server error"))
+  }
 
   // ------------------------------------------------------------ handlers
 
@@ -610,63 +580,83 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   private val MaxInteractiveRows =
     sys.env.getOrElse("GRAFT_MAX_QUERY_ROWS", "100000").toInt
 
+  /** `GET /query/{json,csv}?sql=…`, and the POST form whose body
+    * `{"sql": "...", "geometry": {...GeoJSON...}}` carries an inline
+    * AOI (`queries.py`): the frame runs under the interactive deadline
+    * and its rows are buffered into JSEND or CSV (QUOTE_NONNUMERIC). */
   private def query(ex: HttpExchange, dataset: String, version: String,
                     json: Boolean): Unit = {
-    authGate(ex, dataset).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
+    authGate(ex, dataset)
     val params = queryParams(ex)
-    val sql = params.getOrElse("sql",
-      return respond(ex, 422, "application/json", Sinks.jsendError("Missing sql parameter")))
-    catalog.queryEngine(dataset, version) match {
-      case Left(msg) if msg.contains("not found") =>
-        respond(ex, 404, "application/json", Sinks.jsendError(msg))
-      case Left(msg) =>
-        respond(ex, 501, "application/json", Sinks.jsendError(msg))
-      case Right(cat.RasterEngine) =>
-        // raster path: geostore mandatory (queries.py:487-503 → 422);
-        // the user's SQL runs for real — select list, WHERE over layer
-        // pseudo-columns, GROUP BY — via the fused zonal engine
-        // (`_query_raster`, queries.py:548-575)
-        params.get("geostore_id").flatMap(resolveGeostore(_,
-          params.getOrElse("geostore_origin", "gfw"))) match {
-          case None => respond(ex, 422, "application/json",
-            Sinks.jsendError("Raster tile set queries require a geostore"))
-          case Some(gj) =>
-            val payload = withDeadline("query", raster = true) {
-              val df = graft.raster.ZonalEngine.runSql(
-                spark, catalog, dataset, sql, gj).limit(MaxInteractiveRows)
-              if (json) Sinks.toJsend(df) else Sinks.toCsv(df)
-            }
-            ex.getResponseHeaders.add("Cache-Control", cacheControl(dataset))
-            respond(ex, 200, if (json) "application/json" else "text/csv", payload)
-        }
-      case Right(_) =>
-        val gidOpt = params.get("geostore_id")
-        val geom = gidOpt.flatMap(resolveGeostore(_,
-          params.getOrElse("geostore_origin", "gfw")))
-        // an UNRESOLVABLE geostore is 404 (the reference's
-        // RecordNotFoundError) — silently dropping the AOI would
-        // return the full unfiltered table
-        if (gidOpt.isDefined && geom.isEmpty)
-          return respond(ex, 404, "application/json", Sinks.jsendError(
-            s"Area with gfw_geostore_id ${gidOpt.get} does not exist"))
-        // lake table view name == dataset name (single-version lake)
-        val rewritten = Scrutinizer.scrutinizeTo(tableFor(dataset, version), geom, sql)
-        graft.sqlgate.TabularEngine.checkFunctionsExist(spark, rewritten)
-        val payload = withDeadline("query", raster = false) {
-          val df = spark.sql(rewritten).limit(MaxInteractiveRows)
-          if (json) Sinks.toJsend(df) else Sinks.toCsv(df)
-        }
-        ex.getResponseHeaders.add("Cache-Control", cacheControl(dataset))
-        respond(ex, 200, if (json) "application/json" else "text/csv", payload)
+    val post = ex.getRequestMethod == "POST"
+    val body = if (post) Some(parseBody(bodyOf(ex))) else None
+    val sql = body match {
+      case Some(obj) => obj.get("sql") match {
+        case Some(s: String) => s
+        case _ => throw Reject(422, "Missing sql in request body")
+      }
+      case None => params.getOrElse("sql", throw Reject(422, "Missing sql parameter"))
+    }
+    val (raster, frame) = queryFrame(dataset, version, sql, params, body)
+    val payload = withDeadline("query", raster) {
+      val df = frame().limit(MaxInteractiveRows)
+      if (json) Sinks.toJsend(df) else Sinks.toCsv(df)
+    }
+    if (!post) ex.getResponseHeaders.add("Cache-Control", cacheControl(dataset))
+    respond(ex, 200, if (json) "application/json" else "text/csv", payload)
+  }
+
+  /** The one path from a dataset version, user SQL and an AOI to the
+    * frame that answers them, shared by the query and download routes.
+    * The AOI is a POST `body`'s inline `geometry`, else the
+    * `geostore_id` parameter resolved through `geostore_origin`. The
+    * checks run here; the frame is built when the returned function is
+    * called, under the route's deadline or download gate, and the flag
+    * says whether the raster engine answers (it picks the timeout
+    * envelope). Downloads take the tabular engine only. */
+  private def queryFrame(dataset: String, version: String, sql: String,
+                         params: Map[String, String],
+                         body: Option[Map[String, Any]] = None,
+                         download: Boolean = false)
+      : (Boolean, () => org.apache.spark.sql.DataFrame) = {
+    val raster = catalog.queryEngine(dataset, version) match {
+      case Left(msg) => throw Reject(if (msg.contains("not found")) 404 else 501, msg)
+      // raster downloads redirect to asset files in the reference; out
+      // of scope for the synthetic lake
+      case Right(cat.RasterEngine) if download =>
+        throw Reject(501, "This endpoint is not implemented for the given dataset")
+      case Right(engine) => engine == cat.RasterEngine
+    }
+    val gid = if (body.isEmpty) params.get("geostore_id") else None
+    val aoi = body match {
+      case Some(obj) => obj.get("geometry").map(graft.geo.Json.write)
+      case None => gid.flatMap(resolveGeostore(_, params.getOrElse("geostore_origin", "gfw")))
+    }
+    if (raster) {
+      // the AOI is mandatory (queries.py:487-503 → 422); the user's SQL
+      // runs for real — select list, WHERE over layer pseudo-columns,
+      // GROUP BY — via the fused zonal engine (`_query_raster`,
+      // queries.py:548-575)
+      val gj = aoi.getOrElse(throw Reject(422, "Raster tile set queries require a " +
+        (if (body.isDefined) "geometry" else "geostore")))
+      val overrides = body.map(versionOverrides).getOrElse(Map.empty[String, String])
+      (true, () => graft.raster.ZonalEngine.runSql(spark, catalog, dataset, sql, gj, overrides))
+    } else {
+      // an UNRESOLVABLE geostore is 404 (the reference's
+      // RecordNotFoundError) — silently dropping the AOI would
+      // return the full unfiltered table
+      if (gid.isDefined && aoi.isEmpty)
+        throw Reject(404, s"Area with gfw_geostore_id ${gid.get} does not exist")
+      // lake table view name == dataset name (single-version lake)
+      val rewritten = Scrutinizer.scrutinizeTo(tableFor(dataset, version), aoi, sql)
+      graft.sqlgate.TabularEngine.checkFunctionsExist(spark, rewritten)
+      (false, () => spark.sql(rewritten))
     }
   }
 
   private def fields(ex: HttpExchange, dataset: String, version: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if v.defaultAsset.exists(_.assetType == cat.AssetType.RasterTileSet) =>
+    versionOf(dataset, version).defaultAsset match {
+      case Some(a) if a.assetType == cat.AssetType.RasterTileSet =>
         // raster fields = reserved pseudo-columns + the queryable
         // layers of the data environment (versions.py:516-522)
         val reserved = Seq("area__ha", "latitude", "longitude").map(n =>
@@ -677,55 +667,13 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
           s"""{"name":"$n","data_type":"integer","is_reserved":false}""")
         respond(ex, 200, "application/json",
           s"""{"data":[${(reserved ++ layers).mkString(",")}],"status":"success"}""")
-      case Some(_) =>
+      case _ =>
         val schema = spark.table(tableFor(dataset, version)).schema
         val items = schema.fields.map { f =>
           s"""{"name":"${f.name}","data_type":"${f.dataType.catalogString}","is_feature_info":true}"""
         }.mkString(",")
         respond(ex, 200, "application/json", s"""{"data":[$items],"status":"success"}""")
     }
-
-  /** POST body form: `{"sql": "...", "geometry": {...GeoJSON...}}`
-    * with an inline AOI (`queries.py` POST routes; `json = false` is
-    * the POST `/query/csv` variant). */
-  private def queryPost(ex: HttpExchange, dataset: String, version: String,
-                        json: Boolean): Unit = {
-    authGate(ex, dataset).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val obj = parseBody422(ex, body).getOrElse(return)
-    val sql = obj.get("sql") match {
-      case Some(s: String) => s
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Missing sql in request body"))
-    }
-    val geom = obj.get("geometry").map(graft.geo.Json.write)
-    def send(raster: Boolean)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val payload = withDeadline("query", raster) {
-        val limited = df.limit(MaxInteractiveRows)
-        if (json) Sinks.toJsend(limited) else Sinks.toCsv(limited)
-      }
-      respond(ex, 200, if (json) "application/json" else "text/csv", payload)
-    }
-    catalog.queryEngine(dataset, version) match {
-      case Left(msg) if msg.contains("not found") =>
-        respond(ex, 404, "application/json", Sinks.jsendError(msg))
-      case Left(msg) => respond(ex, 501, "application/json", Sinks.jsendError(msg))
-      case Right(cat.RasterEngine) =>
-        // raster POST needs the inline geometry (queries.py:487-503)
-        geom match {
-          case None => respond(ex, 422, "application/json",
-            Sinks.jsendError("Raster tile set queries require a geometry"))
-          case Some(gj) =>
-            send(raster = true)(graft.raster.ZonalEngine.runSql(
-              spark, catalog, dataset, sql, gj, versionOverrides(obj)))
-        }
-      case Right(_) =>
-        val rewritten = Scrutinizer.scrutinizeTo(tableFor(dataset, version), geom, sql)
-        graft.sqlgate.TabularEngine.checkFunctionsExist(spark, rewritten)
-        send(raster = false)(spark.sql(rewritten))
-    }
-  }
 
   /** Download variant of the query endpoints: attachment disposition,
     * gated by the version's downloadability flag
@@ -734,58 +682,41 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * `SELECT *` of a large version never buffers on the driver
     * (`downloads.py:35-231`). */
   private def download(ex: HttpExchange, dataset: String, version: String,
-                       fmt: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if !v.isDownloadable =>
-        respond(ex, 403, "application/json",
-          Sinks.jsendError("This dataset is not available for download"))
-      case Some(_) =>
-        authGate(ex, dataset).foreach { case (code, body) =>
-          return respond(ex, code, "application/json", body) }
-        val params = queryParams(ex)
-        val sql = params.getOrElse("sql", return respond(ex, 422,
-          "application/json", Sinks.jsendError("Missing sql parameter")))
-        catalog.queryEngine(dataset, version) match {
-          case Right(cat.TableEngine) =>
-            val gidOpt = params.get("geostore_id")
-            val geom = gidOpt.flatMap(resolveGeostore(_,
-              params.getOrElse("geostore_origin", "gfw")))
-            if (gidOpt.isDefined && geom.isEmpty)
-              return respond(ex, 404, "application/json", Sinks.jsendError(
-                s"Area with gfw_geostore_id ${gidOpt.get} does not exist"))
-            val rewritten = Scrutinizer.scrutinizeTo(tableFor(dataset, version), geom, sql)
-            graft.sqlgate.TabularEngine.checkFunctionsExist(spark, rewritten)
-            val df = spark.sql(rewritten)
-            // bounded stream concurrency: wait for the download gate
-            // up to the deadline class, then answer the timeout
-            // envelope (the reference holds a pool connection for the
-            // whole cursor; an exhausted pool surfaces the same way)
-            if (!downloadGate.tryAcquire(sqlRequestTimeoutSec.toLong,
-                java.util.concurrent.TimeUnit.SECONDS))
-              return respond(ex, 524, "application/json", Sinks.jsendError(
-                "A timeout occurred while processing the request. Request canceled.",
-                "error"))
-            try {
-              ex.getResponseHeaders.add("Content-Disposition",
-                s"""attachment; filename="$dataset.$fmt"""")
-              val ct = if (fmt == "json") "application/json" else "text/csv"
-              ex.getResponseHeaders.add("Content-Type", ct)
-              ex.sendResponseHeaders(200, 0) // chunked
-              val out = ex.getResponseBody
-              try {
-                if (fmt == "json") Sinks.streamJsend(df, out)
-                else Sinks.streamCsv(df, out)
-              } finally out.close()
-            } finally downloadGate.release()
-          case _ =>
-            // raster downloads redirect to asset files in the
-            // reference; out of scope for the synthetic lake
-            respond(ex, 501, "application/json", Sinks.jsendError(
-              "This endpoint is not implemented for the given dataset"))
-        }
-    }
+                       fmt: String): Unit = {
+    downloadable(ex, dataset, version)
+    val params = queryParams(ex)
+    val sql = params.getOrElse("sql", throw Reject(422, "Missing sql parameter"))
+    val df = queryFrame(dataset, version, sql, params, download = true)._2()
+    // bounded stream concurrency: wait for the download gate up to the
+    // deadline class, then answer the timeout envelope (the reference
+    // holds a pool connection for the whole cursor; an exhausted pool
+    // surfaces the same way)
+    if (!downloadGate.tryAcquire(sqlRequestTimeoutSec.toLong,
+        java.util.concurrent.TimeUnit.SECONDS))
+      throw timeout(raster = false)
+    try {
+      ex.getResponseHeaders.add("Content-Disposition",
+        s"""attachment; filename="$dataset.$fmt"""")
+      val ct = if (fmt == "json") "application/json" else "text/csv"
+      ex.getResponseHeaders.add("Content-Type", ct)
+      ex.sendResponseHeaders(200, 0) // chunked
+      val out = ex.getResponseBody
+      try {
+        if (fmt == "json") Sinks.streamJsend(df, out)
+        else Sinks.streamCsv(df, out)
+      } finally out.close()
+    } finally downloadGate.release()
+  }
+
+  /** The version behind a download route, after the checks every
+    * download shares: 404 without it, 403 when it is not downloadable,
+    * then the auth gate. */
+  private def downloadable(ex: HttpExchange, dataset: String, version: String): cat.Version = {
+    val v = versionOf(dataset, version)
+    if (!v.isDownloadable) throw Reject(403, "This dataset is not available for download")
+    authGate(ex, dataset)
+    v
+  }
 
   /** `GET /download_by_aoi/{csv,json}` (`downloads.py:202-263`): the
     * download variant whose AOI is MANDATORY — same streaming sink,
@@ -793,11 +724,9 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   private def downloadByAoi(ex: HttpExchange, dataset: String, version: String,
                             fmt: String): Unit = {
     val params = queryParams(ex)
-    val gid = params.getOrElse("geostore_id", return respond(ex, 422,
-      "application/json", Sinks.jsendError("geostore_id is required")))
+    val gid = params.getOrElse("geostore_id", throw Reject(422, "geostore_id is required"))
     if (resolveGeostore(gid, params.getOrElse("geostore_origin", "gfw")).isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Geostore $gid not found"))
+      throw Reject(404, s"Geostore $gid not found")
     download(ex, dataset, version, fmt)
   }
 
@@ -807,32 +736,23 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   private val versionMetadata = scala.collection.concurrent.TrieMap
     .empty[(String, String), Map[String, String]]
 
-  private def versionMetadataGet(ex: HttpExchange, dataset: String, version: String): Unit =
-    if (catalog.version(dataset, version).isEmpty)
-      respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-    else versionMetadata.get((dataset, realVersion(dataset, version))) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Version $dataset.$version has no metadata"))
-      case Some(m) =>
-        val body = m.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(v)}"
-        }.mkString("{", ",", "}")
-        respond(ex, 200, "application/json", s"""{"data":$body,"status":"success"}""")
-    }
+  private def versionMetadataGet(ex: HttpExchange, dataset: String, version: String): Unit = {
+    versionOf(dataset, version)
+    val m = versionMetadata.getOrElse((dataset, realVersion(dataset, version)),
+      throw Reject(404, s"Version $dataset.$version has no metadata"))
+    val body = m.toSeq.sortBy(_._1).map { case (k, v) =>
+      s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(v)}"
+    }.mkString("{", ",", "}")
+    respond(ex, 200, "application/json", s"""{"data":$body,"status":"success"}""")
+  }
 
   private def versionMetadataWrite(ex: HttpExchange, dataset: String, version: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    if (catalog.version(dataset, version).isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val patch = if (body.isBlank) Map.empty[String, String]
-                else parseBody422(ex, body).getOrElse(return).collect {
-                  case (k, s: String) => k -> s
-                  case (k, v) if v != null => k -> graft.geo.Json.write(v)
-                }
+    writeGate(ex)
+    versionOf(dataset, version)
+    val patch = bodyObject(ex).collect {
+      case (k, s: String) => k -> s
+      case (k, v) if v != null => k -> graft.geo.Json.write(v)
+    }
     val isCreate = ex.getRequestMethod == "POST"
     val merged = versionMetadata.updateWith((dataset, realVersion(dataset, version))) {
       case Some(old) if !isCreate => Some(old ++ patch)
@@ -846,14 +766,10 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   }
 
   private def versionMetadataDelete(ex: HttpExchange, dataset: String, version: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    versionMetadata.remove((dataset, realVersion(dataset, version))) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Version $dataset.$version has no metadata"))
-      case Some(_) => respond(ex, 200, "application/json",
-        """{"data":{},"status":"success"}""")
-    }
+    writeGate(ex)
+    if (versionMetadata.remove((dataset, realVersion(dataset, version))).isEmpty)
+      throw Reject(404, s"Version $dataset.$version has no metadata")
+    respond(ex, 200, "application/json", """{"data":{},"status":"success"}""")
   }
 
   /** `GET /dataset/{d}/{v}/geostore/{id}` (`datasets/geostore.py:16`):
@@ -861,25 +777,18 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * content-addressed `gfw_geostore_id` matches returns its stored
     * geometry. */
   private def versionGeostore(ex: HttpExchange, dataset: String, version: String,
-                              gid: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if !v.defaultAsset.exists(_.assetType == cat.AssetType.GeoDatabaseTable) =>
-        respond(ex, 501, "application/json", Sinks.jsendError(
-          "This endpoint is not implemented for the given dataset"))
-      case Some(_) =>
-        val rows = spark.sql(
-          s"""SELECT gfw_geojson FROM ${tableFor(dataset, version)}
-             |WHERE gfw_geostore_id = '${gid.replace("'", "''")}' LIMIT 1""".stripMargin)
-          .collect()
-        if (rows.isEmpty)
-          respond(ex, 404, "application/json",
-            Sinks.jsendError(s"Geostore $gid not found in $dataset.$version"))
-        else
-          respond(ex, 200, "application/json",
-            s"""{"data":{"gfw_geostore_id":"$gid","geojson":${rows.head.getString(0)}},"status":"success"}""")
-    }
+                              gid: String): Unit = {
+    if (!versionOf(dataset, version).defaultAsset.exists(
+        _.assetType == cat.AssetType.GeoDatabaseTable))
+      throw Reject(501, "This endpoint is not implemented for the given dataset")
+    val rows = spark.sql(
+      s"""SELECT gfw_geojson FROM ${tableFor(dataset, version)}
+         |WHERE gfw_geostore_id = '${gid.replace("'", "''")}' LIMIT 1""".stripMargin)
+      .collect()
+    if (rows.isEmpty) throw Reject(404, s"Geostore $gid not found in $dataset.$version")
+    respond(ex, 200, "application/json",
+      s"""{"data":{"gfw_geostore_id":"$gid","geojson":${rows.head.getString(0)}},"status":"success"}""")
+  }
 
   /** Asset-by-id routes (`assets/asset.py:82-305`): the catalog is
     * searched across all datasets/versions. */
@@ -887,18 +796,15 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     catalog.datasets.iterator.flatMap(_.versions).flatMap(v =>
       v.assets.collect { case a if a.assetId == id => (v, a) }).nextOption()
 
-  private def assetGet(ex: HttpExchange, id: String): Unit = findAsset(id) match {
-    case None => respond(ex, 404, "application/json",
-      Sinks.jsendError(s"Asset $id not found"))
-    case Some((v, a)) =>
-      respond(ex, 200, "application/json",
-        s"""{"data":{"asset_id":"${a.assetId}","dataset":"${v.dataset}","version":"${v.version}","asset_type":${graft.geo.Json.write(a.assetType)},"asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},"status":"${a.status}"},"status":"success"}""")
+  private def assetGet(ex: HttpExchange, id: String): Unit = {
+    val (v, a) = assetOf(id)
+    respond(ex, 200, "application/json",
+      s"""{"data":{"asset_id":"${a.assetId}","dataset":"${v.dataset}","version":"${v.version}","asset_type":${graft.geo.Json.write(a.assetType)},"asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},"status":"${a.status}"},"status":"success"}""")
   }
 
-  private def assetSub(ex: HttpExchange, id: String, sub: String): Unit = findAsset(id) match {
-    case None => respond(ex, 404, "application/json",
-      Sinks.jsendError(s"Asset $id not found"))
-    case Some((v, a)) => sub match {
+  private def assetSub(ex: HttpExchange, id: String, sub: String): Unit = {
+    val (v, a) = assetOf(id)
+    sub match {
       case "creation_options" =>
         val body = a.creationOptions.toSeq.sortBy(_._1).map { case (k, x) =>
           s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(x)}"
@@ -923,8 +829,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * of tile footprints materializes from the lake on first request). */
   private def assetTilesInfo(ex: HttpExchange, v: cat.Version, a: cat.Asset): Unit = {
     if (a.assetType != cat.AssetType.RasterTileSet)
-      return respond(ex, 400, "application/json", Sinks.jsendError(
-        "Tiles information only available for raster tile sets"))
+      throw Reject(400, "Tiles information only available for raster tile sets")
     val cacheDir = java.nio.file.Paths.get(
       s"${sys.props("java.io.tmpdir")}/graft_tiles_info")
     java.nio.file.Files.createDirectories(cacheDir)
@@ -956,29 +861,23 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * the catalog; default assets are refused — deleting them means
     * deleting the parent version. */
   private def assetDelete(ex: HttpExchange, id: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    findAsset(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id not found"))
-      case Some((v, a)) if a.isDefault =>
-        respond(ex, 409, "application/json", Sinks.jsendError(
-          "Deletion failed. You cannot delete a default asset. " +
-            "To delete a default asset you must delete the parent version."))
-      case Some((v, a)) =>
-        catalogLock.synchronized {
-          catalog = catalog.withoutAsset(v.dataset, v.version, a.assetId)
-        }
-        val f = new java.io.File(a.assetUri)
-        if (f.isFile) f.delete()
-        assetMetadata.remove(a.assetId)
-        // field overrides die with the asset — a later asset reusing
-        // the id must not inherit stale aliases
-        fieldMetaOverrides.keys.filter(_._1 == a.assetId)
-          .foreach(fieldMetaOverrides.remove)
-        respond(ex, 200, "application/json",
-          s"""{"data":{"asset_id":"${a.assetId}","status":"deleted"},"status":"success"}""")
+    writeGate(ex)
+    val (v, a) = assetOf(id)
+    if (a.isDefault)
+      throw Reject(409, "Deletion failed. You cannot delete a default asset. " +
+        "To delete a default asset you must delete the parent version.")
+    catalogLock.synchronized {
+      catalog = catalog.withoutAsset(v.dataset, v.version, a.assetId)
     }
+    val f = new java.io.File(a.assetUri)
+    if (f.isFile) f.delete()
+    assetMetadata.remove(a.assetId)
+    // field overrides die with the asset — a later asset reusing
+    // the id must not inherit stale aliases
+    fieldMetaOverrides.keys.filter(_._1 == a.assetId)
+      .foreach(fieldMetaOverrides.remove)
+    respond(ex, 200, "application/json",
+      s"""{"data":{"asset_id":"${a.assetId}","status":"deleted"},"status":"success"}""")
   }
 
   // -------------------------------------------------- asset metadata
@@ -991,61 +890,43 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   private val fieldMetaOverrides = scala.collection.concurrent.TrieMap
     .empty[(String, String), Map[String, Any]]
 
-  private def assetMetadataGet(ex: HttpExchange, id: String): Unit =
-    findAsset(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id not found"))
-      case Some(_) =>
-        // asset_metadata_factory: a record-less asset still serves a
-        // (empty) metadata document rather than 404
-        val doc = assetMetadata.getOrElse(id, Map.empty[String, Any])
-        respond(ex, 200, "application/json",
-          s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
-    }
+  private def assetMetadataGet(ex: HttpExchange, id: String): Unit = {
+    assetOf(id)
+    // asset_metadata_factory: a record-less asset still serves a
+    // (empty) metadata document rather than 404
+    val doc = assetMetadata.getOrElse(id, Map.empty[String, Any])
+    respond(ex, 200, "application/json",
+      s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
+  }
 
   /** POST creates (409 when a record exists,
     * `metadata_crud.create_asset_metadata`); PATCH merges fields into
     * an existing record (404 without one). */
   private def assetMetadataWrite(ex: HttpExchange, id: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    if (findAsset(id).isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id not found"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val doc =
-      try graft.geo.Json.parseObject(body)
-      catch { case _: Exception => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Invalid metadata document")) }
+    writeGate(ex)
+    assetOf(id)
+    val doc = parseBody(bodyOf(ex), "Invalid metadata document")
     ex.getRequestMethod match {
       case "POST" =>
         if (assetMetadata.putIfAbsent(id, doc).isDefined)
-          respond(ex, 409, "application/json", Sinks.jsendError(
-            s"Asset $id already has a metadata record"))
-        else respond(ex, 201, "application/json",
+          throw Reject(409, s"Asset $id already has a metadata record")
+        respond(ex, 201, "application/json",
           s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
       case _ =>
-        assetMetadata.get(id) match {
-          case None => respond(ex, 404, "application/json",
-            Sinks.jsendError(s"Asset $id has no metadata record"))
-          case Some(prior) =>
-            val merged = prior ++ doc
-            assetMetadata.put(id, merged)
-            respond(ex, 200, "application/json",
-              s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
-        }
+        val merged = assetMetadata.getOrElse(id,
+          throw Reject(404, s"Asset $id has no metadata record")) ++ doc
+        assetMetadata.put(id, merged)
+        respond(ex, 200, "application/json",
+          s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
     }
   }
 
   private def assetMetadataDelete(ex: HttpExchange, id: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    assetMetadata.remove(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id has no metadata record"))
-      case Some(doc) => respond(ex, 200, "application/json",
-        s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
-    }
+    writeGate(ex)
+    val doc = assetMetadata.remove(id).getOrElse(
+      throw Reject(404, s"Asset $id has no metadata record"))
+    respond(ex, 200, "application/json",
+      s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
   }
 
   /** A raster asset's band columns: explicit `lake_bands` creation
@@ -1079,62 +960,43 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     }
   }
 
-  private def assetFields(ex: HttpExchange, id: String): Unit =
-    findAsset(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id not found"))
-      case Some((v, a)) =>
-        val items = assetFieldDocs(v).map { doc =>
-          val merged = doc ++
-            fieldMetaOverrides.getOrElse((id, doc("name").toString), Map.empty)
-          graft.geo.Json.write(merged)
-        }.mkString(",")
-        respond(ex, 200, "application/json",
-          s"""{"data":[$items],"status":"success"}""")
-    }
+  private def assetFields(ex: HttpExchange, id: String): Unit = {
+    val items = assetFieldDocs(assetOf(id)._1).map { doc =>
+      val merged = doc ++
+        fieldMetaOverrides.getOrElse((id, doc("name").toString), Map.empty)
+      graft.geo.Json.write(merged)
+    }.mkString(",")
+    respond(ex, 200, "application/json",
+      s"""{"data":[$items],"status":"success"}""")
+  }
 
-  private def assetFieldGet(ex: HttpExchange, id: String, field: String): Unit =
-    findAsset(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id not found"))
-      case Some((v, a)) =>
-        assetFieldDocs(v).find(_("name") == field) match {
-          case None => respond(ex, 404, "application/json",
-            Sinks.jsendError(s"Field $field not found"))
-          case Some(doc) =>
-            val merged = doc ++ fieldMetaOverrides.getOrElse((id, field), Map.empty)
-            respond(ex, 200, "application/json",
-              s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
-        }
-    }
+  /** Asset `id`'s metadata for `field`, before PATCHed overrides; 404
+    * when either is unknown. */
+  private def assetFieldDoc(id: String, field: String): Map[String, Any] =
+    assetFieldDocs(assetOf(id)._1).find(_("name") == field)
+      .getOrElse(throw Reject(404, s"Field $field not found"))
+
+  private def assetFieldGet(ex: HttpExchange, id: String, field: String): Unit = {
+    val merged = assetFieldDoc(id, field) ++
+      fieldMetaOverrides.getOrElse((id, field), Map.empty)
+    respond(ex, 200, "application/json",
+      s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
+  }
 
   /** PATCH /asset/{id}/fields/{name} (`update_field_metadata`,
     * `asset.py:380-415`): merge alias/description/unit/is_filter/
     * is_feature_info into the field's metadata. */
   private def assetFieldPatch(ex: HttpExchange, id: String, field: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    findAsset(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Asset $id not found"))
-      case Some((v, a)) =>
-        assetFieldDocs(v).find(_("name") == field) match {
-          case None => respond(ex, 404, "application/json",
-            Sinks.jsendError(s"Field $field not found"))
-          case Some(doc) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val patch =
-              try graft.geo.Json.parseObject(body)
-              catch { case _: Exception => return respond(ex, 422, "application/json",
-                Sinks.jsendError("Invalid field metadata document")) }
-            val merged = fieldMetaOverrides.getOrElse((id, field), Map.empty) ++
-              (patch - "name" - "data_type") // immutable identity fields
-            fieldMetaOverrides.put((id, field), merged)
-            respond(ex, 200, "application/json",
-              s"""{"data":${graft.geo.Json.write(doc ++ merged)},"status":"success"}""")
-        }
-    }
+    writeGate(ex)
+    val doc = assetFieldDoc(id, field)
+    val patch = parseBody(bodyOf(ex), "Invalid field metadata document")
+    val merged = fieldMetaOverrides.getOrElse((id, field), Map.empty) ++
+      (patch - "name" - "data_type") // immutable identity fields
+    fieldMetaOverrides.put((id, field), merged)
+    respond(ex, 200, "application/json",
+      s"""{"data":${graft.geo.Json.write(doc ++ merged)},"status":"success"}""")
   }
+
 
   // ------------------------------------------------------------- tasks
 
@@ -1169,37 +1031,26 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     }
   }
 
-  private def taskGet(ex: HttpExchange, id: String): Unit =
-    taskRecords.get(id) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Task $id not found"))
-      case Some(t) => respond(ex, 200, "application/json",
-        s"""{"data":${taskBody(t)},"status":"success"}""")
-    }
+  private def taskGet(ex: HttpExchange, id: String): Unit = {
+    val t = taskRecords.getOrElse(id, throw Reject(404, s"Task $id not found"))
+    respond(ex, 200, "application/json", s"""{"data":${taskBody(t)},"status":"success"}""")
+  }
 
   /** PUT /task/{id} (service-account route, `task.py:60-81`): attach a
     * new task record to an existing asset. */
   private def taskPut(ex: HttpExchange, id: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val obj =
-      try graft.geo.Json.parseObject(body)
-      catch { case _: Exception => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Invalid task document")) }
+    writeGate(ex)
+    val obj = parseBody(bodyOf(ex), "Invalid task document")
     val assetId = obj.get("asset_id") match {
       case Some(s: String) => s
-      case _ => return respond(ex, 400, "application/json",
-        Sinks.jsendError("asset_id is required"))
+      case _ => throw Reject(400, "asset_id is required")
     }
     if (findAsset(assetId).isEmpty)
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Asset $assetId not found"))
+      throw Reject(400, s"Asset $assetId not found")
     val t = TaskRec(id, assetId, parseChangeLog(obj))
     // putIfAbsent: a concurrent PUT of the same id must not overwrite
     if (taskRecords.putIfAbsent(id, t).isDefined)
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Task $id already exists"))
+      throw Reject(400, s"Task $id already exists")
     respond(ex, 201, "application/json",
       s"""{"data":${taskBody(t)},"status":"success"}""")
   }
@@ -1221,20 +1072,12 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * failed; all-success marks the asset saved once every task's last
     * entry succeeded; anything else is a 400. */
   private def taskPatch(ex: HttpExchange, id: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    val prior = taskRecords.getOrElse(id,
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Task $id not found")))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val entries = parseChangeLog(
-      try graft.geo.Json.parseObject(body)
-      catch { case _: Exception => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Invalid task document")) })
+    writeGate(ex)
+    val prior = taskRecords.getOrElse(id, throw Reject(404, s"Task $id not found"))
+    val entries = parseChangeLog(parseBody(bodyOf(ex), "Invalid task document"))
     if (entries.isEmpty || entries.exists(e =>
         e.status != "success" && e.status != "failed"))
-      return respond(ex, 400, "application/json", Sinks.jsendError(
-        "change log status must be either `success` or `failed`"))
+      throw Reject(400, "change log status must be either `success` or `failed`")
     // atomic append: a background creation job putting a fresh record
     // for the same deterministic task id must not erase these entries
     val updated = catalogLock.synchronized {
@@ -1281,15 +1124,13 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * resource has been computed. */
   private def tclSearch(ex: HttpExchange): Unit = {
     val params = queryParams(ex)
-    val gid = params.getOrElse("geostore_id", return respond(ex, 422,
-      "application/json", Sinks.jsendError("geostore_id is required")))
-    val cc = num422(ex, "canopy_cover",
-      params.get("canopy_cover").map(_.toInt).getOrElse(30)).getOrElse(return)
+    val gid = params.getOrElse("geostore_id", throw Reject(422, "geostore_id is required"))
+    val cc = number("canopy_cover",
+      params.get("canopy_cover").map(_.toInt).getOrElse(30))
     val rid = tclResourceId(gid, cc)
     if (!tclResources.contains(rid))
-      respond(ex, 404, "application/json", Sinks.jsendError(
-        "Resource not found, may require computation."))
-    else respond(ex, 200, "application/json",
+      throw Reject(404, "Resource not found, may require computation.")
+    respond(ex, 200, "application/json",
       s"""{"data":{"link":"/land/tree_cover_loss_by_driver/$rid"},"status":"success"}""")
   }
 
@@ -1298,22 +1139,18 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * the SAME fused zonal engine, grouped by loss year and the driver
     * layer, thresholded on canopy cover. */
   private def tclPost(ex: HttpExchange): Unit = {
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val obj = parseBody422(ex, body).getOrElse(return)
+    val obj = parseBody(bodyOf(ex))
     val gid = obj.get("geostore_id") match {
       case Some(s: String) => s
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("geostore_id is required"))
+      case _ => throw Reject(422, "geostore_id is required")
     }
-    val cc = num422(ex, "canopy_cover",
-      obj.get("canopy_cover").map(_.toString.toDouble.toInt).getOrElse(30)).getOrElse(return)
+    val cc = number("canopy_cover",
+      obj.get("canopy_cover").map(_.toString.toDouble.toInt).getOrElse(30))
     val gj = resolveGeostore(gid, "gfw").getOrElse(
-      return respond(ex, 422, "application/json", Sinks.jsendError(
-        s"Geostore $gid can't be found or is not valid.")))
+      throw Reject(422, s"Geostore $gid can't be found or is not valid."))
     val rid = tclResourceId(gid, cc)
     if (tclResources.contains(rid))
-      return respond(ex, 409, "application/json", Sinks.jsendError(
-        s"Resource $rid already exists with those parameters."))
+      throw Reject(409, s"Resource $rid already exists with those parameters.")
     val metadata =
       s"""{"aoi":{"type":"geostore","geostore_id":"$gid"},"canopy_cover":$cc}"""
     tclResources.put(rid, ("pending", metadata, "null"))
@@ -1362,66 +1199,50 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   /** GET by id: pending resources answer with Retry-After: 1; the CSV
     * representation follows the documented `Accept: text/csv` shape
     * (year, driver, area). */
-  private def tclGet(ex: HttpExchange, rid: String): Unit =
-    tclResources.get(rid) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Resource $rid not found"))
-      case Some((status, metadata, payload)) =>
-        if (status == "pending") ex.getResponseHeaders.add("Retry-After", "1")
-        if (status == "saved" &&
-            Option(ex.getRequestHeaders.getFirst("Accept")).contains("text/csv")) {
-          val rowRe = ("""\{"umd_tree_cover_loss__year":(\d+),""" +
-            """"tsc_tree_cover_loss_drivers__driver":"([^"]*)","area__ha":([-0-9.eE]+)\}""").r
-          val lines = rowRe.findAllMatchIn(payload).map(m =>
-            s""""${m.group(1)}","${m.group(2)}",${m.group(3)}""").mkString("\r\n")
-          ex.getResponseHeaders.add("Content-Disposition", "attachment")
-          respond(ex, 200, "text/csv",
-            "\"umd_tree_cover_loss__year\",\"tsc_tree_cover_loss_drivers__driver\",\"area__ha\"\r\n" +
-              lines + "\r\n")
-        } else
-          respond(ex, 200, "application/json",
-            s"""{"data":{"id":"$rid","status":"$status","metadata":$metadata,"result":$payload},"status":"success"}""")
-    }
+  private def tclGet(ex: HttpExchange, rid: String): Unit = {
+    val (status, metadata, payload) = tclResource(rid)
+    if (status == "pending") ex.getResponseHeaders.add("Retry-After", "1")
+    if (status == "saved" &&
+        Option(ex.getRequestHeaders.getFirst("Accept")).contains("text/csv")) {
+      val rowRe = ("""\{"umd_tree_cover_loss__year":(\d+),""" +
+        """"tsc_tree_cover_loss_drivers__driver":"([^"]*)","area__ha":([-0-9.eE]+)\}""").r
+      val lines = rowRe.findAllMatchIn(payload).map(m =>
+        s""""${m.group(1)}","${m.group(2)}",${m.group(3)}""").mkString("\r\n")
+      ex.getResponseHeaders.add("Content-Disposition", "attachment")
+      respond(ex, 200, "text/csv",
+        "\"umd_tree_cover_loss__year\",\"tsc_tree_cover_loss_drivers__driver\",\"area__ha\"\r\n" +
+          lines + "\r\n")
+    } else
+      respond(ex, 200, "application/json",
+        s"""{"data":{"id":"$rid","status":"$status","metadata":$metadata,"result":$payload},"status":"success"}""")
+  }
+
+  private def tclResource(rid: String): (String, String, String) =
+    tclResources.getOrElse(rid, throw Reject(404, s"Resource $rid not found"))
 
   /** DELETE: only failed resources delete (reference rule). */
-  private def tclDelete(ex: HttpExchange, rid: String): Unit =
-    tclResources.get(rid) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Resource $rid not found"))
-      case Some((status, _, _)) if status != "failed" =>
-        respond(ex, 400, "application/json", Sinks.jsendError(
-          "Only resources with 'failed' status can be deleted"))
-      case Some(_) =>
-        tclResources.remove(rid)
-        respond(ex, 204, "application/json", "")
-    }
+  private def tclDelete(ex: HttpExchange, rid: String): Unit = {
+    if (tclResource(rid)._1 != "failed")
+      throw Reject(400, "Only resources with 'failed' status can be deleted")
+    tclResources.remove(rid)
+    respond(ex, 204, "application/json", "")
+  }
 
   /** Pre-built file-asset downloads (`downloads.py:264-348`): 307
     * temporary redirect to the version's shapefile / geopackage export
     * asset URI; absent asset → the reference's not-implemented 501. */
   private def downloadFile(ex: HttpExchange, dataset: String, version: String,
-                           fmt: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if !v.isDownloadable =>
-        respond(ex, 403, "application/json",
-          Sinks.jsendError("This dataset is not available for download"))
-      case Some(v) =>
-        // same gate as the csv/json downloads — a 307 to the asset is
-        // still a download of protected data
-        authGate(ex, dataset).foreach { case (code, body) =>
-          return respond(ex, code, "application/json", body) }
-        val wanted = if (fmt == "shp") cat.AssetType.ShapefileExport
-                     else cat.AssetType.GeopackageExport
-        v.assets.find(_.assetType == wanted) match {
-          case Some(a) =>
-            ex.getResponseHeaders.add("Location", a.assetUri)
-            respond(ex, 307, "application/json", "")
-          case None => respond(ex, 501, "application/json", Sinks.jsendError(
-            "This endpoint is not implemented for the given dataset."))
-        }
-    }
+                           fmt: String): Unit = {
+    // same gate as the csv/json downloads — a 307 to the asset is
+    // still a download of protected data
+    val v = downloadable(ex, dataset, version)
+    val wanted = if (fmt == "shp") cat.AssetType.ShapefileExport
+                 else cat.AssetType.GeopackageExport
+    val a = v.assets.find(_.assetType == wanted).getOrElse(
+      throw Reject(501, "This endpoint is not implemented for the given dataset."))
+    ex.getResponseHeaders.add("Location", a.assetUri)
+    respond(ex, 307, "application/json", "")
+  }
 
   /** GET /dataset/{d}/{v}/download/geotiff?tile_id=…&pixel_meaning=…
     * (`downloads.py:264-292`): 307 to the requested raster tile as a
@@ -1429,83 +1250,64 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * the tile materializes from the version's Parquet lake on first
     * request (cached in the version dir) through the pure-JVM
     * [[graft.raster.GeoTiff]] writer. */
-  private def downloadGeotiff(ex: HttpExchange, dataset: String, version: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if !v.isDownloadable =>
-        respond(ex, 403, "application/json",
-          Sinks.jsendError("This dataset is not available for download"))
-      case Some(v) =>
-        authGate(ex, dataset).foreach { case (code, body) =>
-          return respond(ex, code, "application/json", body) }
-        val asset = v.defaultAsset
-          .filter(_.assetType == cat.AssetType.RasterTileSet).getOrElse(
-            return respond(ex, 501, "application/json", Sinks.jsendError(
-              "This endpoint is not implemented for the given dataset.")))
-        val params = queryParams(ex)
-        val tileId = params.getOrElse("tile_id", return respond(ex, 422,
-          "application/json", Sinks.jsendError("tile_id is required")))
-        val meaning = params.getOrElse("pixel_meaning", return respond(ex, 422,
-          "application/json", Sinks.jsendError("pixel_meaning is required")))
-        val g = graft.raster.DataEnvironment.gridOf(asset.creationOptions)
-        val band = asset.creationOptions.getOrElse("band", s"px_$meaning")
-        val bands = bandsOfAsset(asset)
-        if (!bands.contains(band) ||
-            asset.creationOptions.get("pixel_meaning").exists(_ != meaning))
-          return respond(ex, 404, "application/json",
-            Sinks.jsendError(s"No raster tile set with pixel meaning $meaning"))
-        graft.raster.TileLake.ensureLake(spark, asset.assetUri)
-        val compression = params.getOrElse("compression", "deflate")
-        if (!Set("none", "lzw", "deflate").contains(compression))
-          return respond(ex, 422, "application/json", Sinks.jsendError(
-            s"Unsupported compression '$compression' (none/lzw/deflate)"))
-        // srid mirrors the tile-cache CRS choice (reference warps tile
-        // caches to EPSG:3857); the lake itself stays 4326
-        val srid = params.getOrElse("srid", "4326")
-        if (!Set("4326", "3857").contains(srid))
-          return respond(ex, 422, "application/json", Sinks.jsendError(
-            s"Unsupported srid '$srid' (4326/3857)"))
-        val cacheDir = java.nio.file.Paths.get(
-          s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${dataset}_$version")
-        java.nio.file.Files.createDirectories(cacheDir)
-        val out = cacheDir.resolve(
-          if (srid == "4326") s"${band}_${tileId}_$compression.tif"
-          else s"${band}_${tileId}_${compression}_$srid.tif")
-        if (!java.nio.file.Files.exists(out)) {
-          val rows = spark.read.parquet(asset.assetUri)
-            .where(org.apache.spark.sql.functions.col("tile_id") === tileId)
-            .selectExpr("tx", "ty", band).collect()
-          if (rows.isEmpty)
-            return respond(ex, 404, "application/json",
-              Sinks.jsendError(s"Tile $tileId not found"))
-          val r = rows.head
-          val px = r.getSeq[Long](2).map(_.toInt).toArray
-          val tile = graft.raster.GeoTiff.Tile(
-            g.pxPerTile, g.pxPerTile,
-            g.originLon + r.getInt(0) * g.tileDeg,
-            g.originLat - r.getInt(1) * g.tileDeg,
-            g.pixelDeg, px)
-          if (srid == "3857") {
-            // tiles past ±85.05° have no mercator image — a client
-            // input problem (422), not a server fault
-            val warped =
-              try graft.raster.Warp.tileToWebMercator(tile)
-              catch {
-                case e: IllegalArgumentException =>
-                  return respond(ex, 422, "application/json",
-                    Sinks.jsendError(e.getMessage))
-              }
-            graft.raster.GeoTiff.writeRaster(out, warped, compression,
-              predictor = if (compression == "none") 1 else 2)
-          } else
-            graft.raster.GeoTiff.write(out, tile, compression)
-        }
-        ex.getResponseHeaders.add("Location", out.toString)
-        respond(ex, 307, "application/json", "")
+  private def downloadGeotiff(ex: HttpExchange, dataset: String, version: String): Unit = {
+    val asset = downloadable(ex, dataset, version).defaultAsset
+      .filter(_.assetType == cat.AssetType.RasterTileSet).getOrElse(
+        throw Reject(501, "This endpoint is not implemented for the given dataset."))
+    val params = queryParams(ex)
+    val tileId = params.getOrElse("tile_id", throw Reject(422, "tile_id is required"))
+    val meaning = params.getOrElse("pixel_meaning", throw Reject(422, "pixel_meaning is required"))
+    val g = graft.raster.DataEnvironment.gridOf(asset.creationOptions)
+    val band = asset.creationOptions.getOrElse("band", s"px_$meaning")
+    val bands = bandsOfAsset(asset)
+    if (!bands.contains(band) ||
+        asset.creationOptions.get("pixel_meaning").exists(_ != meaning))
+      throw Reject(404, s"No raster tile set with pixel meaning $meaning")
+    graft.raster.TileLake.ensureLake(spark, asset.assetUri)
+    val compression = params.getOrElse("compression", "deflate")
+    if (!Set("none", "lzw", "deflate").contains(compression))
+      throw Reject(422, s"Unsupported compression '$compression' (none/lzw/deflate)")
+    // srid mirrors the tile-cache CRS choice (reference warps tile
+    // caches to EPSG:3857); the lake itself stays 4326
+    val srid = params.getOrElse("srid", "4326")
+    if (!Set("4326", "3857").contains(srid))
+      throw Reject(422, s"Unsupported srid '$srid' (4326/3857)")
+    val cacheDir = java.nio.file.Paths.get(
+      s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${dataset}_$version")
+    java.nio.file.Files.createDirectories(cacheDir)
+    val out = cacheDir.resolve(
+      if (srid == "4326") s"${band}_${tileId}_$compression.tif"
+      else s"${band}_${tileId}_${compression}_$srid.tif")
+    if (!java.nio.file.Files.exists(out)) {
+      val rows = spark.read.parquet(asset.assetUri)
+        .where(org.apache.spark.sql.functions.col("tile_id") === tileId)
+        .selectExpr("tx", "ty", band).collect()
+      if (rows.isEmpty)
+        throw Reject(404, s"Tile $tileId not found")
+      val r = rows.head
+      val px = r.getSeq[Long](2).map(_.toInt).toArray
+      val tile = graft.raster.GeoTiff.Tile(
+        g.pxPerTile, g.pxPerTile,
+        g.originLon + r.getInt(0) * g.tileDeg,
+        g.originLat - r.getInt(1) * g.tileDeg,
+        g.pixelDeg, px)
+      if (srid == "3857") {
+        // tiles past ±85.05° have no mercator image — a client
+        // input problem (422), not a server fault
+        val warped =
+          try graft.raster.Warp.tileToWebMercator(tile)
+          catch { case e: IllegalArgumentException => throw Reject(422, e.getMessage) }
+        graft.raster.GeoTiff.writeRaster(out, warped, compression,
+          predictor = if (compression == "none") 1 else 2)
+      } else
+        graft.raster.GeoTiff.write(out, tile, compression)
     }
+    ex.getResponseHeaders.add("Location", out.toString)
+    respond(ex, 307, "application/json", "")
+  }
 
   /** Vector feature lookup near a point
+
     * (`features.py:69-218`): zoom selects the search radius from the
     * tippecanoe precision table × 50; features within the geodesic
     * radius return. Geometry follows the repo's synthetic-point
@@ -1513,9 +1315,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * geometry columns). */
   private def features(ex: HttpExchange, dataset: String, version: String): Unit = {
     val params = queryParams(ex)
-    val ver = catalog.version(dataset, version).getOrElse(
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found")))
+    val ver = versionOf(dataset, version)
     // Eligible sources (features.py:39-76 serves any geo table): a
     // catalog GeoDatabaseTable (a created vector version — point OR
     // polygon features, via the geometry-to-point distance on its
@@ -1534,71 +1334,62 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
           "st_distance_sphere(st_point(lon, lat), st_point(%LNG%, %LAT%))",
           ", c_custkey"))
       else None
-    source match {
-      case None => respond(ex, 501, "application/json", Sinks.jsendError(
-        "This endpoint is not implemented for the given dataset"))
-      case Some((from, distTpl, tieBreak)) =>
-        val (lat, lng, zoom) =
-          try (params("lat").toDouble, params("lng").toDouble, params("z").toInt)
-          catch { case _: Exception => return respond(ex, 422, "application/json",
-            Sinks.jsendError("lat, lng and z query parameters are required")) }
-        // nasa_viirs_fire_alerts special form (`features.py:39-76`):
-        // an alert__date window on top of the location lookup,
-        // defaulting to the trailing week (`default_start/default_end`)
-        val dateFilter: Either[(Int, String), String] =
-          if (dataset != "nasa_viirs_fire_alerts") Right("")
-          else {
-            val today = java.time.LocalDate.now()
-            val start = params.getOrElse("start_date", today.minusWeeks(1).toString)
-            val end = params.getOrElse("end_date", today.toString)
-            val DateRe = "^\\d{4}-\\d{2}-\\d{2}$".r
-            // calendar-validate BOTH bounds (the regex admits 2026-02-30)
-            val parsed =
-              if (DateRe.findFirstIn(start).isEmpty || DateRe.findFirstIn(end).isEmpty) None
-              else try Some((java.time.LocalDate.parse(start),
-                java.time.LocalDate.parse(end)))
-              catch { case _: java.time.format.DateTimeParseException => None }
-            parsed match {
-              case None =>
-                Left((422, Sinks.jsendError("start_date and end_date must be valid YYYY-MM-DD dates")))
-              case Some((_, e)) if e.isAfter(today) =>
-                Left((422, Sinks.jsendError("End date cannot be in the future.")))
-              case Some(_) =>
-                Right(s" AND alert__date BETWEEN DATE '$start' AND DATE '$end'")
-            }
-          }
-        (FeatureLookup.bufferMeters(zoom), dateFilter) match {
-          case (None, _) => respond(ex, 400, "application/json",
-            Sinks.jsendError("Zoom level out of range"))
-          case (_, Left((code, body))) => respond(ex, code, "application/json", body)
-          case (Some(radius), Right(extra)) =>
-            val dist = distTpl.replace("%LNG%", lng.toString)
-              .replace("%LAT%", lat.toString)
-            val df = spark.sql(
-              s"""SELECT *, $dist AS dist_m
-                 |FROM $from pts
-                 |WHERE $dist <= $radius$extra
-                 |ORDER BY dist_m$tieBreak LIMIT 100""".stripMargin)
-            respond(ex, 200, "application/json", Sinks.toJsend(df))
+    val (from, distTpl, tieBreak) = source.getOrElse(
+      throw Reject(501, "This endpoint is not implemented for the given dataset"))
+    val (lat, lng, zoom) =
+      try (params("lat").toDouble, params("lng").toDouble, params("z").toInt)
+      catch { case _: Exception =>
+        throw Reject(422, "lat, lng and z query parameters are required") }
+    val radius = FeatureLookup.bufferMeters(zoom).getOrElse(
+      throw Reject(400, "Zoom level out of range"))
+    // nasa_viirs_fire_alerts special form (`features.py:39-76`):
+    // an alert__date window on top of the location lookup,
+    // defaulting to the trailing week (`default_start/default_end`)
+    val dateFilter =
+      if (dataset != "nasa_viirs_fire_alerts") ""
+      else {
+        val today = java.time.LocalDate.now()
+        val start = params.getOrElse("start_date", today.minusWeeks(1).toString)
+        val end = params.getOrElse("end_date", today.toString)
+        val DateRe = "^\\d{4}-\\d{2}-\\d{2}$".r
+        // calendar-validate BOTH bounds (the regex admits 2026-02-30)
+        val parsed =
+          if (DateRe.findFirstIn(start).isEmpty || DateRe.findFirstIn(end).isEmpty) None
+          else try Some((java.time.LocalDate.parse(start),
+            java.time.LocalDate.parse(end)))
+          catch { case _: java.time.format.DateTimeParseException => None }
+        parsed match {
+          case None =>
+            throw Reject(422, "start_date and end_date must be valid YYYY-MM-DD dates")
+          case Some((_, e)) if e.isAfter(today) =>
+            throw Reject(422, "End date cannot be in the future.")
+          case Some(_) =>
+            s" AND alert__date BETWEEN DATE '$start' AND DATE '$end'"
         }
-    }
+      }
+    val dist = distTpl.replace("%LNG%", lng.toString)
+      .replace("%LAT%", lat.toString)
+    val df = spark.sql(
+      s"""SELECT *, $dist AS dist_m
+         |FROM $from pts
+         |WHERE $dist <= $radius$dateFilter
+         |ORDER BY dist_m$tieBreak LIMIT 100""".stripMargin)
+    respond(ex, 200, "application/json", Sinks.toJsend(df))
   }
+
 
   /** Version asset statistics (`versions.py:363-374`): row/tile counts
     * and size facts of the default asset. */
   private def stats(ex: HttpExchange, dataset: String, version: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if v.defaultAsset.exists(_.assetType == cat.AssetType.RasterTileSet) =>
+    versionOf(dataset, version).defaultAsset match {
+      case Some(asset) if asset.assetType == cat.AssetType.RasterTileSet =>
         // the version's OWN grid and band set (created raster versions
         // carry both in their asset options; builtin falls back)
-        val asset = v.defaultAsset.get
         val g = graft.raster.DataEnvironment.gridOf(asset.creationOptions)
         val bands = bandsOfAsset(asset).length
         respond(ex, 200, "application/json",
           s"""{"data":{"tile_count":${g.nTiles},"pixel_count":${g.nTiles.toLong * g.pxPerTile * g.pxPerTile},"bands":$bands},"status":"success"}""")
-      case Some(_) =>
+      case _ =>
         val cnt = spark.table(tableFor(dataset, version)).count()
         respond(ex, 200, "application/json",
           s"""{"data":{"row_count":$cnt},"status":"success"}""")
@@ -1607,21 +1398,18 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   /** Version extent (`versions.py:351-360`): raster versions report
     * the grid bbox; tabular versions have no spatial extent. */
   private def extent(ex: HttpExchange, dataset: String, version: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) if v.defaultAsset.exists(_.assetType == cat.AssetType.RasterTileSet) =>
+    versionOf(dataset, version).defaultAsset match {
+      case Some(asset) if asset.assetType == cat.AssetType.RasterTileSet =>
         // the version's OWN grid — created raster versions carry the
         // DAG-derived georeferencing in their asset options (gridOf
         // falls back to the builtin lake's grid)
-        val g = graft.raster.DataEnvironment.gridOf(
-          v.defaultAsset.get.creationOptions)
+        val g = graft.raster.DataEnvironment.gridOf(asset.creationOptions)
         val (xmin, ymax) = (g.originLon, g.originLat)
         val (xmax, ymin) = (g.originLon + g.tilesX * g.tileDeg,
           g.originLat - g.tilesY * g.tileDeg)
         respond(ex, 200, "application/json",
           s"""{"data":{"extent":[$xmin,$ymin,$xmax,$ymax]},"status":"success"}""")
-      case Some(_) =>
+      case _ =>
         respond(ex, 200, "application/json",
           """{"data":{"extent":null},"status":"success"}""")
     }
@@ -1631,8 +1419,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * expression) against the nation table. */
   private def idLookup(ex: HttpExchange): Unit = {
     val params = queryParams(ex)
-    val country = params.getOrElse("country", return respond(ex, 400,
-      "application/json", Sinks.jsendError("Country MUST be specified.")))
+    val country = params.getOrElse("country", throw Reject(400, "Country MUST be specified."))
     val df = spark.sql(
       s"""SELECT n_nationkey AS id, n_name AS name
          |FROM nation
@@ -1651,25 +1438,19 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * "indices": [...], "constraints": [...]}}`. */
   private def versionPut(ex: HttpExchange, dataset: String, version: String): Unit = {
     import graft.etl.VersionCreation
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
+    writeGate(ex)
     if (builtinDatasets.contains(dataset))
-      return respond(ex, 409, "application/json", Sinks.jsendError(
-        s"Dataset $dataset conflicts with a pre-registered table"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      throw Reject(409, s"Dataset $dataset conflicts with a pre-registered table")
     val opts =
       try VersionCreation.CreationOptions.fromJson(
-        graft.geo.Json.parseObject(body).get("creation_options") match {
+        graft.geo.Json.parseObject(bodyOf(ex)).get("creation_options") match {
           case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
           case _ => throw new IllegalArgumentException("Missing creation_options")
         })
       catch { case e: IllegalArgumentException =>
-        return respond(ex, 422, "application/json",
-          Sinks.jsendError(Option(e.getMessage).getOrElse("Invalid creation options")))
-      }
+        throw Reject(422, Option(e.getMessage).getOrElse("Invalid creation options")) }
     opts.sourceUris.find(!sourceAllowed(_)).foreach { uri =>
-      return respond(ex, 403, "application/json", Sinks.jsendError(
-        s"Source URI outside the allowed data directories: $uri")) }
+      throw Reject(403, s"Source URI outside the allowed data directories: $uri") }
     versionRecords.put((dataset, version), ("pending", Nil))
     versionOpts.put((dataset, version), opts)
     val targetDir =
@@ -1754,16 +1535,12 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * anti-join. */
   private def versionAppend(ex: HttpExchange, dataset: String, version: String): Unit = {
     import graft.etl.VersionCreation
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
+    writeGate(ex)
     val opts = versionOpts.getOrElse((dataset, realVersion(dataset, version)),
-      return respond(ex, 404, "application/json", Sinks.jsendError(
-        s"Dataset version $dataset.$version not found or not appendable")))
+      throw Reject(404, s"Dataset version $dataset.$version not found or not appendable"))
     if (opts.sourceType == "raster")
-      return respond(ex, 501, "application/json", Sinks.jsendError(
-        "Append is not implemented for raster versions"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val uris = parseBody422(ex, body).getOrElse(return).get("creation_options") match {
+      throw Reject(501, "Append is not implemented for raster versions")
+    val uris = parseBody(bodyOf(ex)).get("creation_options") match {
       case Some(m: Map[_, _]) =>
         m.asInstanceOf[Map[String, Any]].get("source_uri") match {
           case Some(l: List[_]) => l.map(_.toString)
@@ -1772,12 +1549,10 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         }
       case _ => Nil
     }
-    if (uris.isEmpty)
-      return respond(ex, 422, "application/json",
-        Sinks.jsendError("No source URI provided."))
+    if (uris.isEmpty) throw Reject(422, "No source URI provided.")
+
     uris.find(!sourceAllowed(_)).foreach { uri =>
-      return respond(ex, 403, "application/json", Sinks.jsendError(
-        s"Source URI outside the allowed data directories: $uri")) }
+      throw Reject(403, s"Source URI outside the allowed data directories: $uri") }
     val targetDir =
       s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_$version"
     catalogLock.synchronized {
@@ -1803,9 +1578,6 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       s"""{"data":{"dataset":"$dataset","version":"$version","status":"pending","job_id":"$jobId"},"status":"success"}""")
   }
 
-  /** GET /dataset/{d}/{v}/assets (`versions.py` + `asset.py` asset
-    * listing): every asset record of the version — the default
-    * database table plus derived exports. */
   /** GET /assets (`assets/assets.py:18-…`): the catalog's full asset
     * list, filterable by `asset_type` and `dataset`. */
   private def assetsList(ex: HttpExchange): Unit = {
@@ -1833,123 +1605,124 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * bytes — never a full-lake collect; the at-scale query path stays
     * the Parquet tile lake. */
   private def assetAdd(ex: HttpExchange, dataset: String, version: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    val ver = catalog.version(dataset, version).getOrElse(
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found")))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val obj =
-      try graft.geo.Json.parseObject(body)
-      catch { case _: Exception => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Invalid request body")) }
-    obj.get("asset_type") match {
-      case Some("COG") => ()
-      case Some("Raster tile cache") =>
-        return rasterTileCacheAdd(ex, dataset, version, ver, obj)
-      case Some("Static vector tile cache") =>
-        return vectorTileCacheAdd(ex, dataset, version, ver, obj)
-      case other =>
-        return respond(ex, 501, "application/json", Sinks.jsendError(
-          "Not implemented for asset type " + other.getOrElse("(missing)")))
-    }
+    writeGate(ex)
+    val ver = versionOf(dataset, version)
+    val obj = parseBody(bodyOf(ex))
     val co = obj.get("creation_options") match {
       case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
       case _ => Map.empty[String, Any]
     }
+    obj.get("asset_type") match {
+      case Some(cat.AssetType.Cog) => cogAdd(ex, dataset, version, ver, co)
+      case Some(cat.AssetType.RasterTileCache) => rasterTileCacheAdd(ex, dataset, version, ver, co)
+      case Some(cat.AssetType.StaticVectorTileCache) =>
+        vectorTileCacheAdd(ex, dataset, version, ver, co)
+      case other =>
+        throw Reject(501, "Not implemented for asset type " + other.getOrElse("(missing)"))
+    }
+  }
+
+  private def cogAdd(ex: HttpExchange, dataset: String, version: String,
+                     ver: cat.Version, co: Map[String, Any]): Unit = {
     val resampling = co.getOrElse("resampling", "average").toString
     if (resampling != "average")
-      return respond(ex, 501, "application/json", Sinks.jsendError(
-        s"Unsupported resampling method $resampling (average only)"))
+      throw Reject(501, s"Unsupported resampling method $resampling (average only)")
     val blockSize =
       try co.get("block_size").map(_.toString.toDouble.toInt).getOrElse(512)
       catch { case _: NumberFormatException =>
-        return respond(ex, 422, "application/json", Sinks.jsendError(
-          "block_size must be a positive multiple of 16")) }
+        throw Reject(422, "block_size must be a positive multiple of 16") }
     if (blockSize <= 0 || blockSize % 16 != 0)
-      return respond(ex, 422, "application/json", Sinks.jsendError(
-        "block_size must be a positive multiple of 16"))
+      throw Reject(422, "block_size must be a positive multiple of 16")
     val implementation = co.getOrElse("implementation", "default").toString
-    val srcId = co.get("source_asset_id") match {
-      case Some(s: String) => s
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("source_asset_id is required"))
-    }
-    // "Must be an asset of the same version"
-    val source = ver.assets.find(_.assetId == srcId) match {
-      case Some(a) if a.assetType == cat.AssetType.RasterTileSet => a
-      case Some(_) => return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Source asset $srcId is not a raster tile set"))
-      case None => return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Source asset $srcId is not an asset of $dataset.$version"))
-    }
-    val assetId = s"$dataset-$version-cog-$implementation"
+    val source = sourceTileSet(dataset, version, ver, co)
     val outDir = java.nio.file.Paths.get(
       s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_${version}_exports")
     val outPath = outDir.resolve(s"cog_$implementation.tif")
-    // reserve the asset record SYNCHRONOUSLY (status pending, the
-    // reference's asset-row-before-batch-job shape) — the check and
-    // the append must share the lock or two quick identical POSTs
-    // both pass and duplicate the record
-    val reserved = catalogLock.synchronized {
-      // a FAILED record is re-reservable — otherwise one transient
-      // build error would 409 every retry until a manual DELETE
+    val asset = cat.Asset(s"$dataset-$version-cog-$implementation", cat.AssetType.Cog,
+      outPath.toString, isDefault = false,
+      creationOptions = Map(
+        "source_asset_id" -> source.assetId,
+        "block_size" -> blockSize.toString,
+        "resampling" -> resampling,
+        "implementation" -> implementation),
+      status = "pending")
+    addAsset(ex, dataset, version, asset, "cogify", s"cogify_$implementation") {
+      val g = graft.raster.DataEnvironment.gridOf(source.creationOptions)
+      val band = source.creationOptions.getOrElse("band",
+        s"px_${source.creationOptions.getOrElse("pixel_meaning", "value")}")
+      graft.raster.TileLake.ensureLake(spark, source.assetUri)
+      java.nio.file.Files.createDirectories(outDir)
+      // distributed mosaic: executors assemble + encode TIFF
+      // blocks, the driver only streams compressed bytes — never a
+      // full-lake collect ([[graft.raster.Cog]]); absent tiles fill
+      // with the asset's declared no_data (0 when none declared)
+      val nd = source.creationOptions.get("no_data")
+        .map(_.toString.toDouble).getOrElse(0.0)
+      val nTiles = graft.raster.Cog.buildFromLake(
+        spark, source.assetUri, band, g, blockSize, outPath, noData = nd)
+      (s"$outPath ($nTiles tiles, block $blockSize)",
+        s"""{"asset_id":"${asset.assetId}","status":"saved"}""")
+    }
+  }
+
+  /** The raster tile set of the version named by the creation option
+    * `source_asset_id` ("Must be an asset of the same version"). */
+  private def sourceTileSet(dataset: String, version: String, ver: cat.Version,
+                            co: Map[String, Any]): cat.Asset = {
+    val srcId = co.get("source_asset_id") match {
+      case Some(s: String) => s
+      case _ => throw Reject(422, "source_asset_id is required")
+    }
+    ver.assets.find(_.assetId == srcId) match {
+      case Some(a) if a.assetType == cat.AssetType.RasterTileSet => a
+      case Some(_) => throw Reject(400, s"Source asset $srcId is not a raster tile set")
+      case None => throw Reject(400, s"Source asset $srcId is not an asset of $dataset.$version")
+    }
+  }
+
+  /** Reserve `asset`'s record, build it in a background job and answer
+    * 202 with the job id. The record is reserved SYNCHRONOUSLY (status
+    * pending, the reference's asset-row-before-batch-job shape): the
+    * check and the append share the lock, or two quick identical POSTs
+    * both pass and duplicate the record. A FAILED record is
+    * re-reservable — otherwise one transient build error would 409
+    * every retry until a manual DELETE. When `build` returns (task
+    * detail, job result) the asset turns "saved" and gets a one-entry
+    * task record `task`; when it throws the asset turns "failed". */
+  private def addAsset(ex: HttpExchange, dataset: String, version: String,
+                       asset: cat.Asset, task: String, taskKey: String)
+                      (build: => (String, String)): Unit = {
+    val assetId = asset.assetId
+    def setStatus(status: String): Unit = catalogLock.synchronized {
+      catalog = catalog.withAssetStatus(dataset, version, assetId, status)
+    }
+    catalogLock.synchronized {
       findAsset(assetId) match {
         case Some((_, prior)) if prior.status == "failed" =>
           catalog = catalog.withoutAsset(dataset, version, assetId)
         case _ => ()
       }
-      if (findAsset(assetId).isDefined) false
-      else {
-        catalog = catalog.withVersionPatched(dataset, version, v =>
-          v.copy(assets = v.assets :+ cat.Asset(assetId, cat.AssetType.Cog,
-            outPath.toString, isDefault = false,
-            creationOptions = Map(
-              "source_asset_id" -> srcId,
-              "block_size" -> blockSize.toString,
-              "resampling" -> resampling,
-              "implementation" -> implementation),
-            status = "pending")))
-        true
-      }
+      if (findAsset(assetId).isDefined)
+        throw Reject(409, s"Asset $assetId already exists (choose another implementation)")
+      catalog = catalog.withVersionPatched(dataset, version, v =>
+        v.copy(assets = v.assets :+ asset))
     }
-    if (!reserved)
-      return respond(ex, 409, "application/json", Sinks.jsendError(
-        s"Asset $assetId already exists (choose another implementation)"))
     val jobId = jobRegistry.submit { () =>
       try {
-        val g = graft.raster.DataEnvironment.gridOf(source.creationOptions)
-        val band = source.creationOptions.getOrElse("band",
-          s"px_${source.creationOptions.getOrElse("pixel_meaning", "value")}")
-        graft.raster.TileLake.ensureLake(spark, source.assetUri)
-        java.nio.file.Files.createDirectories(outDir)
-        // distributed mosaic: executors assemble + encode TIFF
-        // blocks, the driver only streams compressed bytes — never a
-        // full-lake collect ([[graft.raster.Cog]]); absent tiles fill
-        // with the asset's declared no_data (0 when none declared)
-        val nd = source.creationOptions.get("no_data")
-          .map(_.toString.toDouble).getOrElse(0.0)
-        val nTiles = graft.raster.Cog.buildFromLake(
-          spark, source.assetUri, band, g, blockSize, outPath, noData = nd)
-        catalogLock.synchronized {
-          catalog = catalog.withAssetStatus(dataset, version, assetId, "saved")
-        }
-        val tid = graft.geo.GeoExpressions.Uuid5.of("oid",
-          s"task:$dataset/$version/cogify_$implementation")
+        val (detail, result) = build
+        setStatus("saved")
+        val tid = graft.geo.GeoExpressions.Uuid5.of("oid", s"task:$dataset/$version/$taskKey")
         taskRecords.put(tid, TaskRec(tid, assetId, Seq(
-          graft.etl.VersionCreation.ChangeLog("cogify", "success",
-            s"$outPath ($nTiles tiles, block $blockSize)"))))
-        s"""{"asset_id":"$assetId","status":"saved"}"""
+          graft.etl.VersionCreation.ChangeLog(task, "success", detail))))
+        result
       } catch {
         case e: Throwable =>
-          catalogLock.synchronized {
-            catalog = catalog.withAssetStatus(dataset, version, assetId, "failed")
-          }
+          setStatus("failed")
           throw e
       }
     }
     respond(ex, 202, "application/json",
-      s"""{"data":{"asset_id":"$assetId","dataset":"$dataset","version":"$version","asset_type":"COG","status":"pending","job_id":"$jobId"},"status":"success"}""")
+      s"""{"data":{"asset_id":"$assetId","dataset":"$dataset","version":"$version","asset_type":"${asset.assetType}","status":"pending","job_id":"$jobId"},"status":"success"}""")
   }
 
   /** POST asset_type "Raster tile cache"
@@ -1961,101 +1734,48 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * PNG encode at the reducer). Tiles serve from
     * `GET /{dataset}/{version}/{implementation}/{z}/{x}/{y}.png` —
     * the tile-cache URL shape. */
-  private def rasterTileCacheAdd(ex: HttpExchange, dataset: String,
-                                 version: String, ver: cat.Version,
-                                 obj: Map[String, Any]): Unit = {
-    val co = obj.get("creation_options") match {
-      case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
-      case _ => Map.empty[String, Any]
-    }
+  private def rasterTileCacheAdd(ex: HttpExchange, dataset: String, version: String,
+                                 ver: cat.Version, co: Map[String, Any]): Unit = {
     val implementation = co.getOrElse("implementation", "default").toString
-    val maxZoom = num422(ex, "max_static_zoom",
-      co.get("max_static_zoom").map(_.toString.toDouble.toInt).getOrElse(9)).getOrElse(return)
+    val maxZoom = number("max_static_zoom",
+      co.get("max_static_zoom").map(_.toString.toDouble.toInt).getOrElse(9))
     if (maxZoom < 0 || maxZoom > 22)
-      return respond(ex, 422, "application/json",
-        Sinks.jsendError("max_static_zoom must be in 0..22"))
+      throw Reject(422, "max_static_zoom must be in 0..22")
     val resampling = co.getOrElse("resampling", "nearest").toString
     if (resampling != "nearest")
-      return respond(ex, 501, "application/json", Sinks.jsendError(
-        s"Unsupported resampling method $resampling (nearest only)"))
+      throw Reject(501, s"Unsupported resampling method $resampling (nearest only)")
     val sym = co.get("symbology") match {
       case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("symbology is required"))
+      case _ => throw Reject(422, "symbology is required")
     }
     val cmap =
       try graft.raster.TileCache.Colormap.parse(sym)
       catch { case e: IllegalArgumentException =>
-        return respond(ex, 422, "application/json",
-          Sinks.jsendError(Option(e.getMessage).getOrElse("Invalid symbology"))) }
-    val srcId = co.get("source_asset_id") match {
-      case Some(s: String) => s
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("source_asset_id is required"))
-    }
-    val source = ver.assets.find(_.assetId == srcId) match {
-      case Some(a) if a.assetType == cat.AssetType.RasterTileSet => a
-      case Some(_) => return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Source asset $srcId is not a raster tile set"))
-      case None => return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Source asset $srcId is not an asset of $dataset.$version"))
-    }
-    val assetId = s"$dataset-$version-tilecache-$implementation"
+        throw Reject(422, Option(e.getMessage).getOrElse("Invalid symbology")) }
+    val source = sourceTileSet(dataset, version, ver, co)
     val outDir = java.nio.file.Paths.get(
       s"${sys.props("java.io.tmpdir")}/graft_versions/" +
         s"${dataset}_${version}_tilecache/$implementation")
-    val reserved = catalogLock.synchronized {
-      findAsset(assetId) match {
-        case Some((_, prior)) if prior.status == "failed" =>
-          catalog = catalog.withoutAsset(dataset, version, assetId)
-        case _ => ()
-      }
-      if (findAsset(assetId).isDefined) false
-      else {
-        catalog = catalog.withVersionPatched(dataset, version, v =>
-          v.copy(assets = v.assets :+ cat.Asset(assetId,
-            cat.AssetType.RasterTileCache, outDir.toString, isDefault = false,
-            creationOptions = Map(
-              "source_asset_id" -> srcId,
-              "implementation" -> implementation,
-              "resampling" -> resampling,
-              "min_zoom" -> "0",
-              "max_static_zoom" -> maxZoom.toString),
-            status = "pending")))
-        true
-      }
+    val asset = cat.Asset(s"$dataset-$version-tilecache-$implementation",
+      cat.AssetType.RasterTileCache, outDir.toString, isDefault = false,
+      creationOptions = Map(
+        "source_asset_id" -> source.assetId,
+        "implementation" -> implementation,
+        "resampling" -> resampling,
+        "min_zoom" -> "0",
+        "max_static_zoom" -> maxZoom.toString),
+      status = "pending")
+    addAsset(ex, dataset, version, asset, "tile_cache", s"tilecache_$implementation") {
+      val g = graft.raster.DataEnvironment.gridOf(source.creationOptions)
+      val band = source.creationOptions.getOrElse("band",
+        s"px_${source.creationOptions.getOrElse("pixel_meaning", "value")}")
+      val noData = source.creationOptions.get("no_data").map(_.toDouble)
+      graft.raster.TileLake.ensureLake(spark, source.assetUri)
+      val n = graft.raster.TileCache.build(spark, source.assetUri, band, g,
+        cmap, noData, maxZoom, outDir.toString)
+      (s"$outDir ($n tiles, zooms 0..$maxZoom)",
+        s"""{"asset_id":"${asset.assetId}","status":"saved","tiles":$n}""")
     }
-    if (!reserved)
-      return respond(ex, 409, "application/json", Sinks.jsendError(
-        s"Asset $assetId already exists (choose another implementation)"))
-    val jobId = jobRegistry.submit { () =>
-      try {
-        val g = graft.raster.DataEnvironment.gridOf(source.creationOptions)
-        val band = source.creationOptions.getOrElse("band",
-          s"px_${source.creationOptions.getOrElse("pixel_meaning", "value")}")
-        val noData = source.creationOptions.get("no_data").map(_.toDouble)
-        graft.raster.TileLake.ensureLake(spark, source.assetUri)
-        val n = graft.raster.TileCache.build(spark, source.assetUri, band, g,
-          cmap, noData, maxZoom, outDir.toString)
-        catalogLock.synchronized {
-          catalog = catalog.withAssetStatus(dataset, version, assetId, "saved")
-        }
-        val tid = graft.geo.GeoExpressions.Uuid5.of("oid",
-          s"task:$dataset/$version/tilecache_$implementation")
-        taskRecords.put(tid, TaskRec(tid, assetId, Seq(
-          graft.etl.VersionCreation.ChangeLog("tile_cache", "success",
-            s"$outDir ($n tiles, zooms 0..$maxZoom)"))))
-        s"""{"asset_id":"$assetId","status":"saved","tiles":$n}"""
-      } catch {
-        case e: Throwable =>
-          catalogLock.synchronized {
-            catalog = catalog.withAssetStatus(dataset, version, assetId, "failed")
-          }
-          throw e
-      }
-    }
-    respond(ex, 202, "application/json",
-      s"""{"data":{"asset_id":"$assetId","dataset":"$dataset","version":"$version","asset_type":"Raster tile cache","status":"pending","job_id":"$jobId"},"status":"success"}""")
   }
 
   /** POST asset_type "Static vector tile cache"
@@ -2066,27 +1786,18 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * quantize + MVT encode in one distributed pass) and writes the
     * Mapbox-GL `root.json` from the posted `layer_style`. Tiles serve
     * from `GET /{dataset}/{version}/{implementation}/{z}/{x}/{y}.pbf`. */
-  private def vectorTileCacheAdd(ex: HttpExchange, dataset: String,
-                                 version: String, ver: cat.Version,
-                                 obj: Map[String, Any]): Unit = {
-    val co = obj.get("creation_options") match {
-      case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
-      case _ => Map.empty[String, Any]
-    }
+  private def vectorTileCacheAdd(ex: HttpExchange, dataset: String, version: String,
+                                 ver: cat.Version, co: Map[String, Any]): Unit = {
     val implementation = co.getOrElse("implementation", "default").toString
-    val minZoom = num422(ex, "min_zoom",
-      co.get("min_zoom").map(_.toString.toDouble.toInt).getOrElse(0)).getOrElse(return)
-    val maxZoom = num422(ex, "max_zoom",
-      co.get("max_zoom").map(_.toString.toDouble.toInt).getOrElse(9)).getOrElse(return)
+    val minZoom = number("min_zoom",
+      co.get("min_zoom").map(_.toString.toDouble.toInt).getOrElse(0))
+    val maxZoom = number("max_zoom",
+      co.get("max_zoom").map(_.toString.toDouble.toInt).getOrElse(9))
     if (minZoom < 0 || maxZoom > 22 || maxZoom < minZoom)
-      return respond(ex, 422, "application/json", Sinks.jsendError(
-        "`max_zoom` must be equal or larger than `min_zoom` (0..22)"))
+      throw Reject(422, "`max_zoom` must be equal or larger than `min_zoom` (0..22)")
     val source = ver.assets.find(a =>
-      a.isDefault && a.assetType == cat.AssetType.GeoDatabaseTable) match {
-      case Some(a) => a
-      case None => return respond(ex, 400, "application/json", Sinks.jsendError(
-        s"$dataset.$version is not a vector version (no geo database table)"))
-    }
+      a.isDefault && a.assetType == cat.AssetType.GeoDatabaseTable).getOrElse(
+      throw Reject(400, s"$dataset.$version is not a vector version (no geo database table)"))
     val fields: Seq[String] = co.get("field_attributes") match {
       case Some(xs: Seq[_]) => xs.map(_.toString)
       case _ =>
@@ -2100,67 +1811,31 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       case Some(xs: Seq[_]) => graft.geo.Json.write(xs.toList)
       case _ => "[]"
     }
-    val assetId = s"$dataset-$version-vectortilecache-$implementation"
     val outDir = java.nio.file.Paths.get(
       s"${sys.props("java.io.tmpdir")}/graft_versions/" +
         s"${dataset}_${version}_vectortiles/$implementation")
-    val reserved = catalogLock.synchronized {
-      findAsset(assetId) match {
-        case Some((_, prior)) if prior.status == "failed" =>
-          catalog = catalog.withoutAsset(dataset, version, assetId)
-        case _ => ()
-      }
-      if (findAsset(assetId).isDefined) false
-      else {
-        catalog = catalog.withVersionPatched(dataset, version, v =>
-          v.copy(assets = v.assets :+ cat.Asset(assetId,
-            cat.AssetType.StaticVectorTileCache, outDir.toString,
-            isDefault = false,
-            creationOptions = Map(
-              "implementation" -> implementation,
-              "min_zoom" -> minZoom.toString,
-              "max_zoom" -> maxZoom.toString),
-            status = "pending")))
-        true
-      }
+    val asset = cat.Asset(s"$dataset-$version-vectortilecache-$implementation",
+      cat.AssetType.StaticVectorTileCache, outDir.toString, isDefault = false,
+      creationOptions = Map(
+        "implementation" -> implementation,
+        "min_zoom" -> minZoom.toString,
+        "max_zoom" -> maxZoom.toString),
+      status = "pending")
+    addAsset(ex, dataset, version, asset, "vector_tile_cache", s"vectortiles_$implementation") {
+      val rows = spark.read.parquet(source.assetUri)
+      val n = graft.geo.VectorTileCache.build(spark, rows, dataset,
+        fields, minZoom, maxZoom, outDir.toString)
+      // Mapbox-GL root.json (tile-cache convention): the posted
+      // layer styles over a vector source at the serving URL shape
+      val rootJson =
+        s"""{"version":8,"sources":{${graft.geo.Json.write(dataset)}:{""" +
+          s""""type":"vector","tiles":[${graft.geo.Json.write(
+            s"/$dataset/$version/$implementation/{z}/{x}/{y}.pbf")}],""" +
+          s""""minzoom":$minZoom,"maxzoom":$maxZoom}},"layers":$layerStyle}"""
+      java.nio.file.Files.writeString(outDir.resolve("root.json"), rootJson)
+      (s"$outDir ($n tiles, zooms $minZoom..$maxZoom, fields ${fields.mkString(",")})",
+        s"""{"asset_id":"${asset.assetId}","status":"saved","tiles":$n}""")
     }
-    if (!reserved)
-      return respond(ex, 409, "application/json", Sinks.jsendError(
-        s"Asset $assetId already exists (choose another implementation)"))
-    val jobId = jobRegistry.submit { () =>
-      try {
-        val rows = spark.read.parquet(source.assetUri)
-        val n = graft.geo.VectorTileCache.build(spark, rows, dataset,
-          fields, minZoom, maxZoom, outDir.toString)
-        // Mapbox-GL root.json (tile-cache convention): the posted
-        // layer styles over a vector source at the serving URL shape
-        val rootJson =
-          s"""{"version":8,"sources":{${graft.geo.Json.write(dataset)}:{""" +
-            s""""type":"vector","tiles":[${graft.geo.Json.write(
-              s"/$dataset/$version/$implementation/{z}/{x}/{y}.pbf")}],""" +
-            s""""minzoom":$minZoom,"maxzoom":$maxZoom}},"layers":$layerStyle}"""
-        java.nio.file.Files.writeString(
-          outDir.resolve("root.json"), rootJson)
-        catalogLock.synchronized {
-          catalog = catalog.withAssetStatus(dataset, version, assetId, "saved")
-        }
-        val tid = graft.geo.GeoExpressions.Uuid5.of("oid",
-          s"task:$dataset/$version/vectortiles_$implementation")
-        taskRecords.put(tid, TaskRec(tid, assetId, Seq(
-          graft.etl.VersionCreation.ChangeLog("vector_tile_cache", "success",
-            s"$outDir ($n tiles, zooms $minZoom..$maxZoom, " +
-              s"fields ${fields.mkString(",")})"))))
-        s"""{"asset_id":"$assetId","status":"saved","tiles":$n}"""
-      } catch {
-        case e: Throwable =>
-          catalogLock.synchronized {
-            catalog = catalog.withAssetStatus(dataset, version, assetId, "failed")
-          }
-          throw e
-      }
-    }
-    respond(ex, 202, "application/json",
-      s"""{"data":{"asset_id":"$assetId","dataset":"$dataset","version":"$version","asset_type":"Static vector tile cache","status":"pending","job_id":"$jobId"},"status":"success"}""")
   }
 
   /** GET /{dataset}/{version}/{implementation}/{z}/{x}/{y}.{png|pbf}
@@ -2172,83 +1847,68 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     val wanted =
       if (ext == "png") cat.AssetType.RasterTileCache
       else cat.AssetType.StaticVectorTileCache
-    val asset = catalog.version(dataset, version).toSeq.flatMap(_.assets)
-      .find(a => a.assetType == wanted &&
+    val a = savedTileCache(dataset, version, impl, wanted).getOrElse(
+      throw Reject(404, s"No $wanted $impl for $dataset.$version"))
+    val f = java.nio.file.Paths.get(a.assetUri, z, x, s"$y.$ext")
+    if (!java.nio.file.Files.exists(f)) throw Reject(404, "Tile not found")
+    val bytes = java.nio.file.Files.readAllBytes(f)
+    val ctype =
+      if (ext == "png") "image/png" else "application/x-protobuf"
+    ex.getResponseHeaders.set("Content-Type", ctype)
+    ex.sendResponseHeaders(200, bytes.length.toLong)
+    ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  private def savedTileCache(dataset: String, version: String, impl: String,
+                             assetType: String): Option[cat.Asset] =
+    catalog.version(dataset, version).toSeq.flatMap(_.assets)
+      .find(a => a.assetType == assetType &&
         a.creationOptions.get("implementation").contains(impl) &&
         a.status == "saved")
-    asset match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"No $wanted $impl for $dataset.$version"))
-      case Some(a) =>
-        val f = java.nio.file.Paths.get(a.assetUri, z, x, s"$y.$ext")
-        if (!java.nio.file.Files.exists(f))
-          respond(ex, 404, "application/json", Sinks.jsendError("Tile not found"))
-        else {
-          val bytes = java.nio.file.Files.readAllBytes(f)
-          val ctype =
-            if (ext == "png") "image/png" else "application/x-protobuf"
-          ex.getResponseHeaders.set("Content-Type", ctype)
-          ex.sendResponseHeaders(200, bytes.length.toLong)
-          ex.getResponseBody.write(bytes)
-          ex.close()
-        }
-    }
-  }
 
   /** GET /{dataset}/{version}/{implementation}/root.json — the
     * Mapbox-GL style document the vector tile cache builder writes
     * (tile-cache convention: the style lives next to the tiles). */
   private def serveTileRoot(ex: HttpExchange, dataset: String,
                             version: String, impl: String): Unit = {
-    val asset = catalog.version(dataset, version).toSeq.flatMap(_.assets)
-      .find(a => a.assetType == cat.AssetType.StaticVectorTileCache &&
-        a.creationOptions.get("implementation").contains(impl) &&
-        a.status == "saved")
-    asset match {
-      case None => respond(ex, 404, "application/json", Sinks.jsendError(
-        s"No static vector tile cache $impl for $dataset.$version"))
-      case Some(a) =>
-        val f = java.nio.file.Paths.get(a.assetUri, "root.json")
-        if (!java.nio.file.Files.exists(f))
-          respond(ex, 404, "application/json", Sinks.jsendError("root.json not found"))
-        else respond(ex, 200, "application/json",
-          java.nio.file.Files.readString(f))
-    }
+    val a = savedTileCache(dataset, version, impl, cat.AssetType.StaticVectorTileCache)
+      .getOrElse(throw Reject(404, s"No static vector tile cache $impl for $dataset.$version"))
+    val f = java.nio.file.Paths.get(a.assetUri, "root.json")
+    if (!java.nio.file.Files.exists(f)) throw Reject(404, "root.json not found")
+    respond(ex, 200, "application/json", java.nio.file.Files.readString(f))
   }
 
-  private def versionAssets(ex: HttpExchange, dataset: String, version: String): Unit =
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) =>
-        val items = v.assets.map { a =>
-          s"""{"asset_id":"${a.assetId}","asset_type":${graft.geo.Json.write(a.assetType)},""" +
-            s""""asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},""" +
-            s""""status":"${a.status}"}"""
-        }.mkString(",")
-        respond(ex, 200, "application/json", s"""{"data":[$items],"status":"success"}""")
-    }
+  /** GET /dataset/{d}/{v}/assets (`versions.py` + `asset.py` asset
+    * listing): every asset record of the version — the default
+    * database table plus derived exports. */
+  private def versionAssets(ex: HttpExchange, dataset: String, version: String): Unit = {
+    val items = versionOf(dataset, version).assets.map { a =>
+      s"""{"asset_id":"${a.assetId}","asset_type":${graft.geo.Json.write(a.assetType)},""" +
+        s""""asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},""" +
+        s""""status":"${a.status}"}"""
+    }.mkString(",")
+    respond(ex, 200, "application/json", s"""{"data":[$items],"status":"success"}""")
+  }
 
   /** GET /dataset/{d}/{v}/creation_options (`versions.py:333-347`):
     * the default asset's creation options — the settings `/append`
     * re-runs loads with. */
-  private def creationOptions(ex: HttpExchange, dataset: String, version: String): Unit =
-    versionOpts.get((dataset, realVersion(dataset, version))) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version has no creation options"))
-      case Some(o) =>
-        val uris = o.sourceUris.map(graft.geo.Json.write).mkString("[", ",", "]")
-        respond(ex, 200, "application/json",
-          s"""{"data":{"source_uri":$uris,"source_type":"${o.sourceType}","delimiter":${graft.geo.Json.write(o.delimiter)},"has_header":${o.header},"latest":${o.latest},"pixel_meaning":"${o.pixelMeaning}"},"status":"success"}""")
-    }
+  private def creationOptions(ex: HttpExchange, dataset: String, version: String): Unit = {
+    val o = versionOpts.getOrElse((dataset, realVersion(dataset, version)),
+      throw Reject(404, s"Dataset version $dataset.$version has no creation options"))
+    val uris = o.sourceUris.map(graft.geo.Json.write).mkString("[", ",", "]")
+    respond(ex, 200, "application/json",
+      s"""{"data":{"source_uri":$uris,"source_type":"${o.sourceType}","delimiter":${graft.geo.Json.write(o.delimiter)},"has_header":${o.header},"latest":${o.latest},"pixel_meaning":"${o.pixelMeaning}"},"status":"success"}""")
+  }
+
 
   /** GET /dataset/{d}/{v}/change_log (`versions.py:317-330`): the
     * creation DAG's task log on its own. */
   private def versionChangeLog(ex: HttpExchange, dataset: String, version: String): Unit = {
     val record = versionRecords.get((dataset, realVersion(dataset, version)))
     if (record.isEmpty && catalog.version(dataset, version).isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
+      throw Reject(404, s"Dataset version $dataset.$version not found")
     val log = record.map(_._2).getOrElse(Nil).map { c =>
       s"""{"task":"${c.task}","status":"${c.status}","detail":${graft.geo.Json.write(c.detail)}}"""
     }.mkString(",")
@@ -2260,8 +1920,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     val record = versionRecords.get((dataset, realVersion(dataset, version)))
     val inCatalog = catalog.version(dataset, version)
     if (record.isEmpty && inCatalog.isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
+      throw Reject(404, s"Dataset version $dataset.$version not found")
     val status = record.map(_._1).getOrElse("saved")
     val log = record.map(_._2).getOrElse(Nil).map { c =>
       s"""{"task":"${c.task}","status":"${c.status}","detail":${graft.geo.Json.write(c.detail)}}"""
@@ -2308,39 +1967,34 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     val sizeP = params.get("page[size]")
     val pageP = params.get("page[number]")
     if (sizeP.isEmpty && pageP.isEmpty)
-      return respond(ex, 200, "application/json",
+      respond(ex, 200, "application/json",
         s"""{"data":[${all.map(item).mkString(",")}],"status":"success"}""")
-    val size = num422(ex, "page[size]",
-      sizeP.map(_.toInt).getOrElse(10)).getOrElse(return)
-    val page = num422(ex, "page[number]",
-      pageP.map(_.toInt).getOrElse(1)).getOrElse(return)
-    if (size <= 0 || page <= 0)
-      return respond(ex, 422, "application/json",
-        Sinks.jsendError("page[size] and page[number] must be positive"))
-    val totalPages = math.max(1, (all.length + size - 1) / size)
-    val slice = all.slice((page - 1) * size, (page - 1) * size + size)
-    def link(p: Int) = s"/datasets?page[number]=$p&page[size]=$size"
-    val links =
-      s"""{"self":"${link(page)}","first":"${link(1)}","last":"${link(totalPages)}",""" +
-        s""""prev":"${if (page > 1) link(page - 1) else ""}",""" +
-        s""""next":"${if (page < totalPages) link(page + 1) else ""}"}"""
-    val meta = s"""{"size":$size,"total_items":${all.length},"total_pages":$totalPages}"""
-    respond(ex, 200, "application/json",
-      s"""{"data":[${slice.map(item).mkString(",")}],"links":$links,"meta":$meta,"status":"success"}""")
+    else {
+      val size = number("page[size]", sizeP.map(_.toInt).getOrElse(10))
+      val page = number("page[number]", pageP.map(_.toInt).getOrElse(1))
+      if (size <= 0 || page <= 0)
+        throw Reject(422, "page[size] and page[number] must be positive")
+      val totalPages = math.max(1, (all.length + size - 1) / size)
+      val slice = all.slice((page - 1) * size, (page - 1) * size + size)
+      def link(p: Int) = s"/datasets?page[number]=$p&page[size]=$size"
+      val links =
+        s"""{"self":"${link(page)}","first":"${link(1)}","last":"${link(totalPages)}",""" +
+          s""""prev":"${if (page > 1) link(page - 1) else ""}",""" +
+          s""""next":"${if (page < totalPages) link(page + 1) else ""}"}"""
+      val meta = s"""{"size":$size,"total_items":${all.length},"total_pages":$totalPages}"""
+      respond(ex, 200, "application/json",
+        s"""{"data":[${slice.map(item).mkString(",")}],"links":$links,"meta":$meta,"status":"success"}""")
+    }
   }
 
   /** PUT /dataset/{d} (`dataset.py:84-116`): create the metadata-only
     * dataset record; 201, or 400 when the record already exists
     * (reference RecordAlreadyExistsError). Requires a manager/admin. */
   private def datasetPut(ex: HttpExchange, dataset: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
+    writeGate(ex)
     if (catalog.dataset(dataset).isDefined || builtinDatasets.contains(dataset))
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Dataset with name $dataset already exists"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val meta = if (body.isBlank) Map.empty[String, String]
-               else metadataOf(parseBody422(ex, body).getOrElse(return))
+      throw Reject(400, s"Dataset with name $dataset already exists")
+    val meta = metadataOf(bodyObject(ex))
     val created = catalogLock.synchronized {
       catalog = catalog.withDataset(dataset, meta)
       catalog.dataset(dataset).get
@@ -2351,23 +2005,17 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
   /** GET /dataset/{d} (`dataset.py:61-75`). */
   private def datasetGet(ex: HttpExchange, dataset: String): Unit =
-    catalog.dataset(dataset) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset $dataset not found"))
-      case Some(d) => respond(ex, 200, "application/json", datasetBody(d))
-    }
+    respond(ex, 200, "application/json", datasetBody(datasetOf(dataset)))
+
+  private def datasetOf(dataset: String): cat.Dataset =
+    catalog.dataset(dataset).getOrElse(throw Reject(404, s"Dataset $dataset not found"))
 
   /** PATCH /dataset/{d} (`dataset.py:125-148`): merge individual
     * metadata fields without touching the rest. */
   private def datasetPatch(ex: HttpExchange, dataset: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    if (catalog.dataset(dataset).isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset $dataset not found"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val patch = if (body.isBlank) Map.empty[String, String]
-                else metadataOf(parseBody422(ex, body).getOrElse(return))
+    writeGate(ex)
+    datasetOf(dataset)
+    val patch = metadataOf(bodyObject(ex))
     val updated = catalogLock.synchronized {
       catalog = catalog.withDatasetMetadata(dataset, patch)
       catalog.dataset(dataset).get
@@ -2378,32 +2026,21 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   /** DELETE /dataset/{d} (`dataset.py:157-188`): only once no versions
     * remain — 409 otherwise, word-for-word the reference detail. */
   private def datasetDelete(ex: HttpExchange, dataset: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    catalog.dataset(dataset) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset $dataset not found"))
-      case Some(d) if d.versions.nonEmpty =>
-        respond(ex, 409, "application/json", Sinks.jsendError(
-          "There are versions registered with the dataset." +
-            "Delete all related versions prior to deleting a dataset"))
-      case Some(d) =>
-        catalogLock.synchronized { catalog = catalog.withoutDataset(dataset) }
-        respond(ex, 200, "application/json", datasetBody(d))
-    }
+    writeGate(ex)
+    val d = datasetOf(dataset)
+    if (d.versions.nonEmpty)
+      throw Reject(409, "There are versions registered with the dataset." +
+        "Delete all related versions prior to deleting a dataset")
+    catalogLock.synchronized { catalog = catalog.withoutDataset(dataset) }
+    respond(ex, 200, "application/json", datasetBody(d))
   }
 
   /** PATCH /dataset/{d}/{v} (`versions.py:154-199`): update the
     * `latest` tag and/or downloadability of a version. */
   private def versionPatch(ex: HttpExchange, dataset: String, version: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
-    if (catalog.version(dataset, version).isEmpty)
-      return respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val obj = if (body.isBlank) Map.empty[String, Any]
-              else parseBody422(ex, body).getOrElse(return)
+    writeGate(ex)
+    versionOf(dataset, version)
+    val obj = bodyObject(ex)
     val isLatest = obj.get("is_latest").collect { case b: Boolean => b }
     val downloadable = obj.get("is_downloadable").collect { case b: Boolean => b }
     catalogLock.synchronized {
@@ -2422,71 +2059,55 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * are not deletable — they are the test fixture, not managed
     * assets. */
   private def versionDelete(ex: HttpExchange, dataset: String, version: String): Unit = {
-    writeGate(ex).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
+    writeGate(ex)
     if (builtinDatasets.contains(dataset))
-      return respond(ex, 409, "application/json", Sinks.jsendError(
-        s"Dataset $dataset conflicts with a pre-registered table"))
-    catalog.version(dataset, version) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Dataset version $dataset.$version not found"))
-      case Some(v) =>
-        val siblings = catalog.dataset(dataset).map(_.versions.length).getOrElse(0)
-        if (v.isLatest && siblings > 1)
-          return respond(ex, 409, "application/json", Sinks.jsendError(
-            "Deletion failed." +
-              "You can only delete a version tagged as `latest` if no other version of the same dataset exists." +
-              "Change `latest` version, or delete all other versions first."))
-        // cascade the per-asset state too: asset ids are deterministic,
-        // so a recreated version must not inherit stale metadata,
-        // field overrides, or task records
-        v.assets.foreach { a =>
-          assetMetadata.remove(a.assetId)
-          fieldMetaOverrides.keys.filter(_._1 == a.assetId)
-            .foreach(fieldMetaOverrides.remove)
-          taskRecords.values.filter(_.assetId == a.assetId)
-            .foreach(t => taskRecords.remove(t.taskId))
-        }
-        catalogLock.synchronized { catalog = catalog.withoutVersion(dataset, version) }
-        versionRecords.remove((dataset, version))
-        versionOpts.remove((dataset, version))
-        // delete_all_assets: the registered view + the version's files
-        spark.catalog.dropTempView(
-          graft.etl.VersionCreation.viewName(dataset, version))
-        val base = s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_$version"
-        for (dir <- Seq(base, base + "_exports",
-          s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${dataset}_$version")) {
-          val p = java.nio.file.Paths.get(dir)
-          if (java.nio.file.Files.exists(p)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq
-              .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
-        }
-        respond(ex, 200, "application/json",
-          s"""{"data":{"dataset":"$dataset","version":"$version","status":"deleted"},"status":"success"}""")
+      throw Reject(409, s"Dataset $dataset conflicts with a pre-registered table")
+    val v = versionOf(dataset, version)
+    val siblings = catalog.dataset(dataset).map(_.versions.length).getOrElse(0)
+    if (v.isLatest && siblings > 1)
+      throw Reject(409, "Deletion failed." +
+        "You can only delete a version tagged as `latest` if no other version of the same dataset exists." +
+        "Change `latest` version, or delete all other versions first.")
+    // cascade the per-asset state too: asset ids are deterministic,
+    // so a recreated version must not inherit stale metadata,
+    // field overrides, or task records
+    v.assets.foreach { a =>
+      assetMetadata.remove(a.assetId)
+      fieldMetaOverrides.keys.filter(_._1 == a.assetId)
+        .foreach(fieldMetaOverrides.remove)
+      taskRecords.values.filter(_.assetId == a.assetId)
+        .foreach(t => taskRecords.remove(t.taskId))
     }
+    catalogLock.synchronized { catalog = catalog.withoutVersion(dataset, version) }
+    versionRecords.remove((dataset, version))
+    versionOpts.remove((dataset, version))
+    // delete_all_assets: the registered view + the version's files
+    spark.catalog.dropTempView(
+      graft.etl.VersionCreation.viewName(dataset, version))
+    val base = s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_$version"
+    for (dir <- Seq(base, base + "_exports",
+      s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${dataset}_$version")) {
+      val p = java.nio.file.Paths.get(dir)
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p).iterator().asScala.toSeq
+          .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+    respond(ex, 200, "application/json",
+      s"""{"data":{"dataset":"$dataset","version":"$version","status":"deleted"},"status":"success"}""")
   }
 
   /** API-key creation (`POST /auth/apikey`): 201 with the new key.
     * Body: `{"domains": ["*.example.com", ...]}` (optional). */
-  private def apiKeyCreate(ex: HttpExchange): Unit = apiKeys match {
-    case None => respond(ex, 501, "application/json",
-      Sinks.jsendError("API keys are not enabled on this deployment"))
-    case Some(reg) if writeGate(ex).isDefined =>
-      val (code, body) = writeGate(ex).get
-      respond(ex, code, "application/json", body)
-    case Some(reg) =>
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      val domains =
-        if (body.isBlank) Nil
-        else parseBody422(ex, body).getOrElse(return).get("domains") match {
-          case Some(l: List[_]) => l.map(_.toString)
-          case _ => Nil
-        }
-      val id = reg.create(domains)
-      respond(ex, 201, "application/json",
-        s"""{"data":{"api_key":"$id"},"status":"success"}""")
+  private def apiKeyCreate(ex: HttpExchange): Unit = {
+    val reg = keyRegistry
+    writeGate(ex)
+    val domains = bodyObject(ex).get("domains") match {
+      case Some(l: List[_]) => l.map(_.toString)
+      case _ => Nil
+    }
+    val id = reg.create(domains)
+    respond(ex, 201, "application/json",
+      s"""{"data":{"api_key":"$id"},"status":"success"}""")
   }
 
   private def apiKeyBody(key: String, domains: Seq[String],
@@ -2497,88 +2118,69 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   }
 
   /** GET /auth/apikey/{key} (`authentication.py:106-128`). */
-  private def apiKeyGet(ex: HttpExchange, key: String): Unit = apiKeys match {
-    case None => respond(ex, 501, "application/json",
-      Sinks.jsendError("API keys are not enabled on this deployment"))
-    case Some(reg) =>
-      writeGate(ex).foreach { case (code, body) =>
-        return respond(ex, code, "application/json", body) }
-      reg.get(key) match {
-        case None => respond(ex, 404, "application/json",
-          Sinks.jsendError("The API Key does not exist."))
-        case Some((domains, expires)) => respond(ex, 200, "application/json",
-          s"""{"data":${apiKeyBody(key, domains, expires)},"status":"success"}""")
-      }
+  private def apiKeyGet(ex: HttpExchange, key: String): Unit = {
+    val reg = keyRegistry
+    writeGate(ex)
+    val (domains, expires) = reg.get(key).getOrElse(
+      throw Reject(404, "The API Key does not exist."))
+    respond(ex, 200, "application/json",
+      s"""{"data":${apiKeyBody(key, domains, expires)},"status":"success"}""")
   }
 
   /** GET /auth/apikeys (`authentication.py:131-142`). */
-  private def apiKeysList(ex: HttpExchange): Unit = apiKeys match {
-    case None => respond(ex, 501, "application/json",
-      Sinks.jsendError("API keys are not enabled on this deployment"))
-    case Some(reg) =>
-      writeGate(ex).foreach { case (code, body) =>
-        return respond(ex, code, "application/json", body) }
-      val items = reg.list.map { case (k, d, e) => apiKeyBody(k, d, e) }
-      respond(ex, 200, "application/json",
-        s"""{"data":[${items.mkString(",")}],"status":"success"}""")
+  private def apiKeysList(ex: HttpExchange): Unit = {
+    val reg = keyRegistry
+    writeGate(ex)
+    val items = reg.list.map { case (k, d, e) => apiKeyBody(k, d, e) }
+    respond(ex, 200, "application/json",
+      s"""{"data":[${items.mkString(",")}],"status":"success"}""")
   }
 
   /** GET /auth/apikey/{key}/validate (`authentication.py:145-167`):
     * admin-gated validity check with optional origin/referrer. */
-  private def apiKeyValidate(ex: HttpExchange, key: String): Unit = apiKeys match {
-    case None => respond(ex, 501, "application/json",
-      Sinks.jsendError("API keys are not enabled on this deployment"))
-    case Some(reg) =>
-      writeGate(ex).foreach { case (code, body) =>
-        return respond(ex, code, "application/json", body) }
-      if (reg.get(key).isEmpty)
-        return respond(ex, 404, "application/json",
-          Sinks.jsendError("The requested API key does not exist."))
-      val params = queryParams(ex)
-      val valid = reg.isValid(key, params.get("origin"), params.get("referrer"))
-      respond(ex, 200, "application/json",
-        s"""{"data":{"is_valid":$valid},"status":"success"}""")
+  private def apiKeyValidate(ex: HttpExchange, key: String): Unit = {
+    val reg = keyRegistry
+    writeGate(ex)
+    if (reg.get(key).isEmpty)
+      throw Reject(404, "The requested API key does not exist.")
+    val params = queryParams(ex)
+    val valid = reg.isValid(key, params.get("origin"), params.get("referrer"))
+    respond(ex, 200, "application/json",
+      s"""{"data":{"is_valid":$valid},"status":"success"}""")
   }
 
   /** DELETE /auth/apikey/{key} (`authentication.py:170-205`). */
-  private def apiKeyDelete(ex: HttpExchange, key: String): Unit = apiKeys match {
-    case None => respond(ex, 501, "application/json",
-      Sinks.jsendError("API keys are not enabled on this deployment"))
-    case Some(reg) =>
-      writeGate(ex).foreach { case (code, body) =>
-        return respond(ex, code, "application/json", body) }
-      reg.delete(key) match {
-        case None => respond(ex, 404, "application/json",
-          Sinks.jsendError("The requested API key does not exist."))
-        case Some((domains, expires)) => respond(ex, 200, "application/json",
-          s"""{"data":${apiKeyBody(key, domains, expires)},"status":"success"}""")
-      }
+  private def apiKeyDelete(ex: HttpExchange, key: String): Unit = {
+    val reg = keyRegistry
+    writeGate(ex)
+    val (domains, expires) = reg.delete(key).getOrElse(
+      throw Reject(404, "The requested API key does not exist."))
+    respond(ex, 200, "application/json",
+      s"""{"data":${apiKeyBody(key, domains, expires)},"status":"success"}""")
   }
 
-  /** OTF zonal statistics over a stored geostore AOI
-    * (`/analysis/zonal`, `analysis.py:36-93`): geostore is mandatory
-    * for the raster engine (422 without one, `queries.py:487-503`). */
+
+  /** OTF zonal statistics over a geostore AOI (`/analysis/zonal`,
+    * `analysis.py:36-93`), resolved through `geostore_origin` like
+    * every AOI route: geostore is mandatory for the raster engine (422
+    * without one, `queries.py:487-503`). */
   private def zonal(ex: HttpExchange, pathGid: Option[String] = None): Unit = {
     val params = queryParams(ex)
     val gid = pathGid.orElse(params.get("geostore_id")).getOrElse(
-      return respond(ex, 422, "application/json",
-        Sinks.jsendError("Raster analysis requires a geostore_id")))
-    geostore.get(gid) match {
-      case None => respond(ex, 404, "application/json",
-        Sinks.jsendError(s"Geostore $gid not found"))
-      case Some(gj) =>
-        val req = graft.raster.ZonalEngine.Request(
-          aoiGeoJson = gj,
-          groupBy = params.get("group_by").map(_.split(",").toSeq)
-            .getOrElse(Seq("landcover")),
-          tcdThreshold = num422(ex, "tcd_threshold",
-            params.get("tcd_threshold").map(_.toInt)).getOrElse(return))
-        val payload = withDeadline("zonal", raster = true) {
-          Sinks.toJsend(graft.raster.ZonalEngine.run(spark, req))
-        }
-        ex.getResponseHeaders.add("Cache-Control", "max-age=7200")
-        respond(ex, 200, "application/json", payload)
+      throw Reject(422, "Raster analysis requires a geostore_id"))
+    val gj = resolveGeostore(gid, params.getOrElse("geostore_origin", "gfw")).getOrElse(
+      throw Reject(404, s"Geostore $gid not found"))
+    val req = graft.raster.ZonalEngine.Request(
+      aoiGeoJson = gj,
+      groupBy = params.get("group_by").map(_.split(",").toSeq)
+        .getOrElse(Seq("landcover")),
+      tcdThreshold = number("tcd_threshold",
+        params.get("tcd_threshold").map(_.toInt)))
+    val payload = withDeadline("zonal", raster = true) {
+      Sinks.toJsend(graft.raster.ZonalEngine.run(spark, req))
     }
+    ex.getResponseHeaders.add("Cache-Control", "max-age=7200")
+    respond(ex, 200, "application/json", payload)
   }
 
   private val JobGet = "^/job/([^/]+)$".r
@@ -2590,19 +2192,16 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * the single-shuffle whole-batch plan is the r7_batch_zonal query).
     * Body: `{"feature_collection": {...}, "tcd_threshold": n?}`. */
   private def zonalBatch(ex: HttpExchange): Unit = {
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val obj = parseBody422(ex, body).getOrElse(return)
+    val obj = parseBody(bodyOf(ex))
     val fc = obj.get("feature_collection") match {
       case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Missing feature_collection in request body"))
+      case _ => throw Reject(422, "Missing feature_collection in request body")
     }
     val features = fc.getOrElse("features", List.empty).asInstanceOf[List[Any]]
     if (features.isEmpty || features.size > 100)
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError("feature_collection must contain 1-100 features"))
-    val threshold = num422(ex, "tcd_threshold",
-      obj.get("tcd_threshold").map(_.toString.toDouble.toInt)).getOrElse(return)
+      throw Reject(400, "feature_collection must contain 1-100 features")
+    val threshold = number("tcd_threshold",
+      obj.get("tcd_threshold").map(_.toString.toDouble.toInt))
     val geoms = features.map { f =>
       graft.geo.Json.write(f.asInstanceOf[Map[String, Any]]("geometry"))
     }
@@ -2635,33 +2234,28 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * or `geostore_ids`. 202 + a pollable job; the whole list runs as
     * ONE Spark job (`ZonalEngine.runSqlBatch`). */
   private def queryBatch(ex: HttpExchange, dataset: String, version: String): Unit = {
-    authGate(ex, dataset).foreach { case (code, body) =>
-      return respond(ex, code, "application/json", body) }
+    authGate(ex, dataset)
     val bytes = ex.getRequestBody.readAllBytes()
     if (bytes.length > 256 * 1024)
-      return respond(ex, 413, "application/json",
-        Sinks.jsendError("The request payload must be under 256 KB. Reference " +
-          "larger feature files with the uri field instead."))
+      throw Reject(413, "The request payload must be under 256 KB. Reference " +
+          "larger feature files with the uri field instead.")
     val body = new String(bytes, StandardCharsets.UTF_8)
     if (!catalog.version(dataset, version).exists(
       _.defaultAsset.exists(_.assetType == cat.AssetType.RasterTileSet)))
-      return respond(ex, 400, "application/json", Sinks.jsendError(
-        "Querying on lists is only available for raster tile sets."))
-    val obj = parseBody422(ex, body).getOrElse(return)
+      throw Reject(400, "Querying on lists is only available for raster tile sets.")
+    val obj = parseBody(body)
     val sql = obj.get("sql") match {
       case Some(s: String) => s
-      case _ => return respond(ex, 422, "application/json",
-        Sinks.jsendError("Missing sql in request body"))
+      case _ => throw Reject(422, "Missing sql in request body")
     }
     val idField = obj.get("id_field").map(_.toString)
     val sources = Seq("feature_collection", "uri", "geostore_ids")
       .flatMap(k => obj.get(k).map(k -> _))
+    val noSource = "Must provide valid feature collection, URI, or geostore_ids list."
     if (sources.length > 1)
-      return respond(ex, 400, "application/json", Sinks.jsendError(
-        "Must provide only one of valid feature collection, URI, or geostore_ids list."))
-    if (sources.isEmpty)
-      return respond(ex, 400, "application/json", Sinks.jsendError(
-        "Must provide valid feature collection, URI, or geostore_ids list."))
+      throw Reject(400,
+        "Must provide only one of valid feature collection, URI, or geostore_ids list.")
+    if (sources.isEmpty) throw Reject(400, noSource)
 
     def featuresOf(fc: Map[String, Any]): Seq[(String, String)] = {
       val features = fc.getOrElse("features", List.empty).asInstanceOf[List[Any]]
@@ -2681,31 +2275,28 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
           featuresOf(fc.asInstanceOf[Map[String, Any]])
         case ("uri", uri) =>
           if (!sourceAllowed(uri.toString))
-            return respond(ex, 403, "application/json", Sinks.jsendError(
-              s"Source URI outside the allowed data directories: $uri"))
+            throw Reject(403, s"Source URI outside the allowed data directories: $uri")
           val p = java.nio.file.Paths.get(
             uri.toString.stripPrefix("file://"))
           if (!java.nio.file.Files.isReadable(p))
-            return respond(ex, 400, "application/json",
-              Sinks.jsendError("Cannot access all of the source files"))
+            throw Reject(400, "Cannot access all of the source files")
           featuresOf(graft.geo.Json.parseObject(
             java.nio.file.Files.readString(p)))
         case ("geostore_ids", ids: List[_]) =>
           ids.map { id =>
             val gid = id.toString
             gid -> resolveGeostore(gid, "gfw").getOrElse(
-              return respond(ex, 404, "application/json",
-                Sinks.jsendError(s"Geostore $gid not found")))
+              throw Reject(404, s"Geostore $gid not found"))
           }
-        case _ => return respond(ex, 400, "application/json", Sinks.jsendError(
-          "Must provide valid feature collection, URI, or geostore_ids list."))
+        case _ => throw Reject(400, noSource)
       } catch {
-        case _: Exception => return respond(ex, 400, "application/json",
-          Sinks.jsendError("Could not parse feature input"))
+        // the 403/400/404 answers above keep their own status
+        case r: Reject => throw r
+        case _: Exception => throw Reject(400, "Could not parse feature input")
       }
+
     if (geoms.isEmpty || geoms.size > 100)
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError("feature list must contain 1-100 features"))
+      throw Reject(400, "feature list must contain 1-100 features")
 
     val overrides = versionOverrides(obj)
     val id = jobRegistry.submit { () =>
@@ -2760,15 +2351,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * polygon ([[graft.geo.AdminFixtures]]) — the same id the
     * per-boundary routes serve and register. */
   private def adminList(ex: HttpExchange): Unit = {
-    val params = queryParams(ex)
-    val provider = params.getOrElse("source[provider]", "gadm")
-    val version = params.getOrElse("source[version]", "3.6")
-    if (provider.isEmpty || version.isEmpty)
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError("source provider and version must be non-empty"))
-    if (provider != "gadm")
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Invalid admin boundary source $provider"))
+    adminSource(queryParams(ex))
     val rows = spark.sql(
       "SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey").collect()
     val items = rows.map { r =>
@@ -2786,6 +2369,18 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     respond(ex, 200, "application/json", s"""{"data":[$items],"status":"success"}""")
   }
 
+  /** The admin boundary source `(provider, version)` a request names;
+    * gadm is the only provider. */
+  private def adminSource(params: Map[String, String]): (String, String) = {
+    val provider = params.getOrElse("source[provider]", "gadm")
+    val version = params.getOrElse("source[version]", "3.6")
+    if (provider.isEmpty || version.isEmpty)
+      throw Reject(400, "source provider and version must be non-empty")
+    if (provider != "gadm")
+      throw Reject(400, s"Invalid admin boundary source $provider")
+    (provider, version)
+  }
+
   /** GET /geostore/admin/{country}[/{region}[/{subregion}]]
     * (`geostore.py:135-260` + `crud/geostore.py:218-330`
     * `build_gadm_geostore`/`form_admin_geostore`): the per-boundary
@@ -2800,31 +2395,22 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                             rid: Option[String], sid: Option[String]): Unit = {
     import graft.geo.{AdminFixtures, Geom, Json}
     val params = queryParams(ex)
-    val provider = params.getOrElse("source[provider]", "gadm")
-    val version = params.getOrElse("source[version]", "3.6")
-    if (provider.isEmpty || version.isEmpty)
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError("source provider and version must be non-empty"))
-    if (provider != "gadm")
-      return respond(ex, 400, "application/json",
-        Sinks.jsendError(s"Invalid admin boundary source $provider"))
-    def notFound() = respond(ex, 404, "application/json", Sinks.jsendError(
-      s"Admin boundary not found in $provider version $version"))
-    val k = cid.toIntOption.getOrElse(return notFound())
+    val (provider, version) = adminSource(params)
+    val notFound = Reject(404, s"Admin boundary not found in $provider version $version")
+    val k = cid.toIntOption.getOrElse(throw notFound)
     val country = spark.sql(s"SELECT n_name FROM nation WHERE n_nationkey = $k")
-      .collect().headOption.map(_.getString(0)).getOrElse(return notFound())
-    val r1 = rid.map(_.toIntOption.getOrElse(return notFound()))
-    val s2 = sid.map(_.toIntOption.getOrElse(return notFound()))
+      .collect().headOption.map(_.getString(0)).getOrElse(throw notFound)
+    val r1 = rid.map(_.toIntOption.getOrElse(throw notFound))
+    val s2 = sid.map(_.toIntOption.getOrElse(throw notFound))
     if (r1.exists(r => r < 1 || r > 4) || s2.exists(s => s < 1 || s > 2))
-      return notFound()
+      throw notFound
     val admLevel = s2.map(_ => 2).orElse(r1.map(_ => 1)).getOrElse(0)
     val rect = (r1, s2) match {
       case (Some(r), Some(s)) => AdminFixtures.adm2Rect(k, r, s)
       case (Some(r), None) => AdminFixtures.adm1Rect(k, r)
       case _ => AdminFixtures.adm0Rect(k)
     }
-    val simplify = num422(ex, "simplify",
-      params.get("simplify").map(_.toDouble)).getOrElse(return)
+    val simplify = number("simplify", params.get("simplify").map(_.toDouble))
     val poly0 = AdminFixtures.polygon(rect)
     // Douglas–Peucker at the requested tolerance (identity on the
     // rectangular fixtures; the threshold is echoed in `info`)
@@ -2858,18 +2444,12 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   }
 
   private def geostoreCreate(ex: HttpExchange): Unit = {
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     val geom =
-      try graft.geo.Geom.fromGeoJson(body)
+      try graft.geo.Geom.fromGeoJson(bodyOf(ex))
       catch { case scala.util.control.NonFatal(_) =>
-        return respond(ex, 422, "application/json",
-          Sinks.jsendError("Invalid GeoJSON body")) }
+        throw Reject(422, "Invalid GeoJSON body") }
     val canonical = graft.geo.Geom.toGeoJson(geom)
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(canonical.getBytes("UTF-8"))
-    val hex = md.map(b => f"$b%02x").mkString
-    val id = s"${hex.substring(0, 8)}-${hex.substring(8, 12)}-${hex.substring(12, 16)}-" +
-      s"${hex.substring(16, 20)}-${hex.substring(20)}"
+    val id = geostoreIdOf(canonical)
     geostore.put(id, canonical)
     respond(ex, 201, "application/json",
       s"""{"data":{"gfw_geostore_id":"$id"},"status":"success"}""")
@@ -2877,30 +2457,40 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
   // --------------------------------------------------------------- utils
 
-  /** Parse a JSON request body, answering 422 (the validation-error
-    * contract every write route shares) instead of letting the parse
-    * exception surface as a 500. `None` means the 422 was sent. */
-  private def parseBody422(ex: HttpExchange,
-                           body: String): Option[Map[String, Any]] =
-    try Some(graft.geo.Json.parseObject(body))
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        respond(ex, 422, "application/json",
-          Sinks.jsendError("Invalid request body"))
-        None
-    }
+  private def bodyOf(ex: HttpExchange): String =
+    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
 
-  /** A numeric parameter, answering 422 on a non-numeric value
+  /** The request body's JSON object; an empty body reads as `{}`. */
+  private def bodyObject(ex: HttpExchange): Map[String, Any] = {
+    val body = bodyOf(ex)
+    if (body.isBlank) Map.empty else parseBody(body)
+  }
+
+  /** Parse a JSON request body, rejecting it with 422 (the
+    * validation-error contract every write route shares) instead of
+    * letting the parse exception surface as a 500. */
+  private def parseBody(body: String, invalid: String = "Invalid request body"): Map[String, Any] =
+    try graft.geo.Json.parseObject(body)
+    catch { case scala.util.control.NonFatal(_) => throw Reject(422, invalid) }
+
+  /** A numeric parameter, rejected with 422 on a non-numeric value
     * instead of a NumberFormatException 500. */
-  private def num422[T](ex: HttpExchange, name: String,
-                        parse: => T): Option[T] =
-    try Some(parse)
+  private def number[T](name: String, parse: => T): T =
+    try parse
     catch {
       case _: NumberFormatException | _: ClassCastException =>
-        respond(ex, 422, "application/json",
-          Sinks.jsendError(s"$name must be a number"))
-        None
+        throw Reject(422, s"$name must be a number")
     }
+
+  private def versionOf(dataset: String, version: String): cat.Version =
+    catalog.version(dataset, version).getOrElse(
+      throw Reject(404, s"Dataset version $dataset.$version not found"))
+
+  private def assetOf(id: String): (cat.Version, cat.Asset) =
+    findAsset(id).getOrElse(throw Reject(404, s"Asset $id not found"))
+
+  private def keyRegistry: ApiKeys =
+    apiKeys.getOrElse(throw Reject(501, "API keys are not enabled on this deployment"))
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).map { q =>
@@ -2924,6 +2514,11 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
 object ApiServer {
   System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** A refused request. Handlers throw it; `handle` renders it as the
+    * JSEND error envelope with `code` as the HTTP status. */
+  private final case class Reject(code: Int, message: String)
+    extends RuntimeException(message) with scala.util.control.NoStackTrace
 
   /** Calling this runs the initializer above. */
   private def noDelay(): Unit = ()

@@ -186,15 +186,15 @@ object MediaLake {
         MultimodalQueries.afpOf(row.getAs[Array[Byte]]("media")))
     }
 
-  /** Idempotent build of the AUDIO lake: one 16-bit PCM mono WAV per
-    * document ([[Wav.encode]]), same memoization contract as the
-    * image lake. m4 decodes these with the full RIFF chunk walk. */
   /** Source fingerprint folded into the lake paths (the shared
     * [[graft.Tables.sourceTag]] scheme — see its doc for the
     * staleness hazard). */
   private def docsTag(sfDir: String): String =
     s"${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}_${Tables.sourceTag(s"$sfDir/documents.parquet")}"
 
+  /** Idempotent build of the AUDIO lake: one 16-bit PCM mono WAV per
+    * document ([[Wav.encode]]), same memoization contract as the
+    * image lake. m4 decodes these with the full RIFF chunk walk. */
   def ensureAudio(spark: SparkSession, sfDir: String): String = {
     val lake = s"${sys.props("java.io.tmpdir")}/graft_audio_lake_v2_${docsTag(sfDir)}"
     graft.Sidecar.ensure(lake) { tmp =>

@@ -18,27 +18,32 @@ object Sinks {
   def toCsv(df: DataFrame, delimiter: Char = ','): String = {
     val schema = df.schema
     val rows = df.collect()
-    if (rows.isEmpty) return ""
-    val sb = new StringBuilder
-    def quote(s: String): String =
-      "\"" + s.replace("\"", "\"\"") + "\""
-    def writeRow(cells: Seq[String]): Unit = {
-      sb.append(cells.mkString(delimiter.toString)).append("\r\n")
+    // an empty result is an empty body, without even the header line
+    // (the reference's `_orm_to_csv`)
+    if (rows.isEmpty) ""
+    else {
+      val sb = new StringBuilder(csvHeader(schema, delimiter)).append("\r\n")
+      rows.foreach(row => sb.append(csvRow(schema, row, delimiter)).append("\r\n"))
+      sb.toString
     }
-    writeRow(schema.fields.map(f => quote(f.name)).toSeq)
-    rows.foreach { row =>
-      val cells = schema.fields.zipWithIndex.map { case (f, i) =>
-        if (row.isNullAt(i)) quote("")
-        else f.dataType match {
-          case _: NumericType => row.get(i).toString
-          case BooleanType => quote(row.getBoolean(i).toString.capitalize)
-          case _ => quote(row.get(i).toString)
-        }
-      }
-      writeRow(cells.toSeq)
-    }
-    sb.toString
   }
+
+  private def csvQuote(s: String): String = "\"" + s.replace("\"", "\"\"") + "\""
+
+  private def csvHeader(schema: StructType, delimiter: Char): String =
+    schema.fieldNames.map(csvQuote).mkString(delimiter.toString)
+
+  /** One CSV line, CRLF not included: numbers bare, every other value
+    * quoted, booleans as Python prints them, nulls as `""`. */
+  private def csvRow(schema: StructType, row: Row, delimiter: Char): String =
+    schema.fields.indices.map { i =>
+      if (row.isNullAt(i)) csvQuote("")
+      else schema.fields(i).dataType match {
+        case _: NumericType => row.get(i).toString
+        case BooleanType => csvQuote(row.getBoolean(i).toString.capitalize)
+        case _ => csvQuote(row.get(i).toString)
+      }
+    }.mkString(delimiter.toString)
 
   /** S9: JSEND envelope `{"data": [...], "status": "success"}`
     * (`queries.py:160-163`, `app/responses.py`). Compact separators
@@ -104,21 +109,11 @@ object Sinks {
     val schema = df.schema
     val w = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8))
-    def quote(s: String): String = "\"" + s.replace("\"", "\"\"") + "\""
-    w.write(schema.fields.map(f => quote(f.name)).mkString(delimiter.toString))
+    w.write(csvHeader(schema, delimiter))
     w.write("\r\n")
     val it = df.toLocalIterator()
     while (it.hasNext) {
-      val row = it.next()
-      val cells = schema.fields.zipWithIndex.map { case (f, i) =>
-        if (row.isNullAt(i)) quote("")
-        else f.dataType match {
-          case _: NumericType => row.get(i).toString
-          case BooleanType => quote(row.getBoolean(i).toString.capitalize)
-          case _ => quote(row.get(i).toString)
-        }
-      }
-      w.write(cells.mkString(delimiter.toString))
+      w.write(csvRow(schema, it.next(), delimiter))
       w.write("\r\n")
     }
     w.flush()

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * scans keep new code from growing its own builder, call site, scratch
   * view or conf write, and name the file and line of each hit; the
   * foreign-session test pins the driver contract, which accepts
-  * sessions the engine did not build. */
+  * sessions the engine did not build. One more scan keeps `ApiServer`
+  * to one error path: handlers throw, and `handle` alone writes the
+  * JSEND error envelope. */
 class SessionBoundarySpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala/graft")
@@ -66,6 +68,15 @@ class SessionBoundarySpec extends AnyFunSuite {
     val drainWrites = occurrences("""\bdrain\.conf\.set\(""")
     assert(drainWrites.map(_._1) == Seq("streaming/StreamingQueries.scala"),
       s"the stream drain writes conf on its cloned session only: $hits")
+  }
+
+  test("ApiServer writes the JSEND error envelope only in handle's renderer") {
+    val api = "api/ApiServer.scala"
+    val envelopes = occurrences("""Sinks\.jsendError\(""").filter(_._1 == api)
+    assert(envelopes.length == 1,
+      s"throw ApiServer.Reject and let handle render it; envelope sites: $envelopes")
+    val early = occurrences("""\breturn\s+respond\(""").filter(_._1 == api)
+    assert(early.isEmpty, s"throw ApiServer.Reject instead of responding early: $early")
   }
 
   test("SparkEntry.queries installs the native functions on a session the " +

@@ -1288,6 +1288,9 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rget(q).statusCode() == 200)
       assert(rget(q).statusCode() == 200)
       assert(calls == 1, s"rw fetcher called $calls times — memo broken")
+      // the zonal route resolves through the same origin fallback + memo
+      assert(rget("/analysis/zonal?geostore_id=rw-id-1").statusCode() == 200)
+      assert(calls == 1, s"rw fetcher called $calls times after zonal — memo bypassed")
       // unknown id still 422 (no geostore resolved)
       assert(rget("/dataset/landcover_raster/v1/query/json?geostore_id=nope&sql=" +
         java.net.URLEncoder.encode("SELECT 1 FROM data", "UTF-8")).statusCode() == 422)
@@ -1304,7 +1307,9 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // no export asset → reference's 501
     val none = get("/dataset/nation/v1/download/shp")
     assert(none.statusCode() == 501)
-    assert(none.body().contains("not implemented for the given dataset"))
+    // ≥500 answers carry JSEND status "error" (`errors.py:43-46`)
+    assert(none.body() ==
+      """{"status":"error","message":"This endpoint is not implemented for the given dataset."}""")
   }
 
   test("dataset CRUD: PUT/GET/PATCH/DELETE with reference status codes") {

@@ -27,6 +27,19 @@ class SinksSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Sinks.toCsv(df.filter("x > 5")) == "")
   }
 
+  test("streaming CSV sink writes the buffered sink's bytes") {
+    import spark.implicits._
+    val df = Seq((1L, Some("a \"b\""), true), (2L, None, false)).toDF("id", "s", "ok")
+    def streamed(d: org.apache.spark.sql.DataFrame): String = {
+      val out = new java.io.ByteArrayOutputStream
+      Sinks.streamCsv(d, out)
+      out.toString("UTF-8")
+    }
+    assert(streamed(df) == Sinks.toCsv(df))
+    // an empty stream still carries the header line; the buffered sink answers ""
+    assert(streamed(df.filter("id > 5")) == "\"id\",\"s\",\"ok\"\r\n")
+  }
+
   test("JSEND sink: envelope, nulls, compact encoding") {
     import spark.implicits._
     val df = Seq((1L, Some("a")), (2L, None)).toDF("k", "v")
