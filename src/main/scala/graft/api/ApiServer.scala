@@ -87,6 +87,12 @@ object FeatureLookup {
   * envelope (SQL-gate rejections → 400 with the reference's error
   * strings; unknown dataset/version → 404). 2-hour Cache-Control on
   * query responses (`queries.py:155-158`).
+  *
+  * Every dataset, version and asset record, with its lifecycle state,
+  * metadata documents and tasks, lives in one immutable
+  * [[graft.catalog.Catalog]] snapshot that writes swap through
+  * `update`. Outside it stay the geostore, the tree-cover-loss
+  * resources, the background jobs and the API keys.
   */
 final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                       nonDownloadable: Set[String] = Set.empty,
@@ -120,6 +126,8 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     sourceRoots.exists(p.startsWith)
   }
 
+  /** The catalog snapshot. A route reads it once per lookup; writes
+    * swap it through `update`. */
   @volatile private var catalog = new cat.Catalog(Tables.all.map { t =>
     // geo-flavoured lake tables carry pre-built export assets the
     // shp/gpkg download routes 307-redirect to (reference S3 exports)
@@ -141,11 +149,15 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * and its register step poison queries against, a builtin table). */
   private val builtinDatasets: Set[String] = catalog.datasets.map(_.name).toSet
 
-  /** All catalog swaps go through one lock: `withVersion` is a
-    * read-modify-write of the immutable catalog, and two creation jobs
-    * completing together could otherwise each rebuild from the same
-    * stale snapshot and lose a version. */
   private val catalogLock = new Object
+
+  /** Swap in `f(catalog)` and return it. Every write goes through here
+    * under one lock: each is a read-modify-write of the immutable
+    * snapshot, and two writers could otherwise each rebuild from the
+    * same stale snapshot and lose the other's change. A `Reject` thrown
+    * by `f` leaves the catalog as it was. */
+  private def update(f: cat.Catalog => cat.Catalog): cat.Catalog =
+    catalogLock.synchronized { catalog = f(catalog); catalog }
 
   private val geostore = scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -176,12 +188,6 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     if (origin == "rw") rw.orElse(gfw) else gfw.orElse(rw)
   }
   private val jobRegistry = new JobRegistry
-
-  /** Version lifecycle records: status (pending → saved/failed) +
-    * change log, pollable at GET /dataset/{d}/{v}
-    * (`app/models/orm/versions.py` status + `change_log`). */
-  private val versionRecords = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, Seq[graft.etl.VersionCreation.ChangeLog])]
 
   // TCP_NODELAY on every accepted connection. The JDK server sends a
   // response as two writes, the header block and then the body; with
@@ -408,29 +414,17 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
   private val versionsRoot = s"${sys.props("java.io.tmpdir")}/graft_versions/"
 
-  /** Session table for a (dataset, version): created versions are
-    * registered under per-(dataset, version) view names (so they can
-    * never shadow a lake table, and every version stays queryable);
-    * builtin lake tables keep their bare names. */
-  private def tableFor(dataset: String, version: String): String =
-    catalog.version(dataset, version) match {
-      case Some(v) if v.defaultAsset.exists(a =>
-          (a.assetType == cat.AssetType.DatabaseTable ||
-            a.assetType == cat.AssetType.GeoDatabaseTable) &&
-            a.assetUri.startsWith(versionsRoot)) =>
-        graft.etl.VersionCreation.viewName(dataset, v.version)
-      case _ => dataset
-    }
-
-  /** The CONCRETE version name behind a possibly-aliased path
-    * segment: the catalog resolves `latest` (tableFor relies on it),
-    * but the versionRecords/versionOpts/versionMetadata side maps key
-    * on real names — looking them up with the alias 404s/blanks
-    * routes that work under the real name. */
-  private def realVersion(dataset: String, version: String): String =
-    if (version == "latest")
-      catalog.version(dataset, version).map(_.version).getOrElse(version)
-    else version
+  /** Session table of a version: created versions are registered
+    * under per-(dataset, version) view names (so they can never shadow
+    * a lake table, and every version stays queryable); builtin lake
+    * tables keep their bare names. */
+  private def tableFor(v: cat.Version): String =
+    if (v.defaultAsset.exists(a =>
+        (a.assetType == cat.AssetType.DatabaseTable ||
+          a.assetType == cat.AssetType.GeoDatabaseTable) &&
+          a.assetUri.startsWith(versionsRoot)))
+      graft.etl.VersionCreation.viewName(v.dataset, v.version)
+    else v.dataset
 
   /** Gate for mutating routes (version creation, API-key minting):
     * the reference requires an authenticated owner/admin
@@ -441,7 +435,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   private def writeGate(ex: HttpExchange): Unit =
     if (!hasAdminToken(ex)) throw Reject(401, "Unauthorized")
 
-  private def handle(ex: HttpExchange): Unit =
+  private def handle(ex: HttpExchange): Unit = {
     try {
       val path = ex.getRequestURI.getPath
       (ex.getRequestMethod, path) match {
@@ -538,13 +532,21 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         case _ => throw Reject(404, "Not found")
       }
     } catch {
+      // after the status line went out (a download failing mid-stream)
+      // no envelope can follow, and closing the exchange would end the
+      // cut body with the closing chunk; an IOException makes the JDK
+      // server drop the connection, so the client sees a broken transfer
+      case e: Throwable if ex.getResponseCode != -1 =>
+        throw new java.io.IOException("response failed after its status was sent", e)
       case e: Throwable =>
         // the one error renderer: JSEND status "failed" below 500 and
         // "error" from 500 up (`errors.py:43-46`)
         val r = rejection(e)
         respond(ex, r.code, "application/json",
           Sinks.jsendError(r.message, if (r.code < 500) "failed" else "error"))
-    } finally ex.close()
+    }
+    ex.close()
+  }
 
   /** The status and message a failed request answers with. */
   private def rejection(e: Throwable): Reject = e match {
@@ -619,8 +621,9 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                          body: Option[Map[String, Any]] = None,
                          download: Boolean = false)
       : (Boolean, () => org.apache.spark.sql.DataFrame) = {
-    val raster = catalog.queryEngine(dataset, version) match {
-      case Left(msg) => throw Reject(if (msg.contains("not found")) 404 else 501, msg)
+    val v = versionOf(dataset, version)
+    val raster = v.queryEngine match {
+      case Left(msg) => throw Reject(501, msg)
       // raster downloads redirect to asset files in the reference; out
       // of scope for the synthetic lake
       case Right(cat.RasterEngine) if download =>
@@ -648,14 +651,15 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       if (gid.isDefined && aoi.isEmpty)
         throw Reject(404, s"Area with gfw_geostore_id ${gid.get} does not exist")
       // lake table view name == dataset name (single-version lake)
-      val rewritten = Scrutinizer.scrutinizeTo(tableFor(dataset, version), aoi, sql)
+      val rewritten = Scrutinizer.scrutinizeTo(tableFor(v), aoi, sql)
       graft.sqlgate.TabularEngine.checkFunctionsExist(spark, rewritten)
       (false, () => spark.sql(rewritten))
     }
   }
 
-  private def fields(ex: HttpExchange, dataset: String, version: String): Unit =
-    versionOf(dataset, version).defaultAsset match {
+  private def fields(ex: HttpExchange, dataset: String, version: String): Unit = {
+    val v = versionOf(dataset, version)
+    v.defaultAsset match {
       case Some(a) if a.assetType == cat.AssetType.RasterTileSet =>
         // raster fields = reserved pseudo-columns + the queryable
         // layers of the data environment (versions.py:516-522)
@@ -668,12 +672,13 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         respond(ex, 200, "application/json",
           s"""{"data":[${(reserved ++ layers).mkString(",")}],"status":"success"}""")
       case _ =>
-        val schema = spark.table(tableFor(dataset, version)).schema
+        val schema = spark.table(tableFor(v)).schema
         val items = schema.fields.map { f =>
           s"""{"name":"${f.name}","data_type":"${f.dataType.catalogString}","is_feature_info":true}"""
         }.mkString(",")
         respond(ex, 200, "application/json", s"""{"data":[$items],"status":"success"}""")
     }
+  }
 
   /** Download variant of the query endpoints: attachment disposition,
     * gated by the version's downloadability flag
@@ -699,12 +704,9 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         s"""attachment; filename="$dataset.$fmt"""")
       val ct = if (fmt == "json") "application/json" else "text/csv"
       ex.getResponseHeaders.add("Content-Type", ct)
-      ex.sendResponseHeaders(200, 0) // chunked
-      val out = ex.getResponseBody
-      try {
-        if (fmt == "json") Sinks.streamJsend(df, out)
-        else Sinks.streamCsv(df, out)
-      } finally out.close()
+      ex.sendResponseHeaders(200, 0) // chunked; `handle` ends the exchange
+      if (fmt == "json") Sinks.streamJsend(df, ex.getResponseBody)
+      else Sinks.streamCsv(df, ex.getResponseBody)
     } finally downloadGate.release()
   }
 
@@ -731,44 +733,36 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   }
 
   /** Version metadata CRUD (`versions.py:407-517`): a free-form
-    * metadata document per (dataset, version); POST creates, PATCH
-    * merges fields, DELETE clears. */
-  private val versionMetadata = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, String]]
-
+    * metadata document per version; POST creates, PATCH merges fields,
+    * DELETE clears. */
   private def versionMetadataGet(ex: HttpExchange, dataset: String, version: String): Unit = {
-    versionOf(dataset, version)
-    val m = versionMetadata.getOrElse((dataset, realVersion(dataset, version)),
+    val m = versionOf(dataset, version).metadata.getOrElse(
       throw Reject(404, s"Version $dataset.$version has no metadata"))
-    val body = m.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(v)}"
-    }.mkString("{", ",", "}")
-    respond(ex, 200, "application/json", s"""{"data":$body,"status":"success"}""")
+    respond(ex, 200, "application/json", s"""{"data":${jsonObject(m)},"status":"success"}""")
   }
 
   private def versionMetadataWrite(ex: HttpExchange, dataset: String, version: String): Unit = {
     writeGate(ex)
-    versionOf(dataset, version)
+    val v = versionOf(dataset, version)
     val patch = bodyObject(ex).collect {
       case (k, s: String) => k -> s
-      case (k, v) if v != null => k -> graft.geo.Json.write(v)
+      case (k, x) if x != null => k -> graft.geo.Json.write(x)
     }
     val isCreate = ex.getRequestMethod == "POST"
-    val merged = versionMetadata.updateWith((dataset, realVersion(dataset, version))) {
-      case Some(old) if !isCreate => Some(old ++ patch)
-      case _ => Some(patch)
-    }.get
-    val out = merged.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(v)}"
-    }.mkString("{", ",", "}")
+    val merged = update(_.withVersionPatched(dataset, v.version, x => x.copy(metadata =
+      Some(if (isCreate) patch else x.metadata.getOrElse(Map.empty) ++ patch))))
+      .record(dataset, v.version).flatMap(_.metadata).getOrElse(patch)
     respond(ex, if (isCreate) 201 else 200, "application/json",
-      s"""{"data":$out,"status":"success"}""")
+      s"""{"data":${jsonObject(merged)},"status":"success"}""")
   }
 
   private def versionMetadataDelete(ex: HttpExchange, dataset: String, version: String): Unit = {
     writeGate(ex)
-    if (versionMetadata.remove((dataset, realVersion(dataset, version))).isEmpty)
-      throw Reject(404, s"Version $dataset.$version has no metadata")
+    update { c =>
+      val v = c.version(dataset, version).filter(_.metadata.isDefined).getOrElse(
+        throw Reject(404, s"Version $dataset.$version has no metadata"))
+      c.withVersionPatched(dataset, v.version, _.copy(metadata = None))
+    }
     respond(ex, 200, "application/json", """{"data":{},"status":"success"}""")
   }
 
@@ -778,11 +772,11 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * geometry. */
   private def versionGeostore(ex: HttpExchange, dataset: String, version: String,
                               gid: String): Unit = {
-    if (!versionOf(dataset, version).defaultAsset.exists(
-        _.assetType == cat.AssetType.GeoDatabaseTable))
+    val v = versionOf(dataset, version)
+    if (!v.defaultAsset.exists(_.assetType == cat.AssetType.GeoDatabaseTable))
       throw Reject(501, "This endpoint is not implemented for the given dataset")
     val rows = spark.sql(
-      s"""SELECT gfw_geojson FROM ${tableFor(dataset, version)}
+      s"""SELECT gfw_geojson FROM ${tableFor(v)}
          |WHERE gfw_geostore_id = '${gid.replace("'", "''")}' LIMIT 1""".stripMargin)
       .collect()
     if (rows.isEmpty) throw Reject(404, s"Geostore $gid not found in $dataset.$version")
@@ -790,30 +784,30 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       s"""{"data":{"gfw_geostore_id":"$gid","geojson":${rows.head.getString(0)}},"status":"success"}""")
   }
 
-  /** Asset-by-id routes (`assets/asset.py:82-305`): the catalog is
-    * searched across all datasets/versions. */
-  private def findAsset(id: String): Option[(cat.Version, cat.Asset)] =
-    catalog.datasets.iterator.flatMap(_.versions).flatMap(v =>
-      v.assets.collect { case a if a.assetId == id => (v, a) }).nextOption()
-
   private def assetGet(ex: HttpExchange, id: String): Unit = {
     val (v, a) = assetOf(id)
     respond(ex, 200, "application/json",
-      s"""{"data":{"asset_id":"${a.assetId}","dataset":"${v.dataset}","version":"${v.version}","asset_type":${graft.geo.Json.write(a.assetType)},"asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},"status":"${a.status}"},"status":"success"}""")
+      s"""{"data":${assetJson(a, Some(v))},"status":"success"}""")
   }
+
+  /** One asset object (`asset.py` response shape); with `owner` it also
+    * names its dataset and version. */
+  private def assetJson(a: cat.Asset, owner: Option[cat.Version] = None): String =
+    s"""{"asset_id":"${a.assetId}",""" +
+      owner.fold("")(v => s""""dataset":"${v.dataset}","version":"${v.version}",""") +
+      s""""asset_type":${graft.geo.Json.write(a.assetType)},""" +
+      s""""asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},""" +
+      s""""status":"${a.status}"}"""
 
   private def assetSub(ex: HttpExchange, id: String, sub: String): Unit = {
     val (v, a) = assetOf(id)
     sub match {
       case "creation_options" =>
-        val body = a.creationOptions.toSeq.sortBy(_._1).map { case (k, x) =>
-          s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(x)}"
-        }.mkString("{", ",", "}")
-        respond(ex, 200, "application/json", s"""{"data":$body,"status":"success"}""")
+        respond(ex, 200, "application/json",
+          s"""{"data":${jsonObject(a.creationOptions)},"status":"success"}""")
       case "change_log" => versionChangeLog(ex, v.dataset, v.version)
       case "tasks" =>
-        val items = taskRecords.values.toSeq
-          .filter(_.assetId == a.assetId).sortBy(_.taskId)
+        val items = v.tasks.filter(_.assetId == a.assetId).sortBy(_.taskId)
           .map(taskBody).mkString(",")
         respond(ex, 200, "application/json",
           s"""{"data":[$items],"status":"success"}""")
@@ -866,16 +860,9 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     if (a.isDefault)
       throw Reject(409, "Deletion failed. You cannot delete a default asset. " +
         "To delete a default asset you must delete the parent version.")
-    catalogLock.synchronized {
-      catalog = catalog.withoutAsset(v.dataset, v.version, a.assetId)
-    }
+    update(_.withoutAsset(v.dataset, v.version, a.assetId))
     val f = new java.io.File(a.assetUri)
     if (f.isFile) f.delete()
-    assetMetadata.remove(a.assetId)
-    // field overrides die with the asset — a later asset reusing
-    // the id must not inherit stale aliases
-    fieldMetaOverrides.keys.filter(_._1 == a.assetId)
-      .foreach(fieldMetaOverrides.remove)
     respond(ex, 200, "application/json",
       s"""{"data":{"asset_id":"${a.assetId}","status":"deleted"},"status":"success"}""")
   }
@@ -883,18 +870,11 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   // -------------------------------------------------- asset metadata
 
   /** Asset metadata documents + per-field overrides
-    * (`assets/asset.py:356-520`; the reference keeps them on
-    * `asset_metadata` / `field_metadata` ORM rows). */
-  private val assetMetadata = scala.collection.concurrent.TrieMap
-    .empty[String, Map[String, Any]]
-  private val fieldMetaOverrides = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, Any]]
-
+    * (`assets/asset.py:356-520`), kept on the asset record. */
   private def assetMetadataGet(ex: HttpExchange, id: String): Unit = {
-    assetOf(id)
     // asset_metadata_factory: a record-less asset still serves a
     // (empty) metadata document rather than 404
-    val doc = assetMetadata.getOrElse(id, Map.empty[String, Any])
+    val doc = assetOf(id)._2.metadata.getOrElse(Map.empty[String, Any])
     respond(ex, 200, "application/json",
       s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
   }
@@ -906,25 +886,27 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     writeGate(ex)
     assetOf(id)
     val doc = parseBody(bodyOf(ex), "Invalid metadata document")
-    ex.getRequestMethod match {
-      case "POST" =>
-        if (assetMetadata.putIfAbsent(id, doc).isDefined)
-          throw Reject(409, s"Asset $id already has a metadata record")
-        respond(ex, 201, "application/json",
-          s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
-      case _ =>
-        val merged = assetMetadata.getOrElse(id,
-          throw Reject(404, s"Asset $id has no metadata record")) ++ doc
-        assetMetadata.put(id, merged)
-        respond(ex, 200, "application/json",
-          s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
-    }
+    val isCreate = ex.getRequestMethod == "POST"
+    val merged = update { c =>
+      val prior = c.asset(id).flatMap(_._2.metadata)
+      if (isCreate && prior.isDefined)
+        throw Reject(409, s"Asset $id already has a metadata record")
+      if (!isCreate && prior.isEmpty)
+        throw Reject(404, s"Asset $id has no metadata record")
+      c.withAssetPatched(id, _.copy(metadata = Some(prior.getOrElse(Map.empty) ++ doc)))
+    }.asset(id).flatMap(_._2.metadata).getOrElse(doc)
+    respond(ex, if (isCreate) 201 else 200, "application/json",
+      s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
   }
 
   private def assetMetadataDelete(ex: HttpExchange, id: String): Unit = {
     writeGate(ex)
-    val doc = assetMetadata.remove(id).getOrElse(
-      throw Reject(404, s"Asset $id has no metadata record"))
+    var doc = Map.empty[String, Any]
+    update { c =>
+      doc = c.asset(id).flatMap(_._2.metadata).getOrElse(
+        throw Reject(404, s"Asset $id has no metadata record"))
+      c.withAssetPatched(id, _.copy(metadata = None))
+    }
     respond(ex, 200, "application/json",
       s"""{"data":${graft.geo.Json.write(doc)},"status":"success"}""")
   }
@@ -955,30 +937,29 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
           .map(doc(_, "number"))
         reserved ++ bandsOfAsset(a).map(b => doc(b.stripPrefix("px_"), "integer"))
       case _ =>
-        val schema = spark.table(tableFor(v.dataset, v.version)).schema
+        val schema = spark.table(tableFor(v)).schema
         schema.fields.toSeq.map(f => doc(f.name, f.dataType.catalogString))
     }
   }
 
   private def assetFields(ex: HttpExchange, id: String): Unit = {
-    val items = assetFieldDocs(assetOf(id)._1).map { doc =>
-      val merged = doc ++
-        fieldMetaOverrides.getOrElse((id, doc("name").toString), Map.empty)
-      graft.geo.Json.write(merged)
+    val (v, a) = assetOf(id)
+    val items = assetFieldDocs(v).map { doc =>
+      graft.geo.Json.write(doc ++ a.fieldMetadata.getOrElse(doc("name").toString, Map.empty))
     }.mkString(",")
     respond(ex, 200, "application/json",
       s"""{"data":[$items],"status":"success"}""")
   }
 
-  /** Asset `id`'s metadata for `field`, before PATCHed overrides; 404
-    * when either is unknown. */
-  private def assetFieldDoc(id: String, field: String): Map[String, Any] =
-    assetFieldDocs(assetOf(id)._1).find(_("name") == field)
+  /** `v`'s metadata for `field`, before PATCHed overrides; 404 when
+    * the field is unknown. */
+  private def assetFieldDoc(v: cat.Version, field: String): Map[String, Any] =
+    assetFieldDocs(v).find(_("name") == field)
       .getOrElse(throw Reject(404, s"Field $field not found"))
 
   private def assetFieldGet(ex: HttpExchange, id: String, field: String): Unit = {
-    val merged = assetFieldDoc(id, field) ++
-      fieldMetaOverrides.getOrElse((id, field), Map.empty)
+    val (v, a) = assetOf(id)
+    val merged = assetFieldDoc(v, field) ++ a.fieldMetadata.getOrElse(field, Map.empty)
     respond(ex, 200, "application/json",
       s"""{"data":${graft.geo.Json.write(merged)},"status":"success"}""")
   }
@@ -988,11 +969,12 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * is_feature_info into the field's metadata. */
   private def assetFieldPatch(ex: HttpExchange, id: String, field: String): Unit = {
     writeGate(ex)
-    val doc = assetFieldDoc(id, field)
-    val patch = parseBody(bodyOf(ex), "Invalid field metadata document")
-    val merged = fieldMetaOverrides.getOrElse((id, field), Map.empty) ++
-      (patch - "name" - "data_type") // immutable identity fields
-    fieldMetaOverrides.put((id, field), merged)
+    val doc = assetFieldDoc(assetOf(id)._1, field)
+    val patch = parseBody(bodyOf(ex), "Invalid field metadata document") -
+      "name" - "data_type" // immutable identity fields
+    val merged = update(_.withAssetPatched(id, a => a.copy(fieldMetadata =
+      a.fieldMetadata.updated(field, a.fieldMetadata.getOrElse(field, Map.empty) ++ patch))))
+      .asset(id).flatMap(_._2.fieldMetadata.get(field)).getOrElse(patch)
     respond(ex, 200, "application/json",
       s"""{"data":${graft.geo.Json.write(doc ++ merged)},"status":"success"}""")
   }
@@ -1002,39 +984,35 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
   /** Per-step task records of the creation DAG (`app/routes/tasks/
     * task.py`; reference tasks are the AWS Batch jobs an asset build
-    * fans out, each carrying its own change log). The version-creation
-    * job registers one record per DAG step; PATCH appends change-log
-    * entries and propagates terminal states to the asset — and, for a
-    * default asset, the version (`_set_failed` / `_check_completed`,
-    * `task.py:132-247`). */
-  final case class TaskRec(taskId: String, assetId: String,
-                           changeLog: Seq[graft.etl.VersionCreation.ChangeLog])
+    * fans out, each carrying its own change log), kept on the version
+    * that owns the asset. The version-creation job registers one record
+    * per DAG step; PATCH appends change-log entries and propagates
+    * terminal states to the asset — and, for a default asset, the
+    * version (`_set_failed` / `_check_completed`, `task.py:132-247`). */
+  private def taskBody(t: cat.Task): String =
+    s"""{"task_id":"${t.taskId}","asset_id":"${t.assetId}","change_log":[${changeLogJson(t.changeLog)}]}"""
 
-  private val taskRecords = scala.collection.concurrent.TrieMap
-    .empty[String, TaskRec]
-
-  private def taskBody(t: TaskRec): String = {
-    val log = t.changeLog.map(c =>
+  /** Change-log entries as the members of a JSON array. */
+  private def changeLogJson(log: Seq[graft.etl.VersionCreation.ChangeLog]): String =
+    log.map(c =>
       s"""{"task":"${c.task}","status":"${c.status}","detail":${graft.geo.Json.write(c.detail)}}""")
       .mkString(",")
-    s"""{"task_id":"${t.taskId}","asset_id":"${t.assetId}","change_log":[$log]}"""
-  }
 
-  /** Deterministic task ids for DAG-spawned steps so a re-PUT of the
+  /** One task per DAG step, with deterministic ids so a re-PUT of the
     * same version replaces its task records instead of leaking. */
-  private def registerDagTasks(dataset: String, version: String,
-                               log: Seq[graft.etl.VersionCreation.ChangeLog]): Unit = {
-    val assetId = s"$dataset-$version-default"
-    log.foreach { c =>
+  private def dagTasks(dataset: String, version: String,
+                       log: Seq[graft.etl.VersionCreation.ChangeLog]): Seq[cat.Task] =
+    log.map { c =>
       val tid = graft.geo.GeoExpressions.Uuid5.of("oid", s"task:$dataset/$version/${c.task}")
-      taskRecords.put(tid, TaskRec(tid, assetId, Seq(c)))
+      cat.Task(tid, s"$dataset-$version-default", Seq(c))
     }
-  }
 
-  private def taskGet(ex: HttpExchange, id: String): Unit = {
-    val t = taskRecords.getOrElse(id, throw Reject(404, s"Task $id not found"))
-    respond(ex, 200, "application/json", s"""{"data":${taskBody(t)},"status":"success"}""")
-  }
+  private def taskOf(id: String): (cat.Version, cat.Task) =
+    catalog.task(id).getOrElse(throw Reject(404, s"Task $id not found"))
+
+  private def taskGet(ex: HttpExchange, id: String): Unit =
+    respond(ex, 200, "application/json",
+      s"""{"data":${taskBody(taskOf(id)._2)},"status":"success"}""")
 
   /** PUT /task/{id} (service-account route, `task.py:60-81`): attach a
     * new task record to an existing asset. */
@@ -1045,12 +1023,12 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       case Some(s: String) => s
       case _ => throw Reject(400, "asset_id is required")
     }
-    if (findAsset(assetId).isEmpty)
-      throw Reject(400, s"Asset $assetId not found")
-    val t = TaskRec(id, assetId, parseChangeLog(obj))
-    // putIfAbsent: a concurrent PUT of the same id must not overwrite
-    if (taskRecords.putIfAbsent(id, t).isDefined)
-      throw Reject(400, s"Task $id already exists")
+    val t = cat.Task(id, assetId, parseChangeLog(obj))
+    update { c =>
+      val (v, _) = c.asset(assetId).getOrElse(throw Reject(400, s"Asset $assetId not found"))
+      if (c.task(id).isDefined) throw Reject(400, s"Task $id already exists")
+      c.withVersionPatched(v.dataset, v.version, _.withTasks(Seq(t)))
+    }
     respond(ex, 201, "application/json",
       s"""{"data":${taskBody(t)},"status":"success"}""")
   }
@@ -1070,40 +1048,34 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   /** PATCH /task/{id} (`task.py:83-129`): append change-log entries;
     * a `failed` entry marks the asset (and, when default, the version)
     * failed; all-success marks the asset saved once every task's last
-    * entry succeeded; anything else is a 400. */
+    * entry succeeded; anything else is a 400. The entries and their
+    * propagation land in one swap. */
   private def taskPatch(ex: HttpExchange, id: String): Unit = {
     writeGate(ex)
-    val prior = taskRecords.getOrElse(id, throw Reject(404, s"Task $id not found"))
+    taskOf(id)
     val entries = parseChangeLog(parseBody(bodyOf(ex), "Invalid task document"))
     if (entries.isEmpty || entries.exists(e =>
         e.status != "success" && e.status != "failed"))
       throw Reject(400, "change log status must be either `success` or `failed`")
-    // atomic append: a background creation job putting a fresh record
-    // for the same deterministic task id must not erase these entries
-    val updated = catalogLock.synchronized {
-      val cur = taskRecords.getOrElse(id, prior)
-      val u = cur.copy(changeLog = cur.changeLog ++ entries)
-      taskRecords.put(id, u)
-      u
-    }
-    findAsset(updated.assetId).foreach { case (v, a) =>
-      if (entries.exists(_.status == "failed")) {
-        catalogLock.synchronized {
-          catalog = catalog.withAssetStatus(v.dataset, v.version, a.assetId, "failed")
-          if (a.isDefault) {
-            val log = versionRecords.get((v.dataset, v.version)).map(_._2).getOrElse(Nil)
-            versionRecords.put((v.dataset, v.version), ("failed", log ++ entries))
-          }
-        }
-      } else {
+    val failed = entries.exists(_.status == "failed")
+    val updated = update { c =>
+      val (v, t) = c.task(id).getOrElse(throw Reject(404, s"Task $id not found"))
+      c.withVersionPatched(v.dataset, v.version, { x =>
+        val x1 = x.withTasks(Seq(t.copy(changeLog = t.changeLog ++ entries)))
         // _check_completed: every task of the asset finished cleanly
-        val allDone = taskRecords.values.filter(_.assetId == a.assetId)
+        def allDone = x1.tasks.filter(_.assetId == t.assetId)
           .forall(_.changeLog.lastOption.exists(_.status == "success"))
-        if (allDone) catalogLock.synchronized {
-          catalog = catalog.withAssetStatus(v.dataset, v.version, a.assetId, "saved")
+        def assetStatus(s: String) = x1.copy(assets = x1.assets.map(a =>
+          if (a.assetId == t.assetId) a.copy(status = s) else a))
+        x1.assets.find(_.assetId == t.assetId) match {
+          case Some(a) if failed =>
+            val y = assetStatus("failed")
+            if (a.isDefault) y.copy(status = "failed", changeLog = y.changeLog ++ entries) else y
+          case Some(_) if allDone => assetStatus("saved")
+          case _ => x1
         }
-      }
-    }
+      })
+    }.task(id).map(_._2).getOrElse(throw Reject(404, s"Task $id not found"))
     respond(ex, 200, "application/json",
       s"""{"data":${taskBody(updated)},"status":"success"}""")
   }
@@ -1251,7 +1223,8 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * request (cached in the version dir) through the pure-JVM
     * [[graft.raster.GeoTiff]] writer. */
   private def downloadGeotiff(ex: HttpExchange, dataset: String, version: String): Unit = {
-    val asset = downloadable(ex, dataset, version).defaultAsset
+    val v = downloadable(ex, dataset, version)
+    val asset = v.defaultAsset
       .filter(_.assetType == cat.AssetType.RasterTileSet).getOrElse(
         throw Reject(501, "This endpoint is not implemented for the given dataset."))
     val params = queryParams(ex)
@@ -1272,8 +1245,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     val srid = params.getOrElse("srid", "4326")
     if (!Set("4326", "3857").contains(srid))
       throw Reject(422, s"Unsupported srid '$srid' (4326/3857)")
-    val cacheDir = java.nio.file.Paths.get(
-      s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${dataset}_$version")
+    val cacheDir = geotiffCache(v)
     java.nio.file.Files.createDirectories(cacheDir)
     val out = cacheDir.resolve(
       if (srid == "4326") s"${band}_${tileId}_$compression.tif"
@@ -1323,7 +1295,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     // documented lon/lat derivation.
     val source: Option[(String, String, String)] = // (FROM, dist expr, tiebreak)
       if (ver.defaultAsset.exists(_.assetType == cat.AssetType.GeoDatabaseTable))
-        Some((tableFor(dataset, version),
+        Some((tableFor(ver),
           "st_distance_to_point(st_geomfromgeojson(gfw_geojson), " +
             "CAST(%LNG% AS DOUBLE), CAST(%LAT% AS DOUBLE))", ""))
       else if (dataset == "customer")
@@ -1380,8 +1352,9 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
   /** Version asset statistics (`versions.py:363-374`): row/tile counts
     * and size facts of the default asset. */
-  private def stats(ex: HttpExchange, dataset: String, version: String): Unit =
-    versionOf(dataset, version).defaultAsset match {
+  private def stats(ex: HttpExchange, dataset: String, version: String): Unit = {
+    val v = versionOf(dataset, version)
+    v.defaultAsset match {
       case Some(asset) if asset.assetType == cat.AssetType.RasterTileSet =>
         // the version's OWN grid and band set (created raster versions
         // carry both in their asset options; builtin falls back)
@@ -1390,10 +1363,11 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         respond(ex, 200, "application/json",
           s"""{"data":{"tile_count":${g.nTiles},"pixel_count":${g.nTiles.toLong * g.pxPerTile * g.pxPerTile},"bands":$bands},"status":"success"}""")
       case _ =>
-        val cnt = spark.table(tableFor(dataset, version)).count()
+        val cnt = spark.table(tableFor(v)).count()
         respond(ex, 200, "application/json",
           s"""{"data":{"row_count":$cnt},"status":"success"}""")
     }
+  }
 
   /** Version extent (`versions.py:351-360`): raster versions report
     * the grid bbox; tabular versions have no spatial extent. */
@@ -1441,6 +1415,10 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     writeGate(ex)
     if (builtinDatasets.contains(dataset))
       throw Reject(409, s"Dataset $dataset conflicts with a pre-registered table")
+    // the alias names whichever version carries the tag, so a version
+    // of that name could never be addressed
+    if (version == "latest")
+      throw Reject(400, "Name `latest` is reserved for versions. Specify a different version name.")
     val opts =
       try VersionCreation.CreationOptions.fromJson(
         graft.geo.Json.parseObject(bodyOf(ex)).get("creation_options") match {
@@ -1451,92 +1429,89 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         throw Reject(422, Option(e.getMessage).getOrElse("Invalid creation options")) }
     opts.sourceUris.find(!sourceAllowed(_)).foreach { uri =>
       throw Reject(403, s"Source URI outside the allowed data directories: $uri") }
-    versionRecords.put((dataset, version), ("pending", Nil))
-    versionOpts.put((dataset, version), opts)
-    val targetDir =
-      s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_$version"
+    // registered pending: a first creation as a record without assets
+    // (not latest until it saves); a re-creation keeps serving its
+    // current build until the new one lands
+    update { c =>
+      if (c.record(dataset, version).isDefined)
+        c.withVersionPatched(dataset, version, _.copy(status = "pending",
+          changeLog = Nil, creationOptions = Some(opts)))
+      else c.withVersion(dataset, cat.Version(dataset, version, isLatest = false,
+        sourceType = opts.sourceType, status = "pending", creationOptions = Some(opts)))
+    }
+    val targetDir = s"$versionsRoot${dataset}_$version"
     val jobId = jobRegistry.submit { () =>
       val (log, ok) = VersionCreation.createTable(spark, dataset, version, opts, targetDir)
-      // Terminal status writer: under catalogLock, never downgrading —
-      // a concurrent PATCH /task that already marked a default-asset
-      // task failed (taskPatch, same lock) must not be overwritten by
-      // 'saved'. "saved" becomes visible only AFTER the catalog swap
-      // below: a client that polls the status and immediately queries
-      // /features (the reference's documented workflow) would
-      // otherwise race the swap and 404 on a version it was just told
-      // is saved (observed under full-suite load).
-      def writeTerminal(finalOk: Boolean): String = catalogLock.synchronized {
-        val cur = versionRecords.get((dataset, version))
-        val s = if (!finalOk || cur.exists(_._1 == "failed")) "failed" else "saved"
-        versionRecords.put((dataset, version),
-          (s, log ++ cur.map(_._2).getOrElse(Nil)))
-        s
-      }
-      // Task registration and the catalog swap run guarded: an
-      // exception here must still record a terminal 'failed' status —
-      // otherwise the version is stuck at 'pending' forever and the
-      // reference's poll-until-terminal workflow never finishes. The
-      // exception then PROPAGATES so the job registry records it as
-      // the job failure (GET /job/{id} keeps its cause, as before).
-      try {
-      registerDagTasks(dataset, version, log)
-      if (ok) catalogLock.synchronized {
-        val assetType = opts.sourceType match {
-          case "vector" => cat.AssetType.GeoDatabaseTable
-          case "raster" => cat.AssetType.RasterTileSet
-          case _ => cat.AssetType.DatabaseTable
-        }
-        // raster versions carry the DAG-derived grid/band metadata the
-        // data environment synthesizes layers from
-        val assetOpts =
-          if (opts.sourceType == "raster")
-            graft.etl.VersionCreation.rasterAssetOptions(targetDir)
-          else Map.empty[String, String]
-        // vector versions that built the optional shapefile export
-        // register it, so /download/shp 307-redirects like the
-        // reference's prebuilt S3 artifacts
-        val exportShp = new java.io.File(s"${targetDir}_exports/export.shp")
-        val exportGpkg = new java.io.File(s"${targetDir}_exports/export.gpkg")
-        val exports =
-          (if (exportShp.exists()) Seq(cat.Asset(s"$dataset-$version-shp",
-            cat.AssetType.ShapefileExport, exportShp.getPath, isDefault = false))
-          else Nil) ++
-          (if (exportGpkg.exists()) Seq(cat.Asset(s"$dataset-$version-gpkg",
-            cat.AssetType.GeopackageExport, exportGpkg.getPath, isDefault = false))
-          else Nil)
-        catalog = catalog.withVersion(dataset, cat.Version(
-          dataset, version, isLatest = opts.latest,
-          sourceType = opts.sourceType,
-          assets = cat.Asset(s"$dataset-$version-default",
-            assetType, targetDir, isDefault = true,
-            creationOptions = assetOpts) +: exports))
-      }
-      } catch { case scala.util.control.NonFatal(e) =>
-        writeTerminal(false)
-        throw e
-      }
-      val status = writeTerminal(ok)
+      // The terminal write: one swap publishes the DAG's tasks, the
+      // built assets and the status, so a client that polls the status
+      // and then queries (the reference's documented workflow) never
+      // sees "saved" before the version serves. It never downgrades: a
+      // concurrent PATCH /task that marked a default-asset task failed
+      // keeps the version failed.
+      def finish(assets: Option[Seq[cat.Asset]]): String =
+        update(_.withVersionPatched(dataset, version, { v =>
+          val built = assets.fold(v)(as => v.copy(isLatest = opts.latest,
+            isDownloadable = true, sourceType = opts.sourceType, assets = as))
+          built.withTasks(dagTasks(dataset, version, log)).copy(
+            status = if (assets.isEmpty || v.status == "failed") "failed" else "saved",
+            changeLog = log ++ v.changeLog)
+        })).record(dataset, version).fold("failed")(_.status)
+      // a failure while building the asset records still ends the
+      // version "failed" (a version stuck at "pending" never ends the
+      // poll-until-terminal workflow); the exception then propagates
+      // so GET /job/{id} keeps its cause
+      val assets =
+        try if (ok) Some(builtAssets(dataset, version, opts, targetDir)) else None
+        catch { case scala.util.control.NonFatal(e) => finish(None); throw e }
+      val status = finish(assets)
       s"""{"dataset":"$dataset","version":"$version","status":"$status"}"""
     }
     respond(ex, 202, "application/json",
       s"""{"data":{"dataset":"$dataset","version":"$version","status":"pending","job_id":"$jobId"},"status":"success"}""")
   }
 
-  /** Creation options of versions created through this server —
-    * `/append` re-runs load tasks with the original delimiter/schema/
-    * constraint settings (`table_source_assets.py:221-285`). */
-  private val versionOpts = scala.collection.concurrent.TrieMap
-    .empty[(String, String), graft.etl.VersionCreation.CreationOptions]
+  /** The asset records of a version whose creation DAG saved in
+    * `targetDir`: the default asset, plus the shapefile and GeoPackage
+    * exports a vector version built, so /download/shp|gpkg
+    * 307-redirect like the reference's prebuilt S3 artifacts. */
+  private def builtAssets(dataset: String, version: String,
+                          opts: graft.etl.VersionCreation.CreationOptions,
+                          targetDir: String): Seq[cat.Asset] = {
+    val assetType = opts.sourceType match {
+      case "vector" => cat.AssetType.GeoDatabaseTable
+      case "raster" => cat.AssetType.RasterTileSet
+      case _ => cat.AssetType.DatabaseTable
+    }
+    // raster versions carry the DAG-derived grid/band metadata the
+    // data environment synthesizes layers from
+    val assetOpts =
+      if (opts.sourceType == "raster")
+        graft.etl.VersionCreation.rasterAssetOptions(targetDir)
+      else Map.empty[String, String]
+    val exports = Seq(
+      ("shp", cat.AssetType.ShapefileExport),
+      ("gpkg", cat.AssetType.GeopackageExport)).flatMap { case (ext, t) =>
+      Some(new java.io.File(s"${targetDir}_exports/export.$ext")).filter(_.exists())
+        .map(f => cat.Asset(s"$dataset-$version-$ext", t, f.getPath, isDefault = false))
+    }
+    cat.Asset(s"$dataset-$version-default", assetType, targetDir, isDefault = true,
+      creationOptions = assetOpts) +: exports
+  }
 
   /** Append new source URIs to an existing created version
     * (`POST /dataset/{d}/{v}/append`, `versions.py` append route):
     * 202 + background job that re-runs ONLY the load tasks with the
-    * saved creation options — idempotent via the unique-constraint
-    * anti-join. */
+    * version's creation options (`table_source_assets.py:221-285`)
+    * into its default asset's files — idempotent via the
+    * unique-constraint anti-join. */
   private def versionAppend(ex: HttpExchange, dataset: String, version: String): Unit = {
     import graft.etl.VersionCreation
     writeGate(ex)
-    val opts = versionOpts.getOrElse((dataset, realVersion(dataset, version)),
+    val (v, opts, targetDir) = (for {
+      v <- catalog.version(dataset, version)
+      opts <- v.creationOptions
+      a <- v.defaultAsset
+    } yield (v, opts, a.assetUri)).getOrElse(
       throw Reject(404, s"Dataset version $dataset.$version not found or not appendable"))
     if (opts.sourceType == "raster")
       throw Reject(501, "Append is not implemented for raster versions")
@@ -1553,26 +1528,19 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
     uris.find(!sourceAllowed(_)).foreach { uri =>
       throw Reject(403, s"Source URI outside the allowed data directories: $uri") }
-    val targetDir =
-      s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_$version"
-    catalogLock.synchronized {
-      val prior = versionRecords.get((dataset, version)).map(_._2).getOrElse(Nil)
-      versionRecords.put((dataset, version), ("pending", prior))
-    }
+    update(_.withVersionPatched(dataset, v.version, _.copy(status = "pending")))
     val jobId = jobRegistry.submit { () =>
       val (log, ok) =
         if (opts.sourceType == "vector")
-          VersionCreation.appendVectorSources(spark, dataset, version, uris, targetDir)
+          VersionCreation.appendVectorSources(spark, dataset, v.version, uris, targetDir)
         else
-          VersionCreation.appendSources(spark, dataset, version, opts, uris, targetDir)
-      // append against the CURRENT log under the lock — capturing
-      // `prior` at request time loses a concurrent append's entries
-      catalogLock.synchronized {
-        val cur = versionRecords.get((dataset, version)).map(_._2).getOrElse(Nil)
-        versionRecords.put((dataset, version),
-          (if (ok) "saved" else "failed", cur ++ log))
-      }
-      s"""{"dataset":"$dataset","version":"$version","status":"${if (ok) "saved" else "failed"}"}"""
+          VersionCreation.appendSources(spark, dataset, v.version, opts, uris, targetDir)
+      val status = if (ok) "saved" else "failed"
+      // append to the log as it is at the swap — the log read at
+      // request time would lose a concurrent append's entries
+      update(_.withVersionPatched(dataset, v.version, x =>
+        x.copy(status = status, changeLog = x.changeLog ++ log)))
+      s"""{"dataset":"$dataset","version":"$version","status":"$status"}"""
     }
     respond(ex, 202, "application/json",
       s"""{"data":{"dataset":"$dataset","version":"$version","status":"pending","job_id":"$jobId"},"status":"success"}""")
@@ -1588,7 +1556,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       a <- v.assets
       if params.get("asset_type").forall(_ == a.assetType)
       if params.get("dataset").forall(_ == d.name)
-    } yield s"""{"asset_id":"${a.assetId}","dataset":"${d.name}","version":"${v.version}","asset_type":${graft.geo.Json.write(a.assetType)},"asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},"status":"${a.status}"}"""
+    } yield assetJson(a, Some(v))
     respond(ex, 200, "application/json",
       s"""{"data":[${items.mkString(",")}],"status":"success"}""")
   }
@@ -1613,10 +1581,10 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
       case _ => Map.empty[String, Any]
     }
     obj.get("asset_type") match {
-      case Some(cat.AssetType.Cog) => cogAdd(ex, dataset, version, ver, co)
-      case Some(cat.AssetType.RasterTileCache) => rasterTileCacheAdd(ex, dataset, version, ver, co)
+      case Some(cat.AssetType.Cog) => cogAdd(ex, dataset, ver.version, ver, co)
+      case Some(cat.AssetType.RasterTileCache) => rasterTileCacheAdd(ex, dataset, ver.version, ver, co)
       case Some(cat.AssetType.StaticVectorTileCache) =>
-        vectorTileCacheAdd(ex, dataset, version, ver, co)
+        vectorTileCacheAdd(ex, dataset, ver.version, ver, co)
       case other =>
         throw Reject(501, "Not implemented for asset type " + other.getOrElse("(missing)"))
     }
@@ -1693,31 +1661,28 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
                        asset: cat.Asset, task: String, taskKey: String)
                       (build: => (String, String)): Unit = {
     val assetId = asset.assetId
-    def setStatus(status: String): Unit = catalogLock.synchronized {
-      catalog = catalog.withAssetStatus(dataset, version, assetId, status)
-    }
-    catalogLock.synchronized {
-      findAsset(assetId) match {
-        case Some((_, prior)) if prior.status == "failed" =>
-          catalog = catalog.withoutAsset(dataset, version, assetId)
-        case _ => ()
+    update { c =>
+      val cleared = c.asset(assetId) match {
+        case Some((v, prior)) if prior.status == "failed" =>
+          c.withoutAsset(v.dataset, v.version, assetId)
+        case Some(_) =>
+          throw Reject(409, s"Asset $assetId already exists (choose another implementation)")
+        case None => c
       }
-      if (findAsset(assetId).isDefined)
-        throw Reject(409, s"Asset $assetId already exists (choose another implementation)")
-      catalog = catalog.withVersionPatched(dataset, version, v =>
-        v.copy(assets = v.assets :+ asset))
+      cleared.withVersionPatched(dataset, version, v => v.copy(assets = v.assets :+ asset))
     }
     val jobId = jobRegistry.submit { () =>
       try {
         val (detail, result) = build
-        setStatus("saved")
         val tid = graft.geo.GeoExpressions.Uuid5.of("oid", s"task:$dataset/$version/$taskKey")
-        taskRecords.put(tid, TaskRec(tid, assetId, Seq(
-          graft.etl.VersionCreation.ChangeLog(task, "success", detail))))
+        val t = cat.Task(tid, assetId, Seq(
+          graft.etl.VersionCreation.ChangeLog(task, "success", detail)))
+        update(_.withAssetPatched(assetId, _.copy(status = "saved"))
+          .withVersionPatched(dataset, version, _.withTasks(Seq(t))))
         result
       } catch {
         case e: Throwable =>
-          setStatus("failed")
+          update(_.withAssetPatched(assetId, _.copy(status = "failed")))
           throw e
       }
     }
@@ -1883,19 +1848,15 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * listing): every asset record of the version — the default
     * database table plus derived exports. */
   private def versionAssets(ex: HttpExchange, dataset: String, version: String): Unit = {
-    val items = versionOf(dataset, version).assets.map { a =>
-      s"""{"asset_id":"${a.assetId}","asset_type":${graft.geo.Json.write(a.assetType)},""" +
-        s""""asset_uri":${graft.geo.Json.write(a.assetUri)},"is_default":${a.isDefault},""" +
-        s""""status":"${a.status}"}"""
-    }.mkString(",")
+    val items = versionOf(dataset, version).assets.map(assetJson(_)).mkString(",")
     respond(ex, 200, "application/json", s"""{"data":[$items],"status":"success"}""")
   }
 
   /** GET /dataset/{d}/{v}/creation_options (`versions.py:333-347`):
-    * the default asset's creation options — the settings `/append`
-    * re-runs loads with. */
+    * the creation options the version was created with — the settings
+    * `/append` re-runs loads with. */
   private def creationOptions(ex: HttpExchange, dataset: String, version: String): Unit = {
-    val o = versionOpts.getOrElse((dataset, realVersion(dataset, version)),
+    val o = catalog.record(dataset, version).flatMap(_.creationOptions).getOrElse(
       throw Reject(404, s"Dataset version $dataset.$version has no creation options"))
     val uris = o.sourceUris.map(graft.geo.Json.write).mkString("[", ",", "]")
     respond(ex, 200, "application/json",
@@ -1905,43 +1866,33 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
 
   /** GET /dataset/{d}/{v}/change_log (`versions.py:317-330`): the
     * creation DAG's task log on its own. */
-  private def versionChangeLog(ex: HttpExchange, dataset: String, version: String): Unit = {
-    val record = versionRecords.get((dataset, realVersion(dataset, version)))
-    if (record.isEmpty && catalog.version(dataset, version).isEmpty)
-      throw Reject(404, s"Dataset version $dataset.$version not found")
-    val log = record.map(_._2).getOrElse(Nil).map { c =>
-      s"""{"task":"${c.task}","status":"${c.status}","detail":${graft.geo.Json.write(c.detail)}}"""
-    }.mkString(",")
-    respond(ex, 200, "application/json", s"""{"data":[$log],"status":"success"}""")
-  }
-
-  /** Version metadata + change log (`GET /dataset/{d}/{v}`). */
-  private def versionGet(ex: HttpExchange, dataset: String, version: String): Unit = {
-    val record = versionRecords.get((dataset, realVersion(dataset, version)))
-    val inCatalog = catalog.version(dataset, version)
-    if (record.isEmpty && inCatalog.isEmpty)
-      throw Reject(404, s"Dataset version $dataset.$version not found")
-    val status = record.map(_._1).getOrElse("saved")
-    val log = record.map(_._2).getOrElse(Nil).map { c =>
-      s"""{"task":"${c.task}","status":"${c.status}","detail":${graft.geo.Json.write(c.detail)}}"""
-    }.mkString(",")
-    val latest = inCatalog.exists(_.isLatest)
+  private def versionChangeLog(ex: HttpExchange, dataset: String, version: String): Unit =
     respond(ex, 200, "application/json",
-      s"""{"data":{"dataset":"$dataset","version":"$version","status":"$status","is_latest":$latest,"change_log":[$log]},"status":"success"}""")
-  }
+      s"""{"data":[${changeLogJson(recordOf(dataset, version).changeLog)}],"status":"success"}""")
+
+  /** Version status + change log (`GET /dataset/{d}/{v}`), pollable
+    * while a creation runs. */
+  private def versionGet(ex: HttpExchange, dataset: String, version: String): Unit =
+    respond(ex, 200, "application/json", versionBody(dataset, version, recordOf(dataset, version)))
+
+  private def versionBody(dataset: String, version: String, v: cat.Version): String =
+    s"""{"data":{"dataset":"$dataset","version":"$version","status":"${v.status}","is_latest":${v.isLatest},"change_log":[${changeLogJson(v.changeLog)}]},"status":"success"}"""
 
   // ------------------------------------------------- dataset/version CRUD
 
   /** JSEND body for one dataset record (`_dataset_response`,
     * `dataset.py:190-…`: metadata + the version name list). */
-  private def datasetBody(d: cat.Dataset): String = {
-    val meta = d.metadata.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(v)}" }
-      .mkString("{", ",", "}")
-    val versions = d.versions.map(v => graft.geo.Json.write(v.version))
-      .mkString("[", ",", "]")
-    s"""{"data":{"dataset":"${d.name}","metadata":$meta,"versions":$versions},"status":"success"}"""
-  }
+  private def datasetBody(d: cat.Dataset): String =
+    s"""{"data":{"dataset":"${d.name}","metadata":${jsonObject(d.metadata)},"versions":${versionNames(d)}},"status":"success"}"""
+
+  private def versionNames(d: cat.Dataset): String =
+    d.versions.map(v => graft.geo.Json.write(v.version)).mkString("[", ",", "]")
+
+  /** A string map as a JSON object, keys sorted. */
+  private def jsonObject(m: Map[String, String]): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) =>
+      s"${graft.geo.Json.write(k)}:${graft.geo.Json.write(v)}"
+    }.mkString("{", ",", "}")
 
   private def metadataOf(obj: Map[String, Any]): Map[String, String] =
     obj.get("metadata") match {
@@ -1958,11 +1909,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * response pages and carries the reference's links + meta blocks. */
   private def datasetsList(ex: HttpExchange): Unit = {
     val all = catalog.datasets.sortBy(_.name)
-    def item(d: cat.Dataset): String = {
-      val versions = d.versions.map(v => graft.geo.Json.write(v.version))
-        .mkString("[", ",", "]")
-      s"""{"dataset":"${d.name}","versions":$versions}"""
-    }
+    def item(d: cat.Dataset): String = s"""{"dataset":"${d.name}","versions":${versionNames(d)}}"""
     val params = queryParams(ex)
     val sizeP = params.get("page[size]")
     val pageP = params.get("page[number]")
@@ -1995,10 +1942,7 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     if (catalog.dataset(dataset).isDefined || builtinDatasets.contains(dataset))
       throw Reject(400, s"Dataset with name $dataset already exists")
     val meta = metadataOf(bodyObject(ex))
-    val created = catalogLock.synchronized {
-      catalog = catalog.withDataset(dataset, meta)
-      catalog.dataset(dataset).get
-    }
+    val created = update(_.withDataset(dataset, meta)).dataset(dataset).get
     ex.getResponseHeaders.add("Location", s"/$dataset")
     respond(ex, 201, "application/json", datasetBody(created))
   }
@@ -2007,8 +1951,8 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
   private def datasetGet(ex: HttpExchange, dataset: String): Unit =
     respond(ex, 200, "application/json", datasetBody(datasetOf(dataset)))
 
-  private def datasetOf(dataset: String): cat.Dataset =
-    catalog.dataset(dataset).getOrElse(throw Reject(404, s"Dataset $dataset not found"))
+  private def datasetOf(dataset: String, c: cat.Catalog = catalog): cat.Dataset =
+    c.dataset(dataset).getOrElse(throw Reject(404, s"Dataset $dataset not found"))
 
   /** PATCH /dataset/{d} (`dataset.py:125-148`): merge individual
     * metadata fields without touching the rest. */
@@ -2016,22 +1960,23 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     writeGate(ex)
     datasetOf(dataset)
     val patch = metadataOf(bodyObject(ex))
-    val updated = catalogLock.synchronized {
-      catalog = catalog.withDatasetMetadata(dataset, patch)
-      catalog.dataset(dataset).get
-    }
-    respond(ex, 200, "application/json", datasetBody(updated))
+    respond(ex, 200, "application/json",
+      datasetBody(datasetOf(dataset, update(_.withDatasetMetadata(dataset, patch)))))
   }
 
   /** DELETE /dataset/{d} (`dataset.py:157-188`): only once no versions
-    * remain — 409 otherwise, word-for-word the reference detail. */
+    * remain, a first creation still pending included — 409 otherwise,
+    * word-for-word the reference detail. */
   private def datasetDelete(ex: HttpExchange, dataset: String): Unit = {
     writeGate(ex)
-    val d = datasetOf(dataset)
-    if (d.versions.nonEmpty)
-      throw Reject(409, "There are versions registered with the dataset." +
-        "Delete all related versions prior to deleting a dataset")
-    catalogLock.synchronized { catalog = catalog.withoutDataset(dataset) }
+    var d: cat.Dataset = null
+    update { c =>
+      d = datasetOf(dataset, c)
+      if (d.versions.nonEmpty)
+        throw Reject(409, "There are versions registered with the dataset." +
+          "Delete all related versions prior to deleting a dataset")
+      c.withoutDataset(dataset)
+    }
     respond(ex, 200, "application/json", datasetBody(d))
   }
 
@@ -2039,55 +1984,44 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     * `latest` tag and/or downloadability of a version. */
   private def versionPatch(ex: HttpExchange, dataset: String, version: String): Unit = {
     writeGate(ex)
-    versionOf(dataset, version)
+    val name = versionOf(dataset, version).version
     val obj = bodyObject(ex)
     val isLatest = obj.get("is_latest").collect { case b: Boolean => b }
     val downloadable = obj.get("is_downloadable").collect { case b: Boolean => b }
-    catalogLock.synchronized {
-      catalog = catalog.withVersionPatched(dataset, version, v =>
-        v.copy(
-          isLatest = isLatest.getOrElse(v.isLatest),
-          isDownloadable = downloadable.getOrElse(v.isDownloadable)))
-    }
-    versionGet(ex, dataset, version)
+    val patched = update(_.withVersionPatched(dataset, name, v =>
+      v.copy(
+        isLatest = isLatest.getOrElse(v.isLatest),
+        isDownloadable = downloadable.getOrElse(v.isDownloadable))))
+    respond(ex, 200, "application/json",
+      versionBody(dataset, version, recordOf(dataset, name, patched)))
   }
 
   /** DELETE /dataset/{d}/{v} (`versions.py:279-315`): refuse to delete
     * a `latest` version while siblings exist (reference 409 detail);
-    * otherwise drop the version, its registered view, and its managed
-    * assets (the background `delete_all_assets`). Builtin lake tables
-    * are not deletable — they are the test fixture, not managed
-    * assets. */
+    * otherwise drop the version with everything it holds, its
+    * registered view, and its assets' files (the background
+    * `delete_all_assets`). Builtin lake tables are not deletable — they
+    * are the test fixture, not managed assets. */
   private def versionDelete(ex: HttpExchange, dataset: String, version: String): Unit = {
     writeGate(ex)
     if (builtinDatasets.contains(dataset))
       throw Reject(409, s"Dataset $dataset conflicts with a pre-registered table")
-    val v = versionOf(dataset, version)
-    val siblings = catalog.dataset(dataset).map(_.versions.length).getOrElse(0)
-    if (v.isLatest && siblings > 1)
-      throw Reject(409, "Deletion failed." +
-        "You can only delete a version tagged as `latest` if no other version of the same dataset exists." +
-        "Change `latest` version, or delete all other versions first.")
-    // cascade the per-asset state too: asset ids are deterministic,
-    // so a recreated version must not inherit stale metadata,
-    // field overrides, or task records
-    v.assets.foreach { a =>
-      assetMetadata.remove(a.assetId)
-      fieldMetaOverrides.keys.filter(_._1 == a.assetId)
-        .foreach(fieldMetaOverrides.remove)
-      taskRecords.values.filter(_.assetId == a.assetId)
-        .foreach(t => taskRecords.remove(t.taskId))
+    var v: cat.Version = null
+    update { c =>
+      v = recordOf(dataset, version, c)
+      if (v.isLatest && c.dataset(dataset).exists(_.versions.length > 1))
+        throw Reject(409, "Deletion failed." +
+          "You can only delete a version tagged as `latest` if no other version of the same dataset exists." +
+          "Change `latest` version, or delete all other versions first.")
+      c.withoutVersion(dataset, v.version)
     }
-    catalogLock.synchronized { catalog = catalog.withoutVersion(dataset, version) }
-    versionRecords.remove((dataset, version))
-    versionOpts.remove((dataset, version))
-    // delete_all_assets: the registered view + the version's files
-    spark.catalog.dropTempView(
-      graft.etl.VersionCreation.viewName(dataset, version))
-    val base = s"${sys.props("java.io.tmpdir")}/graft_versions/${dataset}_$version"
-    for (dir <- Seq(base, base + "_exports",
-      s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${dataset}_$version")) {
-      val p = java.nio.file.Paths.get(dir)
+    // delete_all_assets: the registered view, the assets' files (the
+    // vector exports sit beside the default asset's directory) and the
+    // GeoTIFF tiles cut from it
+    spark.catalog.dropTempView(graft.etl.VersionCreation.viewName(dataset, v.version))
+    for (path <- v.assets.map(_.assetUri) ++ v.defaultAsset.map(_.assetUri + "_exports") :+
+        geotiffCache(v).toString) {
+      val p = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(p))
         java.nio.file.Files.walk(p).iterator().asScala.toSeq
           .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
@@ -2095,6 +2029,10 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     respond(ex, 200, "application/json",
       s"""{"data":{"dataset":"$dataset","version":"$version","status":"deleted"},"status":"success"}""")
   }
+
+  /** Where the GeoTIFF route caches the tiles it cuts from `v`. */
+  private def geotiffCache(v: cat.Version): java.nio.file.Path = java.nio.file.Paths.get(
+    s"${sys.props("java.io.tmpdir")}/graft_geotiff_cache/${v.dataset}_${v.version}")
 
   /** API-key creation (`POST /auth/apikey`): 201 with the new key.
     * Body: `{"domains": ["*.example.com", ...]}` (optional). */
@@ -2482,12 +2420,21 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
         throw Reject(422, s"$name must be a number")
     }
 
+  /** The version a path names (`latest` resolved) if it serves data;
+    * 404 otherwise. */
   private def versionOf(dataset: String, version: String): cat.Version =
     catalog.version(dataset, version).getOrElse(
       throw Reject(404, s"Dataset version $dataset.$version not found"))
 
+  /** The version record a path names in `c` (`latest` resolved), a
+    * pending or failed first creation included; 404 otherwise. */
+  private def recordOf(dataset: String, version: String,
+                       c: cat.Catalog = catalog): cat.Version =
+    c.record(dataset, version).getOrElse(
+      throw Reject(404, s"Dataset version $dataset.$version not found"))
+
   private def assetOf(id: String): (cat.Version, cat.Asset) =
-    findAsset(id).getOrElse(throw Reject(404, s"Asset $id not found"))
+    catalog.asset(id).getOrElse(throw Reject(404, s"Asset $id not found"))
 
   private def keyRegistry: ApiKeys =
     apiKeys.getOrElse(throw Reject(501, "API keys are not enabled on this deployment"))

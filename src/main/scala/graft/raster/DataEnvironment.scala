@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.catalyst.util.ArrayData
 
-import graft.catalog.{AssetType, Catalog}
+import graft.catalog.{Asset, AssetType, Catalog}
 
 /** Per-pixel value function over a tile: global pixel coords + the
   * tile's lake band arrays (indexed by the environment's band order).
@@ -187,13 +187,10 @@ object DataEnvironment {
     * (pixel_meaning / band / calc / …), names layers through
     * `Builders.defaultLayer`, and derives date/conf/density layers the
     * way `_get_data_environment` does. Versions resolve
-    * latest-unless-overridden via [[Catalog.resolveVersions]]. */
-  def fromCatalog(catalog: Catalog, lakeDir: String,
-                  overrides: Map[String, String] = Map.empty,
-                  gridSel: Option[Grid] = None): DataEnvironment = {
-    val rasterDatasets = catalog.rasterDatasets
-    val resolved = catalog.resolveVersions(rasterDatasets, overrides)
-
+    * latest-unless-overridden via [[Catalog.resolveVersions]] into
+    * `allAssets` ([[rasterAssets]]). */
+  private def fromAssets(allAssets: Seq[(String, Asset)], lakeDir: String,
+                         gridSel: Option[Grid]): DataEnvironment = {
     // ONE environment per grid (`_get_data_environment(grid)`,
     // `queries.py:654-668`): the queried dataset's grid selects which
     // tile-set assets contribute layers; a layer on another grid is
@@ -201,9 +198,6 @@ object DataEnvironment {
     // reference's cross-grid rejection. Callers that don't pass a grid
     // (the fixed zonal route) get the single grid when the catalog has
     // one, else the default test grid.
-    val allAssets = resolved.toSeq.collect { case (ds, Some(v)) =>
-      v.defaultAsset.filter(_.assetType == AssetType.RasterTileSet).map(ds -> _)
-    }.flatten
     val byGrid = allAssets.groupBy { case (_, a) => gridOf(a.creationOptions) }
     val g = gridSel.getOrElse(
       if (byGrid.size == 1) byGrid.keys.head else SyntheticEnv.grid)
@@ -350,26 +344,38 @@ object DataEnvironment {
       pxPerTile = opts.get("grid_px_per_tile").map(_.toInt).getOrElse(d.pxPerTile))
   }
 
+  /** The default raster tile-set asset of each raster dataset's
+    * resolved version: all an environment reads from the catalog. */
+  private def rasterAssets(catalog: Catalog,
+                           overrides: Map[String, String]): Seq[(String, Asset)] =
+    catalog.resolveVersions(catalog.rasterDatasets, overrides).toSeq.collect {
+      case (ds, Some(v)) =>
+        v.defaultAsset.filter(_.assetType == AssetType.RasterTileSet).map(ds -> _)
+    }.flatten
+
   // ------------------------------------------------- TTL memo (reference
   // caches the data environment for 5 minutes, `queries.py:654-660`)
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Map[String, String], Option[Grid]), (Long, DataEnvironment)]()
+    (Set[(String, String, Map[String, String])], String, Map[String, String], Option[Grid]),
+    (Long, DataEnvironment)]()
   private val TtlMs = 5 * 60 * 1000L
 
   def cached(catalog: Catalog, lakeDir: String,
              overrides: Map[String, String] = Map.empty,
              gridSel: Option[Grid] = None): DataEnvironment = {
-    // keyed on the catalog INSTANCE too: catalogs are immutable and the
-    // API layer swaps a fresh one on every version change, so two
-    // catalogs sharing a lake dir (two servers in one JVM, or a server
-    // after a version PUT) must never alias each other's environments
-    val key = (System.identityHashCode(catalog), lakeDir, overrides, gridSel)
+    // keyed on what the environment is built from, the resolved raster
+    // assets: a catalog swap that leaves them as they were (a metadata
+    // or task write, a tabular version) keeps the environment, and one
+    // that changes them (a raster version PUT or DELETE) misses
+    val assets = rasterAssets(catalog, overrides)
+    val key = (assets.map { case (ds, a) => (ds, a.assetUri, a.creationOptions) }.toSet,
+      lakeDir, overrides, gridSel)
     val now = System.currentTimeMillis()
     val hit = memo.get(key)
     if (hit != null && now - hit._1 < TtlMs) hit._2
     else {
-      val env = fromCatalog(catalog, lakeDir, overrides, gridSel)
+      val env = fromAssets(assets, lakeDir, gridSel)
       memo.entrySet.removeIf(e => now - e.getValue._1 >= TtlMs)
       memo.put(key, (now, env))
       env

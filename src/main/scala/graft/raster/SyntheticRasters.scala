@@ -8,7 +8,7 @@ import graft.catalog._
   * 654-774`, asset `creation_options`). Each dataset maps one lake
   * band (see [[TileLake.bandColumns]]) through a `pixel_meaning` that
   * exercises a distinct derived-layer synthesis path in
-  * [[DataEnvironment.fromCatalog]]:
+  * [[DataEnvironment.cached]]:
   *
   *   - `class`    → plain categorical layer + raster-table dictionary
   *   - `threshold`→ plain numeric layer (the TCD filter family)

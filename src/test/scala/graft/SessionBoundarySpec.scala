@@ -15,9 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * scans keep new code from growing its own builder, call site, scratch
   * view or conf write, and name the file and line of each hit; the
   * foreign-session test pins the driver contract, which accepts
-  * sessions the engine did not build. One more scan keeps `ApiServer`
-  * to one error path: handlers throw, and `handle` alone writes the
-  * JSEND error envelope. */
+  * sessions the engine did not build. Two more scans keep `ApiServer`
+  * to one error path (handlers throw, and `handle` alone writes the
+  * JSEND error envelope) and to one catalog write (`update` alone
+  * assigns the catalog snapshot). */
 class SessionBoundarySpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala/graft")
@@ -77,6 +78,18 @@ class SessionBoundarySpec extends AnyFunSuite {
       s"throw ApiServer.Reject and let handle render it; envelope sites: $envelopes")
     val early = occurrences("""\breturn\s+respond\(""").filter(_._1 == api)
     assert(early.isEmpty, s"throw ApiServer.Reject instead of responding early: $early")
+  }
+
+  test("ApiServer swaps its catalog only in update") {
+    val api = "api/ApiServer.scala"
+    val defs = occurrences("""\bdef update\(""").filter(_._1 == api)
+    // assignments, not the `var` declaration or comparisons
+    val swaps = occurrences("""(?<!\bvar )\bcatalog\s*=(?![=>])""").filter(_._1 == api)
+    val body = defs.headOption.map(_._2).getOrElse(-1)
+    val outside = swaps.filterNot { case (_, line) => line > body && line <= body + 2 }
+    assert(outside.isEmpty, s"write the catalog through update(f); assignments outside it: $outside")
+    assert(defs.length == 1 && swaps.length == 1,
+      s"one update ($defs) holding the one assignment ($swaps)")
   }
 
   test("SparkEntry.queries installs the native functions on a session the " +

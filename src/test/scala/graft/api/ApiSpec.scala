@@ -2203,4 +2203,121 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fnDiff.isEmpty, s"function registry written: $fnDiff")
     } finally srv.stop()
   }
+
+  private def send(method: String, path: String, body: String,
+                   hdrs: (String, String)*): HttpResponse[String] = {
+    val rb = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      .method(method, HttpRequest.BodyPublishers.ofString(body))
+    hdrs.foreach { case (k, v) => rb.header(k, v) }
+    client.send(rb.build(), HttpResponse.BodyHandlers.ofString())
+  }
+
+  /** Poll `GET /dataset/{d}/{v}` until its status leaves "pending". */
+  private def awaitVersion(path: String): String = {
+    var body = get(path).body()
+    var tries = 0
+    while (tries < 120 && body.contains("\"status\":\"pending\"")) {
+      Thread.sleep(250); body = get(path).body(); tries += 1
+    }
+    body
+  }
+
+  test("version routes given `latest` read and write the concrete version") {
+    val admin = "Authorization" -> "Bearer test-admin"
+    val src = java.nio.file.Files.createTempDirectory("latestsrc")
+    java.nio.file.Files.writeString(src.resolve("a.csv"), "id,v\n1,x\n2,y\n")
+    java.nio.file.Files.writeString(src.resolve("b.csv"), "id,v\n3,z\n")
+    def sources(f: String) =
+      s"""{"creation_options": {"source_uri": ["file://${src.resolve(f)}"]}}"""
+    assert(send("PUT", "/dataset/latestds/v1", sources("a.csv"), admin).statusCode() == 202)
+    assert(awaitVersion("/dataset/latestds/v1").contains("\"status\":\"saved\""))
+    // the alias names whichever version is tagged: no version takes its name
+    assert(send("PUT", "/dataset/latestds/latest", sources("a.csv"), admin).statusCode() == 400)
+    val count = "/dataset/latestds/v1/query/json?sql=" +
+      java.net.URLEncoder.encode("SELECT count(*) AS cnt FROM data", "UTF-8")
+    // metadata written through the alias is the concrete version's
+    assert(send("POST", "/dataset/latestds/latest/metadata", """{"title": "Latest"}""", admin)
+      .statusCode() == 201)
+    val meta = get("/dataset/latestds/v1/metadata")
+    assert(meta.statusCode() == 200 && meta.body().contains("\"title\":\"Latest\""),
+      meta.body().take(300))
+    // an append through the alias lands in the concrete version's table
+    val app = send("POST", "/dataset/latestds/latest/append", sources("b.csv"), admin)
+    assert(app.statusCode() == 202, app.body().take(300))
+    val appended = awaitVersion("/dataset/latestds/v1")
+    assert(appended.contains("\"status\":\"saved\""), appended.take(500))
+    assert(get(count).body().contains("\"cnt\":3"), get(count).body().take(300))
+    // PATCH through the alias untags the concrete version
+    val untag = send("PATCH", "/dataset/latestds/latest", """{"is_latest": false}""", admin)
+    assert(untag.statusCode() == 200 && untag.body().contains("\"is_latest\":false"),
+      untag.body().take(300))
+    assert(get("/dataset/latestds/v1").body().contains("\"is_latest\":false"))
+    assert(get("/dataset/latestds/latest").statusCode() == 404)
+    assert(send("PATCH", "/dataset/latestds/v1", """{"is_latest": true}""", admin)
+      .statusCode() == 200)
+    // DELETE through the alias deletes the concrete version
+    val del = send("DELETE", "/dataset/latestds/latest", "", admin)
+    assert(del.statusCode() == 200 && del.body().contains("\"status\":\"deleted\""),
+      del.body().take(300))
+    assert(get("/dataset/latestds/v1").statusCode() == 404)
+    assert(get(count).statusCode() == 404, get(count).body().take(300))
+    assert(send("DELETE", "/dataset/latestds", "", admin).statusCode() == 200)
+  }
+
+  test("DELETE /dataset answers 409 while a version's first creation is pending") {
+    val admin = "Authorization" -> "Bearer test-admin"
+    val src = java.nio.file.Files.createTempDirectory("pendsrc")
+    java.nio.file.Files.writeString(src.resolve("a.csv"), "id,v\n1,x\n")
+    assert(send("PUT", "/dataset/pendds", """{"metadata": {"title": "Pending"}}""", admin)
+      .statusCode() == 201)
+    assert(send("PUT", "/dataset/pendds/v1",
+      s"""{"creation_options": {"source_uri": ["file://${src.resolve("a.csv")}"]}}""",
+      admin).statusCode() == 202)
+    val blocked = send("DELETE", "/dataset/pendds", "", admin)
+    assert(blocked.statusCode() == 409 && blocked.body().contains("versions registered"),
+      blocked.body().take(300))
+    assert(awaitVersion("/dataset/pendds/v1").contains("\"status\":\"saved\""))
+    // the record the creation finished into is the one that was created
+    val ds = get("/dataset/pendds")
+    assert(ds.body().contains("\"title\":\"Pending\"") &&
+      ds.body().contains("\"versions\":[\"v1\"]"), ds.body().take(300))
+    assert(send("DELETE", "/dataset/pendds/v1", "", admin).statusCode() == 200)
+    assert(send("DELETE", "/dataset/pendds", "", admin).statusCode() == 200)
+  }
+
+  test("a failed first creation stays a record: its status and tasks, " +
+    "then DELETE like any version") {
+    val admin = "Authorization" -> "Bearer test-admin"
+    val missing = java.nio.file.Files.createTempDirectory("failsrc").resolve("absent.csv")
+    assert(send("PUT", "/dataset/failds/v1",
+      s"""{"creation_options": {"source_uri": ["file://$missing"]}}""", admin)
+      .statusCode() == 202)
+    val body = awaitVersion("/dataset/failds/v1")
+    assert(body.contains("\"status\":\"failed\""), body.take(500))
+    // it serves nothing, yet its creation's tasks stay reachable
+    assert(get("/dataset/failds/v1/fields").statusCode() == 404)
+    val step = "\"task\":\"(\\w+)\"".r.findFirstMatchIn(body).get.group(1)
+    val tid = graft.geo.GeoExpressions.Uuid5.of("oid", s"task:failds/v1/$step")
+    assert(get(s"/task/$tid").statusCode() == 200)
+    assert(send("DELETE", "/dataset/failds", "", admin).statusCode() == 409)
+    assert(send("DELETE", "/dataset/failds/v1", "", admin).statusCode() == 200)
+    assert(get(s"/task/$tid").statusCode() == 404)
+    assert(get("/dataset/failds/v1").statusCode() == 404)
+    assert(send("DELETE", "/dataset/failds", "", admin).statusCode() == 200)
+  }
+
+  test("a download whose query fails after the 200 went out ends in a broken " +
+    "transfer, not a complete response") {
+    // ANSI cast failure on rows past the first ones
+    val sql = "SELECT l_orderkey, CASE WHEN l_orderkey > 1000 " +
+      "THEN CAST('x' AS INT) ELSE 0 END AS c FROM data"
+    for (fmt <- Seq("csv", "json")) {
+      val path = s"/dataset/lineitem/v1/download/$fmt?sql=" +
+        java.net.URLEncoder.encode(sql, "UTF-8")
+      val r = scala.util.Try(get(path))
+      assert(r.isFailure && r.failed.get.isInstanceOf[java.io.IOException],
+        s"$fmt: ${r.map(x => s"${x.statusCode()} ${x.body().takeRight(200)}")}")
+    }
+    assert(get("/ping").statusCode() == 200)
+  }
 }
