@@ -14,7 +14,8 @@ sbt -batch compile
 echo "[preflight] session boundary scans"
 # source scans (one session builder, one function registration
 # boundary, no scratch temp views, no stray conf writes, one API error
-# renderer, one API catalog swap) plus the foreign-session entry check
+# renderer, one API catalog swap, one tile-kernel AOI parse and mask)
+# plus the foreign-session entry check
 sbt -batch 'testOnly graft.SessionBoundarySpec'
 
 echo "[preflight] graft.Smoke (entry rows on sf0.001)"

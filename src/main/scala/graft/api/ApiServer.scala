@@ -1433,6 +1433,12 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     // (not latest until it saves); a re-creation keeps serving its
     // current build until the new one lands
     update { c =>
+      // asset ids are `{dataset}-{version}-{kind}`: another dataset's
+      // version with the same prefix would mint the same ids
+      c.datasets.find(d => d.name != dataset &&
+        d.versions.exists(v => s"${d.name}-${v.version}" == s"$dataset-$version"))
+        .foreach(d => throw Reject(409, s"Dataset version $dataset.$version would share " +
+          s"its asset ids with a version of dataset ${d.name}"))
       if (c.record(dataset, version).isDefined)
         c.withVersionPatched(dataset, version, _.copy(status = "pending",
           changeLog = Nil, creationOptions = Some(opts)))
@@ -2009,6 +2015,11 @@ final class ApiServer(spark: SparkSession, sfDir: String, port: Int = 0,
     var v: cat.Version = null
     update { c =>
       v = recordOf(dataset, version, c)
+      // a running creation or append job would leave its files and
+      // view behind with no record pointing at them
+      if (v.status == "pending")
+        throw Reject(409, s"Dataset version $dataset.${v.version} has a job in progress. " +
+          "Wait until it finishes to delete the version.")
       if (v.isLatest && c.dataset(dataset).exists(_.versions.length > 1))
         throw Reject(409, "Deletion failed." +
           "You can only delete a version tagged as `latest` if no other version of the same dataset exists." +

@@ -286,7 +286,8 @@ object VersionCreation {
     import graft.raster.GeoTiff
     val log = Seq.newBuilder[ChangeLog]
     var ok = true
-    var assetOpts: Map[String, String] = Map.empty
+    // the step a failure is logged under: each success moves it on
+    var step = "create_table"
     val band = s"px_${opts.pixelMeaning}"
 
     try {
@@ -315,7 +316,8 @@ object VersionCreation {
       // columns (exact), float32/64 sources (pixETL's float pixel
       // types — biomass, emissions factors) as array<double>; zonal
       // sums over float layers go through fixed-point scaling at
-      // query time (`arr_fixed`) so aggregation stays exact integers
+      // query time (`DataEnvironment.FloatBandFn`) so aggregation
+      // stays exact integers
       val isFloat = metas.head._7.startsWith("float")
       require(metas.forall(_._7.startsWith("float") == isFloat),
         "all tiles must share one sample format family (int vs float), got " +
@@ -558,6 +560,7 @@ object VersionCreation {
         s"derived grid ${grid.tilesX}×${grid.tilesY} tiles of ${grid.pxPerTile} px " +
           f"at (${grid.originLon}%.4f, ${grid.originLat}%.4f), ${metas.length} source tile(s)" +
           (if (srcEpsg != 4326) s" (warped from EPSG:$srcEpsg)" else ""))
+      step = "load_data"
       val rows = spark.createDataFrame(rowsRdd, schema)
       rows.write.mode("overwrite").partitionBy("tile_id").parquet(targetDir)
       log += ChangeLog("load_data", "success",
@@ -565,7 +568,8 @@ object VersionCreation {
           s"(${grid.tilesX}×${grid.tilesY} target grid), " +
           s"band(s) ${bandCols.mkString(",")}, samples ${metas.head._7}")
 
-      assetOpts = Map(
+      step = "register"
+      val assetOpts = Map(
         "pixel_meaning" -> opts.pixelMeaning,
         "sample_type" -> metas.head._7,
         "band" -> bandCols.head,
@@ -584,8 +588,8 @@ object VersionCreation {
     } catch {
       case e: Exception =>
         ok = false
-        log += ChangeLog(if (assetOpts.isEmpty) "create_table" else "load_data",
-          "failed", Option(e.getMessage).getOrElse("raster build failed"))
+        log += ChangeLog(step, "failed",
+          Option(e.getMessage).getOrElse("raster build failed"))
     }
     (log.result(), ok)
   }
@@ -597,10 +601,56 @@ object VersionCreation {
       .map { case (k, v) => k -> v.toString }
   }
 
+  /** Read vector sources (reference ogr2ogr formats): GeoPackage
+    * containers, ESRI Shapefiles, whole-file GeoJSON FeatureCollections
+    * (`.geojson`), or the default newline-delimited GeoJSON features.
+    * Returns the rows with their WKB `geom`, the attribute columns and
+    * the driver name. */
+  private def readVector(spark: SparkSession,
+                         uris: Seq[String]): (DataFrame, Seq[String], String) = {
+    def attrs(raw: DataFrame) =
+      raw.schema.fieldNames.toSeq.filterNot(n => n == "fid" || n == "geom")
+    def fromFeatures(raw: DataFrame, driver: String) = {
+      val props = raw.schema.find(_.name == "properties").map(_.dataType) match {
+        case Some(st: StructType) => st.fieldNames.toSeq
+        case _ => Nil
+      }
+      (raw.selectExpr(props.map(p => s"properties.`$p` AS `$p`") ++
+        Seq("st_geomfromgeojson(to_json(geometry)) AS geom"): _*), props, driver)
+    }
+    if (uris.forall(_.endsWith(".gpkg"))) {
+      val raw = Geopackage.readFiles(spark, uris)
+      (raw, attrs(raw), "GPKG")
+    } else if (uris.forall(_.endsWith(".shp"))) {
+      val raw = Shapefile.readFiles(spark, uris)
+      (raw, attrs(raw), "ESRI Shapefile")
+    } else if (uris.forall(_.endsWith(".geojson"))) {
+      // one FeatureCollection object per file → its feature rows
+      val fc = spark.read.option("multiLine", "true").json(uris: _*)
+      require(fc.schema.fieldNames.contains("features"),
+        "a .geojson source must be a FeatureCollection")
+      fromFeatures(fc.selectExpr("explode(features) AS f").select("f.*"),
+        "GeoJSON FeatureCollection")
+    } else fromFeatures(spark.read.json(uris: _*), "GeoJSON")
+  }
+
+  /** The stored vector schema: the attributes, the WKB `geom` (kept —
+    * the injected AOI filter `ST_Intersects(geom, …)` must resolve on
+    * created versions, as on the reference's geo tables) and the GFW
+    * fields derived from it. */
+  private def withGfwFields(withGeom: DataFrame, props: Seq[String]): DataFrame =
+    withGeom.selectExpr(
+      props.map(p => s"`$p`") ++ Seq(
+        "geom",
+        "st_x(geom) AS lon",
+        "st_y(geom) AS lat",
+        "st_asgeojson(geom) AS gfw_geojson",
+        "st_geostore_id(geom) AS gfw_geostore_id"): _*)
+
   /** Vector-source DAG (`source_type: "vector"`; reference
     * `app/tasks/vector_source_assets.py:195-347` +
-    * `_fill_gfw_fields_sql.sh:9-21`): sources are newline-delimited
-    * GeoJSON Feature objects. Properties become columns, the geometry
+    * `_fill_gfw_fields_sql.sh:9-21`): sources are read by
+    * [[readVector]]. Properties become columns, the geometry
     * derives the GFW fields — point coordinates (`lon`/`lat`),
     * canonical GeoJSON, and the content-addressed geostore id — the
     * same path the s3/s4 ingest operators oracle-check. The feature
@@ -612,60 +662,8 @@ object VersionCreation {
 
     var df: DataFrame = null
     try {
-      // four vector drivers (reference ogr2ogr formats): GeoPackage
-      // containers, ESRI Shapefiles, whole-file GeoJSON
-      // FeatureCollections (`.geojson`), or the default
-      // newline-delimited GeoJSON features
-      val isGpkg = opts.sourceUris.forall(_.endsWith(".gpkg"))
-      val isShp = opts.sourceUris.forall(_.endsWith(".shp"))
-      val isFc = opts.sourceUris.forall(_.endsWith(".geojson"))
-      def geojsonProps(raw: DataFrame): Seq[String] =
-        raw.schema.find(_.name == "properties") match {
-          case Some(f: StructField) => f.dataType match {
-            case st: StructType => st.fieldNames.toSeq
-            case _ => Nil
-          }
-          case None => Nil
-        }
-      def fromFeatures(raw: DataFrame, driver: String) = {
-        val props = geojsonProps(raw)
-        val propCols = props.map(p => s"properties.`$p` AS `$p`")
-        (raw.selectExpr(
-          propCols ++ Seq("st_geomfromgeojson(to_json(geometry)) AS geom"): _*),
-          props, driver)
-      }
-      val (withGeom, props, driver) =
-        if (isGpkg) {
-          val raw = Geopackage.readFiles(spark, opts.sourceUris)
-          val attrs = raw.schema.fieldNames.toSeq
-            .filterNot(n => n == "fid" || n == "geom")
-          (raw, attrs, "GPKG")
-        } else if (isShp) {
-          val raw = Shapefile.readFiles(spark, opts.sourceUris)
-          val attrs = raw.schema.fieldNames.toSeq
-            .filterNot(n => n == "fid" || n == "geom")
-          (raw, attrs, "ESRI Shapefile")
-        } else if (isFc) {
-          // one FeatureCollection object per file → its feature rows
-          val fc = spark.read.option("multiLine", "true")
-            .json(opts.sourceUris: _*)
-          require(fc.schema.fieldNames.contains("features"),
-            "a .geojson source must be a FeatureCollection")
-          fromFeatures(fc.selectExpr("explode(features) AS f").select("f.*"),
-            "GeoJSON FeatureCollection")
-        } else {
-          fromFeatures(spark.read.json(opts.sourceUris: _*), "GeoJSON")
-        }
-      // the stored schema KEEPS the WKB geom column (reference geo
-      // tables do — the injected AOI filter `ST_Intersects(geom, …)`
-      // must resolve on created versions)
-      df = withGeom.selectExpr(
-        props.map(p => s"`$p`") ++ Seq(
-          "geom",
-          "st_x(geom) AS lon",
-          "st_y(geom) AS lat",
-          "st_asgeojson(geom) AS gfw_geojson",
-          "st_geostore_id(geom) AS gfw_geostore_id"): _*)
+      val (withGeom, props, driver) = readVector(spark, opts.sourceUris)
+      df = withGfwFields(withGeom, props)
       log += ChangeLog("create_table", "success",
         s"vector schema: ${props.mkString(", ")} + geom + GFW fields")
       log += ChangeLog("load_data", "success",
@@ -834,8 +832,8 @@ object VersionCreation {
 
   /** `/append` for VECTOR versions (reference
     * `vector_source_assets.py:350-413` re-runs the load jobs for the
-    * new source files): new NDJSON-GeoJSON (or `.gpkg`) sources run
-    * the same property + GFW-field derivation, and the
+    * new source files): new sources of any format the creation DAG
+    * reads run its reader and GFW-field derivation, and the
     * content-addressed `gfw_geostore_id` is the natural idempotency
     * key — re-appending a feature already in the version is a no-op
     * (the vector analog of `ON CONFLICT DO NOTHING`). */
@@ -847,29 +845,8 @@ object VersionCreation {
     var added: Long = -1
     try {
       val existing = spark.read.parquet(targetDir)
-      val isGpkg = newUris.forall(_.endsWith(".gpkg"))
-      val withGeom =
-        if (isGpkg) Geopackage.readFiles(spark, newUris)
-        else {
-          val raw = spark.read.json(newUris: _*)
-          val props = raw.schema.find(_.name == "properties") match {
-            case Some(f: StructField) => f.dataType match {
-              case st: StructType => st.fieldNames.toSeq
-              case _ => Nil
-            }
-            case None => Nil
-          }
-          raw.selectExpr(props.map(p => s"properties.`$p` AS `$p`") ++
-            Seq("st_geomfromgeojson(to_json(geometry)) AS geom"): _*)
-        }
-      val derived = withGeom.selectExpr(
-        withGeom.schema.fieldNames.toSeq
-          .filterNot(n => n == "fid" || n == "geom").map(n => s"`$n`") ++ Seq(
-          "geom",
-          "st_x(geom) AS lon",
-          "st_y(geom) AS lat",
-          "st_asgeojson(geom) AS gfw_geojson",
-          "st_geostore_id(geom) AS gfw_geostore_id"): _*)
+      val (withGeom, props, _) = readVector(spark, newUris)
+      val derived = withGfwFields(withGeom, props)
       val incoming = derived.select(existing.schema.fields.map(f =>
         derived.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
         .dropDuplicates("gfw_geostore_id")

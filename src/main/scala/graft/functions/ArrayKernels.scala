@@ -3,135 +3,16 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native elementwise kernels over co-registered band arrays (the J4
-  * array-level calc surface): one call per TILE row, a tight primitive
-  * loop inside — the replacement for the round-1/2 interpreted
-  * `transform(sequence(...), i -> …)` HOF synthesis in the legacy
-  * r-queries (VERDICT r2 "What's wrong" #4). `CodegenFallback` is fine
-  * at this granularity: the per-row dispatch amortizes over the
-  * 10⁴-pixel loop, which is compiled Scala either way.
-  */
-object ArrayKernels {
-
-  /** PixelFn reading kernel input band `idx`. */
-  final case class KBand(idx: Int) extends graft.raster.PixelFn {
-    def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long =
-      bands(idx).getLong(i)
-  }
-}
-
-/** `arr_calc('<calc>', a[, b])` → array<bigint>: the engine's numpy-ish
-  * calc DSL ([[graft.raster.PixelCalc]] — the same compiler the fused
-  * OTF path uses for derived layers) applied elementwise to whole band
-  * arrays. Variables A, B bind to the array arguments in order. */
-case class ArrCalc(children: Seq[Expression])
-    extends Expression with CodegenFallback {
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "arr_calc"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.length < 2 || children.length > 3)
-      TypeCheckResult.TypeCheckFailure("arr_calc expects (calc, a[, b])")
-    else if (children.head.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure("arr_calc calc must be a string literal")
-    else if (children.tail.exists(c => !c.dataType.isInstanceOf[ArrayType]))
-      TypeCheckResult.TypeCheckFailure("arr_calc operands must be arrays")
-    else TypeCheckResult.TypeCheckSuccess
-
-  @transient private lazy val fn: graft.raster.PixelFn = {
-    val calc = children.head.eval(InternalRow.empty).asInstanceOf[UTF8String].toString
-    graft.raster.PixelCalc.compile(calc,
-      children.tail.indices.map(ArrayKernels.KBand(_)))
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val bands = new Array[ArrayData](children.length - 1)
-    var b = 0
-    while (b < bands.length) {
-      val v = children(b + 1).eval(input)
-      if (v == null) return null
-      bands(b) = v.asInstanceOf[ArrayData]
-      b += 1
-    }
-    val n = bands(0).numElements()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) { out(i) = fn.eval(0, 0, bands, i); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ArrCalc = copy(children = newChildren)
-}
-
-/** `arr_cmp` family → array<boolean>: elementwise compare against a
-  * numeric literal (the legacy per-pixel mask conjuncts). */
-abstract class ArrCmpBase extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(BooleanType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), _: NumericType) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, numeric), got $t")
-    }
-  protected def cmp(v: Long, rhs: Long): Boolean
-  override protected def nullSafeEval(aAny: Any, rAny: Any): Any = {
-    val a = aAny.asInstanceOf[ArrayData]
-    val rhs = rAny.asInstanceOf[Number].longValue()
-    val n = a.numElements()
-    val out = new Array[Boolean](n)
-    var i = 0
-    while (i < n) { out(i) = cmp(a.getLong(i), rhs); i += 1 }
-    new GenericArrayData(out)
-  }
-}
-
-case class ArrGe(left: Expression, right: Expression) extends ArrCmpBase {
-  override def prettyName: String = "arr_ge"
-  protected def cmp(v: Long, rhs: Long): Boolean = v >= rhs
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrGe =
-    copy(left = l, right = r)
-}
-
-case class ArrEq(left: Expression, right: Expression) extends ArrCmpBase {
-  override def prettyName: String = "arr_eq"
-  protected def cmp(v: Long, rhs: Long): Boolean = v == rhs
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrEq =
-    copy(left = l, right = r)
-}
-
-/** `arr_and(m1, m2)` → array<boolean>: elementwise conjunction of two
-  * masks (AOI mask ∧ per-pixel predicate). */
-case class ArrAnd(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(BooleanType, containsNull = false)
-  override def prettyName: String = "arr_and"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(BooleanType, _), ArrayType(BooleanType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"arr_and expects two array<boolean>, got $t")
-    }
-  override protected def nullSafeEval(aAny: Any, bAny: Any): Any = {
-    val a = aAny.asInstanceOf[ArrayData]
-    val b = bAny.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val out = new Array[Boolean](n)
-    var i = 0
-    while (i < n) { out(i) = a.getBoolean(i) && b.getBoolean(i); i += 1 }
-    new GenericArrayData(out)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrAnd =
-    copy(left = l, right = r)
-}
+// Native kernels over whole band arrays: one call per TILE row, a
+// tight primitive loop inside — the replacement for the round-1/2
+// interpreted HOF folds in the per-tile statistics queries (VERDICT r2
+// "What's wrong" #4). `CodegenFallback` is fine at this granularity:
+// the per-row dispatch amortizes over the 10⁴-pixel loop, which is
+// compiled Scala either way.
 
 /** `arr_sum(a)` → bigint: exact 64-bit sum (replaces the interpreted
   * `aggregate(a, 0, (x, v) -> x + v)` fold). */
@@ -152,38 +33,6 @@ case class ArrSum(child: Expression) extends UnaryExpression with CodegenFallbac
     s
   }
   override protected def withNewChildInternal(c: Expression): ArrSum = copy(child = c)
-}
-
-/** `arr_fixed(a, scale)` → array<bigint>: fixed-point conversion of a
-  * FLOAT band — elementwise `round(v * scale)` (half away from zero,
-  * `Math.round` on the scaled double). This is the bridge that lets
-  * float tile-lake layers (array<double> columns) ride the exact
-  * integer zonal machinery: scale by the layer's precision (4 for
-  * quarter-unit data, 100 for centi-units), aggregate as exact
-  * 64-bit integers in any order, divide once at the end. The oracle
-  * mirrors it with `CAST(round(v * scale) AS BIGINT)`. */
-case class ArrFixed(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "arr_fixed"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), _: NumericType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"arr_fixed expects (array<double>, numeric scale), got $t")
-    }
-  override protected def nullSafeEval(aAny: Any, sAny: Any): Any = {
-    val a = aAny.asInstanceOf[ArrayData]
-    val scale = sAny.asInstanceOf[Number].doubleValue()
-    val n = a.numElements()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) { out(i) = Math.round(a.getDouble(i) * scale); i += 1 }
-    new GenericArrayData(out)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrFixed =
-    copy(left = l, right = r)
 }
 
 /** `arr_hist(a, lo, hi, bins)` → array<bigint>: equal-width histogram
@@ -228,82 +77,4 @@ case class ArrHist(children: Seq[Expression])
   }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ArrHist = copy(children = newChildren)
-}
-
-/** `grid_arr('<mode>', ty, origin_lat, tile_deg, px_per_tile)` →
-  * array<bigint>: per-pixel grid-derived values for one tile row.
-  * Modes: `microha` (geodesic pixel area in integer micro-hectares,
-  * replicating `Grid.microHaSql`'s decimal-literal arithmetic exactly
-  * — see [[graft.raster.DataEnvironment.MicroHa]]) and `latband`
-  * (`floor(latitude_center)`, replicating `Grid.latCenterSql`'s exact
-  * DECIMAL subtraction before the floor). */
-case class GridArr(children: Seq[Expression])
-    extends Expression with CodegenFallback {
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "grid_arr"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.length == 5 && children.head.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "grid_arr expects (mode, ty, origin_lat, tile_deg, px_per_tile)")
-
-  private def num(e: Expression): Double = e.eval(InternalRow.empty) match {
-    case d: Decimal => d.toDouble
-    case n: Number => n.doubleValue()
-    case other => throw new IllegalArgumentException(
-      s"grid_arr grid argument must be numeric, got $other")
-  }
-
-  @transient private lazy val (mode, originLat, pixelDeg, p) = {
-    val m = children(0).eval(InternalRow.empty).asInstanceOf[UTF8String].toString
-    val lat0 = num(children(2))
-    val td = num(children(3))
-    val px = num(children(4)).toInt
-    (m, lat0, td / px, px)
-  }
-
-  /** One value per tile ROW (all pixels of a row share gy); rows are
-    * cached per (mode, ty) since only 10²–10⁴ distinct rows exist. */
-  @transient private lazy val rowCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
-
-  private def rowValues(ty: Int): Array[Long] =
-    rowCache.computeIfAbsent(ty, { _ =>
-      val pd = BigDecimal(pixelDeg.toString)
-      val lat0 = BigDecimal(originLat.toString)
-      val rpd = Math.toRadians(pixelDeg)
-      val half = BigDecimal((pixelDeg / 2).toString)
-      Array.tabulate(p) { r =>
-        val gy = ty * p + r
-        mode match {
-          case "microha" =>
-            val top = (lat0 - BigDecimal(gy) * pd).toDouble
-            val bot = (lat0 - BigDecimal(gy + 1) * pd).toDouble
-            Math.floor((Math.sin(Math.toRadians(top)) - Math.sin(Math.toRadians(bot))) *
-              rpd * 6371008.8 * 6371008.8 / 10000.0 * 1000000.0).toLong
-          case "latband" =>
-            (lat0 - BigDecimal(gy) * pd - half)
-              .setScale(0, BigDecimal.RoundingMode.FLOOR).toLong
-          case other => throw new IllegalArgumentException(
-            s"grid_arr mode must be microha|latband, got $other")
-        }
-      }
-    })
-
-  override def eval(input: InternalRow): Any = {
-    val ty = children(1).eval(input).asInstanceOf[Number].intValue()
-    val rows = rowValues(ty)
-    val out = new Array[Long](p * p)
-    var r = 0
-    while (r < p) {
-      java.util.Arrays.fill(out, r * p, (r + 1) * p, rows(r))
-      r += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): GridArr = copy(children = newChildren)
 }

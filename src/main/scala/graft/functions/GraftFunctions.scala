@@ -19,8 +19,6 @@ object GraftFunctions {
     "vec_dot" -> ((es: Seq[Expression]) => VecDot(es(0), es(1))),
     "vec_sqdist" -> ((es: Seq[Expression]) => VecSqDist(es(0), es(1), es(2), es(3))),
     "vec_signbits" -> ((es: Seq[Expression]) => VecSignBits(es(0), es(1), es(2))),
-    "tile_zonal" -> ((es: Seq[Expression]) =>
-      graft.raster.TileZonal(es(0), es(1), es(2))),
     "ngram_hashes" -> ((es: Seq[Expression]) => NGramHashes(es(0), es(1))),
     "shingle_hashes" -> ((es: Seq[Expression]) => ShingleHashes(es(0), es(1))),
     "minhash36" -> ((es: Seq[Expression]) => MinHash36(es.head)),
@@ -28,15 +26,8 @@ object GraftFunctions {
     "rph_sig" -> ((es: Seq[Expression]) => RphSig(es(0), es(1), es(2))),
     "km_argmax" -> ((es: Seq[Expression]) => KmArgmax(es(0), es(1), es(2))),
     "vec_ordered_mean" -> ((es: Seq[Expression]) => VecOrderedMean(es(0), es(1))),
-    "tile_mask" -> ((es: Seq[Expression]) => graft.raster.TileMask(es)),
-    "arr_calc" -> ((es: Seq[Expression]) => ArrCalc(es)),
-    "arr_ge" -> ((es: Seq[Expression]) => ArrGe(es(0), es(1))),
-    "arr_eq" -> ((es: Seq[Expression]) => ArrEq(es(0), es(1))),
-    "arr_and" -> ((es: Seq[Expression]) => ArrAnd(es(0), es(1))),
     "arr_sum" -> ((es: Seq[Expression]) => ArrSum(es.head)),
-    "arr_fixed" -> ((es: Seq[Expression]) => ArrFixed(es(0), es(1))),
     "arr_hist" -> ((es: Seq[Expression]) => ArrHist(es)),
-    "grid_arr" -> ((es: Seq[Expression]) => GridArr(es)),
     "hist_merge" -> ((es: Seq[Expression]) =>
       graft.raster.HistMergeAgg(es(0), es(1), es(2), es(3))),
     "bloom_agg" -> ((es: Seq[Expression]) => BloomAgg(es(0), es(1), es(2))),

@@ -9,7 +9,7 @@ import graft.catalog.{Asset, AssetType, Catalog}
 /** Per-pixel value function over a tile: global pixel coords + the
   * tile's lake band arrays (indexed by the environment's band order).
   * All layer values are integer/fixed-point longs, the currency of the
-  * partial-aggregation contract ([[TileZonal]]/[[ZonalPartial]]). */
+  * partial-aggregation contract ([[ZonalPartial]]). */
 trait PixelFn extends Serializable {
   def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long
 }
@@ -124,27 +124,42 @@ final case class DataEnvironment(
 
 object DataEnvironment {
 
+  /** A value per pixel row of grid `g` (every pixel of a row shares
+    * it), tabulated once per instance in the decimal-exact arithmetic of
+    * the grid's SQL fragments — see `Rasterizer.centers` for the
+    * decimal-exactness contract. */
+  sealed abstract class RowFn(g: Grid) extends PixelFn {
+    protected def row(gy: Int): Long
+    @transient private lazy val table: Array[Long] = Array.tabulate(g.pxY)(row)
+    def apply(gy: Int): Long = table(gy)
+    def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long = table(gy)
+  }
+
   /** Exact per-pixel-row geodesic area in integer micro-hectares,
-    * replicating `Grid.microHaSql`'s decimal-literal arithmetic (the
-    * SQL text both engines evaluated in round 1) — see
-    * `Rasterizer.centers` for the decimal-exactness contract. */
-  final class MicroHa(g: Grid) extends Serializable {
-    @transient private lazy val table: Array[Long] = {
+    * replicating `Grid.microHaSql` (the `area__ha` pseudo-column). */
+  final class MicroHa(g: Grid) extends RowFn(g) {
+    protected def row(gy: Int): Long = {
       val pd = BigDecimal(g.pixelDeg.toString)
       val lat0 = BigDecimal(g.originLat.toString)
-      val rpd = Math.toRadians(g.pixelDeg)
-      Array.tabulate(g.pxY) { gy =>
-        val top = (lat0 - BigDecimal(gy) * pd).toDouble
-        val bot = (lat0 - BigDecimal(gy + 1) * pd).toDouble
-        Math.floor((Math.sin(Math.toRadians(top)) - Math.sin(Math.toRadians(bot))) *
-          rpd * 6371008.8 * 6371008.8 / 10000.0 * 1000000.0).toLong
-      }
+      val top = (lat0 - BigDecimal(gy) * pd).toDouble
+      val bot = (lat0 - BigDecimal(gy + 1) * pd).toDouble
+      Math.floor((Math.sin(Math.toRadians(top)) - Math.sin(Math.toRadians(bot))) *
+        Math.toRadians(g.pixelDeg) * 6371008.8 * 6371008.8 / 10000.0 * 1000000.0).toLong
     }
-    def apply(gy: Int): Long = table(gy)
+  }
+
+  /** `floor(latitude)` of the row's pixel centres, replicating
+    * `floor(Grid.latCenterSql)` (the DECIMAL subtraction before the
+    * floor): the 1° latitude-band key. */
+  final class LatBand(g: Grid) extends RowFn(g) {
+    protected def row(gy: Int): Long =
+      (BigDecimal(g.originLat.toString) - BigDecimal(gy) * BigDecimal(g.pixelDeg.toString) -
+        BigDecimal((g.pixelDeg / 2).toString))
+        .setScale(0, BigDecimal.RoundingMode.FLOOR).toLong
   }
 
   /** Band-reading PixelFn. */
-  private final case class BandFn(idx: Int) extends PixelFn {
+  private[raster] final case class BandFn(idx: Int) extends PixelFn {
     def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long =
       bands(idx).getLong(i)
   }
@@ -155,7 +170,7 @@ object DataEnvironment {
     * every aggregation tree above stays order-independent integer
     * math; one division by the same scale (sumScale / decodeSql)
     * restores the unit at output. */
-  private final case class FloatBandFn(idx: Int, scale: Double) extends PixelFn {
+  private[raster] final case class FloatBandFn(idx: Int, scale: Double) extends PixelFn {
     def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long =
       Math.round(bands(idx).getDouble(i) * scale)
   }
@@ -176,10 +191,6 @@ object DataEnvironment {
     }
     def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long =
       table(src.eval(gx, gy, bands, i).toInt)
-  }
-
-  private final case class AreaFn(mh: MicroHa, px: Int) extends PixelFn {
-    def eval(gx: Int, gy: Int, bands: Array[ArrayData], i: Int): Long = mh(gy)
   }
 
   /** The synthetic test environment synthesized FROM THE CATALOG: reads
@@ -322,7 +333,7 @@ object DataEnvironment {
         }
     }
 
-    val pseudo = RasterLayer("area__ha", AreaFn(mh, g.pxPerTile), sumScale = 1e6)
+    val pseudo = RasterLayer("area__ha", mh, sumScale = 1e6)
     DataEnvironment(g, selLakeDir, bands,
       layers = (layerSeq.flatMap(_._2) :+ pseudo).map(l => l.name -> l).toMap,
       defaultLayers = layerSeq.map { case (ds, ls) => ds -> ls.head.name }.toMap)

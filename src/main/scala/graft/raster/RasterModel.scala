@@ -45,7 +45,7 @@ final case class Grid(originLon: Double, originLat: Double,
 
   /** SQL fragment: per-pixel geodesic area in integer micro-hectares —
     * the `area__ha` pseudo-column (SURVEY §2.4 A3), fixed-point so the
-    * aggregation tree is exact 64-bit integer math (see [[TileZonal]]).
+    * aggregation tree is exact 64-bit integer math (see [[ZonalPartial]]).
     * Spherical band area: R²·Δλ·(sin φ_top − sin φ_bottom). */
   def microHaSql(gy: String): String =
     s"CAST(floor((sin(radians($originLat - $gy * $pixelDeg)) - " +

@@ -3,24 +3,18 @@ package graft.raster
 import graft.{QueryModule, Sql, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The OTF zonal-statistics engine (SURVEY §2.4 A2–A5, §3.2): tile
-  * scan → derived-layer calc → AOI mask → per-tile partial aggregation
-  * ([[TileZonal]]) → merge → dictionary decode.
-  *
-  * Spark plan shape (the 100 TB design):
-  *   1. tiles enumerate from the grid — on a real lake this is a
-  *      Parquet scan partition-pruned by `tile_id ∈ tiles(aoi.bbox)`;
-  *   2. per-pixel arrays stay inside the tile row (no pixel explode);
-  *      derived layers compile through [[CalcDsl]] into `transform` /
-  *      `zip_with` over the arrays;
-  *   3. the AOI mask scanline-rasterizes once per tile (`tile_mask`,
-  *      bit-identical to per-pixel `st_intersects` at pixel centers —
-  *      see [[Rasterizer]]);
-  *   4. `tile_zonal` reduces each tile to (key, fixed-point-sum, count)
-  *      partials — the shuffle carries per-tile partials, never pixels;
-  *   5. final `groupBy(k)` merges partials with exact integer sums,
-  *      then decodes keys (dates, dictionary names) and re-scales
-  *      fixed-point to doubles.
+/** The OTF zonal-statistics engine (SURVEY §2.4 A2–A5, §3.2), one
+  * query per capability. Every zonal query is one [[ZonalEngine]] pass
+  * of the fused [[ZonalPartial]] operator over a [[ZonalSpec]]: group
+  * keys, fixed-point values and WHERE predicates compiled per pixel
+  * ([[PixelCalc]], [[PixelPreds]], the per-row grid tables beside
+  * [[DataEnvironment.MicroHa]]) over the tile-id-pruned lake scan, the
+  * AOI scanline-rasterized once per tile ([[Rasterizer]], bit-identical
+  * to per-pixel `st_intersects` at pixel centers), partial aggregation
+  * per tile — the shuffle carries per-tile partials, never pixels —
+  * and one exact integer merge before the keys decode (dates,
+  * dictionary names) and the sums re-scale to doubles. Per-pixel
+  * arrays never leave the tile row.
   *
   * The DuckDB oracle regenerates the same pixels from
   * `generate_series`, masks with half-plane arithmetic, and aggregates
@@ -33,9 +27,8 @@ object RasterQueries extends QueryModule {
   private val g = grid
   private val px = g.pxPerTile * g.pxPerTile // pixels per tile
 
-  // ---- pixel-coordinate expressions per dialect ----
-  // Spark enumerates per tile (tx, ty, lambda var i);
-  // DuckDB enumerates globally (p over all pixels).
+  // ---- oracle pixel coordinates: DuckDB enumerates globally (p over
+  // all pixels) ----
   private val dGx = s"(p % ${g.pxX})"
   private val dGy = s"(p // ${g.pxX})"
 
@@ -55,26 +48,9 @@ object RasterQueries extends QueryModule {
     }.mkString(" AND ")
   private def halfPlanes(lonE: String, latE: String): String =
     halfPlanesOf(aoi)(lonE, latE)
-  private def bbox(poly: Seq[(Double, Double)]): (Double, Double, Double, Double) =
-    (poly.map(_._1).min, poly.map(_._2).min, poly.map(_._1).max, poly.map(_._2).max)
 
   private val duckAoiMask =
     halfPlanes(g.lonCenterSql(dGx), g.latCenterSql(dGy))
-
-  /** Scanline tile mask (grid as trailing literals; see [[TileMask]]).
-    * Replaces the round-1 per-pixel interpreted `st_intersects` HOF —
-    * same bits (the Rasterizer contract, unit-checked in
-    * RasterizerSpec), ~20× less per-pixel CPU. */
-  private def tileMaskCall(aoiExpr: String): String =
-    s"tile_mask($aoiExpr, tx, ty, ${g.originLon}, ${g.originLat}, " +
-      s"${g.tilesX}, ${g.tilesY}, ${g.tileDeg}, ${g.pxPerTile})"
-  // ---- native per-tile kernels (no interpreted HOF in hot loops) ----
-  /** Per-pixel micro-hectare array for a tile (grid_arr replicates
-    * microHaSql's decimal arithmetic exactly — see [[GridArr]]). */
-  private val microhaArr =
-    s"grid_arr('microha', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile})"
-  private val latbandArr =
-    s"grid_arr('latband', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile})"
 
   /** DuckDB CTE prefix: enumerate all pixels of the grid. */
   private val duckPixels =
@@ -107,107 +83,6 @@ object RasterQueries extends QueryModule {
        |SELECT y, count(*) AS c FROM f GROUP BY y""".stripMargin)
 
   private val sqls: Seq[SqlQ] = Seq(
-
-    // A2+A3: zonal statistics over the AOI — SUM(area__ha) and
-    // count(*) grouped by a categorical layer, keys decoded through
-    // the raster table (dictionary decode on output).
-    SqlQ.split("r1_zonal_landcover",
-      s"""WITH arrs AS (SELECT
-         |  px_landcover AS keys,
-         |  $microhaArr AS vals,
-         |  ${tileMaskCall(s"'$aoiGeoJson'")} AS mask
-         | FROM lake),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS landcover, ${decode("p.k")} AS landcover_name,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin,
-      s"""$duckPixels,
-         |f AS (SELECT ${landcover.formula(dGx, dGy)} AS k,
-         |  ${g.microHaSql(dGy)} AS microha FROM px
-         |  WHERE $duckAoiMask)
-         |SELECT k AS landcover, ${decode("k")} AS landcover_name,
-         |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  count(*) AS pixel_count
-         |FROM f GROUP BY k""".stripMargin),
-
-    // A4 + P10: density→absolute rescale (`biomass * area`) under a
-    // threshold predicate (`tcd >= 30`), grouped by land cover.
-    SqlQ.split("r2_density_rescale",
-      s"""WITH arrs AS (SELECT
-         |  px_landcover AS keys,
-         |  arr_calc('A * B', px_biomass10, $microhaArr) AS vals,
-         |  arr_and(${tileMaskCall(s"'$aoiGeoJson'")}, arr_ge(px_tcd, 30)) AS mask
-         | FROM lake),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS landcover,
-         |  CAST(sum(p.s) AS DOUBLE) / 10000000.0 AS biomass_tonnes,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin,
-      s"""$duckPixels,
-         |f AS (SELECT ${landcover.formula(dGx, dGy)} AS k,
-         |  ${biomass10.formula(dGx, dGy)} * ${g.microHaSql(dGy)} AS v FROM px
-         |  WHERE ($duckAoiMask) AND (${tcd.formula(dGx, dGy)} >= 30))
-         |SELECT k AS landcover,
-         |  CAST(sum(v) AS DOUBLE) / 10000000.0 AS biomass_tonnes,
-         |  count(*) AS pixel_count
-         |FROM f GROUP BY k""".stripMargin),
-
-    // date_conf decode (SURVEY §7.3 #4): derived date/conf layers via
-    // the CalcDsl compiler, date filter, per-(date,conf) alert counts.
-    SqlQ.split("r3_date_conf_alerts", {
-      // derived date/conf layers through the SAME calc DSL the fused
-      // OTF path compiles (PixelCalc), applied array-at-a-time
-      s"""WITH raw AS (SELECT px_dateconf AS px_dc,
-         |  $microhaArr AS vals,
-         |  arr_and(${tileMaskCall(s"'$aoiGeoJson'")},
-         |    arr_ge(arr_calc('A % 10000', px_dateconf), 1827)) AS mask
-         | FROM lake),
-         |der AS (SELECT arr_calc('A % 10000', px_dc) AS px_days,
-         |  arr_calc('floor(A / 10000)', px_dc) AS px_conf, vals, mask FROM raw),
-         |arrs AS (SELECT arr_calc('A * 100000 + B', px_conf, px_days) AS keys, vals, mask FROM der),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT date_add(DATE '2015-01-01', CAST(p.k % 100000 AS INT)) AS alert_date,
-         |  CAST(p.k DIV 100000 AS INT) AS confidence,
-         |  sum(p.c) AS alert_count,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha
-         |FROM parts GROUP BY p.k""".stripMargin
-    },
-      s"""$duckPixels,
-         |f AS (SELECT ${dateConf.formula(dGx, dGy)} AS dc,
-         |  ${g.microHaSql(dGy)} AS microha FROM px
-         |  WHERE ($duckAoiMask) AND ((${dateConf.formula(dGx, dGy)}) % 10000 >= 1827)),
-         |k AS (SELECT CAST(floor(dc / 10000) AS BIGINT) * 100000 + (dc % 10000) AS key,
-         |  microha FROM f)
-         |SELECT DATE '2015-01-01' + CAST(key % 100000 AS INT) AS alert_date,
-         |  CAST(key // 100000 AS INT) AS confidence,
-         |  count(*) AS alert_count,
-         |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha
-         |FROM k GROUP BY key""".stripMargin),
-
-    // J4: multi-band calc — two co-registered bands zipped through the
-    // CalcDsl two-variable path, bucketed and aggregated.
-    SqlQ.split("r4_band_math", {
-      s"""WITH raw AS (SELECT px_u, px_w,
-         |  $microhaArr AS vals,
-         |  ${tileMaskCall(s"'$aoiGeoJson'")} AS mask
-         | FROM lake),
-         |der AS (SELECT arr_calc('A + B', px_u, px_w) AS px_s, vals, mask FROM raw),
-         |arrs AS (SELECT arr_calc('A DIV 10', px_s) AS keys, vals, mask FROM der),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS bucket,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin
-    },
-      s"""$duckPixels,
-         |f AS (SELECT ((${bandU.formula(dGx, dGy)}) + (${bandW.formula(dGx, dGy)})) // 10 AS k,
-         |  ${g.microHaSql(dGy)} AS microha FROM px
-         |  WHERE $duckAoiMask)
-         |SELECT k AS bucket,
-         |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  count(*) AS pixel_count
-         |FROM f GROUP BY k""".stripMargin),
 
     // A7: per-tile band statistics (min/max/mean) and the global
     // roll-up (global min/max + unweighted mean of tile means, the
@@ -265,23 +140,161 @@ object RasterQueries extends QueryModule {
          |  FROM tc JOIN th ON tc.tx = th.tx AND tc.ty = th.ty),
          |fin AS (SELECT LEAST(CAST(floor((d - gmin) * n / (gmax - gmin)) AS BIGINT), n - 1) AS bin, c
          |  FROM vals, nb)
-         |SELECT bin::INT AS bin, sum(c)::BIGINT AS cnt FROM fin GROUP BY bin""".stripMargin),
+         |SELECT bin::INT AS bin, sum(c)::BIGINT AS cnt FROM fin GROUP BY bin""".stripMargin))
+
+  // ------------------------------------------------- zonal r-queries
+  // Each is one ZonalEngine pass over a spec whose band functions read
+  // the lake columns the query names: `band(i)` reads its `bands(i)`.
+
+  private def band(i: Int): PixelFn = DataEnvironment.BandFn(i)
+  private val microha = new DataEnvironment.MicroHa(g)
+
+  private def specOver(grid: Grid, bands: Seq[String], keys: Seq[PixelFn],
+                       vals: Seq[PixelFn], preds: Seq[PixelPred] = Nil,
+                       strides: Seq[Long] = Nil): ZonalSpec =
+    ZonalSpec(grid, keys, if (strides.isEmpty) keys.map(_ => 1L) else strides,
+      vals, preds, bands.indices, bands.length)
+
+  /** One pass of the test lake over the test AOI, projected to
+    * `outputs` over its `k`, `c`, `s0…` columns. */
+  private def lakeZonal(spark: SparkSession, bands: Seq[String], keys: Seq[PixelFn],
+                        vals: Seq[PixelFn], preds: Seq[PixelPred] = Nil,
+                        strides: Seq[Long] = Nil)(outputs: String*): DataFrame = {
+    TileLake.ensureWritten(spark, TileLake.defaultDir)
+    ZonalEngine.zonal(spark, TileLake.defaultDir,
+      specOver(g, bands, keys, vals, preds, strides), bands, aoiGeoJson)
+      .selectExpr(outputs: _*)
+  }
+
+  /** Land cover keys and pixel areas of lake `dir` on grid `pg`: the
+    * statistic of r1, r7 and r9, parameterized for [[graft.ScaleProbe]]. */
+  private def landcoverSpec(pg: Grid): ZonalSpec =
+    specOver(pg, Seq("px_landcover"), Seq(band(0)), Seq(new DataEnvironment.MicroHa(pg)))
+
+  /** r1/r9's pass over ANY lake grid and AOI, so the scale probe can
+    * measure (a) a fixed AOI against a 10× lake (partition pruning ⇒
+    * flat) and (b) a 10× AOI against the 10× lake (data read grows 10×
+    * ⇒ linear). */
+  private[graft] def probeZonal(spark: SparkSession, dir: String,
+                                pg: Grid,
+                                poly: Seq[(Double, Double)]): DataFrame =
+    ZonalEngine.zonal(spark, dir, landcoverSpec(pg), Seq("px_landcover"), geoJson(poly))
+      .selectExpr("k AS landcover", "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha",
+        "c AS pixel_count")
+
+  /** Batch many-AOI zonal — the reference's ≤100-parallel-lambda
+    * surface (`queries.py:333-343` fans one lambda per geometry) as
+    * ONE Spark job ([[ZonalEngine.zonalBatch]]): the tiny AOI table
+    * BROADCASTs against the union-pruned lake scan and the fused pass
+    * rasterizes each distinct polygon once per tile. Scan volume =
+    * union of the AOIs' tile sets — pruning holds per AOI, so cost
+    * scales with AOI count, not lake size (measured in ScaleProbe's
+    * 100× section). */
+  private[graft] def probeBatchZonal(spark: SparkSession, dir: String,
+                                     pg: Grid,
+                                     aois: Seq[Seq[(Double, Double)]]): DataFrame =
+    ZonalEngine.zonalBatch(spark, dir, landcoverSpec(pg), Seq("px_landcover"),
+      aois.map(geoJson))
+      .selectExpr("fid AS aoi_id", "k AS landcover",
+        "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha", "c AS pixel_count")
+
+  /** A2+A3 zonal statistics over the AOI — SUM(area__ha) and count(*)
+    * grouped by a categorical layer, keys decoded through the raster
+    * table (dictionary decode on output). r9 (S8 at rest) is the same
+    * statistic; every zonal pass reads the persisted lake with
+    * AOI-bbox partition pruning, so only intersecting `tile_id=`
+    * partitions are listed and read. */
+  private def landcoverZonal(spark: SparkSession, sfDir: String): DataFrame = {
+    TileLake.ensureWritten(spark, TileLake.defaultDir)
+    ZonalEngine.landcoverRows(ZonalEngine.zonal(spark, TileLake.defaultDir,
+      landcoverSpec(g), Seq("px_landcover"), aoiGeoJson))
+  }
+
+  private val landcoverZonalOracle: String =
+    s"""$duckPixels,
+       |f AS (SELECT ${landcover.formula(dGx, dGy)} AS k,
+       |  ${g.microHaSql(dGy)} AS microha FROM px
+       |  WHERE $duckAoiMask)
+       |SELECT k AS landcover, ${decode("k")} AS landcover_name,
+       |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha,
+       |  count(*) AS pixel_count
+       |FROM f GROUP BY k""".stripMargin
+
+  /** (name, Spark side, DuckDB oracle) of each zonal query. */
+  private lazy val zonals: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
+
+    ("r1_zonal_landcover", landcoverZonal, landcoverZonalOracle),
+    ("r9_tile_lake_zonal", landcoverZonal, landcoverZonalOracle),
+
+    // A4 + P10: density→absolute rescale (`biomass * area`) under a
+    // threshold predicate (`tcd >= 30`), grouped by land cover.
+    ("r2_density_rescale", (spark, _) =>
+      lakeZonal(spark, Seq("px_landcover", "px_biomass10", "px_tcd"),
+        keys = Seq(band(0)),
+        vals = Seq(PixelCalc.compileArea("A * AREA", Seq(band(1)), microha)),
+        preds = Seq(PixelPreds.Ge(band(2), 30)))(
+        "k AS landcover", "CAST(s0 AS DOUBLE) / 10000000.0 AS biomass_tonnes",
+        "c AS pixel_count"),
+      s"""$duckPixels,
+         |f AS (SELECT ${landcover.formula(dGx, dGy)} AS k,
+         |  ${biomass10.formula(dGx, dGy)} * ${g.microHaSql(dGy)} AS v FROM px
+         |  WHERE ($duckAoiMask) AND (${tcd.formula(dGx, dGy)} >= 30))
+         |SELECT k AS landcover,
+         |  CAST(sum(v) AS DOUBLE) / 10000000.0 AS biomass_tonnes,
+         |  count(*) AS pixel_count
+         |FROM f GROUP BY k""".stripMargin),
+
+    // date_conf decode (SURVEY §7.3 #4): derived date/conf layers
+    // through the SAME calc DSL the OTF layers compile (PixelCalc), a
+    // date filter, per-(date, conf) alert counts.
+    ("r3_date_conf_alerts", (spark, _) => {
+      val days = PixelCalc.compile("A % 10000", Seq(band(0)))
+      lakeZonal(spark, Seq("px_dateconf"),
+        keys = Seq(PixelCalc.compile("floor(A / 10000)", Seq(band(0))), days),
+        strides = Seq(100000L, 1L),
+        vals = Seq(microha), preds = Seq(PixelPreds.Ge(days, 1827)))(
+        "date_add(DATE '2015-01-01', CAST(k % 100000 AS INT)) AS alert_date",
+        "CAST(k DIV 100000 AS INT) AS confidence", "c AS alert_count",
+        "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha")
+    },
+      s"""$duckPixels,
+         |f AS (SELECT ${dateConf.formula(dGx, dGy)} AS dc,
+         |  ${g.microHaSql(dGy)} AS microha FROM px
+         |  WHERE ($duckAoiMask) AND ((${dateConf.formula(dGx, dGy)}) % 10000 >= 1827)),
+         |k AS (SELECT CAST(floor(dc / 10000) AS BIGINT) * 100000 + (dc % 10000) AS key,
+         |  microha FROM f)
+         |SELECT DATE '2015-01-01' + CAST(key % 100000 AS INT) AS alert_date,
+         |  CAST(key // 100000 AS INT) AS confidence,
+         |  count(*) AS alert_count,
+         |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha
+         |FROM k GROUP BY key""".stripMargin),
+
+    // J4: multi-band calc — two co-registered bands through the
+    // CalcDsl two-variable path, bucketed and aggregated.
+    ("r4_band_math", (spark, _) =>
+      lakeZonal(spark, Seq("px_u", "px_w"),
+        keys = Seq(PixelCalc.compile("(A + B) DIV 10", Seq(band(0), band(1)))),
+        vals = Seq(microha))(
+        "k AS bucket", "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha", "c AS pixel_count"),
+      s"""$duckPixels,
+         |f AS (SELECT ((${bandU.formula(dGx, dGy)}) + (${bandW.formula(dGx, dGy)})) // 10 AS k,
+         |  ${g.microHaSql(dGy)} AS microha FROM px
+         |  WHERE $duckAoiMask)
+         |SELECT k AS bucket,
+         |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha,
+         |  count(*) AS pixel_count
+         |FROM f GROUP BY k""".stripMargin),
 
     // P10 boolean-layer form: `is__<dataset> != 'false'` masks on a
     // presence layer (derived here as landcover==0, "is forest"),
     // composed with the AOI — the second filter shape the analysis
     // builder emits (analysis.py:117-120).
-    SqlQ.split("r10_boolean_layer",
-      s"""WITH arrs AS (SELECT
-         |  arr_calc('A DIV 10', px_tcd) AS keys,
-         |  $microhaArr AS vals,
-         |  arr_and(${tileMaskCall(s"'$aoiGeoJson'")}, arr_eq(px_landcover, 0)) AS mask
-         | FROM lake),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS tcd_decile,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS forest_area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin,
+    ("r10_boolean_layer", (spark, _) =>
+      lakeZonal(spark, Seq("px_tcd", "px_landcover"),
+        keys = Seq(PixelCalc.compile("A DIV 10", Seq(band(0)))),
+        vals = Seq(microha), preds = Seq(PixelPreds.Eq(band(1), 0)))(
+        "k AS tcd_decile", "CAST(s0 AS DOUBLE) / 1000000.0 AS forest_area_ha",
+        "c AS pixel_count"),
       s"""$duckPixels,
          |f AS (SELECT (${tcd.formula(dGx, dGy)}) // 10 AS k,
          |  ${g.microHaSql(dGy)} AS microha FROM px
@@ -294,17 +307,11 @@ object RasterQueries extends QueryModule {
     // A3: the latitude/longitude reserved pseudo-columns — generated
     // from grid georeferencing, never stored (`versions.py:519-522`).
     // Group pixel area into 1° latitude bands via floor(latitude).
-    SqlQ.split("r8_latitude_bands",
-      s"""WITH arrs AS (SELECT
-         |  $latbandArr AS keys,
-         |  $microhaArr AS vals,
-         |  ${tileMaskCall(s"'$aoiGeoJson'")} AS mask
-         | FROM lake),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT CAST(p.k AS INT) AS lat_band,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin,
+    ("r8_latitude_bands", (spark, _) =>
+      lakeZonal(spark, Nil, keys = Seq(new DataEnvironment.LatBand(g)),
+        vals = Seq(microha))(
+        "CAST(k AS INT) AS lat_band", "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha",
+        "c AS pixel_count"),
       s"""$duckPixels,
          |f AS (SELECT CAST(floor(${g.latCenterSql(dGy)}) AS BIGINT) AS k,
          |  ${g.microHaSql(dGy)} AS microha FROM px
@@ -320,33 +327,12 @@ object RasterQueries extends QueryModule {
     // a single shuffle groups by (fid, key). The reference dispatches
     // ≤100 parallel lambdas through Step Functions for this; here it
     // is one plan with the AOI side broadcast.
-    SqlQ.split("r7_batch_zonal", {
-      val aois = Seq((0, aoi), (1, aoi2)).map { case (fid, p) =>
-        val (bxmin, bymin, bxmax, bymax) = bbox(p)
-        s"($fid, '${geoJson(p)}', CAST($bxmin AS DOUBLE), CAST($bymin AS DOUBLE), " +
-          s"CAST($bxmax AS DOUBLE), CAST($bymax AS DOUBLE))"
-      }.mkString(",\n    ")
-      // AOI arrives as the per-row `gj` COLUMN — tile_mask memoizes
-      // the parse per distinct AOI, so each feature rasterizes once
-      // per tile rather than st_intersects per pixel.
-      s"""WITH aois AS (SELECT * FROM VALUES
-         |    $aois AS a(fid, gj, bxmin, bymin, bxmax, bymax)),
-         |pairs AS (SELECT /*+ BROADCAST(aois) */ fid, gj, tx, ty, px_landcover
-         |  FROM lake JOIN aois
-         |    ON tx * ${g.tileDeg} + ${g.originLon} < bxmax
-         |   AND tx * ${g.tileDeg} + ${g.originLon} + ${g.tileDeg} > bxmin
-         |   AND ${g.originLat} - ty * ${g.tileDeg} - ${g.tileDeg} < bymax
-         |   AND ${g.originLat} - ty * ${g.tileDeg} > bymin),
-         |arrs AS (SELECT fid,
-         |  px_landcover AS keys,
-         |  $microhaArr AS vals,
-         |  ${tileMaskCall("gj")} AS mask
-         | FROM pairs),
-         |parts AS (SELECT fid, explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT fid, p.k AS landcover,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY fid, p.k""".stripMargin
+    ("r7_batch_zonal", (spark, _) => {
+      TileLake.ensureWritten(spark, TileLake.defaultDir)
+      ZonalEngine.zonalBatch(spark, TileLake.defaultDir, landcoverSpec(g),
+        Seq("px_landcover"), Seq(aoiGeoJson, geoJson(aoi2)))
+        .selectExpr("fid", "k AS landcover", "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha",
+          "c AS pixel_count")
     }, {
       def one(fid: Int, p: Seq[(Double, Double)]): String =
         s"""SELECT $fid AS fid, ${landcover.formula(dGx, dGy)} AS k,
@@ -360,8 +346,11 @@ object RasterQueries extends QueryModule {
          |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area_ha,
          |  count(*) AS pixel_count
          |FROM f GROUP BY fid, k""".stripMargin
-    })
-  )
+    }),
+
+    ("r11_derived_tileset", derivedZonal, derivedZonalOracle),
+    ("r13_float_zonal", floatZonal, floatZonalOracle),
+    ("r21_mode_resample", derivedModeZonal, derivedModeZonalOracle))
 
   // ------------------------------------------------- OTF user raster SQL
   // The reference's core raster product surface (`_query_raster`,
@@ -579,64 +568,6 @@ object RasterQueries extends QueryModule {
        |${one("b", aoi2)}""".stripMargin
   }
 
-  /** S8 at rest: the same zonal statistic as r1, but reading the
-    * PERSISTED tile lake with AOI-bbox partition pruning — only
-    * intersecting `tile_id=` partitions are listed and read. */
-  private def tileLakeZonal(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.register(spark, sfDir)
-    TileLake.ensureWritten(spark, TileLake.defaultDir)
-    // the dictionary decode is a post-aggregation projection
-    probeZonal(spark, TileLake.defaultDir, g, aoi)
-      .selectExpr("landcover", s"${decode("landcover")} AS landcover_name",
-        "area_ha", "pixel_count")
-  }
-
-  /** r9's zonal shape, parameterized for [[graft.ScaleProbe]]: the
-    * same tile-id-pruned scan → scanline mask → fused tile_zonal over
-    * ANY lake grid and AOI, so the probe can measure (a) a fixed AOI
-    * against a 10× lake (partition pruning ⇒ flat) and (b) a 10× AOI
-    * against the 10× lake (data read grows 10× ⇒ linear). */
-  private[graft] def probeZonal(spark: SparkSession, dir: String,
-                                pg: Grid,
-                                poly: Seq[(Double, Double)]): DataFrame =
-    ZonalEngine.zonal(spark, dir, pg, "px_landcover", "landcover", geoJson(poly))
-
-  /** Batch many-AOI zonal — the reference's ≤100-parallel-lambda
-    * surface (`queries.py:333-343` fans one lambda per geometry) as
-    * ONE Spark job: the AOI→tile fan-out is driver-computed (≤100
-    * AOIs × a few tiles each — the geostore listing, not data), the
-    * tiny (aoi, tile, geojson) table BROADCASTs against the pruned
-    * lake scan, and [[TileMask]]'s per-AOI LRU (the AOI arrives as a
-    * COLUMN here) rasterizes each distinct polygon once per task.
-    * Scan volume = union of the AOIs' tile sets — pruning holds per
-    * AOI, so cost scales with AOI count, not lake size (measured in
-    * ScaleProbe's 100× section). */
-  private[graft] def probeBatchZonal(spark: SparkSession, dir: String,
-                                     pg: Grid,
-                                     aois: Seq[Seq[(Double, Double)]]): DataFrame = {
-    val pairs = aois.zipWithIndex.flatMap { case (poly, id) =>
-      val (x0, y0, x1, y1) = bbox(poly)
-      TileLake.tileIdsForBbox(pg, x0, y0, x1, y1)
-        .map(tid => (id, tid, geoJson(poly)))
-    }
-    import spark.implicits._
-    Sql.bound(spark,
-      s"""WITH jt AS (SELECT /*+ BROADCAST(a) */ s.px_landcover, s.tx, s.ty,
-         |    a.aoi_id, a.gj
-         |  FROM probe_batch_scan s JOIN probe_batch_aoi a ON a.a_tile_id = s.tile_id),
-         |arrs AS (SELECT aoi_id, px_landcover AS keys,
-         |  grid_arr('microha', ty, ${pg.originLat}, ${pg.tileDeg}, ${pg.pxPerTile}) AS vals,
-         |  tile_mask(gj, tx, ty, ${pg.originLon}, ${pg.originLat}, ${pg.tilesX}, ${pg.tilesY}, ${pg.tileDeg}, ${pg.pxPerTile}) AS mask
-         | FROM jt),
-         |parts AS (SELECT aoi_id, explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT aoi_id, p.k AS landcover,
-         |  CAST(sum(p.s) AS DOUBLE) / 1000000.0 AS area_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY aoi_id, p.k""".stripMargin,
-      "probe_batch_aoi" -> pairs.toDF("aoi_id", "a_tile_id", "gj"),
-      "probe_batch_scan" -> TileLake.scanPruned(spark, dir, pairs.map(_._2).distinct))
-  }
-
   // J5 on the raster path: the SAME query under a version override —
   // umd_tree_cover_loss resolves to v1 (year = 2000 + w % 25) instead
   // of the latest v2 (2001 + w % 24); the data environment re-derives
@@ -659,11 +590,20 @@ object RasterQueries extends QueryModule {
     * (2× downsampled + calc'd at build) tile set — the regrid/resample
     * path pixetl runs while writing an asset. The oracle reproduces
     * the block means from the fine formulas. */
-  private def derivedZonal(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.register(spark, sfDir)
+  private def derivedZonal(spark: SparkSession, sfDir: String): DataFrame =
+    derivedBandZonal(spark, "px_biomass_t", "biomass_t")
+
+  /** r11/r21's pass: one band of the derived lake as the key, pixel
+    * areas summed over the test AOI. */
+  private def derivedBandZonal(spark: SparkSession, bandCol: String,
+                               keyAs: String): DataFrame = {
+    val dg = TileLake.derivedGrid
     TileLake.ensureDerivedWritten(spark, TileLake.defaultDir, TileLake.derivedDir)
-    ZonalEngine.zonal(spark, TileLake.derivedDir, TileLake.derivedGrid,
-      "px_biomass_t", "biomass_t", aoiGeoJson)
+    ZonalEngine.zonal(spark, TileLake.derivedDir,
+      specOver(dg, Seq(bandCol), Seq(band(0)), Seq(new DataEnvironment.MicroHa(dg))),
+      Seq(bandCol), aoiGeoJson)
+      .selectExpr(s"k AS $keyAs", "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha",
+        "c AS pixel_count")
   }
 
   private def derivedZonalOracle: String = {
@@ -688,12 +628,8 @@ object RasterQueries extends QueryModule {
     * each 2×2 block, ties to the smallest code. Same pruned-scan
     * zonal machinery as r11; the oracle replays the identical
     * sorted-block closed form over the synthetic landcover formula. */
-  private def derivedModeZonal(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.register(spark, sfDir)
-    TileLake.ensureDerivedWritten(spark, TileLake.defaultDir, TileLake.derivedDir)
-    ZonalEngine.zonal(spark, TileLake.derivedDir, TileLake.derivedGrid,
-      "px_lc_mode", "landcover_mode", aoiGeoJson)
-  }
+  private def derivedModeZonal(spark: SparkSession, sfDir: String): DataFrame =
+    derivedBandZonal(spark, "px_lc_mode", "landcover_mode")
 
   private def derivedModeZonalOracle: String = {
     val dg = TileLake.derivedGrid
@@ -768,9 +704,9 @@ object RasterQueries extends QueryModule {
   /** S7 float path (r13): float32 GeoTIFF sources ingest into
     * array<double> lake columns, and a density-layer zonal sum rides
     * the EXACT integer zonal machinery through fixed-point scaling —
-    * `arr_fixed(px, 4)` turns quarter-unit float pixels into exact
-    * int64, `arr_calc('A * B', …)` weights by the geodesic pixel
-    * area, `tile_zonal` aggregates, one division at the end. Proves
+    * the ×4 float band fn turns quarter-unit float pixels into exact
+    * int64, `A * AREA` weights by the geodesic pixel area, the fused
+    * pass aggregates, one division at the end. Proves
     * the float TIFF write → read → lake → zonal chain end-to-end
     * (reference pixETL float pixel types, `pixetl.py:21-23`); the
     * oracle recomputes the latitude-band sums from the pixel formula
@@ -815,23 +751,21 @@ object RasterQueries extends QueryModule {
   }
 
   private def floatZonal(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.register(spark, sfDir)
     val fg = r13Grid
-    val px = fg.pxPerTile
     val lake = ensureR13Lake(spark, sfDir)
-    Sql.bound(spark,
-      s"""WITH arrs AS (SELECT
-         |    grid_arr('latband', ty, ${fg.originLat}, ${fg.tileDeg}, $px) AS keys,
-         |    arr_calc('A * B', arr_fixed(px_density, 4),
-         |      grid_arr('microha', ty, ${fg.originLat}, ${fg.tileDeg}, $px)) AS vals,
-         |    arr_ge(arr_fixed(px_density, 4), 0) AS mask
-         |  FROM r13_lake),
-         |parts AS (SELECT explode(tile_zonal(keys, vals, mask)) AS p FROM arrs)
-         |SELECT p.k AS lat_band,
-         |  CAST(sum(p.s) AS DOUBLE) / 4000000.0 AS density_ha,
-         |  sum(p.c) AS pixel_count
-         |FROM parts GROUP BY p.k""".stripMargin,
-      "r13_lake" -> spark.read.parquet(lake))
+    val v4 = DataEnvironment.FloatBandFn(0, 4.0)
+    // no AOI: the grid's extent, which holds every pixel centre half a
+    // pixel inside its edges
+    val extent = Seq((fg.originLon, fg.originLat - fg.tilesY * fg.tileDeg),
+      (fg.originLon + fg.tilesX * fg.tileDeg, fg.originLat - fg.tilesY * fg.tileDeg),
+      (fg.originLon + fg.tilesX * fg.tileDeg, fg.originLat), (fg.originLon, fg.originLat))
+    ZonalEngine.zonal(spark, lake,
+      specOver(fg, Seq("px_density"), Seq(new DataEnvironment.LatBand(fg)),
+        Seq(PixelCalc.compileArea("A * AREA", Seq(v4), new DataEnvironment.MicroHa(fg))),
+        Seq(PixelPreds.Ge(v4, 0))),
+      Seq("px_density"), geoJson(extent))
+      .selectExpr("k AS lat_band", "CAST(s0 AS DOUBLE) / 4000000.0 AS density_ha",
+        "c AS pixel_count")
   }
 
   private def floatZonalOracle: String = {
@@ -1406,21 +1340,24 @@ object RasterQueries extends QueryModule {
     sqls.map { q =>
       q.name -> ((spark: SparkSession, sfDir: String) => {
         Tables.register(spark, sfDir)
-        // the legacy r-queries scan the persisted tile lake (same
-        // band values the formulas used to synthesize per query)
+        // r5/r6 scan the persisted tile lake (same band values the
+        // formulas used to synthesize per query)
         TileLake.ensureWritten(spark, TileLake.defaultDir)
         Sql.bound(spark, q.sparkSql, "lake" -> spark.read.parquet(TileLake.defaultDir))
       })
-    }.toMap +
-      ("r9_tile_lake_zonal" -> ((s: SparkSession, d: String) => tileLakeZonal(s, d))) ++
+    }.toMap ++
+      zonals.map { case (name, run, _) =>
+        name -> ((spark: SparkSession, sfDir: String) => {
+          Tables.register(spark, sfDir)
+          run(spark, sfDir)
+        })
+      } ++
       otfSqls.map { case (name, ds, sql, _) =>
         name -> (otfQuery(ds, sql) _)
       } + ("rs6_batch_sql" -> (batchSqlQuery _)) +
       ("rs10_batch_alert_list" -> (batchListQuery _)) +
-      ("r11_derived_tileset" -> (derivedZonal _)) +
       ("rs8_version_override" -> (overrideQuery _)) +
       ("r12_geotiff_ingest" -> (geotiffIngest _)) +
-      ("r13_float_zonal" -> (floatZonal _)) +
       ("rs12_float_otf" -> (floatOtfQuery _)) +
       ("r14_utm_ingest" -> (utmIngest _)) +
       ("r15_cea_ingest" -> (ceaIngest _)) +
@@ -1429,7 +1366,6 @@ object RasterQueries extends QueryModule {
       ("r18_sinusoidal_ingest" -> (sinusoidalIngest _)) +
       ("r19_polar_ingest" -> (polarIngest _)) +
       ("r20_bilinear_ingest" -> (bilinearIngest _)) +
-      ("r21_mode_resample" -> (derivedModeZonal _)) +
       ("r22_mercator_ell_ingest" -> (mercatorEllIngest _)) +
       ("r23_equirect_ingest" -> (equirectIngest _)) +
       ("r24_laea_ingest" -> (laeaIngest _)) +
@@ -1447,17 +1383,13 @@ object RasterQueries extends QueryModule {
       ("r36_polyconic_ingest" -> (polyconicIngest _))
 
   override def oracles: Map[String, String] =
-    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap +
-      // identical semantics to r1: pruning only drops tiles whose mask
-      // would be all-false
-      ("r9_tile_lake_zonal" -> sqls.find(_.name == "r1_zonal_landcover").get.oracleSql.get) ++
+    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap ++
+      zonals.map { case (name, _, oracle) => name -> oracle } ++
       otfSqls.map { case (name, _, _, oracle) => name -> oracle } +
       ("rs6_batch_sql" -> batchSqlOracle) +
       ("rs10_batch_alert_list" -> batchListOracle) +
-      ("r11_derived_tileset" -> derivedZonalOracle) +
       ("rs8_version_override" -> overrideOracle) +
       ("r12_geotiff_ingest" -> geotiffIngestOracle) +
-      ("r13_float_zonal" -> floatZonalOracle) +
       ("rs12_float_otf" -> floatOtfOracle) +
       ("r14_utm_ingest" -> projIngestOracle(r14Lattice)) +
       ("r15_cea_ingest" -> projIngestOracle(r15Lattice)) +
@@ -1466,7 +1398,6 @@ object RasterQueries extends QueryModule {
       ("r18_sinusoidal_ingest" -> projIngestOracle(r18Lattice)) +
       ("r19_polar_ingest" -> projIngestOracle(r19Lattice)) +
       ("r20_bilinear_ingest" -> projIngestBilinearOracle(r16Lattice)) +
-      ("r21_mode_resample" -> derivedModeZonalOracle) +
       ("r22_mercator_ell_ingest" -> projIngestOracle(r22Lattice)) +
       ("r23_equirect_ingest" -> projIngestOracle(r23Lattice)) +
       ("r24_laea_ingest" -> projIngestOracle(r24Lattice)) +

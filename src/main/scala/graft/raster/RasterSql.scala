@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Decimal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** User-SQL validation failure on the raster path — surfaced as 422,
   * the reference's raster-analysis "failed" status
@@ -326,47 +326,70 @@ object RasterSql {
 
   // ------------------------------------------------------------- execute
 
-  /** Run a compiled query over the (already AOI-pruned) lake scan:
-    * one fused [[ZonalPartial]] pass per tile, one shuffle of the
-    * per-tile partials, then the decode projection. */
-  def execute(lake: DataFrame, cq: CompiledRasterQuery, aoiGeoJson: String,
-              env: DataEnvironment): DataFrame = {
+  /** A tile kernel's children over `rows`: the AOI, the tile
+    * coordinates and the band columns `spec.usedBands` indexes in
+    * `bands`. */
+  private def kernelChildren(aoi: Column, spec: ZonalSpec,
+                             bands: Seq[String]): Seq[Expression] = {
     import org.apache.spark.sql.graft.ColumnBridge
-    val bandCols = cq.spec.usedBands.map(i => col(env.bands(i)))
-    val children =
-      (lit(aoiGeoJson) +: col("tx") +: col("ty") +: bandCols)
-        .map(ColumnBridge.expression)
-    if (cq.listing) {
-      val pl = ColumnBridge.column(PixelList(cq.spec, children))
-      val rows = lake.select(explode(pl).as("p"))
-        .select(col("p.gx").as("gx"), col("p.gy").as("gy"), col("p.vs").as("vs"))
-      val out = rows.selectExpr(
-        cq.outputs.map { case (n, e) => s"$e AS `$n`" }: _*)
-      val sorted =
-        if (cq.orderBy.isEmpty) out
-        else out.orderBy(cq.orderBy.map { case (n, asc) =>
-          if (asc) col(n).asc else col(n).desc }: _*)
-      return cq.limit.fold(sorted)(sorted.limit)
-    }
-    val zp = ColumnBridge.column(ZonalPartial(cq.spec, children))
-    val nv = cq.spec.vals.length
-    val parts = lake
-      .select(explode(zp).as("p"))
-      .select((col("p.k").as("k") +: col("p.c").as("pc") +:
+    (aoi +: col("tx") +: col("ty") +: spec.usedBands.map(i => col(bands(i))))
+      .map(ColumnBridge.expression)
+  }
+
+  /** THE zonal pass: one fused [[ZonalPartial]] per row of `rows` (a
+    * pruned lake scan, or (feature, tile) pairs), then one shuffle
+    * merging the per-tile partials by `by` and, when `keyed`, the
+    * packed key. Columns: `by…`, `k` (when keyed), `c` (pixel count),
+    * `s0…` (the exact long sums of `spec.vals`). */
+  def merged(rows: DataFrame, aoi: Column, spec: ZonalSpec, bands: Seq[String],
+             by: Seq[String] = Nil, keyed: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val zp = ColumnBridge.column(ZonalPartial(spec, kernelChildren(aoi, spec, bands)))
+    val nv = spec.vals.length
+    val parts = rows
+      .select(by.map(col) :+ explode(zp).as("p"): _*)
+      .select(by.map(col) ++ (col("p.k").as("k") +: col("p.c").as("pc") +:
         (0 until nv).map(i => element_at(col("p.ss"), i + 1).as(s"ps$i"))): _*)
     val aggs = sum(col("pc")).as("c") +:
       (0 until nv).map(i => sum(col(s"ps$i")).as(s"s$i"))
-    val merged =
-      if (cq.isGlobal) parts.agg(aggs.head, aggs.tail: _*)
-      else parts.groupBy("k").agg(aggs.head, aggs.tail: _*)
-    val out = merged.selectExpr(
-      cq.outputs.map { case (n, e) => s"$e AS `$n`" }: _*)
+    val keys = if (keyed) by :+ "k" else by
+    if (keys.isEmpty) parts.agg(aggs.head, aggs.tail: _*)
+    else parts.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The pixel LISTING pass: one fused [[PixelList]] per row of
+    * `rows`, one `(by…, gx, gy, vs)` row per masked and filtered
+    * pixel. */
+  private def listed(rows: DataFrame, aoi: Column, cq: CompiledRasterQuery,
+                     env: DataEnvironment, by: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val pl = ColumnBridge.column(PixelList(cq.spec, kernelChildren(aoi, cq.spec, env.bands)))
+    rows.select(by.map(col) :+ explode(pl).as("p"): _*)
+      .select(by.map(col) ++ Seq(col("p.gx").as("gx"), col("p.gy").as("gy"),
+        col("p.vs").as("vs")): _*)
+  }
+
+  private def project(df: DataFrame, cq: CompiledRasterQuery, by: Seq[String]): DataFrame =
+    df.selectExpr(by ++ cq.outputs.map { case (n, e) => s"$e AS `$n`" }: _*)
+
+  /** ORDER BY (after `lead`) and LIMIT of the user's query. */
+  private def ordered(df: DataFrame, cq: CompiledRasterQuery,
+                      lead: Seq[Column] = Nil): DataFrame = {
     val sorted =
-      if (cq.orderBy.isEmpty) out
-      else out.orderBy(cq.orderBy.map { case (n, asc) =>
+      if (cq.orderBy.isEmpty) df
+      else df.orderBy(lead ++ cq.orderBy.map { case (n, asc) =>
         if (asc) col(n).asc else col(n).desc }: _*)
     cq.limit.fold(sorted)(sorted.limit)
   }
+
+  /** Run a compiled query over the (already AOI-pruned) lake scan:
+    * one fused pass per tile, one shuffle of the per-tile partials,
+    * then the decode projection. */
+  def execute(lake: DataFrame, cq: CompiledRasterQuery, aoiGeoJson: String,
+              env: DataEnvironment): DataFrame =
+    if (cq.listing) ordered(project(listed(lake, lit(aoiGeoJson), cq, env, Nil), cq, Nil), cq)
+    else ordered(project(merged(lake, lit(aoiGeoJson), cq.spec, env.bands,
+      keyed = !cq.isGlobal), cq, Nil), cq)
 
   /** Many-AOI variant: `pairs` carries `(fid, gj, tx, ty, bands…)` —
     * one (feature, tile) row per bbox-intersecting pair. The SAME
@@ -376,49 +399,25 @@ object RasterSql {
     * is ONE Spark job regardless of feature count. */
   def executeBatch(pairs: DataFrame, cq: CompiledRasterQuery,
                    env: DataEnvironment): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val bandCols = cq.spec.usedBands.map(i => col(env.bands(i)))
-    val children =
-      (col("gj") +: col("tx") +: col("ty") +: bandCols)
-        .map(ColumnBridge.expression)
-    if (cq.listing) {
+    val fid = Seq("fid")
+    if (cq.listing)
       // batch pixel LISTING (the per-feature alert-download contract,
       // reference `queries.py:300-343`): the same fused per-(feature,
       // tile) pass, emitting one row per masked+filtered pixel — no
       // shuffle at all unless the user ordered the output. Tiles
       // partition pixels, so (fid, gx, gy) rows are exact and unique.
-      val pl = ColumnBridge.column(PixelList(cq.spec, children))
-      val rows = pairs.select(col("fid"), explode(pl).as("p"))
-        .select(col("fid"), col("p.gx").as("gx"), col("p.gy").as("gy"),
-          col("p.vs").as("vs"))
-      val out = rows.selectExpr("fid" +:
-        cq.outputs.map { case (n, e) => s"$e AS `$n`" }: _*)
-      // deterministic per-feature download order: fid leads, then the
-      // user's ORDER BY columns
-      val sorted =
-        if (cq.orderBy.isEmpty) out
-        else out.orderBy(col("fid") +: cq.orderBy.map { case (n, asc) =>
-          if (asc) col(n).asc else col(n).desc }: _*)
-      return cq.limit.fold(sorted)(sorted.limit)
+      // Deterministic per-feature download order: fid leads, then the
+      // user's ORDER BY columns.
+      ordered(project(listed(pairs, col("gj"), cq, env, fid), cq, fid), cq,
+        lead = Seq(col("fid")))
+    else {
+      val grouped = merged(pairs, col("gj"), cq.spec, env.bands, fid, keyed = !cq.isGlobal)
+      // parity with the single-AOI path: a feature whose mask+filter
+      // passes zero pixels still gets its global-aggregate row (COUNT
+      // coalesces to 0 downstream) — groupBy alone would drop the fid
+      // entirely where execute() returns one row
+      project(if (cq.isGlobal) pairs.select("fid").distinct().join(grouped, fid, "left")
+        else grouped, cq, fid)
     }
-    val zp = ColumnBridge.column(ZonalPartial(cq.spec, children))
-    val nv = cq.spec.vals.length
-    val parts = pairs
-      .select(col("fid"), explode(zp).as("p"))
-      .select((col("fid") +: col("p.k").as("k") +: col("p.c").as("pc") +:
-        (0 until nv).map(i => element_at(col("p.ss"), i + 1).as(s"ps$i"))): _*)
-    val aggs = sum(col("pc")).as("c") +:
-      (0 until nv).map(i => sum(col(s"ps$i")).as(s"s$i"))
-    val merged =
-      if (cq.isGlobal) {
-        // parity with the single-AOI path: a feature whose mask+filter
-        // passes zero pixels still gets its global-aggregate row
-        // (COUNT coalesces to 0 downstream) — groupBy alone would drop
-        // the fid entirely where execute() returns one row
-        val grouped = parts.groupBy("fid").agg(aggs.head, aggs.tail: _*)
-        pairs.select("fid").distinct().join(grouped, Seq("fid"), "left")
-      } else parts.groupBy("fid", "k").agg(aggs.head, aggs.tail: _*)
-    merged.selectExpr("fid" +:
-      cq.outputs.map { case (n, e) => s"$e AS `$n`" }: _*)
   }
 }

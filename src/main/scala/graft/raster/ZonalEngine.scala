@@ -2,6 +2,7 @@ package graft.raster
 
 import graft.geo.{Geom, MultiPolygon, Polygon}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Programmatic zonal-statistics entry point — the engine behind the
   * `/analysis/zonal` route (SURVEY §3.2): resolve the data
@@ -90,7 +91,6 @@ object ZonalEngine {
                    dataset: String, userSql: String, aoiGeoJson: String,
                    overrides: Map[String, String] = Map.empty,
                    lakeDirOverride: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val geom = requireAreal(aoiGeoJson)
     val (env, cq) = compileFor(catalog, dataset, userSql, overrides)
     if (!cq.listing)
@@ -121,29 +121,30 @@ object ZonalEngine {
                   dataset: String, userSql: String,
                   geoms: Seq[(String, String)],
                   overrides: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.functions._
     geoms.foreach { case (_, gj) => requireAreal(gj) }
     val (env, cq) = compileFor(catalog, dataset, userSql, overrides)
-    val g = env.grid
     TileLake.ensureLake(spark, env.lakeDir)
-    val bbs = geoms.map { case (fid, gj) => (fid, gj, Geom.fromGeoJson(gj).bbox) }
-    val ids = bbs.flatMap { case (_, _, bb) =>
-      TileLake.tileIdsForBbox(g, bb._1, bb._2, bb._3, bb._4)
-    }.distinct
-    val lake = TileLake.scanPruned(spark, env.lakeDir, ids)
-    import spark.implicits._
-    val aois = bbs.map { case (fid, gj, bb) => (fid, gj, bb._1, bb._2, bb._3, bb._4) }
-      .toDF("fid", "gj", "bxmin", "bymin", "bxmax", "bymax")
-    RasterSql.executeBatch(tileBboxJoin(lake, aois, g), cq, env)
+    RasterSql.executeBatch(bboxPairs(spark, env.lakeDir, env.grid, geoms), cq, env)
   }
 
-  /** Broadcast bbox join of the AOI table against a (pruned) lake
-    * scan — THE (feature, tile) pairing rule both batch paths share.
-    * `aois` must carry `bxmin/bymin/bxmax/bymax` bbox columns. */
-  private def tileBboxJoin(lake: DataFrame, aois: DataFrame,
-                           g: Grid): DataFrame = {
-    import org.apache.spark.sql.functions._
-    lake.join(broadcast(aois),
+  /** The (feature, tile) pairs of a batch — THE pairing rule every
+    * batch pass shares: the union of the features' pruning sets is one
+    * partition-pruned scan, and the broadcast feature table (`fid`,
+    * AOI `gj`, bbox) joins it on tile bbox × feature bbox. */
+  private def bboxPairs[F: scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, dir: String, g: Grid,
+      geoms: Seq[(F, String)]): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    import spark.implicits._
+    val aois = geoms.map { case (fid, gj) =>
+      val bb = Geom.fromGeoJson(gj).bbox
+      (fid, gj, bb._1, bb._2, bb._3, bb._4)
+    }
+    val ids = aois.flatMap { case (_, _, x0, y0, x1, y1) =>
+      TileLake.tileIdsForBbox(g, x0, y0, x1, y1)
+    }.distinct
+    TileLake.scanPruned(spark, dir, ids).join(
+      broadcast(aois.toDF("fid", "gj", "bxmin", "bymin", "bxmax", "bymax")),
       col("tx") * g.tileDeg + g.originLon < col("bxmax") &&
         col("tx") * g.tileDeg + g.originLon + g.tileDeg > col("bxmin") &&
         lit(g.originLat) - col("ty") * g.tileDeg - g.tileDeg < col("bymax") &&
@@ -151,10 +152,10 @@ object ZonalEngine {
   }
 
   /** Whole-batch zonal statistics as ONE Spark job (the
-    * `r7_batch_zonal` plan shape behind `/analysis/zonal/batch`):
-    * the ≤100-feature AOI table broadcasts into a bbox join against
-    * the union-pruned tile scan, each surviving (aoi, tile) pair runs
-    * the fused [[ZonalPartial]] pass (AOI parse memoized per distinct
+    * `r7_batch_zonal` plan shape behind `/analysis/zonal/batch`): the
+    * ≤100-feature AOI table broadcasts into a bbox join against the
+    * union-pruned tile scan, each surviving (aoi, tile) pair runs the
+    * fused [[ZonalPartial]] pass (AOI parse memoized per distinct
     * feature), and a single shuffle groups the per-tile partials by
     * `(fid, key)`. The reference fans out ≤100 Step-Function lambdas
     * here; a sequential per-feature driver loop (round 1's endpoint)
@@ -162,101 +163,77 @@ object ZonalEngine {
     * 100× more features. */
   def runBatch(spark: SparkSession, catalog: graft.catalog.Catalog,
                geoms: Seq[String], tcdThreshold: Option[Int]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    geoms.foreach { gj =>
-      Geom.fromGeoJson(gj) match {
-        case _: Polygon | _: MultiPolygon => ()
-        case _ => throw ZonalException(
-          "Geometry must be a Polygon or MultiPolygon for raster analysis")
-      }
-    }
+    geoms.foreach(requirePolygonal)
     val env = DataEnvironment.cached(catalog, TileLake.defaultDir)
-    val g = env.grid
     TileLake.ensureLake(spark, env.lakeDir)
-
-    val bbs = geoms.zipWithIndex.map { case (gj, fid) =>
-      (fid, gj, Geom.fromGeoJson(gj).bbox)
-    }
-    // union of per-AOI pruning sets → one partition-pruned scan
-    val ids = bbs.flatMap { case (_, _, bb) =>
-      TileLake.tileIdsForBbox(g, bb._1, bb._2, bb._3, bb._4)
-    }.distinct
-    val lake = TileLake.scanPruned(spark, env.lakeDir, ids)
-    import spark.implicits._
-    val aois = bbs.map { case (fid, gj, bb) => (fid, gj, bb._1, bb._2, bb._3, bb._4) }
-      .toDF("fid", "gj", "bxmin", "bymin", "bxmax", "bymax")
-    val pairs = tileBboxJoin(lake, aois, g)
-
-    val keyL = env.layers("landcover_raster__class")
-    val tcdL = env.layers("umd_tree_cover_density_2000__threshold")
-    val used = (keyL.srcBands ++ tcdThreshold.map(_ => tcdL.srcBands)
-      .getOrElse(Set.empty)).toSeq.sorted
-    val spec = ZonalSpec(g,
-      keys = Seq(keyL.eval), keyStrides = Seq(1L),
-      vals = Seq(env.layers("area__ha").eval),
-      preds = tcdThreshold.map(t =>
-        PixelPreds.Ge(tcdL.eval, t.toDouble)).toSeq,
-      usedBands = used, nBands = env.bands.length)
-    import org.apache.spark.sql.graft.ColumnBridge
-    val zp = ColumnBridge.column(ZonalPartial(spec,
-      (col("gj") +: col("tx") +: col("ty") +: used.map(i => col(env.bands(i))))
-        .map(ColumnBridge.expression)))
-    val decode = SyntheticEnv.landcoverDecodeSql("k")
-    pairs.select(col("fid"), explode(zp).as("p"))
-      .select(col("fid"), col("p.k").as("k"), col("p.c").as("pc"),
-        element_at(col("p.ss"), 1).as("s0"))
-      .groupBy("fid", "k")
-      .agg(sum("pc").as("pixel_count"), sum("s0").as("s0"))
-      .selectExpr("fid", "k AS landcover", s"$decode AS landcover_name",
-        "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha", "pixel_count")
-      .orderBy("fid", "landcover")
+    landcoverRows(zonalBatch(spark, env.lakeDir, landcoverSpec(env, tcdThreshold),
+      env.bands, geoms), "fid").orderBy("fid", "landcover")
   }
 
+  /** `/analysis/zonal` (`analysis.py:95-108`): the land cover statistic
+    * of one AOI as a pruned single-AOI pass over the test lake. */
   def run(spark: SparkSession, req: Request): DataFrame = {
-    // Polygon/MultiPolygon only (analysis.py:104-107)
-    Geom.fromGeoJson(req.aoiGeoJson) match {
-      case _: Polygon | _: MultiPolygon => ()
-      case _ => throw ZonalException(
-        "Geometry must be a Polygon or MultiPolygon for raster analysis")
-    }
+    requirePolygonal(req.aoiGeoJson)
     val unknown = req.groupBy.filterNot(_ == "landcover")
     if (unknown.nonEmpty)
       throw ZonalException(s"Unknown raster layers: ${unknown.mkString(", ")}")
-
-    TileLake.ensureWritten(spark, TileLake.defaultDir)
-    zonal(spark, TileLake.defaultDir, SyntheticEnv.grid, "px_landcover", "landcover",
-      req.aoiGeoJson, req.tcdThreshold.map(t => s"arr_ge(px_tcd, $t)"))
-      .selectExpr("landcover",
-        s"${SyntheticEnv.landcoverDecodeSql("landcover")} AS landcover_name",
-        "area_ha", "pixel_count")
-      .orderBy("landcover")
+    val env = DataEnvironment.cached(SyntheticRasters.catalog, TileLake.defaultDir)
+    TileLake.ensureLake(spark, env.lakeDir)
+    landcoverRows(zonal(spark, env.lakeDir, landcoverSpec(env, req.tcdThreshold),
+      env.bands, req.aoiGeoJson)).orderBy("landcover")
   }
 
-  /** The one zonal pipeline (`/analysis/zonal`, r9, r11, r21 and the
-    * scale probe): the tile-id-pruned scan of the lake at `dir` on grid
-    * `g` → `keyCol` as keys, geodesic micro-hectares as values, the
-    * AOI's scanline mask (AND `extraMask`, an `arr_*` mask over the
-    * scan's band columns) → one fused `tile_zonal` per tile → one group
-    * by key. Columns: `keyAs`, `area_ha`, `pixel_count`. Built on the
-    * pruned scan itself, never through a named view: concurrent
-    * requests share one session catalog. */
-  def zonal(spark: SparkSession, dir: String, g: Grid, keyCol: String, keyAs: String,
-            aoiGeoJson: String, extraMask: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+  /** Polygon/MultiPolygon only (`analysis.py:104-107`). */
+  private def requirePolygonal(gj: String): Unit = Geom.fromGeoJson(gj) match {
+    case _: Polygon | _: MultiPolygon => ()
+    case _ => throw ZonalException(
+      "Geometry must be a Polygon or MultiPolygon for raster analysis")
+  }
+
+  /** The zonal routes' statistic over `env`: land cover keys and pixel
+    * area sums, over the pixels at or above `tcdThreshold` tree cover
+    * density when one is given. */
+  private def landcoverSpec(env: DataEnvironment, tcdThreshold: Option[Int]): ZonalSpec = {
+    val keyL = env.layers("landcover_raster__class")
+    val tcdL = env.layers("umd_tree_cover_density_2000__threshold")
+    ZonalSpec(env.grid,
+      keys = Seq(keyL.eval), keyStrides = Seq(1L),
+      vals = Seq(env.layers("area__ha").eval),
+      preds = tcdThreshold.map(t => PixelPreds.Ge(tcdL.eval, t.toDouble)).toSeq,
+      usedBands = (keyL.srcBands ++ tcdThreshold.fold(Set.empty[Int])(_ => tcdL.srcBands))
+        .toSeq.sorted,
+      nBands = env.bands.length)
+  }
+
+  /** `lead…`, `landcover`, `landcover_name`, `area_ha`, `pixel_count`
+    * of a land cover pass ([[zonal]] or [[zonalBatch]] columns). */
+  private[raster] def landcoverRows(df: DataFrame, lead: String*): DataFrame =
+    df.selectExpr(lead ++ Seq("k AS landcover",
+      s"${SyntheticEnv.landcoverDecodeSql("k")} AS landcover_name",
+      "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha", "c AS pixel_count"): _*)
+
+  /** The single-AOI zonal pass (`/analysis/zonal`, the r-module's zonal
+    * queries and the scale probe): the tile-id-pruned scan of the lake
+    * at `dir` on `spec.grid`, the AOI as a literal column, one fused
+    * [[ZonalPartial]] per tile, one group by key. `bands` names the
+    * lake columns `spec.usedBands` indexes; columns as
+    * [[RasterSql.merged]]. Built on the pruned scan itself, never
+    * through a named view: concurrent requests share one session
+    * catalog. */
+  def zonal(spark: SparkSession, dir: String, spec: ZonalSpec, bands: Seq[String],
+            aoiGeoJson: String): DataFrame = {
+    val g = spec.grid
     val bb = Geom.fromGeoJson(aoiGeoJson).bbox
     val ids = TileLake.tileIdsForBbox(g, bb._1, bb._2, bb._3, bb._4)
-    val aoiMask =
-      s"tile_mask('${aoiGeoJson.replace("'", "''")}', tx, ty, " +
-        s"${g.originLon}, ${g.originLat}, ${g.tilesX}, ${g.tilesY}, " +
-        s"${g.tileDeg}, ${g.pxPerTile})"
-    val maskE = extraMask.fold(aoiMask)(m => s"arr_and($aoiMask, $m)")
-    TileLake.scanPruned(spark, dir, ids)
-      .selectExpr(s"$keyCol AS keys",
-        s"grid_arr('microha', ty, ${g.originLat}, ${g.tileDeg}, ${g.pxPerTile}) AS vals",
-        s"$maskE AS mask")
-      .selectExpr("explode(tile_zonal(keys, vals, mask)) AS p")
-      .groupBy(col("p.k").as(keyAs))
-      .agg(expr("CAST(sum(p.s) AS DOUBLE) / 1000000.0").as("area_ha"),
-        expr("sum(p.c)").as("pixel_count"))
+    RasterSql.merged(TileLake.scanPruned(spark, dir, ids), lit(aoiGeoJson), spec, bands)
   }
+
+  /** The many-AOI zonal pass as one Spark job: [[bboxPairs]], one fused
+    * [[ZonalPartial]] per (feature, tile) pair, one shuffle by
+    * `(fid, key)`. `fid` is the index into `geoms`; columns as
+    * [[RasterSql.merged]]. */
+  def zonalBatch(spark: SparkSession, dir: String, spec: ZonalSpec, bands: Seq[String],
+                 geoms: Seq[String]): DataFrame =
+    RasterSql.merged(bboxPairs(spark, dir, spec.grid, geoms.indices.zip(geoms)),
+      col("gj"), spec, bands, by = Seq("fid"))
 }

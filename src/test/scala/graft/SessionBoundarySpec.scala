@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sessions the engine did not build. Two more scans keep `ApiServer`
   * to one error path (handlers throw, and `handle` alone writes the
   * JSEND error envelope) and to one catalog write (`update` alone
-  * assigns the catalog snapshot). */
+  * assigns the catalog snapshot), and one more keeps the raster tile
+  * kernels to one AOI parse and one mask call. */
 class SessionBoundarySpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala/graft")
@@ -92,6 +93,14 @@ class SessionBoundarySpec extends AnyFunSuite {
       s"one update ($defs) holding the one assignment ($swaps)")
   }
 
+  test("the tile kernels parse and rasterize an AOI in one place") {
+    for (call <- Seq("""Rasterizer\.prepare\(""", """Rasterizer\.tileMask\(""")) {
+      val sites = occurrences(call)
+      assert(sites.length == 1,
+        s"share TileKernelCodegen's AOI cache and mask; $call sites: $sites")
+    }
+  }
+
   test("SparkEntry.queries installs the native functions on a session the " +
     "engine did not build") {
     // a bare builder, no LocalTuning, no install; newSession gives a
@@ -103,14 +112,15 @@ class SessionBoundarySpec extends AnyFunSuite {
     val spark = base.newSession()
     try {
       val reg = spark.sessionState.functionRegistry
-      assert(!reg.functionExists(FunctionIdentifier("tile_zonal")),
+      assert(!reg.functionExists(FunctionIdentifier("arr_sum")),
         "the foreign session must start without the native functions")
       // the sf0.001 lake beside the bench's default one
       val tinySf = new java.io.File(
         new java.io.File(Bench.envSfDir(Map.empty)).getParentFile, "sf0.001").getPath
-      val df = SparkEntry.queries("r7_batch_zonal")(spark, tinySf)
+      // r5's SQL text calls arr_sum, which resolves only once installed
+      val df = SparkEntry.queries("r5_band_stats")(spark, tinySf)
       assert(df.queryExecution.analyzed.exists(_.expressions.exists(
-        _.exists(_.isInstanceOf[graft.raster.TileZonal]))), "the plan must call tile_zonal")
+        _.exists(_.isInstanceOf[graft.functions.ArrSum]))), "the plan must call arr_sum")
       assert(df.collect().nonEmpty)
     } finally base.stop()
   }

@@ -2306,6 +2306,38 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(send("DELETE", "/dataset/failds", "", admin).statusCode() == 200)
   }
 
+  test("DELETE /dataset/{d}/{v} answers 409 while its creation is pending") {
+    val admin = "Authorization" -> "Bearer test-admin"
+    val src = java.nio.file.Files.createTempDirectory("pendvsrc")
+    java.nio.file.Files.writeString(src.resolve("a.csv"), "id,v\n1,x\n")
+    assert(send("PUT", "/dataset/pendvds/v1",
+      s"""{"creation_options": {"source_uri": ["file://${src.resolve("a.csv")}"]}}""",
+      admin).statusCode() == 202)
+    val blocked = send("DELETE", "/dataset/pendvds/v1", "", admin)
+    assert(blocked.statusCode() == 409 && blocked.body().contains("in progress"),
+      blocked.body().take(300))
+    assert(awaitVersion("/dataset/pendvds/v1").contains("\"status\":\"saved\""))
+    assert(send("DELETE", "/dataset/pendvds/v1", "", admin).statusCode() == 200)
+    assert(send("DELETE", "/dataset/pendvds", "", admin).statusCode() == 200)
+  }
+
+  test("PUT /dataset/{d}/{v} answers 409 when another dataset's version " +
+    "has the same asset id prefix") {
+    val admin = "Authorization" -> "Bearer test-admin"
+    val src = java.nio.file.Files.createTempDirectory("collsrc")
+    java.nio.file.Files.writeString(src.resolve("a.csv"), "id,v\n1,x\n")
+    val body = s"""{"creation_options": {"source_uri": ["file://${src.resolve("a.csv")}"]}}"""
+    assert(send("PUT", "/dataset/coll-a/b", body, admin).statusCode() == 202)
+    // `coll` + `a-b` mints `coll-a-b-default`, the id `coll-a` + `b` holds
+    val clash = send("PUT", "/dataset/coll/a-b", body, admin)
+    assert(clash.statusCode() == 409 && clash.body().contains("coll-a"), clash.body().take(300))
+    assert(get("/dataset/coll/a-b").statusCode() == 404)
+    assert(awaitVersion("/dataset/coll-a/b").contains("\"status\":\"saved\""))
+    assert(get("/asset/coll-a-b-default").body().contains("\"dataset\":\"coll-a\""))
+    assert(send("DELETE", "/dataset/coll-a/b", "", admin).statusCode() == 200)
+    assert(send("DELETE", "/dataset/coll-a", "", admin).statusCode() == 200)
+  }
+
   test("a download whose query fails after the 200 went out ends in a broken " +
     "transfer, not a complete response") {
     // ANSI cast failure on rows past the first ones
