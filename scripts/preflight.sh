@@ -36,5 +36,8 @@ sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" >/dev/null 2>&1
 summary=$(python3 scripts/localcheck.py "$out" /root/testdata/sf0.01 | tail -1)
 echo "[preflight] $summary"
 echo "$summary" | grep -q ' 0 fail' || { echo "[preflight] FAIL: oracle mismatches" >&2; exit 1; }
+# every query declares its oracle, so a rows-only row is a query whose
+# oracle never reached oracle_sql.json
+echo "$summary" | grep -q ' 0 rows-only' || { echo "[preflight] FAIL: queries compared by row count only" >&2; exit 1; }
 
 echo "[preflight] OK"

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One module of the engine's query surface. `SparkEntry` unions all
-  * modules into the driver contract.
+/** One module of the engine's query surface: one [[Op]] per query,
+  * each carrying its DuckDB oracle. `SparkEntry` unions all modules
+  * into the driver contract.
   *
   * Conventions for DuckDB-oracle parity (the driver hash-compares
   * values after sorting columns by name):
@@ -16,12 +17,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - prefer `cast(ts as date)` over raw timestamps in projections.
   */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
+  /** Every query of the module, each name once; `queries` and
+    * `oracles` are built from it on each call. */
+  def ops: Seq[Op]
 
-  /** DuckDB-runnable ANSI SQL oracle per query key; omit a key for
-    * ops whose semantics aren't SQL-expressible (driver then records a
-    * weaker rows-only check). */
-  def oracles: Map[String, String]
+  final def queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryModule.byName(moduleName, ops.map(op => op.name -> op.run))
+
+  /** DuckDB-runnable ANSI SQL oracle per query name. */
+  final def oracles: Map[String, String] =
+    QueryModule.byName(moduleName, ops.map(op => op.name -> op.oracle))
+
+  private def moduleName: String = getClass.getSimpleName.stripSuffix("$")
 
   /** Sidecar dumps for the scale-gate contracts: extra engine state
     * (converged centroids, cell assignments, …) written by Verify
@@ -60,13 +67,39 @@ trait QueryModule {
 final case class ScaleCheck(name: String, kind: String, spark: String,
                             oracle: String, bound: Double = 0.0)
 
-/** Helper for queries whose Spark side is the same (or nearly the
-  * same) SQL text executed by our SQL gate. */
-final case class SqlQ(name: String, sparkSql: String, oracleSql: Option[String])
+/** One query: its name, the engine build of its result over a lake
+  * dir, and the DuckDB SQL that must return the same rows. The oracle
+  * text is built on first read, so `queries` never pays for it. */
+final class Op(val name: String, val run: (SparkSession, String) => DataFrame,
+               oracleSql: => String) {
+  lazy val oracle: String = oracleSql
+}
 
+object Op {
+  def apply(name: String, run: (SparkSession, String) => DataFrame,
+            oracle: => String): Op = new Op(name, run, oracle)
+}
+
+object QueryModule {
+  /** `entries` as a map; a name declared twice is an error rather than
+    * a silent overwrite by the later entry. */
+  def byName[V](owner: String, entries: Seq[(String, V)]): Map[String, V] = {
+    val twice = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(twice.isEmpty,
+      s"$owner declares ${twice.toSeq.sorted.mkString(", ")} more than once")
+    entries.toMap
+  }
+}
+
+/** [[Op]]s whose Spark side is SQL text run over the registered lake
+  * tables. */
 object SqlQ {
+  def split(name: String, sparkSql: String, oracleSql: String): Op =
+    Op(name, (spark, sfDir) => {
+      Tables.register(spark, sfDir)
+      spark.sql(sparkSql)
+    }, oracleSql)
+
   /** Same text runs on both engines. */
-  def shared(name: String, sql: String): SqlQ = SqlQ(name, sql, Some(sql))
-  def split(name: String, sparkSql: String, oracleSql: String): SqlQ =
-    SqlQ(name, sparkSql, Some(oracleSql))
+  def shared(name: String, sql: String): Op = split(name, sql, sql)
 }

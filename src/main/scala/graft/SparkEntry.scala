@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** All engine modules contributing to the query surface. */
-  private def modules: Seq[QueryModule] = Seq(
+  private[graft] def modules: Seq[QueryModule] = Seq(
     relational.RelationalQueries,
     textops.TextQueries,
     simsearch.SimQueries,
@@ -22,12 +22,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("a1_agg_groupby")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Each entry
-    * installs the native functions before it runs: the contract accepts
-    * sessions the engine did not build (`install` is a no-op after its
-    * first call per session). */
+  /** One entry per implemented operator from SURVEY.md §2; a name two
+    * modules declare is an error. Each entry installs the native
+    * functions before it runs: the contract accepts sessions the engine
+    * did not build (`install` is a no-op after its first call per
+    * session). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.queries).toMap.map { case (name, fn) =>
+    QueryModule.byName("SparkEntry", modules.flatMap(_.queries)).map { case (name, fn) =>
       name -> { (spark: SparkSession, sfDir: String) =>
         graft.functions.GraftFunctions.install(spark)
         fn(spark, sfDir)
@@ -35,9 +36,9 @@ object SparkEntry {
     }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    modules.flatMap(_.oracles).toMap
+    QueryModule.byName("SparkEntry", modules.flatMap(_.oracles))
 
   /** Sidecar dumps consumed by the scale contracts (see
     * [[QueryModule.auxDumps]]); Verify writes them under `_aux/`. */

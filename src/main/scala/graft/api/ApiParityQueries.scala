@@ -3,7 +3,7 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import graft.{QueryModule, Tables}
+import graft.{Op, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** HTTP-surface hash gate (round-13 verdict ask #4): every other
@@ -139,9 +139,5 @@ object ApiParityQueries extends QueryModule {
        |) t""".stripMargin
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("api_parity" -> (apiParity _))
-
-  override def oracles: Map[String, String] =
-    Map("api_parity" -> apiParityOracle)
+  override def ops: Seq[Op] = Seq(Op("api_parity", apiParity, apiParityOracle))
 }

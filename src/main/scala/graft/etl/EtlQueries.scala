@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.{QueryModule, Tables}
+import graft.{Op, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,8 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object EtlQueries extends QueryModule {
 
-  private def tmpDir(tag: String, sfDir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_etl_${tag}_${math.abs(sfDir.hashCode)}"
+  /** Scratch dir of one round trip, named from the sanitized lake
+    * path (the r12/r13 convention) so two lakes never share one. */
+  private[etl] def tmpDir(tag: String, sfDir: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_etl_${tag}_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** S1: TSV ingest. Schema is inferred from the first 100 lines only
     * (the reference's csvsql sample, `create_tabular_schema.sh:36-50`),
@@ -207,19 +209,29 @@ object EtlQueries extends QueryModule {
          |WHERE st_distance_sphere(st_point(lon, lat), st_point(-94.613, 0.356)) <= 300000.0""".stripMargin)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_csv_ingest" -> ((s, d) => csvIngest(s, d)),
-    "s3_vector_ingest" -> ((s, d) => vectorIngest(s, d)),
-    "s4_wkb_csv_ingest" -> ((s, d) => wkbCsvIngest(s, d)),
-    "s5_shp_ingest" -> ((s, d) => shpIngest(s, d)),
-    "s6_vector_features" -> ((s, d) => vectorFeatures(s, d)),
-    "s7_gpkg_ingest" -> ((s, d) => gpkgIngest(s, d)))
+  /** The lake points with their derived GFW fields (canonical GeoJSON,
+    * content-addressed geostore id) — what every point-ingest round
+    * trip must load. */
+  private val pointIngestOracle: String =
+    """WITH pts AS (
+      |  SELECT c_custkey AS custkey,
+      |    CAST(c_custkey % 720 AS DOUBLE) / 2.0 - 179.75 AS lon,
+      |    CAST(c_custkey % 340 AS DOUBLE) / 2.0 - 84.75 AS lat
+      |  FROM customer WHERE c_custkey < 300),
+      |j AS (SELECT custkey, lon, lat,
+      |  '{"type":"Point","coordinates":[' || lon::VARCHAR || ',' || lat::VARCHAR || ']}' AS gfw_geojson
+      |  FROM pts)
+      |SELECT custkey, lon, lat, gfw_geojson,
+      |  substr(md5(gfw_geojson), 1, 8) || '-' || substr(md5(gfw_geojson), 9, 4) || '-' ||
+      |  substr(md5(gfw_geojson), 13, 4) || '-' || substr(md5(gfw_geojson), 17, 4) || '-' ||
+      |  substr(md5(gfw_geojson), 21, 12) AS gfw_geostore_id
+      |FROM j""".stripMargin
 
-  override def oracles: Map[String, String] = Map(
+  override def ops: Seq[Op] = Seq(
     // the ingested view reproduces the source lattice exactly, so the
     // oracle replays the derivation + the haversine (term order mirrors
     // st_distance_sphere)
-    "s6_vector_features" ->
+    Op("s6_vector_features", vectorFeatures,
       """WITH pts AS (
         |  SELECT c_custkey AS custkey,
         |    CAST(c_custkey % 720 AS DOUBLE) / 2.0 - 179.75 AS lon,
@@ -231,70 +243,15 @@ object EtlQueries extends QueryModule {
         |    cos(radians(lat)) * cos(radians(0.356)) *
         |    sin(radians(-94.613 - lon) / 2) * sin(radians(-94.613 - lon) / 2))) AS dist_m
         |  FROM pts)
-        |SELECT custkey, lon, lat, dist_m FROM d WHERE dist_m <= 300000.0""".stripMargin,
+        |SELECT custkey, lon, lat, dist_m FROM d WHERE dist_m <= 300000.0""".stripMargin),
     // lossless round trip ⇒ the ingest result equals the source table
-    "s1_csv_ingest" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    "s3_vector_ingest" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS custkey,
-        |    CAST(c_custkey % 720 AS DOUBLE) / 2.0 - 179.75 AS lon,
-        |    CAST(c_custkey % 340 AS DOUBLE) / 2.0 - 84.75 AS lat
-        |  FROM customer WHERE c_custkey < 300),
-        |j AS (SELECT custkey, lon, lat,
-        |  '{"type":"Point","coordinates":[' || lon::VARCHAR || ',' || lat::VARCHAR || ']}' AS gfw_geojson
-        |  FROM pts)
-        |SELECT custkey, lon, lat, gfw_geojson,
-        |  substr(md5(gfw_geojson), 1, 8) || '-' || substr(md5(gfw_geojson), 9, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 13, 4) || '-' || substr(md5(gfw_geojson), 17, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 21, 12) AS gfw_geostore_id
-        |FROM j""".stripMargin,
-    // the shapefile path lands on the same derived values — the
-    // .shp/.dbf byte round trip is lossless on IEEE doubles
-    "s5_shp_ingest" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS custkey,
-        |    CAST(c_custkey % 720 AS DOUBLE) / 2.0 - 179.75 AS lon,
-        |    CAST(c_custkey % 340 AS DOUBLE) / 2.0 - 84.75 AS lat
-        |  FROM customer WHERE c_custkey < 300),
-        |j AS (SELECT custkey, lon, lat,
-        |  '{"type":"Point","coordinates":[' || lon::VARCHAR || ',' || lat::VARCHAR || ']}' AS gfw_geojson
-        |  FROM pts)
-        |SELECT custkey, lon, lat, gfw_geojson,
-        |  substr(md5(gfw_geojson), 1, 8) || '-' || substr(md5(gfw_geojson), 9, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 13, 4) || '-' || substr(md5(gfw_geojson), 17, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 21, 12) AS gfw_geostore_id
-        |FROM j""".stripMargin,
-    // the GeoPackage path lands on the same derived values — the
-    // SQLite record + GPKG blob round trip is lossless on IEEE doubles
-    "s7_gpkg_ingest" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS custkey,
-        |    CAST(c_custkey % 720 AS DOUBLE) / 2.0 - 179.75 AS lon,
-        |    CAST(c_custkey % 340 AS DOUBLE) / 2.0 - 84.75 AS lat
-        |  FROM customer WHERE c_custkey < 300),
-        |j AS (SELECT custkey, lon, lat,
-        |  '{"type":"Point","coordinates":[' || lon::VARCHAR || ',' || lat::VARCHAR || ']}' AS gfw_geojson
-        |  FROM pts)
-        |SELECT custkey, lon, lat, gfw_geojson,
-        |  substr(md5(gfw_geojson), 1, 8) || '-' || substr(md5(gfw_geojson), 9, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 13, 4) || '-' || substr(md5(gfw_geojson), 17, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 21, 12) AS gfw_geostore_id
-        |FROM j""".stripMargin,
-    // the WKB-hex CSV path lands on the exact same derived values —
-    // the hex/CSV round trip is lossless on IEEE doubles
-    "s4_wkb_csv_ingest" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS custkey,
-        |    CAST(c_custkey % 720 AS DOUBLE) / 2.0 - 179.75 AS lon,
-        |    CAST(c_custkey % 340 AS DOUBLE) / 2.0 - 84.75 AS lat
-        |  FROM customer WHERE c_custkey < 300),
-        |j AS (SELECT custkey, lon, lat,
-        |  '{"type":"Point","coordinates":[' || lon::VARCHAR || ',' || lat::VARCHAR || ']}' AS gfw_geojson
-        |  FROM pts)
-        |SELECT custkey, lon, lat, gfw_geojson,
-        |  substr(md5(gfw_geojson), 1, 8) || '-' || substr(md5(gfw_geojson), 9, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 13, 4) || '-' || substr(md5(gfw_geojson), 17, 4) || '-' ||
-        |  substr(md5(gfw_geojson), 21, 12) AS gfw_geostore_id
-        |FROM j""".stripMargin)
+    Op("s1_csv_ingest", csvIngest,
+      "SELECT doc_id, text, lang, source, n_chars FROM documents"),
+    // every point-ingest path lands on the same derived values: the
+    // GeoJSON-lines, .shp/.dbf, SQLite record + GPKG blob and
+    // WKB-hex/CSV round trips are all lossless on IEEE doubles
+    Op("s3_vector_ingest", vectorIngest, pointIngestOracle),
+    Op("s5_shp_ingest", shpIngest, pointIngestOracle),
+    Op("s7_gpkg_ingest", gpkgIngest, pointIngestOracle),
+    Op("s4_wkb_csv_ingest", wkbCsvIngest, pointIngestOracle))
 }

@@ -57,10 +57,4 @@ object AdminFixtures {
     val (x0, y0, x1, y1) = rect
     Polygon(Array(Array((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))))
   }
-
-  /** SQL fragments for the oracle (dialect-shared): rect corners from
-    * a nation-key expression. `div` is the integer-division spelling
-    * (`DIV` on Spark, `//` on DuckDB). */
-  def lon0Sql(k: String): String = s"(-90.0 + ($k % 6) * 15.0)"
-  def lat0Sql(k: String, div: String): String = s"(-52.0 + ($k $div 6) * 22.0)"
 }

@@ -1,7 +1,6 @@
 package graft.geo
 
-import graft.{QueryModule, SqlQ, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Op, QueryModule, SqlQ}
 
 /** The geometry operator surface (SURVEY §2.1 S4–S6, §2.2 P4) driven
   * end-to-end through the engine's Catalyst expressions, with DuckDB
@@ -48,7 +47,7 @@ object GeoQueries extends QueryModule {
     }.mkString("\n    AND ")
   }
 
-  private val sqls: Seq[SqlQ] = Seq(
+  override val ops: Seq[Op] = Seq(
 
     // S5 + S4: point assembly, accessor roundtrip, canonical GeoJSON,
     // content-addressed geostore id (md5-as-uuid). The oracle rebuilds
@@ -385,15 +384,4 @@ object GeoQueries extends QueryModule {
     (0 until 16).map(k =>
       s"((($x >> $k) & 1) << ${2 * k}) + ((($y >> $k) & 1) << ${2 * k + 1})")
       .mkString(" + ")
-
-  override def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sqls.map { q =>
-      q.name -> ((spark: SparkSession, sfDir: String) => {
-        Tables.register(spark, sfDir)
-        spark.sql(q.sparkSql)
-      })
-    }.toMap
-
-  override def oracles: Map[String, String] =
-    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap
 }

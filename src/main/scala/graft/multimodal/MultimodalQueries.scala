@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.{QueryModule, Sql, Tables}
+import graft.{Op, QueryModule, Sql, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -1104,30 +1104,6 @@ object MultimodalQueries extends QueryModule {
       |  CAST(min(id) AS BIGINT) AS example_id
       |FROM c GROUP BY class""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m13_pair_audit" -> ((s, d) => pairAudit(s, d)),
-    "m12_batch_pack" -> ((s, d) => batchPack(s, d)),
-    "m1_media_features" -> ((s, d) => mediaFeatures(s, d)),
-    "m2_frame_sample" -> ((s, d) => frameSample(s, d)),
-    "m3_resize_plan" -> ((s, d) => resizePlan(s, d)),
-    "m4_audio_energy" -> ((s, d) => audioEnergy(s, d)),
-    "m16_audio_vad" -> ((s, d) => audioVad(s, d)),
-    "m5_phash_pairs" -> ((s, d) => phashPairs(s, d)),
-    "m6_multisignal_pairs" -> ((s, d) => multiSignalPairs(s, d)),
-    "m7_clip_align" -> ((s, d) => clipAlign(s, d)),
-    "m8_media_metadata" -> ((s, d) => mediaMetadata(s, d)),
-    "m9_clip_retrieve" -> ((s, d) => clipRetrieve(s, d)),
-    "m10_audio_fingerprint" -> ((s, d) => audioFingerprintPairs(s, d)),
-    "m11_scene_cuts" -> ((s, d) => sceneCuts(s, d)),
-    "m14_spectrogram" -> ((s, d) => spectrogram(s, d)),
-    "m15_frame_dedup" -> ((s, d) => frameDedup(s, d)),
-    "m21_frame_clusters" -> ((s, d) => frameClusters(s, d)),
-    "m22_video_dedup" -> ((s, d) => videoDedup(s, d)),
-    "m17_clip_filter" -> ((s, d) => clipFilter(s, d)),
-    "m18_audio_resample" -> ((s, d) => audioResample(s, d)),
-    "m19_clip_sample" -> ((s, d) => clipSample(s, d)),
-    "m20_media_filter" -> ((s, d) => mediaFilter(s, d)))
-
   /** The full-pixel-stream oracle CTEs (m1/m7's gray stream): emits
     * `g(doc_id, w, hh, npx, gs)` with `gs` the complete rendered
     * pixel list, replayed from the text via [[MediaLake]]'s formulas.
@@ -1292,11 +1268,11 @@ object MultimodalQueries extends QueryModule {
       |  list_max(list_transform(seg, x -> abs(x)))::INT AS peak
       |FROM sl)""".stripMargin
 
-  override def oracles: Map[String, String] = Map(
-    "m14_spectrogram" -> m14Oracle,
-    "m13_pair_audit" -> m13Oracle,
-    "m12_batch_pack" -> m12Oracle,
-    "m1_media_features" ->
+  override def ops: Seq[Op] = Seq(
+    Op("m14_spectrogram", spectrogram, m14Oracle),
+    Op("m13_pair_audit", pairAudit, m13Oracle),
+    Op("m12_batch_pack", batchPack, m12Oracle),
+    Op("m1_media_features", mediaFeatures,
       s"""WITH $grayOracleCtes
          |SELECT doc_id,
          |  CASE WHEN doc_id % 4 = 3 THEN 'jpg' ELSE 'png' END AS fmt,
@@ -1304,15 +1280,15 @@ object MultimodalQueries extends QueryModule {
          |  npx::BIGINT AS n_px,
          |  list_reduce(gs, (a,b) -> (a*131+b) % $P) AS checksum,
          |  list_sum(gs)::DOUBLE / npx AS mean_byte
-         |FROM g""".stripMargin,
-    "m8_media_metadata" ->
+         |FROM g""".stripMargin),
+    Op("m8_media_metadata", mediaMetadata,
       """SELECT doc_id, k AS meta_key, v AS meta_value
         |FROM (SELECT doc_id,
         |  unnest(['Title', 'Language', 'Source']) AS k,
         |  unnest(['doc ' || doc_id, lang, source]) AS v
         |  FROM documents WHERE len(text) > 0)
-        |WHERE v IS NOT NULL""".stripMargin,
-    "m9_clip_retrieve" ->
+        |WHERE v IS NOT NULL""".stripMargin),
+    Op("m9_clip_retrieve", clipRetrieve,
       s"""WITH $grayOracleCtes,
          |$imgTowerOracleCte,
          |q AS (SELECT vec_id AS qid, [x::DOUBLE for x in list_slice(embedding, 1, 8)] AS txt
@@ -1325,14 +1301,14 @@ object MultimodalQueries extends QueryModule {
          |SELECT qid AS query_id, doc_id AS image_id, cosine, rnk
          |FROM (SELECT qid, doc_id, cosine,
          |        CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, doc_id) AS INT) AS rnk FROM s) t
-         |WHERE rnk <= 5""".stripMargin,
-    "m7_clip_align" ->
+         |WHERE rnk <= 5""".stripMargin),
+    Op("m7_clip_align", clipAlign,
       s"""WITH $clipPairOracleCtes
-         |SELECT doc_id, cosine, (cosine >= 0)::INT AS aligned FROM jn""".stripMargin,
+         |SELECT doc_id, cosine, (cosine >= 0)::INT AS aligned FROM jn""".stripMargin),
     // the pairing/cosine CTEs are SHARED with m7 (clipPairOracleCtes
     // — one cosine definition, two operators); only the bucketing
     // tail differs
-    "m17_clip_filter" ->
+    Op("m17_clip_filter", clipFilter,
       s"""WITH $clipPairOracleCtes,
          |bk AS (SELECT doc_id, cosine,
          |    floor(cosine * 20.0)::INT AS bucket,
@@ -1342,8 +1318,8 @@ object MultimodalQueries extends QueryModule {
          |  sum(kept)::BIGINT AS n_kept,
          |  min(doc_id) AS min_doc_id,
          |  sum(CAST(round(cosine * 1000000.0) AS BIGINT))::BIGINT AS cos_u_sum
-         |FROM bk GROUP BY bucket""".stripMargin,
-    "m18_audio_resample" ->
+         |FROM bk GROUP BY bucket""".stripMargin),
+    Op("m18_audio_resample", audioResample,
       s"""WITH $pcmOracleCte,
          |o AS (SELECT doc_id, smp,
          |  unnest(generate_series(0, ((len(smp)-1)*5)//8)) AS i FROM s),
@@ -1354,40 +1330,40 @@ object MultimodalQueries extends QueryModule {
          |  FROM o)
          |SELECT doc_id, (i//64)::INT AS window_idx, count(*)::INT AS n_samples,
          |  sum(v*v)::BIGINT AS energy_x25, max(abs(v))::INT AS peak_x5
-         |FROM r GROUP BY doc_id, i//64""".stripMargin,
+         |FROM r GROUP BY doc_id, i//64""".stripMargin),
     // the frame_off constants replay the writer's deterministic
     // layout (pinned byte-exactly in AviSpec): RIFF hdr 12 + hdrl
     // chunk 200 + movi LIST hdr 12 + per-frame ('00db' hdr 8 +
     // 8×8×3 = 192 data) ⇒ frame k's data at 232 + 200·k
-    "m2_frame_sample" ->
+    Op("m2_frame_sample", frameSample,
       s"""WITH $m2FrameReplayCtes
          |SELECT doc_id, frame_idx, frame_off, ts_ms, frame_sum
-         |FROM vf""".stripMargin,
+         |FROM vf""".stripMargin),
     // m19: the SHARED m2 frame replay + the clip grouping
     // (frame_idx div 16, full clips only) — one frame definition,
     // two operators (the m4/m16 convention)
-    "m19_clip_sample" ->
+    Op("m19_clip_sample", clipSample,
       s"""WITH $m2FrameReplayCtes
          |SELECT doc_id, (frame_idx // 16)::INT AS clip_idx,
          |  count(*)::INT AS n_frames,
          |  sum(frame_sum)::BIGINT AS clip_sum,
          |  min(ts_ms) AS ts_start, max(ts_ms) AS ts_end
          |FROM vf GROUP BY doc_id, frame_idx // 16
-         |HAVING count(*) = 4""".stripMargin,
+         |HAVING count(*) = 4""".stripMargin),
     // m10: the 32-bin energy profile re-derived from the text
     // formula (segment i = samples [i·n/32, (i+1)·n/32)), then the
     // dHash bitmap and the m5 pigeonhole pair scan (exact at fixture
     // sizes). The fingerprint CTEs are the SHARED afpOracleCtes (the
     // streaming audio gate's oracle replays the same hash).
-    "m10_audio_fingerprint" ->
+    Op("m10_audio_fingerprint", audioFingerprintPairs,
       s"""WITH $afpOracleCtes
         |SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
         |  bit_count(xor(a.afp, b.afp))::INT AS hamming
         |FROM h a, h b WHERE a.doc_id < b.doc_id
-        |  AND bit_count(xor(a.afp, b.afp)) <= 3""".stripMargin,
+        |  AND bit_count(xor(a.afp, b.afp)) <= 3""".stripMargin),
     // m11: m2's frame-sum formula over EVERY frame, adjacent deltas
     // by a per-doc lag window, keyframes = opener or |delta| > 512
-    "m11_scene_cuts" ->
+    Op("m11_scene_cuts", sceneCuts,
       """WITH m AS (SELECT doc_id, text, len(text) AS n, 1 + len(text) % 24 AS f
         |  FROM documents WHERE len(text) > 0),
         |fr AS (SELECT doc_id, text, n, f,
@@ -1401,30 +1377,27 @@ object MultimodalQueries extends QueryModule {
         |  FROM s)
         |SELECT doc_id, k::INT AS keyframe_idx, fs AS frame_sum,
         |  CASE WHEN k = 0 THEN 0::BIGINT ELSE delta END AS delta
-        |FROM d WHERE k = 0 OR abs(delta) > 512""".stripMargin,
+        |FROM d WHERE k = 0 OR abs(delta) > 512""".stripMargin),
     // m15: m2's frame formula over EVERY frame → per-frame aHash
     // (bit p set when pixel·64 > frame sum, two 32-bit words),
     // constant frames (hash 0,0) dropped, brute-force pair scan at
     // Hamming ≤ 3 (exact vs the engine's pigeonhole join)
-    "m15_frame_dedup" ->
+    Op("m15_frame_dedup", frameDedup,
       s"""WITH $m15HashOracleCtes
          |SELECT a.doc_id AS doc_id_a, a.k::INT AS frame_a,
          |  b.doc_id AS doc_id_b, b.k::INT AS frame_b,
          |  (bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)))::INT AS hamming
          |FROM hh a, hh b WHERE a.doc_id < b.doc_id
-         |  AND bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3""".stripMargin,
+         |  AND bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3""".stripMargin),
     // m21: the m15 hash replay + brute-force DISTINCT-hash pairs + a
     // recursive-CTE transitive closure (d7's different-algorithm-
     // same-fixed-point check). The node id packs (lo, hi) into one
     // BIGINT exactly as Spark's wrapping shiftleft(lo,32)|hi does —
-    // DuckDB's << checks overflow, so the two's-complement wrap is
-    // spelled out for lo >= 2^31
-    "m21_frame_clusters" -> {
-      def pk(lo: String, hi: String) =
-        s"(CASE WHEN $lo >= 2147483648 THEN ($lo - 4294967296) * 4294967296" +
-          s" ELSE $lo * 4294967296 END + $hi)::BIGINT"
+    // DuckDB's << checks overflow, so `pkSql` spells out the
+    // two's-complement wrap for lo >= 2^31
+    Op("m21_frame_clusters", frameClusters,
       s"""WITH RECURSIVE $m15HashOracleCtes,
-         |nd AS (SELECT DISTINCT ${pk("lo", "hi")} AS id, lo, hi FROM hh),
+         |nd AS (SELECT DISTINCT ${pkSql("lo", "hi")} AS id, lo, hi FROM hh),
          |ed AS (SELECT a.id AS x, b.id AS y FROM nd a, nd b
          |  WHERE a.id != b.id
          |    AND bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3),
@@ -1433,15 +1406,14 @@ object MultimodalQueries extends QueryModule {
          |cl AS (SELECT nd.id, least(nd.id, coalesce(min(r.b), nd.id)) AS lbl
          |  FROM nd LEFT JOIN reach r ON r.a = nd.id GROUP BY nd.id),
          |f AS (SELECT hh.doc_id, hh.k::INT AS frame_idx, cl.lbl AS cluster_id
-         |  FROM hh JOIN cl ON cl.id = ${pk("hh.lo", "hh.hi")})
+         |  FROM hh JOIN cl ON cl.id = ${pkSql("hh.lo", "hh.hi")})
          |SELECT doc_id, frame_idx, cluster_id,
          |  (count(*) OVER (PARTITION BY cluster_id))::BIGINT AS cluster_size
-         |FROM f""".stripMargin
-    },
+         |FROM f""".stripMargin),
     // m22: the m15 hash replay → per-video DISTINCT hash sets →
     // df-capped exact set Jaccard (same SQL as the engine modulo the
     // closed-form hh source and cast spelling)
-    "m22_video_dedup" ->
+    Op("m22_video_dedup", videoDedup,
       s"""WITH $m15HashOracleCtes,
          |vs0 AS (SELECT DISTINCT doc_id, lo, hi FROM hh),
          |df AS (SELECT lo, hi, count(*) AS d FROM vs0 GROUP BY lo, hi),
@@ -1456,15 +1428,15 @@ object MultimodalQueries extends QueryModule {
          |  sa.n AS n_a, sb.n AS n_b,
          |  pr.shared::DOUBLE / (sa.n + sb.n - pr.shared) AS jaccard
          |FROM pr JOIN sz sa ON sa.doc_id = pr.i JOIN sz sb ON sb.doc_id = pr.j
-         |WHERE pr.shared::DOUBLE / (sa.n + sb.n - pr.shared) >= 0.2""".stripMargin,
-    "m4_audio_energy" ->
+         |WHERE pr.shared::DOUBLE / (sa.n + sb.n - pr.shared) >= 0.2""".stripMargin),
+    Op("m4_audio_energy", audioEnergy,
       s"""WITH $m4WindowOracleCtes
          |SELECT doc_id, window_idx, n_samples, energy, peak
-         |FROM winf""".stripMargin,
+         |FROM winf""".stripMargin),
     // the VAD SQL below is the SAME text the Spark side runs (modulo
     // cast spelling); the window features enter through the shared
     // m4 CTEs so the two operators' feature definitions cannot drift
-    "m16_audio_vad" ->
+    Op("m16_audio_vad", audioVad,
       s"""WITH $m4WindowOracleCtes,
          |tot AS (SELECT doc_id, sum(energy)::BIGINT AS e_tot,
          |    sum(n_samples)::BIGINT AS n_tot
@@ -1480,18 +1452,18 @@ object MultimodalQueries extends QueryModule {
          |  count(*)::INT AS n_windows,
          |  sum(energy)::BIGINT AS seg_energy,
          |  max(peak)::INT AS seg_peak
-         |FROM g GROUP BY doc_id, grp""".stripMargin,
-    "m5_phash_pairs" ->
+         |FROM g GROUP BY doc_id, grp""".stripMargin),
+    Op("m5_phash_pairs", phashPairs,
       s"""WITH $phashOracleCtes
          |SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
          |  bit_count(xor(a.phash, b.phash))::INT AS hamming
          |FROM h a, h b WHERE a.doc_id < b.doc_id
-         |  AND bit_count(xor(a.phash, b.phash)) <= 3""".stripMargin,
+         |  AND bit_count(xor(a.phash, b.phash)) <= 3""".stripMargin),
     // the cosine side's oracle is the exact pair scan (the e4
     // contract: the auto-sized LSH tables have full recall at the
     // fixture sizes, verified by e8/e4Recall); the phash CTEs are
     // SHARED with the m5 oracle so the hash definition cannot drift
-    "m6_multisignal_pairs" ->
+    Op("m6_multisignal_pairs", multiSignalPairs,
       s"""WITH $phashOracleCtes,
          |ph AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
          |  FROM h a, h b WHERE a.doc_id < b.doc_id
@@ -1507,8 +1479,8 @@ object MultimodalQueries extends QueryModule {
          |  CASE WHEN ph.doc_id_a IS NULL THEN 0 ELSE 1 END AS sig_phash,
          |  CASE WHEN cos.doc_id_a IS NULL THEN 0 ELSE 1 END AS sig_cosine
          |FROM ph FULL OUTER JOIN cos
-         |  ON ph.doc_id_a = cos.doc_id_a AND ph.doc_id_b = cos.doc_id_b""".stripMargin,
-    "m3_resize_plan" ->
+         |  ON ph.doc_id_a = cos.doc_id_a AND ph.doc_id_b = cos.doc_id_b""".stripMargin),
+    Op("m3_resize_plan", resizePlan,
       s"""WITH $dimsOracleCte,
          |s AS (SELECT doc_id, src_w, src_h,
          |  224000 // greatest(src_w, src_h) AS scale_pm FROM d)
@@ -1516,9 +1488,9 @@ object MultimodalQueries extends QueryModule {
          |  (src_w * scale_pm // 1000)::INT AS dst_w,
          |  (src_h * scale_pm // 1000)::INT AS dst_h,
          |  scale_pm::BIGINT AS scale_pm
-         |FROM s""".stripMargin,
+         |FROM s""".stripMargin),
     // m20: the SHARED m3 dim replay + the verdict tail
-    "m20_media_filter" ->
+    Op("m20_media_filter", mediaFilter,
       s"""WITH $dimsOracleCte
          |SELECT doc_id, src_w, src_h,
         |  least(src_w, src_h)::INT AS min_side,
@@ -1528,7 +1500,7 @@ object MultimodalQueries extends QueryModule {
         |        AND (greatest(src_w, src_h)::BIGINT * 1000)
         |              // least(src_w, src_h) <= 1800
         |       THEN 1 ELSE 0 END)::INT AS kept
-        |FROM d""".stripMargin)
+        |FROM d""".stripMargin))
 
   // ------------------------------------------------------ scale contracts
   //

@@ -1,6 +1,6 @@
 package graft.raster
 
-import graft.{QueryModule, Sql, SqlQ, Tables}
+import graft.{Op, QueryModule, Sql, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The OTF zonal-statistics engine (SURVEY §2.4 A2–A5, §3.2), one
@@ -82,12 +82,22 @@ object RasterQueries extends QueryModule {
        |    AND $dYear >= 2010 AND ($dW) != 0)
        |SELECT y, count(*) AS c FROM f GROUP BY y""".stripMargin)
 
-  private val sqls: Seq[SqlQ] = Seq(
+  /** An [[Op]] whose Spark side is SQL over the persisted tile lake,
+    * bound as `lake` (the same band values the formulas used to
+    * synthesize per query). */
+  private def lakeSql(name: String, sparkSql: String, oracleSql: String): Op =
+    Op(name, (spark, sfDir) => {
+      Tables.register(spark, sfDir)
+      TileLake.ensureWritten(spark, TileLake.defaultDir)
+      Sql.bound(spark, sparkSql, "lake" -> spark.read.parquet(TileLake.defaultDir))
+    }, oracleSql)
+
+  private val sqls: Seq[Op] = Seq(
 
     // A7: per-tile band statistics (min/max/mean) and the global
     // roll-up (global min/max + unweighted mean of tile means, the
     // reference's tile-stats contract in raster_tile_set_assets).
-    SqlQ.split("r5_band_stats",
+    lakeSql("r5_band_stats",
       s"""WITH raw AS (SELECT tx, ty, px_biomass10 AS pb FROM lake),
          |th AS (SELECT tx, ty,
          |  CAST(array_min(pb) AS BIGINT) AS tmin, CAST(array_max(pb) AS BIGINT) AS tmax,
@@ -111,7 +121,7 @@ object RasterQueries extends QueryModule {
     // the reference's linspace-reconstruction algorithm. The oracle
     // replays the same algorithm in SQL (zero-count source bins
     // contribute nothing, so only populated merged bins emit).
-    SqlQ.split("r6_histogram_merge",
+    lakeSql("r6_histogram_merge",
       s"""WITH raw AS (SELECT px_biomass10 AS pb FROM lake),
          |th AS (SELECT pb, CAST(array_min(pb) AS BIGINT) AS tmin,
          |               CAST(array_max(pb) AS BIGINT) AS tmax FROM raw),
@@ -220,15 +230,22 @@ object RasterQueries extends QueryModule {
        |  count(*) AS pixel_count
        |FROM f GROUP BY k""".stripMargin
 
-  /** (name, Spark side, DuckDB oracle) of each zonal query. */
-  private lazy val zonals: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
+  /** A zonal [[Op]]: `run` over the registered lake tables. */
+  private def zonal(name: String, run: (SparkSession, String) => DataFrame,
+                    oracle: String): Op =
+    Op(name, (spark, sfDir) => {
+      Tables.register(spark, sfDir)
+      run(spark, sfDir)
+    }, oracle)
 
-    ("r1_zonal_landcover", landcoverZonal, landcoverZonalOracle),
-    ("r9_tile_lake_zonal", landcoverZonal, landcoverZonalOracle),
+  private lazy val zonals: Seq[Op] = Seq(
+
+    zonal("r1_zonal_landcover", landcoverZonal, landcoverZonalOracle),
+    zonal("r9_tile_lake_zonal", landcoverZonal, landcoverZonalOracle),
 
     // A4 + P10: density→absolute rescale (`biomass * area`) under a
     // threshold predicate (`tcd >= 30`), grouped by land cover.
-    ("r2_density_rescale", (spark, _) =>
+    zonal("r2_density_rescale", (spark, _) =>
       lakeZonal(spark, Seq("px_landcover", "px_biomass10", "px_tcd"),
         keys = Seq(band(0)),
         vals = Seq(PixelCalc.compileArea("A * AREA", Seq(band(1)), microha)),
@@ -247,7 +264,7 @@ object RasterQueries extends QueryModule {
     // date_conf decode (SURVEY §7.3 #4): derived date/conf layers
     // through the SAME calc DSL the OTF layers compile (PixelCalc), a
     // date filter, per-(date, conf) alert counts.
-    ("r3_date_conf_alerts", (spark, _) => {
+    zonal("r3_date_conf_alerts", (spark, _) => {
       val days = PixelCalc.compile("A % 10000", Seq(band(0)))
       lakeZonal(spark, Seq("px_dateconf"),
         keys = Seq(PixelCalc.compile("floor(A / 10000)", Seq(band(0))), days),
@@ -271,7 +288,7 @@ object RasterQueries extends QueryModule {
 
     // J4: multi-band calc — two co-registered bands through the
     // CalcDsl two-variable path, bucketed and aggregated.
-    ("r4_band_math", (spark, _) =>
+    zonal("r4_band_math", (spark, _) =>
       lakeZonal(spark, Seq("px_u", "px_w"),
         keys = Seq(PixelCalc.compile("(A + B) DIV 10", Seq(band(0), band(1)))),
         vals = Seq(microha))(
@@ -289,7 +306,7 @@ object RasterQueries extends QueryModule {
     // presence layer (derived here as landcover==0, "is forest"),
     // composed with the AOI — the second filter shape the analysis
     // builder emits (analysis.py:117-120).
-    ("r10_boolean_layer", (spark, _) =>
+    zonal("r10_boolean_layer", (spark, _) =>
       lakeZonal(spark, Seq("px_tcd", "px_landcover"),
         keys = Seq(PixelCalc.compile("A DIV 10", Seq(band(0)))),
         vals = Seq(microha), preds = Seq(PixelPreds.Eq(band(1), 0)))(
@@ -307,7 +324,7 @@ object RasterQueries extends QueryModule {
     // A3: the latitude/longitude reserved pseudo-columns — generated
     // from grid georeferencing, never stored (`versions.py:519-522`).
     // Group pixel area into 1° latitude bands via floor(latitude).
-    ("r8_latitude_bands", (spark, _) =>
+    zonal("r8_latitude_bands", (spark, _) =>
       lakeZonal(spark, Nil, keys = Seq(new DataEnvironment.LatBand(g)),
         vals = Seq(microha))(
         "CAST(k AS INT) AS lat_band", "CAST(s0 AS DOUBLE) / 1000000.0 AS area_ha",
@@ -327,7 +344,7 @@ object RasterQueries extends QueryModule {
     // a single shuffle groups by (fid, key). The reference dispatches
     // ≤100 parallel lambdas through Step Functions for this; here it
     // is one plan with the AOI side broadcast.
-    ("r7_batch_zonal", (spark, _) => {
+    zonal("r7_batch_zonal", (spark, _) => {
       TileLake.ensureWritten(spark, TileLake.defaultDir)
       ZonalEngine.zonalBatch(spark, TileLake.defaultDir, landcoverSpec(g),
         Seq("px_landcover"), Seq(aoiGeoJson, geoJson(aoi2)))
@@ -348,9 +365,9 @@ object RasterQueries extends QueryModule {
          |FROM f GROUP BY fid, k""".stripMargin
     }),
 
-    ("r11_derived_tileset", derivedZonal, derivedZonalOracle),
-    ("r13_float_zonal", floatZonal, floatZonalOracle),
-    ("r21_mode_resample", derivedModeZonal, derivedModeZonalOracle))
+    zonal("r11_derived_tileset", derivedZonal, derivedZonalOracle),
+    zonal("r13_float_zonal", floatZonal, floatZonalOracle),
+    zonal("r21_mode_resample", derivedModeZonal, derivedModeZonalOracle))
 
   // ------------------------------------------------- OTF user raster SQL
   // The reference's core raster product surface (`_query_raster`,
@@ -373,9 +390,15 @@ object RasterQueries extends QueryModule {
   private val dDc = dateConf.formula(dGx, dGy)
   private val dYear = s"CAST(2001 + ($dW) % 24 AS BIGINT)"
 
-  /** (name, dataset, user OTF SQL, DuckDB oracle). */
-  private val otfSqls: Seq[(String, String, String, String)] = Seq(
-    ("rs1_otf_payload", "umd_tree_cover_loss",
+  /** An OTF [[Op]]: user SQL on `dataset` through the OTF SQL gate,
+    * over the AOI. */
+  private def otf(name: String, dataset: String, sql: String, oracle: String): Op =
+    Op(name, (spark, _) =>
+      ZonalEngine.runSql(spark, SyntheticRasters.catalog, dataset, sql, aoiGeoJson),
+      oracle)
+
+  private val otfs: Seq[Op] = Seq(
+    otf("rs1_otf_payload", "umd_tree_cover_loss",
       """SELECT umd_tree_cover_loss__year, SUM(area__ha) AS area__ha
         |FROM data
         |WHERE is__umd_regional_primary_forest_2001 != 'false'
@@ -390,7 +413,7 @@ object RasterQueries extends QueryModule {
          |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area__ha
          |FROM f GROUP BY y""".stripMargin),
 
-    ("rs2_glad_alerts", "umd_glad_landsat_alerts",
+    otf("rs2_glad_alerts", "umd_glad_landsat_alerts",
       """SELECT umd_glad_landsat_alerts__date AS alert__date,
         |  umd_glad_landsat_alerts__confidence AS confidence__cat,
         |  COUNT(*) AS alert__count, SUM(area__ha) AS area__ha
@@ -408,7 +431,7 @@ object RasterQueries extends QueryModule {
          |  CAST(sum(microha) AS DOUBLE) / 1000000.0 AS area__ha
          |FROM f GROUP BY days, conf""".stripMargin),
 
-    ("rs3_density_by_class", "whrc_aboveground_biomass_stock_2000",
+    otf("rs3_density_by_class", "whrc_aboveground_biomass_stock_2000",
       """SELECT landcover_raster__class,
         |  SUM(whrc_aboveground_biomass_stock_2000__Mg) AS biomass__Mg
         |FROM data GROUP BY landcover_raster__class""".stripMargin,
@@ -420,7 +443,7 @@ object RasterQueries extends QueryModule {
          |  CAST(sum(v) AS DOUBLE) / 1.0E7 AS biomass__Mg
          |FROM f GROUP BY k""".stripMargin),
 
-    ("rs4_global_stats", "landcover_raster",
+    otf("rs4_global_stats", "landcover_raster",
       """SELECT SUM(area__ha) AS area__ha, COUNT(*) AS pixel__count,
         |  AVG(umd_tree_cover_density_2000__threshold) AS avg__threshold
         |FROM data WHERE landcover_raster__class = 0""".stripMargin,
@@ -436,7 +459,7 @@ object RasterQueries extends QueryModule {
     // `queries.py` CSV src): non-aggregate select over latitude/
     // longitude pseudo-columns + a date-decoded layer, one row per
     // masked+filtered pixel, deterministic ORDER/LIMIT.
-    ("rs7_alert_list", "umd_glad_landsat_alerts",
+    otf("rs7_alert_list", "umd_glad_landsat_alerts",
       """SELECT latitude, longitude,
         |  umd_glad_landsat_alerts__date AS alert__date
         |FROM data
@@ -454,7 +477,7 @@ object RasterQueries extends QueryModule {
     // The GLAD-by-isoweek rewrite (`analysis.py:143-145`): a derived
     // isoweek(<date layer>) group key — per-pixel days→ISO-week via a
     // precomputed table, decoded identically by DuckDB's weekofyear.
-    ("rs9_isoweek", "umd_glad_landsat_alerts",
+    otf("rs9_isoweek", "umd_glad_landsat_alerts",
       """SELECT isoweek(umd_glad_landsat_alerts__date) AS iso__week,
         |  COUNT(*) AS alert__count
         |FROM data
@@ -474,7 +497,7 @@ object RasterQueries extends QueryModule {
     // areas — and the same user-SQL surface serves it end-to-end. The
     // oracle re-derives the coarse pixels from the fine-band formulas
     // (block mean DIV 10, the derived lake's build transform).
-    ("rs11_second_grid", "whrc_biomass_tonnes",
+    otf("rs11_second_grid", "whrc_biomass_tonnes",
       """SELECT whrc_biomass_tonnes__tonnes, SUM(area__ha) AS area__ha,
         |  COUNT(*) AS pixel__count
         |FROM data
@@ -497,7 +520,7 @@ object RasterQueries extends QueryModule {
 
     // FROM-rewrite base guard: the default layer's no_data (px_w = 0)
     // excludes pixels even with no user WHERE; IN-list filter.
-    ("rs5_base_nodata", "umd_tree_cover_loss",
+    otf("rs5_base_nodata", "umd_tree_cover_loss",
       """SELECT umd_tree_cover_loss__year, COUNT(*) AS loss__count
         |FROM data WHERE landcover_raster__class IN (0, 2, 4)
         |GROUP BY umd_tree_cover_loss__year
@@ -507,10 +530,6 @@ object RasterQueries extends QueryModule {
          |  WHERE ($duckAoiMask) AND ($dLc) IN (0, 2, 4) AND ($dW) != 0)
          |SELECT y AS umd_tree_cover_loss__year, count(*) AS loss__count
          |FROM f GROUP BY y ORDER BY y""".stripMargin))
-
-  private def otfQuery(dataset: String, sql: String)(
-      spark: SparkSession, sfDir: String): DataFrame =
-    ZonalEngine.runSql(spark, SyntheticRasters.catalog, dataset, sql, aoiGeoJson)
 
   // §3.3 batch user SQL: the same compiled OTF query over a feature
   // LIST as one Spark job (broadcast AOI table × pruned tiles, one
@@ -1336,81 +1355,32 @@ object RasterQueries extends QueryModule {
        |GROUP BY m""".stripMargin
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sqls.map { q =>
-      q.name -> ((spark: SparkSession, sfDir: String) => {
-        Tables.register(spark, sfDir)
-        // r5/r6 scan the persisted tile lake (same band values the
-        // formulas used to synthesize per query)
-        TileLake.ensureWritten(spark, TileLake.defaultDir)
-        Sql.bound(spark, q.sparkSql, "lake" -> spark.read.parquet(TileLake.defaultDir))
-      })
-    }.toMap ++
-      zonals.map { case (name, run, _) =>
-        name -> ((spark: SparkSession, sfDir: String) => {
-          Tables.register(spark, sfDir)
-          run(spark, sfDir)
-        })
-      } ++
-      otfSqls.map { case (name, ds, sql, _) =>
-        name -> (otfQuery(ds, sql) _)
-      } + ("rs6_batch_sql" -> (batchSqlQuery _)) +
-      ("rs10_batch_alert_list" -> (batchListQuery _)) +
-      ("rs8_version_override" -> (overrideQuery _)) +
-      ("r12_geotiff_ingest" -> (geotiffIngest _)) +
-      ("rs12_float_otf" -> (floatOtfQuery _)) +
-      ("r14_utm_ingest" -> (utmIngest _)) +
-      ("r15_cea_ingest" -> (ceaIngest _)) +
-      ("r16_albers_ingest" -> (albersIngest _)) +
-      ("r17_lcc_ingest" -> (lccIngest _)) +
-      ("r18_sinusoidal_ingest" -> (sinusoidalIngest _)) +
-      ("r19_polar_ingest" -> (polarIngest _)) +
-      ("r20_bilinear_ingest" -> (bilinearIngest _)) +
-      ("r22_mercator_ell_ingest" -> (mercatorEllIngest _)) +
-      ("r23_equirect_ingest" -> (equirectIngest _)) +
-      ("r24_laea_ingest" -> (laeaIngest _)) +
-      ("r25_laea_polar_ingest" -> (laeaPolarIngest _)) +
-      ("r26_sterea_ingest" -> (stereaIngest _)) +
-      ("r27_towgs84_ingest" -> (towgs84Ingest _)) +
-      ("r28_ntv2_ingest" -> (ntv2Ingest _)) +
-      ("r29_mollweide_ingest" -> (mollweideIngest _)) +
-      ("r30_eckert4_ingest" -> (eckert4Ingest _)) +
-      ("r31_robinson_ingest" -> (robinsonIngest _)) +
-      ("r32_winkel_ingest" -> (winkelIngest _)) +
-      ("r33_miller_ingest" -> (millerIngest _)) +
-      ("r34_azeq_ingest" -> (azeqIngest _)) +
-      ("r35_vdg_ingest" -> (vdgIngest _)) +
-      ("r36_polyconic_ingest" -> (polyconicIngest _))
-
-  override def oracles: Map[String, String] =
-    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap ++
-      zonals.map { case (name, _, oracle) => name -> oracle } ++
-      otfSqls.map { case (name, _, _, oracle) => name -> oracle } +
-      ("rs6_batch_sql" -> batchSqlOracle) +
-      ("rs10_batch_alert_list" -> batchListOracle) +
-      ("rs8_version_override" -> overrideOracle) +
-      ("r12_geotiff_ingest" -> geotiffIngestOracle) +
-      ("rs12_float_otf" -> floatOtfOracle) +
-      ("r14_utm_ingest" -> projIngestOracle(r14Lattice)) +
-      ("r15_cea_ingest" -> projIngestOracle(r15Lattice)) +
-      ("r16_albers_ingest" -> projIngestOracle(r16Lattice)) +
-      ("r17_lcc_ingest" -> projIngestOracle(r17Lattice)) +
-      ("r18_sinusoidal_ingest" -> projIngestOracle(r18Lattice)) +
-      ("r19_polar_ingest" -> projIngestOracle(r19Lattice)) +
-      ("r20_bilinear_ingest" -> projIngestBilinearOracle(r16Lattice)) +
-      ("r22_mercator_ell_ingest" -> projIngestOracle(r22Lattice)) +
-      ("r23_equirect_ingest" -> projIngestOracle(r23Lattice)) +
-      ("r24_laea_ingest" -> projIngestOracle(r24Lattice)) +
-      ("r25_laea_polar_ingest" -> projIngestOracle(r25Lattice)) +
-      ("r26_sterea_ingest" -> projIngestOracle(r26Lattice)) +
-      ("r27_towgs84_ingest" -> projIngestOracle(r27Lattice)) +
-      ("r28_ntv2_ingest" -> projIngestOracle(r28Lattice)) +
-      ("r29_mollweide_ingest" -> projIngestOracle(r29Lattice)) +
-      ("r30_eckert4_ingest" -> projIngestOracle(r30Lattice)) +
-      ("r31_robinson_ingest" -> projIngestOracle(r31Lattice)) +
-      ("r32_winkel_ingest" -> projIngestOracle(r32Lattice)) +
-      ("r33_miller_ingest" -> projIngestOracle(r33Lattice)) +
-      ("r34_azeq_ingest" -> projIngestOracle(r34Lattice)) +
-      ("r35_vdg_ingest" -> projIngestOracle(r35Lattice)) +
-      ("r36_polyconic_ingest" -> projIngestOracle(r36Lattice))
+  override def ops: Seq[Op] = sqls ++ zonals ++ otfs ++ Seq(
+    Op("rs6_batch_sql", batchSqlQuery, batchSqlOracle),
+    Op("rs10_batch_alert_list", batchListQuery, batchListOracle),
+    Op("rs8_version_override", overrideQuery, overrideOracle),
+    Op("r12_geotiff_ingest", geotiffIngest, geotiffIngestOracle),
+    Op("rs12_float_otf", floatOtfQuery, floatOtfOracle),
+    Op("r14_utm_ingest", utmIngest, projIngestOracle(r14Lattice)),
+    Op("r15_cea_ingest", ceaIngest, projIngestOracle(r15Lattice)),
+    Op("r16_albers_ingest", albersIngest, projIngestOracle(r16Lattice)),
+    Op("r17_lcc_ingest", lccIngest, projIngestOracle(r17Lattice)),
+    Op("r18_sinusoidal_ingest", sinusoidalIngest, projIngestOracle(r18Lattice)),
+    Op("r19_polar_ingest", polarIngest, projIngestOracle(r19Lattice)),
+    Op("r20_bilinear_ingest", bilinearIngest, projIngestBilinearOracle(r16Lattice)),
+    Op("r22_mercator_ell_ingest", mercatorEllIngest, projIngestOracle(r22Lattice)),
+    Op("r23_equirect_ingest", equirectIngest, projIngestOracle(r23Lattice)),
+    Op("r24_laea_ingest", laeaIngest, projIngestOracle(r24Lattice)),
+    Op("r25_laea_polar_ingest", laeaPolarIngest, projIngestOracle(r25Lattice)),
+    Op("r26_sterea_ingest", stereaIngest, projIngestOracle(r26Lattice)),
+    Op("r27_towgs84_ingest", towgs84Ingest, projIngestOracle(r27Lattice)),
+    Op("r28_ntv2_ingest", ntv2Ingest, projIngestOracle(r28Lattice)),
+    Op("r29_mollweide_ingest", mollweideIngest, projIngestOracle(r29Lattice)),
+    Op("r30_eckert4_ingest", eckert4Ingest, projIngestOracle(r30Lattice)),
+    Op("r31_robinson_ingest", robinsonIngest, projIngestOracle(r31Lattice)),
+    Op("r32_winkel_ingest", winkelIngest, projIngestOracle(r32Lattice)),
+    Op("r33_miller_ingest", millerIngest, projIngestOracle(r33Lattice)),
+    Op("r34_azeq_ingest", azeqIngest, projIngestOracle(r34Lattice)),
+    Op("r35_vdg_ingest", vdgIngest, projIngestOracle(r35Lattice)),
+    Op("r36_polyconic_ingest", polyconicIngest, projIngestOracle(r36Lattice)))
 }

@@ -98,21 +98,6 @@ object TileCache {
     }
   }
 
-  /** Output tiles of zoom `z` overlapping the grid's bbox. */
-  def tilesForGrid(g: Grid, z: Int): Seq[(Int, Int)] = {
-    val lonMin = g.originLon
-    val lonMax = g.originLon + g.tilesX * g.tileDeg
-    val latMax = math.min(g.originLat, Warp.WebMercatorMaxLat)
-    val latMin = math.max(g.originLat - g.tilesY * g.tileDeg,
-      -Warp.WebMercatorMaxLat)
-    val n = 1 << z
-    val x0 = math.max(0, math.floor(xOfLon(lonMin, z)).toInt)
-    val x1 = math.min(n - 1, math.floor(xOfLon(lonMax, z) - 1e-12).toInt)
-    val y0 = math.max(0, math.floor(yOfLat(latMax, z)).toInt)
-    val y1 = math.min(n - 1, math.floor(yOfLat(latMin, z) - 1e-12).toInt)
-    for (x <- x0 to x1; y <- y0 to y1) yield (x, y)
-  }
-
   /** Render the cache; returns the number of tiles written.
     *
     * @param band    lake band column to render

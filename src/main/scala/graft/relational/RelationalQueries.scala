@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.{QueryModule, SqlQ, Tables}
+import graft.{Op, QueryModule, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,7 @@ object RelationalQueries extends QueryModule {
       .mkString(" ")
 
   /** Shared-SQL entries: same text runs on Spark and DuckDB. */
-  private val sqls: Seq[SqlQ] = Seq(
+  private val sqls: Seq[Op] = Seq(
     // A1: aggregate passthrough (reference routes user GROUP BY SQL whole
     // to PG, queries.py:506-525). Decimal-cast sums are order-independent.
     SqlQ.shared("a1_agg_groupby",
@@ -651,24 +651,10 @@ object RelationalQueries extends QueryModule {
         col("o_totalprice"), col("o_orderdate").cast("date").as("order_date"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val fromSql = sqls.map { q =>
-      q.name -> ((spark: SparkSession, sfDir: String) => {
-        Tables.register(spark, sfDir)
-        spark.sql(q.sparkSql)
-      })
-    }.toMap
-    fromSql +
-      ("s2_dedup_append" -> ((s: SparkSession, d: String) => dedupAppend(s, d))) +
-      ("w7_asof_join" -> ((s: SparkSession, d: String) => asofAttribution(s, d))) +
-      ("w8_range_join" -> ((s: SparkSession, d: String) => rangeWindows(s, d)))
-  }
-
-  override def oracles: Map[String, String] =
-    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap +
-      ("s2_dedup_append" ->
-        """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-          |  cast(o_orderdate as date) AS order_date FROM orders""".stripMargin) +
-      ("w7_asof_join" -> asofOracle) +
-      ("w8_range_join" -> rangeOracle)
+  override def ops: Seq[Op] = sqls ++ Seq(
+    Op("s2_dedup_append", dedupAppend,
+      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+        |  cast(o_orderdate as date) AS order_date FROM orders""".stripMargin),
+    Op("w7_asof_join", asofAttribution, asofOracle),
+    Op("w8_range_join", rangeWindows, rangeOracle))
 }

@@ -1,6 +1,6 @@
 package graft.simsearch
 
-import graft.{CkptUtil, QueryModule, ScaleCheck, Sql, SqlQ, Tables}
+import graft.{CkptUtil, Op, QueryModule, ScaleCheck, Sql, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -772,7 +772,7 @@ object SimQueries extends QueryModule {
   private val HardNegPred = " AND n.label != q.qlabel"
   private val QLabelSel = ", label AS qlabel"
 
-  private val sqls: Seq[SqlQ] = Seq(
+  private val sqls: Seq[Op] = Seq(
 
     // E1: brute-force cosine top-10 for 5 query vectors — the exact
     // baseline every ANN variant is judged against (e8 measures e3's
@@ -2659,49 +2659,47 @@ object SimQueries extends QueryModule {
        |WHERE rnk <= 20""".stripMargin
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sqls.map { q =>
-      q.name -> ((spark: SparkSession, sfDir: String) => {
-        Tables.register(spark, sfDir)
-        spark.sql(q.sparkSql)
-      })
-    }.toMap +
-      ("e30_pca_power" -> ((s: SparkSession, d: String) => e30Query(s, d))) +
-      ("e5b_kmeans_converged" -> ((s: SparkSession, d: String) => kmeansAssignments(s, d))) +
-      ("e5_kmeans_assign" -> ((s: SparkSession, d: String) => oneIterAssignments(s, d))) +
-      ("e3_ann_ivf" -> ((s: SparkSession, d: String) => ivfTopK(s, d))) +
-      // E19: filtered vector search — the vector-store contract every
-      // retrieval stack needs (metadata predicate + ANN in one query):
-      // the UNfiltered IVF index serves the query, the predicate
-      // prunes candidates inside the probed-cell scan (pre-filter;
-      // see ivfTopK's doc for why post-filtering a fixed top-k is
-      // wrong), and the top-5 ranks only matching rows. E20 measures
-      // what the predicate costs in recall against the exact filtered
-      // scan — at this fixture the 2-probe cells keep full recall on
-      // the ~1/3-selective predicate.
-      ("e19_filtered_ann" -> ((s: SparkSession, d: String) => ivfTopK(s, d, FilterPred))) +
-      ("e20_filtered_recall" -> ((s: SparkSession, d: String) => ivfRecall(s, d, FilterPred))) +
-      // E25/E26: hard-negative mining for contrastive training — the
-      // same IVF serving path with the per-query wrong-label
-      // predicate, plus its measured recall against the exact
-      // wrong-label brute force (the e19/e20 pairing).
-      ("e25_hard_negatives" -> ((s: SparkSession, d: String) => ivfTopK(s, d, HardNegPred, QLabelSel))) +
-      ("e26_hardneg_recall" -> ((s: SparkSession, d: String) => ivfRecall(s, d, HardNegPred, QLabelSel))) +
-      ("e2_cosine_neardup" -> ((s: SparkSession, d: String) => cellNearDup(s, d))) +
-      ("e8_ivf_recall" -> ((s: SparkSession, d: String) => ivfRecall(s, d))) +
-      ("e4_ann_lsh_auto" -> ((s: SparkSession, d: String) => e4Auto(s, d))) +
-      ("e4_ann_lsh_pairs" -> ((s: SparkSession, d: String) => e4Banded(s, d, bandBits = 6))) +
-      ("e9_semdedup" -> ((s: SparkSession, d: String) => semDedup(s, d))) +
-      ("e21_knn_graph" -> ((s: SparkSession, d: String) => knnGraph(s, d))) +
-      ("e21b_hier_route" -> ((s: SparkSession, d: String) => e21bQuery(s, d))) +
-      ("e28_graph_search" -> ((s: SparkSession, d: String) => e28Query(s, d))) +
-      ("e29_graph_recall" -> ((s: SparkSession, d: String) => e29Query(s, d))) +
-      ("e27_pagerank" -> ((s: SparkSession, d: String) => e27Query(s, d))) +
-      ("e22_proto_prune" -> ((s: SparkSession, d: String) => protoPrune(s, d))) +
-      ("e23_probe_sweep" -> ((s: SparkSession, d: String) => probeSweep(s, d))) +
-      ("e11_ivfpq" -> ((s: SparkSession, d: String) => ivfPqTopK(s, d))) +
-      ("e12_ivfpq_recall" -> ((s: SparkSession, d: String) => ivfPqRecall(s, d))) +
-      ("e14_pq_trained_recall" -> ((s: SparkSession, d: String) => pqTrainedRecall(s, d)))
+  override def ops: Seq[Op] = sqls ++ Seq(
+    Op("e30_pca_power", e30Query, e30Oracle),
+    Op("e5b_kmeans_converged", kmeansAssignments, e5bOracle),
+    Op("e5_kmeans_assign", oneIterAssignments, e5Oracle),
+    Op("e3_ann_ivf", (s, d) => ivfTopK(s, d), e3Oracle),
+    // E19: filtered vector search — the vector-store contract every
+    // retrieval stack needs (metadata predicate + ANN in one query):
+    // the UNfiltered IVF index serves the query, the predicate
+    // prunes candidates inside the probed-cell scan (pre-filter;
+    // see ivfTopK's doc for why post-filtering a fixed top-k is
+    // wrong), and the top-5 ranks only matching rows. E20 measures
+    // what the predicate costs in recall against the exact filtered
+    // scan — at this fixture the 2-probe cells keep full recall on
+    // the ~1/3-selective predicate.
+    Op("e19_filtered_ann", (s, d) => ivfTopK(s, d, FilterPred),
+      ivfOracle(FilterPred)),
+    Op("e20_filtered_recall", (s, d) => ivfRecall(s, d, FilterPred),
+      recallOracle(FilterPred)),
+    // E25/E26: hard-negative mining for contrastive training — the
+    // same IVF serving path with the per-query wrong-label
+    // predicate, plus its measured recall against the exact
+    // wrong-label brute force (the e19/e20 pairing).
+    Op("e25_hard_negatives", (s, d) => ivfTopK(s, d, HardNegPred, QLabelSel),
+      ivfOracle(HardNegPred, QLabelSel)),
+    Op("e26_hardneg_recall", (s, d) => ivfRecall(s, d, HardNegPred, QLabelSel),
+      recallOracle(HardNegPred, QLabelSel)),
+    Op("e2_cosine_neardup", cellNearDup, e2Oracle),
+    Op("e8_ivf_recall", (s, d) => ivfRecall(s, d), e8Oracle),
+    Op("e4_ann_lsh_auto", e4Auto, e4Oracle),
+    Op("e4_ann_lsh_pairs", (s, d) => e4Banded(s, d, bandBits = 6), e4Oracle),
+    Op("e9_semdedup", semDedup, e9Oracle),
+    Op("e21_knn_graph", knnGraph, e21Oracle),
+    Op("e21b_hier_route", e21bQuery, e21bOracle),
+    Op("e28_graph_search", e28Query, e28Oracle),
+    Op("e29_graph_recall", e29Query, e29Oracle),
+    Op("e27_pagerank", e27Query, e27Oracle),
+    Op("e22_proto_prune", protoPrune, e22Oracle),
+    Op("e23_probe_sweep", probeSweep, e23Oracle),
+    Op("e11_ivfpq", (s, d) => ivfPqTopK(s, d), e11Oracle),
+    Op("e12_ivfpq_recall", (s, d) => ivfPqRecall(s, d), e12Oracle),
+    Op("e14_pq_trained_recall", (s, d) => pqTrainedRecall(s, d), e14Oracle))
 
   // ------------------------------------------------------ scale contracts
   //
@@ -2896,30 +2894,4 @@ object SimQueries extends QueryModule {
       "e4_ann_lsh_pairs" -> Seq(e4RecallCheck(0.95))
     )
   }
-
-  override def oracles: Map[String, String] =
-    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap +
-      ("e30_pca_power" -> e30Oracle) +
-      ("e5_kmeans_assign" -> e5Oracle) +
-      ("e5b_kmeans_converged" -> e5bOracle) +
-      ("e3_ann_ivf" -> e3Oracle) +
-      ("e19_filtered_ann" -> ivfOracle(FilterPred)) +
-      ("e20_filtered_recall" -> recallOracle(FilterPred)) +
-      ("e25_hard_negatives" -> ivfOracle(HardNegPred, QLabelSel)) +
-      ("e26_hardneg_recall" -> recallOracle(HardNegPred, QLabelSel)) +
-      ("e2_cosine_neardup" -> e2Oracle) +
-      ("e8_ivf_recall" -> e8Oracle) +
-      ("e4_ann_lsh_auto" -> e4Oracle) +
-      ("e4_ann_lsh_pairs" -> e4Oracle) +
-      ("e9_semdedup" -> e9Oracle) +
-      ("e21_knn_graph" -> e21Oracle) +
-      ("e21b_hier_route" -> e21bOracle) +
-      ("e28_graph_search" -> e28Oracle) +
-      ("e29_graph_recall" -> e29Oracle) +
-      ("e27_pagerank" -> e27Oracle) +
-      ("e22_proto_prune" -> e22Oracle) +
-      ("e23_probe_sweep" -> e23Oracle) +
-      ("e11_ivfpq" -> e11Oracle) +
-      ("e12_ivfpq_recall" -> e12Oracle) +
-      ("e14_pq_trained_recall" -> e14Oracle)
 }

@@ -1,30 +1,19 @@
 package graft.sqlgate
 
-import graft.Tables
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Executes user-dialect SQL against the lake: the reference's
-  * `_query_table` path (`app/routes/datasets/queries.py:506-525`),
-  * except the scrutinized SQL runs on Catalyst instead of being pushed
-  * to PostgreSQL — the "API→PG" process boundary becomes
-  * "driver→executors" (SURVEY §3.1).
+/** Checks user-dialect SQL before the API runs it against the lake:
+  * the reference's `_query_table` path
+  * (`app/routes/datasets/queries.py:506-525`), except the scrutinized
+  * SQL runs on Catalyst instead of being pushed to PostgreSQL — the
+  * "API→PG" process boundary becomes "driver→executors" (SURVEY §3.1).
   */
 object TabularEngine {
-
-  /** Scrutinize `sql` (whose FROM may name anything, conventionally
-    * `data`) and execute it against lake table `table`. */
-  def userQuery(spark: SparkSession, sfDir: String, table: String,
-                sql: String, geometryGeoJson: Option[String] = None): DataFrame = {
-    Tables.register(spark, sfDir)
-    val rewritten = Scrutinizer.scrutinizeTo(table, geometryGeoJson, sql)
-    checkFunctionsExist(spark, rewritten)
-    spark.sql(rewritten)
-  }
 
   /** Unknown functions fail with PostgreSQL's error text, which the
     * reference surfaces verbatim after its "Bad request. " prefix

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{QueryModule, Tables}
+import graft.{Op, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -396,51 +396,36 @@ object StreamingQueries extends QueryModule {
     } finally graft.CkptUtil.unpersist(corpus)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sg1_stream_classifier" -> (classifierStream _),
-    "sg2_stream_clip" -> (clipStream _),
-    "sg3_stream_dedup" -> (dedupStream _),
-    "sg4_stream_span" -> (spanStream _),
-    "sg5_stream_url" -> (urlStream _),
-    "sg6_stream_session" -> (sessionStream _),
-    "sg7_stream_window" -> (windowStream _),
-    "sg8_stream_bloom" -> (bloomStream _),
-    "sg9_stream_chunk" -> (chunkStream _),
-    "sg10_stream_pii" -> (piiStream _),
-    "sg11_stream_media" -> (mediaStream _),
-    "sg12_stream_audio" -> (audioStream _),
-    "sg13_stream_temperature" -> (temperatureStream _))
-
-  override def oracles: Map[String, String] = {
+  override def ops: Seq[Op] = {
     val cls = graft.textops.TextQueries.ClassifierShape
     val nwE = cls.nw("text", spark = false)
-    Map(
+    Seq(
       // t30's kept set (the shared ClassifierShape scorer, DuckDB
       // dialect) — a document the stream admits is exactly a document
       // batch t30 counts as kept
-      "sg1_stream_classifier" ->
+      Op("sg1_stream_classifier", classifierStream,
         s"""SELECT doc_id, lang FROM documents
-           |WHERE ${cls.logit("text", nwE, spark = false)} >= 0""".stripMargin,
+           |WHERE ${cls.logit("text", nwE, spark = false)} >= 0""".stripMargin),
       // m7/m17's shared pair-cosine chain at the m17 keep threshold;
       // fmt replays the lake's png/jpg split (MediaLake.isJpeg:
       // doc_id % 4 = 3 → jpg)
-      "sg2_stream_clip" ->
+      Op("sg2_stream_clip", clipStream,
         s"""WITH ${graft.multimodal.MultimodalQueries.clipPairOracleCtes}
            |SELECT doc_id,
            |  CASE WHEN doc_id % 4 = 3 THEN 'jpg' ELSE 'png' END AS fmt
-           |FROM jn WHERE cosine >= 0.1""".stripMargin,
+           |FROM jn WHERE cosine >= 0.1""".stripMargin),
       // the SYMMETRIC closure of d3's verified pair set: every
       // incoming document flags against the whole corpus index, so
       // each unordered batch pair appears once per direction
-      "sg3_stream_dedup" ->
+      Op("sg3_stream_dedup", dedupStream,
         s"""WITH p AS (${graft.textops.TextQueries.oracles("d3_minhash_lsh_pairs")})
            |SELECT doc_id_a AS doc_id, doc_id_b AS dup_of, jaccard FROM p
            |UNION ALL
-           |SELECT doc_id_b AS doc_id, doc_id_a AS dup_of, jaccard FROM p""".stripMargin,
+           |SELECT doc_id_b AS doc_id, doc_id_a AS dup_of, jaccard FROM p""".stripMargin),
       // sg4: the SpanShape replay (d9's DuckDB span CTEs) — corpus
       // spans index, stream spans anti-join it, then within-doc
       // keep-first rebuild; a stream doc losing every span is absent
-      "sg4_stream_span" -> {
+      Op("sg4_stream_span", spanStream, {
         val words = graft.textops.TextQueries.SpanShape.words
         s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
            |sp AS (SELECT doc_id,
@@ -459,10 +444,10 @@ object StreamingQueries extends QueryModule {
            |SELECT doc_id, count(*)::BIGINT AS n_kept,
            |  md5(string_agg(span, ' ' ORDER BY idx)) AS kept_md5
            |FROM kept GROUP BY doc_id""".stripMargin
-      },
+      }),
       // sg5: the bloom-independent truth (the d10 convention): stream
       // rows whose canonical URL has no corpus match pass through
-      "sg5_stream_url" -> {
+      Op("sg5_stream_url", urlStream, {
         val urlExpr = graft.textops.TextQueries.UrlFixture.duckMulti
         val canon = graft.textops.TextQueries.UrlCanon.duckExpr("url")
         s"""WITH u AS (SELECT doc_id, $urlExpr AS url FROM documents),
@@ -471,7 +456,7 @@ object StreamingQueries extends QueryModule {
            |inc AS (SELECT doc_id, url, canon FROM norm WHERE $StreamPred)
            |SELECT doc_id, url FROM inc
            |WHERE NOT EXISTS (SELECT 1 FROM corp WHERE corp.canon = inc.canon)""".stripMargin
-      },
+      }),
       // sg6: gap sessionization replayed in MILLISECOND space — the
       // stream's state math runs on Timestamp.getTime (ms floor of
       // the µs event time) and emits ms-floored boundaries, so the
@@ -479,7 +464,7 @@ object StreamingQueries extends QueryModule {
       // from them; the final watermark (sentinel − 10 min, ≈ year
       // 3000) closes every real session, so the answer is ALL
       // gap-600s sessions over the real events
-      "sg6_stream_session" ->
+      Op("sg6_stream_session", sessionStream,
         """WITH a AS (SELECT user_id AS cell, epoch_ms(ts) AS tms FROM events),
           |g AS (SELECT cell, tms,
           |    tms - lag(tms) OVER (PARTITION BY cell ORDER BY tms) AS gap FROM a),
@@ -490,35 +475,35 @@ object StreamingQueries extends QueryModule {
           |  FROM g)
           |SELECT cell, make_timestamp(min(tms) * 1000) AS start_ts,
           |  make_timestamp(max(tms) * 1000) AS end_ts, count(*)::BIGINT AS alerts
-          |FROM s GROUP BY cell, sid""".stripMargin,
+          |FROM s GROUP BY cell, sid""".stripMargin),
       // sg7: every real (epoch-aligned hour, cell) window finalizes
       // behind the sentinel watermark; Spark's window(ts, '1 hour')
       // start equals date_trunc('hour') for post-epoch timestamps
-      "sg7_stream_window" ->
+      Op("sg7_stream_window", windowStream,
         """SELECT date_trunc('hour', ts) AS window_start, user_id AS cell,
           |  count(*)::BIGINT AS alert_count
-          |FROM events GROUP BY 1, 2""".stripMargin,
+          |FROM events GROUP BY 1, 2""".stripMargin),
       // sg8: the bloom-independent truth (the d10 convention) over
       // the staged stream — StreamPred docs plus the injected corpus
       // duplicates (re-keyed +1e6), minus exact corpus text matches;
       // every injected row must be DROPPED, every fixture stream row
       // passes (no cross-split dups exist)
-      "sg8_stream_bloom" ->
+      Op("sg8_stream_bloom", bloomStream,
         s"""WITH corp AS (SELECT text FROM documents WHERE $CorpusPred),
            |inc AS (SELECT doc_id, text FROM documents WHERE $StreamPred
            |  UNION ALL
            |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
            |  WHERE $CorpusPred AND doc_id % 35 = 0)
            |SELECT doc_id, md5(text) AS text_md5 FROM inc
-           |WHERE NOT EXISTS (SELECT 1 FROM corp WHERE corp.text = inc.text)""".stripMargin,
+           |WHERE NOT EXISTS (SELECT 1 FROM corp WHERE corp.text = inc.text)""".stripMargin),
       // sg9: the stream chunker must produce EXACTLY the batch t19
       // answer — same kernel, same oracle (one chunk definition,
       // two execution modes)
-      "sg9_stream_chunk" -> graft.textops.TextQueries.oracles("t19_chunk"),
+      Op("sg9_stream_chunk", chunkStream, graft.textops.TextQueries.oracles("t19_chunk")),
       // sg10: the PiiShape regex replay over the aug-injected stream
       // (the t11 dialect-portable patterns), with the gate's
       // quarantine rule (> 2 hits) and the kept-row text swap
-      "sg10_stream_pii" -> {
+      Op("sg10_stream_pii", piiStream, {
         val shape = graft.textops.TextQueries.PiiShape
         s"""WITH aug AS (SELECT doc_id, $piiAugDuck AS text FROM documents),
            |sc AS (SELECT doc_id, text,
@@ -532,31 +517,31 @@ object StreamingQueries extends QueryModule {
            |  md5(CASE WHEN n_emails + n_ips + n_phones > 2
            |      THEN text ELSE redacted END) AS text_md5
            |FROM sc""".stripMargin
-      },
+      }),
       // sg11: the m5 aHash replay (shared phashOracleCtes — one hash
       // definition with the m5/m6 oracles): stream-side lake items
       // surviving iff NO corpus item lies within Hamming ≤ 3
-      "sg11_stream_media" ->
+      Op("sg11_stream_media", mediaStream,
         s"""WITH ${graft.multimodal.MultimodalQueries.phashOracleCtes},
            |c AS (SELECT phash FROM h WHERE $CorpusPred),
            |i AS (SELECT doc_id, phash FROM h WHERE $StreamPred)
            |SELECT doc_id,
            |  CASE WHEN doc_id % 4 = 3 THEN 'jpg' ELSE 'png' END AS fmt
            |FROM i WHERE NOT EXISTS (SELECT 1 FROM c
-           |  WHERE bit_count(xor(c.phash, i.phash)) <= 3)""".stripMargin,
+           |  WHERE bit_count(xor(c.phash, i.phash)) <= 3)""".stripMargin),
       // sg12: the m10 energy-dHash replay (shared afpOracleCtes),
       // same survivor predicate on the WAV lake
-      "sg12_stream_audio" ->
+      Op("sg12_stream_audio", audioStream,
         s"""WITH ${graft.multimodal.MultimodalQueries.afpOracleCtes},
            |c AS (SELECT afp FROM h WHERE $CorpusPred),
            |i AS (SELECT doc_id, afp FROM h WHERE $StreamPred)
            |SELECT doc_id FROM i WHERE NOT EXISTS (SELECT 1 FROM c
-           |  WHERE bit_count(xor(c.afp, i.afp)) <= 3)""".stripMargin,
+           |  WHERE bit_count(xor(c.afp, i.afp)) <= 3)""".stripMargin),
       // sg13: the t16 replay with the gate's split — quartile
       // thresholds from the CORPUS slice only (the snapshot-versioned
       // statistics the stream literals carry), the coin keep-rule
       // over the STREAM slice
-      "sg13_stream_temperature" -> {
+      Op("sg13_stream_temperature", temperatureStream, {
         val mix = graft.textops.TextQueries.TemperatureMix
         s"""WITH s AS (SELECT doc_id, ${mix.duckQualityExpr("text")} AS q
            |  FROM documents WHERE $CorpusPred),
@@ -575,6 +560,6 @@ object StreamingQueries extends QueryModule {
            |SELECT doc_id, lang FROM b
            |WHERE ${mix.duckCoinExpr("doc_id")} <
            |  CASE bucket WHEN 4 THEN 100 WHEN 3 THEN 50 WHEN 2 THEN 25 ELSE 10 END""".stripMargin
-      })
+      }))
   }
 }

@@ -1,6 +1,6 @@
 package graft.textops
 
-import graft.{QueryModule, Sql, SqlQ, Tables}
+import graft.{Op, QueryModule, Sql, SqlQ, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Training-data pipeline operators over the `documents` table:
@@ -380,7 +380,25 @@ object TextQueries extends QueryModule {
 
   // -------------------------------------------------------------- queries
 
-  private val sqls: Seq[SqlQ] = Seq(
+  /** d9's Spark SQL, shared with the streaming span gate's
+    * batch-parity spec ([[graft.streaming.SpanDedupStream]]). */
+  private[graft] def d9SparkSql: String =
+    s"""WITH w AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
+       |ch AS (SELECT doc_id,
+       |  CASE WHEN i < 1048576 THEN i
+       |       ELSE CAST(assert_true(false, 'd9: document exceeds 2^20 spans — keep-first key would alias') AS INT) END AS idx,
+       |  ${SpanShape.chunkSql("w", "i")} AS span
+       |  FROM w LATERAL VIEW explode(sequence(0, ${SpanShape.countSql("w")} - 1)) t AS i),
+       |k AS (SELECT doc_id, idx, span,
+       |    min(doc_id * 1048576 + idx) OVER (PARTITION BY md5(span)) AS fk
+       |  FROM ch),
+       |kept AS (SELECT doc_id, idx, span FROM k WHERE doc_id * 1048576 + idx = fk)
+       |SELECT doc_id,
+       |  array_join(transform(array_sort(collect_list(struct(idx, span))), s -> s.span), ' ') AS kept_text,
+       |  count(*) AS n_kept
+       |FROM kept GROUP BY doc_id""".stripMargin
+
+  private val sqls: Seq[Op] = Seq(
 
     // D1: exact deduplication — hash-groupBy on content. At scale this
     // is one shuffle on md5(text); keeps the lowest doc_id per group
@@ -574,20 +592,7 @@ object TextQueries extends QueryModule {
     // both dialects (a lazy CASE raises instead of silently aliasing
     // the keep-first key into the next doc_id's space).
     SqlQ.split("d9_span_dedup",
-      s"""WITH w AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-         |ch AS (SELECT doc_id,
-         |  CASE WHEN i < 1048576 THEN i
-         |       ELSE CAST(assert_true(false, 'd9: document exceeds 2^20 spans — keep-first key would alias') AS INT) END AS idx,
-         |  ${SpanShape.chunkSql("w", "i")} AS span
-         |  FROM w LATERAL VIEW explode(sequence(0, ${SpanShape.countSql("w")} - 1)) t AS i),
-         |k AS (SELECT doc_id, idx, span,
-         |    min(doc_id * 1048576 + idx) OVER (PARTITION BY md5(span)) AS fk
-         |  FROM ch),
-         |kept AS (SELECT doc_id, idx, span FROM k WHERE doc_id * 1048576 + idx = fk)
-         |SELECT doc_id,
-         |  array_join(transform(array_sort(collect_list(struct(idx, span))), s -> s.span), ' ') AS kept_text,
-         |  count(*) AS n_kept
-         |FROM kept GROUP BY doc_id""".stripMargin,
+      d9SparkSql,
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |sp AS (SELECT doc_id,
          |    [array_to_string(w[(i-1)*${SpanShape.words}+1:(i-1)*${SpanShape.words}+${SpanShape.words}], ' ')
@@ -1777,39 +1782,12 @@ object TextQueries extends QueryModule {
     // N·tf·L ≳ 5e25 (e.g. a 1e9-doc, 1e12-token corpus with
     // tf=1e4 repeated-term docs) to wrap — at which point split the
     // idf factor out of the product (ranking only needs the
-    // per-term ratio).
-    SqlQ.split("t33_bm25",
-      """WITH w AS (SELECT doc_id, explode(filter(split(text, ' '), x -> x != '')) AS word
-        |  FROM documents),
-        |wf AS (SELECT word, CAST(count(*) AS BIGINT) AS f FROM w
-        |  GROUP BY word ORDER BY f DESC, word LIMIT 7),
-        |q AS (SELECT concat('q', CAST((rn + 2) DIV 3 AS STRING)) AS query_id,
-        |    word AS term
-        |  FROM (SELECT word, row_number() OVER (ORDER BY f DESC, word) AS rn
-        |        FROM wf) x),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM w GROUP BY doc_id),
-        |nl AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS l FROM dl),
-        |tf AS (SELECT /*+ BROADCAST(q) */ q.query_id, q.term, w.doc_id,
-        |    CAST(count(*) AS BIGINT) AS tf
-        |  FROM w JOIN q ON q.term = w.word GROUP BY q.query_id, q.term, w.doc_id),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |  FROM tf GROUP BY term),
-        |sc AS (SELECT tf.query_id, tf.doc_id,
-        |    CAST(sum(
-        |      (CAST((2*nl.n - 2*df.df + 1) * 1000000 DIV (2*df.df + 1) AS DECIMAL(38,0))
-        |         * (CAST(tf.tf AS DECIMAL(38,0)) * 2200000 * nl.l))
-        |      DIV (CAST(tf.tf AS DECIMAL(38,0)) * 1000000 * nl.l
-        |           + CAST(300000 AS DECIMAL(38,0)) * nl.l
-        |           + CAST(900000 AS DECIMAL(38,0)) * dl.dl * nl.n)
-        |    ) AS BIGINT) AS score_micro
-        |  FROM tf JOIN df ON df.term = tf.term JOIN dl ON dl.doc_id = tf.doc_id
-        |  CROSS JOIN nl
-        |  GROUP BY tf.query_id, tf.doc_id)
-        |SELECT query_id, CAST(rnk AS INT) AS rnk, doc_id, score_micro FROM (
-        |  SELECT query_id, doc_id, score_micro,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score_micro DESC, doc_id) AS rnk
-        |  FROM sc) ranked WHERE rnk <= 5""".stripMargin,
+    // per-term ratio). [[t33Query]] materializes per-(doc, word)
+    // counts once (the t13/t27 tokCounts move, with t33's own
+    // empty-token-filtering tokenizer) instead of reading the corpus
+    // token explode three times (wf, dl, tf); every downstream count
+    // is an integer sum(k), value-identical.
+    Op("t33_bm25", t33Query,
       """WITH w AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x != ''))
         |    AS word FROM documents),
         |wf AS (SELECT word, count(*)::BIGINT AS f FROM w
@@ -2338,11 +2316,6 @@ object TextQueries extends QueryModule {
   // Exact integer sums make the result independent of how the total
   // is associated, so oracle parity is untouched. Token count is the
   // whitespace tokenizer (t2's semantics).
-
-  /** d9's Spark SQL, exposed for the streaming span gate's
-    * batch-parity spec ([[graft.streaming.SpanDedupStream]]). */
-  private[graft] def d9SparkSqlForTest: String =
-    sqls.find(_.name == "d9_span_dedup").get.sparkSql
 
   private val t8Budget = 4096L
 
@@ -2916,47 +2889,18 @@ object TextQueries extends QueryModule {
        |FROM dw JOIN tk ON tk.word = dw.word
        |GROUP BY dw.doc_id""".stripMargin
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sqls.map { q =>
-      q.name -> ((spark: SparkSession, sfDir: String) => {
-        Tables.register(spark, sfDir)
-        spark.sql(q.sparkSql)
-      })
-    }.toMap +
-      ("d7_dup_clusters" -> (d7Query _)) +
-      ("d13_quality_keep" -> (d13Query _)) +
-      ("d4_ngram_jaccard_pairs" -> (d4Query _)) +
-      ("d16_line_dedup" -> (d16Query _)) +
-      ("t32_heavy_hitters" -> (t32Query _)) +
-      ("d8_containment_pairs" -> (d8Query _)) +
-      ("t8_sequence_pack" -> (t8Query _)) +
-      ("d10_bloom_gate" -> (d10Query _)) +
-      ("d12_exact_substr" -> (d12Query _)) +
-      ("t18_bpe_train" -> (t18Query _)) +
-      ("t21_bpe_tokenize" -> (t21Query _)) +
-      ("t13_lm_score" -> (t13Query _)) +
-      ("t27_ccnet_buckets" -> (t27Query _)) +
-      // t33 overrides its SqlQ text (r16): the single-statement form
-      // read the corpus token explode THREE times (wf, dl, tf); the
-      // function form materializes per-(doc, word) counts once (the
-      // t13/t27 tokCounts move, with t33's own empty-token-filtering
-      // tokenizer) — every downstream count is an integer sum(k),
-      // value-identical. Oracle unchanged.
-      ("t33_bm25" -> (t33Query _))
-
-  override def oracles: Map[String, String] =
-    sqls.flatMap(q => q.oracleSql.map(q.name -> _)).toMap +
-      ("d7_dup_clusters" -> d7Oracle) +
-      ("d13_quality_keep" -> d13Oracle) +
-      ("d4_ngram_jaccard_pairs" -> d4Oracle) +
-      ("d16_line_dedup" -> d16Oracle) +
-      ("t32_heavy_hitters" -> t32Oracle) +
-      ("d8_containment_pairs" -> d8Oracle) +
-      ("t8_sequence_pack" -> t8Oracle) +
-      ("d10_bloom_gate" -> d10Oracle) +
-      ("d12_exact_substr" -> d12Oracle) +
-      ("t18_bpe_train" -> t18Oracle) +
-      ("t21_bpe_tokenize" -> t21Oracle) +
-      ("t13_lm_score" -> t13Oracle) +
-      ("t27_ccnet_buckets" -> t27Oracle)
+  override def ops: Seq[Op] = sqls ++ Seq(
+    Op("d7_dup_clusters", d7Query, d7Oracle),
+    Op("d13_quality_keep", d13Query, d13Oracle),
+    Op("d4_ngram_jaccard_pairs", d4Query, d4Oracle),
+    Op("d16_line_dedup", d16Query, d16Oracle),
+    Op("t32_heavy_hitters", t32Query, t32Oracle),
+    Op("d8_containment_pairs", d8Query, d8Oracle),
+    Op("t8_sequence_pack", t8Query, t8Oracle),
+    Op("d10_bloom_gate", d10Query, d10Oracle),
+    Op("d12_exact_substr", d12Query, d12Oracle),
+    Op("t18_bpe_train", t18Query, t18Oracle),
+    Op("t21_bpe_tokenize", t21Query, t21Oracle),
+    Op("t13_lm_score", t13Query, t13Oracle),
+    Op("t27_ccnet_buckets", t27Query, t27Oracle))
 }

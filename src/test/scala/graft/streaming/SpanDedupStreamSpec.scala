@@ -65,7 +65,7 @@ class SpanDedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rewrite for doc 10 and no row for doc 11
     Seq((1L, corpusDoc), (10L, mixedDoc), (11L, dupDoc))
       .toDF("doc_id", "text").createOrReplaceTempView("documents")
-    val batch = spark.sql(graft.textops.TextQueries.d9SparkSqlForTest)
+    val batch = spark.sql(graft.textops.TextQueries.d9SparkSql)
       .where("doc_id >= 10")
       .select("doc_id", "kept_text", "n_kept").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
